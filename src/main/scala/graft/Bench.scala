@@ -11,18 +11,7 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // compact table layouts (16-file sf1/sf5 bench dirs) bin-pack into a
-      // handful of 128 MB read tasks, idling most cores through the scan +
-      // partial-agg stage; 16 MB splits keep every core fed
-      .config("spark.sql.files.maxPartitionBytes", s"${16 * 1024 * 1024}")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Materialize an ~sf1 bench dataset by replicating sf0.1 10× with
@@ -18,14 +18,7 @@ object BenchScale {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     def replicate(df: DataFrame, shiftCols: Map[String, Long]): DataFrame = {
       val one = df.withColumn("_copy", lit(0L))

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: write `.explain("formatted")` for named registry/bench-only
   * queries to text files — the before/after plan evidence the optimization
   * rounds commit under `plans/rNN/`.
@@ -16,15 +14,7 @@ object DumpPlans {
     require(args.length == 3, "usage: DumpPlans <outDir> <suffix> <names,csv>")
     val Array(outDir, suffix, namesCsv) = args
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.files.maxPartitionBytes", s"${16 * 1024 * 1024}")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val benchOnly =
       (graft.queries.Tpcds.benchOnly ++ graft.queries.RefTpchFull.benchOnly)
         .map(q => q.name -> q.run).toMap

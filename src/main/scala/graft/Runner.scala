@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Non-interactive SQL runner — the counterpart of the reference's `tester`
   * binary (cmd/tester/main.go:42-113: run a query file against loaded
   * tables, write results). Usage:
@@ -24,18 +22,8 @@ object Runner {
     }
     val sfDir = args(0)
     require(files0.nonEmpty, "usage: Runner <sfDir> <file.sql>... [--out dir]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // see Bench: keep scans parallel over compact file layouts
-      .config("spark.sql.files.maxPartitionBytes", s"${16 * 1024 * 1024}")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     Tables.register(spark, sfDir)
-    graft.functions.GraftFunctions.register(spark)
     files0.foreach { f =>
       val stmts = Files.readString(Paths.get(f))
         .split(";").map(_.trim).filter(_.nonEmpty)

@@ -1,16 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for vector distance + simhash: codegen'd
   * (stay inside whole-stage codegen, unlike a Scala UDF which breaks the
-  * span and pays serialization per row). Registered by [[GraftFunctions]];
+  * span and pays serialization per row). Listed in [[GraftFunctions]];
   * used via `call_function("cosine_sim", ...)`.
   *
   * Reference counterpart: pkg/storage2/distance_metrics.go (metrics);
@@ -234,19 +233,22 @@ case class MinHashSig(child: Expression, kExpr: Expression)
     copy(child = l, kExpr = r)
 }
 
-/** `spark.sql.extensions`-style registration: set
-  * `spark.sql.extensions=graft.functions.GraftExtensions` at session build
-  * and the vector/simhash functions exist in every new session without any
-  * imperative register call. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
+/** Puts the graft functions in every SparkSession. Listed in
+  * `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`,
+  * so Spark's `ServiceLoader` hands it each new session (and each
+  * `newSession()` child) at build time: no config key, no call site. */
+class GraftExtensions extends org.apache.spark.sql.SparkSessionExtensionsProvider {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    GraftFunctions.injectInto(ext)
+    GraftFunctions.builders.foreach { case (name, b) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftFunctions.type].getName, name), b))
+    }
 }
 
-/** Session-scoped registration so the expressions are callable through
-  * `call_function` / SQL. Idempotent. */
+/** The graft functions, callable through `call_function` / SQL in every
+  * session once [[GraftExtensions]] has injected them. */
 object GraftFunctions {
-  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  private[functions] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "cosine_sim" -> (es => CosineSimilarity(es(0), es(1))),
     "dot_product" -> (es => DotProduct(es(0), es(1))),
     "l2_distance" -> (es => L2Distance(es(0), es(1))),
@@ -280,22 +282,4 @@ object GraftFunctions {
     "bigram_freq_stats" -> (es => BigramFreqStatsExpr(es.head)),
     "quantile_rank" -> (es => QuantileRank(es(0), es(1))),
     "z_value" -> (es => ZValueExpr(es.head)))
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, b) =>
-      if (!reg.functionExists(FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, b, "built-in")
-    }
-  }
-
-  /** Extension-point form for [[GraftExtensions]]. */
-  def injectInto(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    builders.foreach { case (name, b) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[GraftFunctions.type].getName, name),
-        b))
-    }
 }

@@ -1,7 +1,5 @@
 package graft.lake
 
-import org.apache.spark.sql.SparkSession
-
 /** Stand-alone compaction worker process — the reference runs compaction
   * as a coordinator handing planned fragment groups to separate worker
   * processes (storage2/compaction_coordinator.go,
@@ -18,13 +16,7 @@ import org.apache.spark.sql.SparkSession
 object CompactWorker {
   def main(args: Array[String]): Unit = {
     val Array(root, target, groups) = args
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_WORKER_MASTER", "local[2]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(2)
     try {
       groups.split(',').filter(_.nonEmpty).foreach { g =>
         // a fresh handle per group: each commit rebases over whatever the

@@ -3,6 +3,7 @@ package graft.lake
 import java.math.BigInteger
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HadoopPath}
@@ -44,13 +45,17 @@ private[lake] object FooterStats {
       cols: Map[String, ColumnStats])
 
   def tryRead(hconf: Configuration, file: String, man: Manifest,
+      zoneId: String): Option[FileStats] =
+    // any footer this code did not foresee degrades to the scan path
+    try read(hconf, file, man, zoneId) catch { case NonFatal(_) => None }
+
+  private def read(hconf: Configuration, file: String, man: Manifest,
       zoneId: String): Option[FileStats] = {
-    val footer =
-      try {
-        val in = HadoopInputFile.fromPath(new HadoopPath(file), hconf)
-        val r = ParquetFileReader.open(in)
-        try r.getFooter finally r.close()
-      } catch { case scala.util.control.NonFatal(_) => return None }
+    val footer = {
+      val r = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new HadoopPath(file), hconf))
+      try r.getFooter finally r.close()
+    }
     val blocks = footer.getBlocks.asScala.toSeq
     val rows = blocks.map(_.getRowCount).sum
     if (rows == 0L) return Some(FileStats(0L, None, Map.empty))
@@ -129,14 +134,18 @@ private[lake] object FooterStats {
         val (a, b) = ints; Some((a.toShort, b.toShort))
       case (ByteType, PrimitiveTypeName.INT32) =>
         val (a, b) = ints; Some((a.toByte, b.toByte))
+      // ±0.0 bounds read as 0.0, as the scan path renders them (parquet
+      // orders -0.0 below 0.0; Spark's min/max keep the first zero seen)
       case (DoubleType, PrimitiveTypeName.DOUBLE) =>
         val a = gmin.asInstanceOf[java.lang.Double].doubleValue
         val b = gmax.asInstanceOf[java.lang.Double].doubleValue
-        if (a.isNaN || b.isNaN) None else Some((a, b))
+        if (a.isNaN || b.isNaN) None
+        else Some((if (a == 0.0) 0.0 else a, if (b == 0.0) 0.0 else b))
       case (FloatType, PrimitiveTypeName.FLOAT) =>
         val a = gmin.asInstanceOf[java.lang.Float].floatValue
         val b = gmax.asInstanceOf[java.lang.Float].floatValue
-        if (a.isNaN || b.isNaN) None else Some((a, b))
+        if (a.isNaN || b.isNaN) None
+        else Some((if (a == 0.0f) 0.0f else a, if (b == 0.0f) 0.0f else b))
       case (BooleanType, PrimitiveTypeName.BOOLEAN) =>
         Some((gmin.asInstanceOf[java.lang.Boolean].booleanValue,
           gmax.asInstanceOf[java.lang.Boolean].booleanValue))

@@ -37,7 +37,6 @@ object FtsIndex {
     val rows = ds.scanner().withRowId.build()
       .select(col(LakeDataset.RowIdCol).as("_rowid"), col(textCol).as("text"))
       .filter(col("text").isNotNull)
-    graft.functions.GraftFunctions.register(ds.spark)
     val toks = rows.select(col("_rowid"),
       posexplode(Fts.tokens(col("text"), tokenizer)).as(Seq("pos", "term")))
     val d = dir(ds, name, ds.version)
@@ -145,7 +144,6 @@ object FtsIndex {
       .filter(col("text").isNotNull && col("_rowid") > maxIndexed)
     // compaction-only advance: fresh fragment ids, no post-mark rowids
     if (rows.isEmpty) return
-    graft.functions.GraftFunctions.register(ds.spark)
     val toks = rows.select(col("_rowid"),
       posexplode(Fts.tokens(col("text"), tokenizer)).as(Seq("pos", "term")))
     ds.io.mkdirs(d)

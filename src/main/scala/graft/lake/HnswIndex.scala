@@ -205,7 +205,6 @@ object HnswIndex {
       efSearch: Int = HnswGraph.DefaultEfSearch,
       name: String = "hnsw"): DataFrame = {
     val spark = ds.spark
-    graft.functions.GraftFunctions.register(spark)
     val live = ds.scanner().withRowId.build()
     val qvec = typedlit(query)
     val ranked = builtVersion(ds, name) match {

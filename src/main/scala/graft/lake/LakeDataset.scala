@@ -1666,7 +1666,6 @@ final class LakeDataset private (
   private def buildBlooms(man: Manifest,
       frags: Seq[Fragment]): Map[Long, Map[String, String]] = {
     if (man.bloomFields.isEmpty || frags.isEmpty) return Map.empty
-    graft.functions.GraftFunctions.register(spark)
     io.mkdirs(bloomDir)
     val phys = physicalSchema(man)
     val aggCols = man.bloomFields.map { fid =>
@@ -1874,7 +1873,6 @@ final class LakeDataset private (
       targetRows: Long = 1 << 20): Unit = {
     require(zCols.size >= 2 && zCols.size <= 8,
       s"z-order needs 2..8 columns, got ${zCols.size}")
-    graft.functions.GraftFunctions.register(spark)
     // the rankable numeric projection of each z column (DATE has no legal
     // cast to DOUBLE — rank its epoch-day number instead)
     def numericOf(c: String): Option[Column] =
@@ -2984,10 +2982,7 @@ final class LakeDataset private (
     val needScan = moved.filterNot(footerByName.contains)
 
     val phys = physicalSchema(man)
-    if (man.bloomFields.nonEmpty) {
-      graft.functions.GraftFunctions.register(spark)
-      io.mkdirs(bloomDir)
-    }
+    if (man.bloomFields.nonEmpty) io.mkdirs(bloomDir)
     val bloomAggs = man.bloomFields.map { fid =>
       call_function("bloom_agg", xxhash64(col(physName(fid))),
         lit(man.bloomNumBits), lit(man.bloomNumHashes)).as(s"_bloom_$fid")
@@ -3007,8 +3002,17 @@ final class LakeDataset private (
         // results). Epoch micros are zone-independent and exact.
         val statCol =
           if (isTimestampField(f)) unix_micros(col(p)) else col(p)
-        Seq(min(statCol).cast("string").as(s"_min_${f.id}"),
-          max(statCol).cast("string").as(s"_max_${f.id}"),
+        // -0.0 == 0.0, so min/max keep whichever zero came first: render
+        // both as 0.0, as FooterStats does
+        val signedZero = DataType.fromJson(f.dataType) match {
+          case DoubleType | FloatType => true
+          case _ => false
+        }
+        def render(bound: Column): Column =
+          if (signedZero) when(bound === 0, "0.0").otherwise(bound.cast("string"))
+          else bound.cast("string")
+        Seq(render(min(statCol)).as(s"_min_${f.id}"),
+          render(max(statCol)).as(s"_max_${f.id}"),
           sum(when(col(p).isNull, 1L).otherwise(0L)).as(s"_nulls_${f.id}"))
       } ++ bloomAggs ++ vsAggs)
     val statRows =

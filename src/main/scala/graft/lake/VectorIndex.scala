@@ -2,7 +2,6 @@ package graft.lake
 
 import org.apache.hadoop.fs.{Path => HPath}
 
-import graft.functions.GraftFunctions
 import graft.pipeline.Ann
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -64,7 +63,6 @@ object VectorIndex {
   def build(ds: LakeDataset, vecCol: String, name: String = "ivf",
       quantizer: String = "flat"): Unit = {
     val spark = ds.spark
-    GraftFunctions.register(spark)
     val data = ds.scanner().withRowId.build()
       .select(col(LakeDataset.RowIdCol).as("_rowid"), col(vecCol).as("vec"))
       .filter(col("vec").isNotNull)
@@ -246,7 +244,6 @@ object VectorIndex {
     * vector-value rewrites always need a rebuild). */
   def refresh(ds: LakeDataset, vecCol: String, name: String = "ivf"): Unit = {
     val spark = ds.spark
-    GraftFunctions.register(spark)
     val v0 = builtVersion(ds, name) match {
       case None => build(ds, vecCol, name); return
       case Some(v) => v
@@ -346,7 +343,6 @@ object VectorIndex {
       prefilter: Option[String] = None,
       probeVia: String = "exact"): DataFrame = {
     val spark = ds.spark
-    GraftFunctions.register(spark)
     val qvec = typedlit(query)
     val live0 = ds.scanner().withRowId.build()
     val live = prefilter.fold(live0)(p => live0.filter(expr(p)))

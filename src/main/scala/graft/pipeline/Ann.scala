@@ -2,7 +2,6 @@ package graft.pipeline
 
 import graft.{Q, Tables}
 import graft.Materialize.PinOps
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -38,10 +37,8 @@ object Ann {
     * (2^10 buckets keeps the candidate set ~N²/1024 pairs). */
   val NearDupBits = 10
 
-  private def emb(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
+  private def emb(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "embeddings")
-  }
 
   /** Deterministic ±1 hyperplanes (seeded), dim 64. */
   private lazy val hyperplanes: Seq[Seq[Float]] = {
@@ -164,7 +161,6 @@ object Ann {
 
   /** (assignments: vec_id → cluster, centroids: cluster → array<float>) */
   def trainIvf(e: DataFrame, iterations: Int = 2): (DataFrame, DataFrame) = {
-    GraftFunctions.register(e.sparkSession)
     // deterministic init: the NumClusters lowest vec_ids, numbered by rank
     // (not monotonically_increasing_id, whose contiguity after limit() is an
     // implementation accident). Rank via a broadcast θ-self-join over the

@@ -104,8 +104,7 @@ object Assemble {
     * DataFrame transform: narrow codegen projections + filters, usable
     * identically in batch and Structured Streaming (the streaming corpus
     * intake — [[graft.streaming.DocStream]] — reuses it verbatim).
-    * Requires [[graft.functions.GraftFunctions]] registered. Keeps
-    * doc_id, text, source, n_chars, l (tokens), n (token count). */
+    * Keeps doc_id, text, source, n_chars, l (tokens), n (token count). */
   private[graft] def gates(in: DataFrame): DataFrame = {
     val l = split(col("text"), " ")
     val g = in
@@ -134,7 +133,6 @@ object Assemble {
   }
 
   val assemble = Q("pipeline_assemble", oracleSql) { (s, dir) =>
-    graft.functions.GraftFunctions.register(s)
     // stages 1-2: quality + language gates (shared with the streaming twin)
     val en = gates(docs(s, dir))
     // stage 3: exact dedup — one representative (min doc_id) per content

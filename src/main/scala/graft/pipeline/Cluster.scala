@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.{Q, Tables}
-import graft.functions.GraftFunctions
 
 /** K-means document/embedding clustering — the corpus-organization
   * operator an LLM data pipeline runs between dedup and mixing (topic
@@ -35,10 +34,8 @@ object Cluster {
   val K = 8
   val Iters = 5
 
-  private def emb(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
+  private def emb(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "embeddings")
-  }
 
   /** Seed centroids: the K lowest vec_ids, as (cluster, cvec). */
   private def seeds(e: DataFrame): DataFrame =

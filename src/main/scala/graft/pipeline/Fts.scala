@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import graft.{Q, Tables}
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -55,7 +54,6 @@ object Fts {
 
   /** Postings: one row per (doc, term) with term frequency. */
   def postings(docs: DataFrame, tokenizer: String = "whitespace"): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"),
       explode(tokens(col("text"), tokenizer)).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -71,7 +69,6 @@ object Fts {
     * tf aggregation, eliminating the docLen re-join. */
   def bm25TopK(docs: DataFrame, queryTerms: Seq[String], k: Int,
       tokenizer: String = "whitespace"): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     import graft.Materialize.PinOps
     // one tokenizer pass feeds len + query-term hits; pinned so the corpus
     // stats and the scoring branch don't re-tokenize (the pin is O(n_docs)
@@ -112,7 +109,6 @@ object Fts {
   def phraseCount(docs: DataFrame, phrase: Seq[String],
       tokenizer: String = "whitespace"): DataFrame = {
     require(phrase.nonEmpty, "empty phrase")
-    GraftFunctions.register(docs.sparkSession)
     // codegen'd single-pass kernel — the HOF form (filter over
     // sequence+element_at) interprets its lambda per position
     docs
@@ -149,7 +145,6 @@ object Fts {
     * product inside one row — no shuffle, like [[phraseCount]]. */
   def nearCount(docs: DataFrame, termA: String, termB: String,
       window: Int, tokenizer: String = "whitespace"): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     // positions via one codegen'd scan each; span via the two-pointer
     // merge (O(|pa|+|pb|), vs the HOF cross product's O(|pa|·|pb|) of
     // interpreted lambda calls — 8.7 s → sub-second at sf0.1)

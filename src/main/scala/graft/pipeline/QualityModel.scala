@@ -42,7 +42,6 @@ object QualityModel {
     * is one exact-rounded IEEE op per doc, so Spark and DuckDB compute
     * bit-identical values and the tree's threshold comparisons agree. */
   private[pipeline] def featurize(withTokens: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(withTokens.sparkSession)
     val en = TextOps.langMarkers.toMap.apply("en")
     withTokens
       .withColumn("ws", call_function("freq_stats", col("tokens")))
@@ -75,7 +74,6 @@ object QualityModel {
   /** Weak-label frame: every doc, label 1.0 iff it passes the heuristic
     * quality+language gate. */
   private[pipeline] def weakLabeled(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.load(s, dir, "documents")
       .select("doc_id", "text", "source", "n_chars")
     val kept = Assemble.gates(docs).select(col("doc_id"), lit(1.0).as("label"))

@@ -122,7 +122,6 @@ object TextOps {
     * [[graft.functions.SimHash64]]) + a content hash of the sorted distinct
     * token set (word-order-insensitive "bag fingerprint"). */
   val fingerprint = Q.noOracle("text_fingerprint") { (s, dir) =>
-    graft.functions.GraftFunctions.register(s)
     docs(s, dir).select(col("doc_id"),
       call_function("simhash64", tokensCol).as("simhash"),
       xxhash64(concat_ws(" ", array_sort(array_distinct(tokensCol))))
@@ -144,7 +143,6 @@ object TextOps {
   /** Custom KMV sketch aggregate beside the exact count (no SQL oracle —
     * sketch estimates are engine-specific; KmvSketchSpec bounds the error). */
   val kmvDistinct = Q.noOracle("agg_kmv_distinct") { (s, dir) =>
-    graft.functions.GraftFunctions.register(s)
     val li = Tables.load(s, dir, "lineitem")
     // Two aggregations, not one: a DISTINCT aggregate beside a
     // TypedImperativeAggregate forces the whole group-by through a single
@@ -174,7 +172,6 @@ object TextOps {
       |  CAST(count(DISTINCT l_suppkey % 400) AS BIGINT) AS exact_supps
       |FROM lineitem GROUP BY l_linestatus
       |ORDER BY l_linestatus""".stripMargin) { (s, dir) =>
-    graft.functions.GraftFunctions.register(s)
     val li = Tables.load(s, dir, "lineitem")
       .withColumn("supp_bucket", col("l_suppkey") % 400)
     val kmv = li.groupBy("l_linestatus")
@@ -204,7 +201,6 @@ object TextOps {
       |    row_number() OVER (PARTITION BY lang ORDER BY n DESC, token) AS rn
       |  FROM c)
       |SELECT lang, token, n FROM r WHERE rn <= 5""".stripMargin) { (s, dir) =>
-    graft.functions.GraftFunctions.register(s)
     docs(s, dir)
       .select(col("lang"), explode(tokensCol).as("tok"))
       .filter(length(col("tok")) > 0)
@@ -226,7 +222,6 @@ object TextOps {
     call_function("winnow_fingerprint", text, lit(k), lit(w))
 
   val winnow = Q.noOracle("text_winnow_fingerprint") { (s, dir) =>
-    graft.functions.GraftFunctions.register(s)
     docs(s, dir).select(col("doc_id"),
       winnowFingerprints(col("text")).as("fp"))
       .select(col("doc_id"), size(col("fp")).as("n_fingerprints"),
@@ -261,7 +256,6 @@ object TextOps {
        |FROM m""".stripMargin
 
   val winnowExact = Q("text_winnow_exact", winnowExactOracle) { (s, dir) =>
-    graft.functions.GraftFunctions.register(s)
     docs(s, dir).select(col("doc_id"),
       call_function("winnow_portable", col("text"),
         lit(WinnowK), lit(WinnowW)).as("wp"))
@@ -305,7 +299,6 @@ object TextOps {
     * replaces two `array_sort`s + two interpreted folds (7.2 s → sub-second
     * on the sf0.1 corpus; lambda higher-order functions never codegen). */
   def repetitionOver(df: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(col("doc_id"), tokensCol.as("l"))
       .filter(size(col("l")) >= 2)
       .select(col("doc_id"), size(col("l")).as("n"),
@@ -367,7 +360,6 @@ object TextOps {
       |  FROM (SELECT doc_id, text, string_split(text, ' ') AS l
       |        FROM documents) t
       |  WHERE len(l) >= 2) tt""".stripMargin) { (s, dir) =>
-    graft.functions.GraftFunctions.register(s)
     val n = col("n")
     docs(s, dir)
       .select(col("doc_id"), col("text"), tokensCol.as("l"))
@@ -420,7 +412,6 @@ object TextOps {
     * (tiny), so its gram set broadcasts and the check is one narrow pass
     * over training shards. */
   val decontam = Q("text_decontam", decontamOracle) { (s, dir) =>
-    graft.functions.GraftFunctions.register(s)
     val grams = docs(s, dir).select(col("doc_id"),
       explode(call_function("shingle_hashes", col("text"),
         lit(DecontamN))).as("g"))

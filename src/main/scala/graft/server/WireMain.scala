@@ -1,8 +1,6 @@
 package graft.server
 
-import org.apache.spark.sql.SparkSession
-
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** Interactive SQL server — the `plandb` analogue (reference
   * cmd/main/main.go:68 serves psql wire protocol on :5432). Usage:
@@ -18,18 +16,10 @@ object WireMain {
   def main(args: Array[String]): Unit = {
     val port = args.lift(0).map(_.toInt).getOrElse(5432)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-wire")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.catalog.lake", "graft.lake.LakeCatalog")
-      .config("spark.sql.catalog.lake.root",
-        sys.env.getOrElse("GRAFT_LAKE_ROOT", "/tmp/graft-lake"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
+    spark.conf.set("spark.sql.catalog.lake", "graft.lake.LakeCatalog")
+    spark.conf.set("spark.sql.catalog.lake.root",
+      sys.env.getOrElse("GRAFT_LAKE_ROOT", "/tmp/graft-lake"))
     val server = new WireServer(spark, port, Tables.register(_, sfDir))
     // scalastyle:off println
     println(s"graft wire server listening on 127.0.0.1:${server.boundPort}")

@@ -22,7 +22,6 @@ object DocStream {
     * Emits one row per surviving doc: doc_id, source, n_chars, n (tokens),
     * content_md5. */
   def intake(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     graft.pipeline.Assemble.gates(docs)
       .withColumn("content_md5", md5(col("text")))
       .select("doc_id", "source", "n_chars", "n", "content_md5")

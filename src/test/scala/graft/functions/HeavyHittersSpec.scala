@@ -22,7 +22,6 @@ class HeavyHittersSpec extends SparkTestBase {
 
   test("heavy items survive and counts are within the MG error bound") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val data = stream
     val n = data.size.toLong
     val bound = n / (k + 1)
@@ -51,7 +50,6 @@ class HeavyHittersSpec extends SparkTestBase {
 
   test("exact regime: vocabulary <= k reproduces exact counts deterministically") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val data = Seq.fill(300)("x") ++ Seq.fill(200)("y") ++ Seq.fill(100)("z")
     val run = () => data.toDF("tok").repartition(8)
       .agg(call_function("heavy_hitters", col("tok")).as("hh"))

@@ -7,7 +7,6 @@ class KmvSketchSpec extends SparkTestBase {
 
   test("kmv_distinct is exact below k and within 10% above k") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // exact regime: 100 distinct values < k=256
     val small = (1 to 1000).map(i => s"v${i % 100}").toDF("x")
     val exactSmall = small.agg(call_function("kmv_distinct", col("x")))
@@ -21,7 +20,6 @@ class KmvSketchSpec extends SparkTestBase {
   }
 
   test("kmv_distinct groups + merges across partitions like countDistinct") {
-    GraftFunctions.register(spark)
     val li = Tables.load(spark, sf0001, "lineitem").repartition(8)
     val est = li.groupBy("l_returnflag")
       .agg(call_function("kmv_distinct", col("l_orderkey")).as("est"))

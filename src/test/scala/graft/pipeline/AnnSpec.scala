@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import graft.SparkTestBase
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
 /** Vector-expression correctness + LSH-vs-brute recall on sf0.001. */
@@ -9,7 +8,6 @@ class AnnSpec extends SparkTestBase {
 
   test("cosine_sim / dot_product / l2_distance match scalar math (codegen path)") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val a = Array(1.0f, 2.0f, 3.0f)
     val b = Array(-1.0f, 0.5f, 2.0f)
     val df = Seq((a, b)).toDF("a", "b").select(
@@ -27,7 +25,6 @@ class AnnSpec extends SparkTestBase {
 
   test("null input yields null, zero vector yields 0 similarity") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq(
       (Some(Array(0.0f, 0.0f)), Some(Array(1.0f, 1.0f))),
       (None, Some(Array(1.0f, 1.0f))))

@@ -3,7 +3,6 @@ package graft.pipeline
 import org.apache.spark.sql.functions._
 
 import graft.{SparkTestBase, Tables}
-import graft.functions.GraftFunctions
 
 /** ScalaTest oracle for the iterative (non-portable-SQL) side of
   * [[Cluster]]: the multi-iteration Lloyd run. The single-step pieces
@@ -11,7 +10,6 @@ import graft.functions.GraftFunctions
 class ClusterSpec extends SparkTestBase {
 
   private lazy val e = {
-    GraftFunctions.register(spark)
     Tables.load(spark, sf001, "embeddings")
   }
 

@@ -62,7 +62,6 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("simhash60 kernel matches the HOF majority-vote definition") {
-    graft.functions.GraftFunctions.register(spark)
     val toks = split(col("text"), " ")
     val hs = transform(toks,
       x => conv(substring(md5(x), 1, 15), 16, 10).cast("long"))
@@ -79,7 +78,6 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("shingle_hashes kernel matches hashing the HOF shingle set") {
-    graft.functions.GraftFunctions.register(spark)
     val ref = array_sort(transform(Dedup.shingles(col("text")),
       x => conv(substring(md5(x), 1, 15), 16, 10).cast("long")))
     val df = docs.limit(50).select(
@@ -105,8 +103,6 @@ class DedupSpec extends SparkTestBase {
     // Statistical quality of the splitmix-mixed hash family: for the
     // planted near-dup pairs, fraction-of-agreeing-signature-slots must
     // track true shingle jaccard (binomial sd ≈ sqrt(j(1-j)/64) ≤ 0.063).
-    import graft.functions.GraftFunctions
-    GraftFunctions.register(spark)
     val sh = docs.select(col("doc_id"), Dedup.shingles(col("text")).as("sh"))
       .filter(size(col("sh")) > 0)
       .withColumn("sig", Dedup.minhashSignature(col("sh")))
@@ -150,8 +146,11 @@ class DedupSpec extends SparkTestBase {
 
   test("cluster resolution: chains collapse to min-id keeper") {
     import spark.implicits._
-    // pairs: 1-2, 2-3 (one cluster), 7-9 (another); 5 untouched by pairs
-    val pairs = Seq((1L, 2L, 0.9), (2L, 3L, 0.9), (7L, 9L, 0.95))
+    // pairs: 1-2, 2-3 (one cluster), 7-9 (another), an 8-hop path
+    // 20-21-...-28 (labels must travel past any fixed round budget); 5
+    // untouched by pairs
+    val path = (20L until 28L).map(i => (i, i + 1, 0.9))
+    val pairs = (Seq((1L, 2L, 0.9), (2L, 3L, 0.9), (7L, 9L, 0.95)) ++ path)
       .toDF("doc_a", "doc_b", "jaccard")
     val res = Dedup.resolveClusters(pairs).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
@@ -160,6 +159,8 @@ class DedupSpec extends SparkTestBase {
     assert(res(3L) == (1L, false)) // transitively reaches 1 via 2
     assert(res(7L) == (7L, true))
     assert(res(9L) == (7L, false))
+    assert(res(20L) == (20L, true))
+    (21L to 28L).foreach(i => assert(res(i) == (20L, false), s"doc $i"))
     assert(!res.contains(5L)) // only docs appearing in pairs get labels
   }
 

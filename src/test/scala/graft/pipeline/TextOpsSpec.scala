@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import graft.SparkTestBase
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
 class TextOpsSpec extends SparkTestBase {
@@ -17,7 +16,6 @@ class TextOpsSpec extends SparkTestBase {
 
   test("fingerprints: identical texts collide, different texts don't (on testdata)") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val d = Seq(
       (1L, "spark fast table scan merge"),
       (2L, "spark fast table scan merge"),
@@ -48,7 +46,6 @@ class TextOpsSpec extends SparkTestBase {
 
   test("winnowing edge cases: short text, exact-k text, determinism") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq(
       (1L, "ab"),            // shorter than k=8 → no k-grams
       (2L, "abcdefgh"),      // exactly k chars → one k-gram
@@ -136,7 +133,6 @@ class TextOpsSpec extends SparkTestBase {
 
   test("freq_stats kernels match brute-force counts on random token arrays") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     val vocab = Vector("a", "b", "cc", "ddd", "e", "ff", "g")
     val arrays = Seq.fill(200)(
@@ -159,7 +155,6 @@ class TextOpsSpec extends SparkTestBase {
   }
 
   test("winnow_portable kernel matches the HOF kgram/window-min definition") {
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.Column
     val k = TextOps.WinnowK
     val w = TextOps.WinnowW

@@ -20,7 +20,6 @@ class DocStreamSpec extends SparkTestBase {
       .as[(Long, String, String, Long)].collect()
 
     // batch truth: gates + one representative per content hash
-    graft.functions.GraftFunctions.register(spark)
     val batchHashes = graft.pipeline.Assemble.gates(
         Tables.load(spark, sf, "documents"))
       .select(md5(col("text")).as("h")).distinct()
