@@ -2,6 +2,8 @@
 """Local stand-in for the driver's correctness gate: run each oracle SQL in
 DuckDB over the same sf parquet dir and diff against the Spark parquet dumps
 written by graft.Verify. Usage: compare.py <sfDir> <verifyOutDir> [--strict].
+An entry that query_status.json records as an error and that has no oracle
+(its oracle could not be built) fails too.
 
 Default comparison: sort columns by name, round doubles to 6 significant
 digits, sort rows, compare cell-by-cell.
@@ -137,6 +139,17 @@ def main(sf_dir, out_dir):
             print(f"  spark-only: {only_s}")
             print(f"  duck-only:  {only_d}")
             n_fail += 1
+    # A query that threw in Verify with no oracle (e.g. its corpus file is
+    # missing, so neither its run nor its oracle could be built) is a fail
+    # too, not a silent omission.
+    status_path = f"{out_dir}/query_status.json"
+    if os.path.exists(status_path):
+        status = json.load(open(status_path))
+        for name in sorted(status):
+            st = status[name]
+            if st.get("status") == "error" and name not in oracle:
+                print(f"FAIL {name}: {st.get('error', '')}")
+                n_fail += 1
     mode = "strict" if STRICT else "default"
     print(f"\n{n_pass} pass / {n_fail} fail ({mode} mode)")
     return 1 if n_fail else 0

@@ -17,9 +17,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import compare  # noqa: E402
 
 
-def run_case(name, oracle_sql, spark_sql):
+def run_case(name, oracle_sql, spark_sql, status=None):
     """One fixture: DuckDB oracle text + a 'Spark' parquet dump written by
-    DuckDB COPY from spark_sql. Returns (exit_code, captured stdout)."""
+    DuckDB COPY from spark_sql, plus an optional query_status.json. Returns
+    (exit_code, captured stdout)."""
     out = tempfile.mkdtemp(prefix=f"cmp_{name}_")
     try:
         con = duckdb.connect()
@@ -27,6 +28,8 @@ def run_case(name, oracle_sql, spark_sql):
         con.sql(f"COPY ({spark_sql}) TO '{out}/{name}/part-0.parquet' "
                 f"(FORMAT PARQUET)")
         json.dump({name: oracle_sql}, open(f"{out}/oracle_sql.json", "w"))
+        if status is not None:
+            json.dump(status, open(f"{out}/query_status.json", "w"))
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             rc = compare.main("/nonexistent-sf-dir", out)
@@ -92,8 +95,23 @@ rc, out = run_case("s_decimal", "SELECT CAST(1.50 AS DOUBLE) AS v",
 expect(rc == 1 and "banned output dtype" in out,
        "spark-side DECIMAL fails the dtype audit", out)
 
+# 5. An entry that errored in Verify and has no oracle (its corpus file is
+#    missing) must FAIL with its error; an ok entry without an oracle and an
+#    errored entry WITH an oracle (already failed as "no spark output") do
+#    not add a second line.
+missing = "java.nio.file.NoSuchFileException: /corpus/tpch/query/q1.sql"
+rc, out = run_case("clean2", "SELECT CAST(7 AS BIGINT) AS v",
+                   "SELECT CAST(7 AS BIGINT) AS v",
+                   status={"clean2": {"status": "ok", "error": ""},
+                           "reftpch_q1": {"status": "error", "error": missing},
+                           "rows_only": {"status": "ok", "error": ""}})
+expect(rc == 1 and f"FAIL reftpch_q1: {missing}" in out
+       and "PASS clean2" in out and "rows_only" not in out
+       and "1 pass / 1 fail" in out,
+       "errored entry without an oracle fails with its error", out)
+
 print()
 if FAILURES:
     print(f"{len(FAILURES)} test(s) failed: {FAILURES}")
     sys.exit(1)
-print(f"all {2 + len(ORACLE_FIXTURES) + 1} compare.py self-tests pass")
+print(f"all {2 + len(ORACLE_FIXTURES) + 2} compare.py self-tests pass")

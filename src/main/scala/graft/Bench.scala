@@ -43,6 +43,7 @@ object Bench {
     val selected = only.fold(
       timed.view.filterKeys(!untimed.contains(_)).toMap)(names =>
       timed.view.filterKeys(names).toMap)
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       val t =
         try {
@@ -72,7 +73,13 @@ object Bench {
           }
           best
         }
-        catch { case _: Throwable => -1.0 }
+        catch { case e: Throwable =>
+          // -1.0 keeps the entry out of `total`; say so, and list it
+          System.err.println(
+            s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+          failed(name) = e.getClass.getName
+          -1.0
+        }
       // Release checkpoint blocks a pipeline query persisted, so later
       // queries aren't measured under leaked block-manager pressure
       // (round-2 verdict: q7/q9 0.9 s standalone vs 13-15 s in-session).
@@ -81,9 +88,11 @@ object Bench {
     }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    val fails = failed.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
+      .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fails,"sf":"$sfDir"}"""
     sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { p =>
       Files.writeString(Paths.get(p), json + "\n")
     }

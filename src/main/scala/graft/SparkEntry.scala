@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.ddl.DdlQueries
 import graft.lake.{LakeQueries, StreamIngestQueries}
@@ -31,7 +33,10 @@ object SparkEntry {
     registry.map(q => q.name -> q.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. Omit for non-SQL-expressible ops, and for an
+    * entry whose oracle cannot be built (a missing corpus file): its `run`
+    * throws the same exception, so the failure is still recorded. */
   def oracleSql: Map[String, String] =
-    registry.flatMap(q => q.oracle.map(sql => q.name -> sql)).toMap
+    registry.flatMap(q => Try(q.oracle).toOption.flatten.map(q.name -> _))
+      .toMap
 }

@@ -25,14 +25,19 @@ object Verify {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
+    // Each entry's oracle is built inside its own try: a corpus entry whose
+    // file is missing records its error here and is left out of
+    // oracle_sql.json, and the rest still run.
+    val oracles = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    SparkEntry.registry.filter(entry => keep(entry.name)).foreach { entry =>
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        status(name) = ("ok", "")
+        entry.oracle.foreach(oracles(entry.name) = _)
+        entry.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/${entry.name}")
+        status(entry.name) = ("ok", "")
       } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        status(name) = ("error", s"${e.getClass.getName}: ${e.getMessage}")
+        System.err.println(s"[verify] ${entry.name} failed: ${e.getMessage}")
+        status(entry.name) = ("error", s"${e.getClass.getName}: ${e.getMessage}")
       }
       SessionHygiene.sweep(spark)
     }
@@ -48,7 +53,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
+    val json = oracles
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val statusJson = status

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.{Files, Paths}
-
 import graft.Q
 
 /** The reference's OWN TPC-H query files, run VERBATIM.
@@ -13,7 +11,7 @@ import graft.Q
   * through BOTH engines (`Q.sql`: Spark executes it over the registered
   * views, DuckDB replays the same text as the oracle) — the strongest
   * form of "a user of the reference could run every query they run
-  * today": same bytes, not a port.
+  * today": same text on both engines, not a port.
   *
   * The other 15 files reference schema the driver testdata doesn't ship
   * (the `partsupp` table — q2/q9/q11/q16/q20 — or columns like
@@ -23,10 +21,11 @@ import graft.Q
   * [[RefTpchFull]] closes the remaining gap: ALL 22 files execute
   * verbatim over the full-schema [[TpchGen]] with DuckDB oracles
   * (`reftpch_q1..q22`); this object keeps the driver-testdata variants
-  * (same bytes over the DRIVER's parquet, a different input source). */
+  * (same text over the DRIVER's parquet, a different input source). */
 object RefSql {
 
-  val QueryDir = "/root/reference/cases/tpch/query"
+  /** Corpus file of TPC-H query n. */
+  def file(n: Int): String = s"tpch/query/q$n.sql"
 
   /** File numbers whose schema the driver testdata covers. */
   val Runnable = Seq(1, 5, 6, 7, 8, 14, 18)
@@ -40,10 +39,8 @@ object RefSql {
   val RowProducing = Seq(1, 6, 14, 18)
 
   /** First statement of qN.sql, comments stripped, otherwise verbatim. */
-  def text(n: Int): String =
-    new String(Files.readAllBytes(Paths.get(s"$QueryDir/q$n.sql")), "UTF-8")
-      .linesIterator.filterNot(_.trim.startsWith("--")).mkString("\n")
-      .split(";").map(_.trim).filter(_.nonEmpty).head
+  def text(n: Int): String = SqlCorpus.reference.statements(file(n)).head
 
+  /** The text is read on first use, so a missing file fails its entry. */
   lazy val all: Seq[Q] = RowProducing.map(n => Q.sql(s"ref_q$n", text(n)))
 }

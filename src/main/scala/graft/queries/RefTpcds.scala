@@ -1,10 +1,8 @@
 package graft.queries
 
-import java.nio.file.{Files, Paths}
-
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types._
 
 import graft.Q
@@ -12,10 +10,11 @@ import graft.Q
 /** The reference's TPC-DS corpus, PLANNED end to end.
   *
   * The reference ships all 99 TPC-DS query files plus the official DDL
-  * (cases/tpcds/query/query1..99.sql, cases/tpcds/tpcds.sql; Makefile
-  * targets exist) but its engine cannot run most of them — no window
-  * functions, no set operations, no ROLLUP (SURVEY §5: "treat as stretch
-  * surface, not supported surface"). Catalyst has the whole surface, so
+  * (corpus files tpcds/query/query1..99.sql and tpcds/tpcds.sql, read
+  * through [[SqlCorpus]]; Makefile targets exist) but its engine cannot
+  * run most of them — no window functions, no set operations, no ROLLUP
+  * (SURVEY §5: "treat as stretch surface, not supported surface").
+  * Catalyst has the whole surface, so
   * this module proves the aspiration is MET here: every table from the
   * official DDL is registered (schema-faithful empty views — TPC-DS data
   * isn't in the driver testdata), and every query file is parsed,
@@ -27,8 +26,10 @@ import graft.Q
   * verdict, pinned to all-99-ok by RefTpcdsSpec. */
 object RefTpcds {
 
-  val DdlFile = "/root/reference/cases/tpcds/tpcds.sql"
-  val QueryDir = "/root/reference/cases/tpcds/query"
+  private val DdlFile = "tpcds/tpcds.sql"
+
+  /** Corpus file of TPC-DS query n. */
+  def file(n: Int): String = s"tpcds/query/query$n.sql"
 
   /** Column type in the official DDL → Spark type. `time` has no Spark
     * equivalent (reference maps it to its TIME logical type) → STRING,
@@ -52,12 +53,11 @@ object RefTpcds {
     }
   }
 
-  /** Parse the official DDL into (table, schema) pairs. */
-  def tables(): Seq[(String, StructType)] = {
-    val ddl = new String(Files.readAllBytes(Paths.get(DdlFile)), "UTF-8")
-      .linesIterator.filterNot(_.trim.startsWith("--")).mkString("\n")
-    val stmt = """(?is)create\s+table\s+(?:if\s+not\s+exists\s+)?(\w+)\s*\((.*?)\)\s*;""".r
-    stmt.findAllMatchIn(ddl).map { m =>
+  /** Parse the official DDL of `corpus` into (table, schema) pairs. */
+  def tables(corpus: SqlCorpus = SqlCorpus.reference)
+      : Seq[(String, StructType)] = {
+    val create = """(?is)create\s+table\s+(?:if\s+not\s+exists\s+)?(\w+)\s*\((.*)\)\s*\z""".r
+    corpus.statements(DdlFile).flatMap(create.findFirstMatchIn).map { m =>
       val name = m.group(1)
       val body = m.group(2)
       // split columns on top-level commas (decimal(7,2) has a nested one)
@@ -78,7 +78,7 @@ object RefTpcds {
           StructField(parts(0), sparkType(parts(1)), nullable = true)
         }
       (name, StructType(fields.toSeq))
-    }.toSeq
+    }
   }
 
   /** Register every TPC-DS table as an empty temp view. */
@@ -89,12 +89,8 @@ object RefTpcds {
     }
 
   /** Statements of queryN.sql (a few files hold two), comments stripped. */
-  def statements(n: Int): Seq[String] = {
-    val raw = new String(
-      Files.readAllBytes(Paths.get(s"$QueryDir/query$n.sql")), "UTF-8")
-      .linesIterator.filterNot(_.trim.startsWith("--")).mkString("\n")
-    raw.split(";").map(_.trim).filter(_.nonEmpty).toSeq
-  }
+  def statements(n: Int): Seq[String] =
+    SqlCorpus.reference.statements(file(n))
 
   /** Query files that reference `customer.c_last_review_date_sk` while
     * the reference's own DDL declares `c_last_review_date` — the TPC-DS

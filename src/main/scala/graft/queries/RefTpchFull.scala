@@ -2,85 +2,39 @@ package graft.queries
 
 import graft.Q
 
-/** The reference's PRIMARY test corpus — cases/tpch/query/q1..q22.sql —
+/** The reference's PRIMARY test corpus — tpch/query/q1..q22.sql —
   * executed VERBATIM over the full-schema generator ([[TpchGen]]) with
   * per-row DuckDB oracles. This completes what [[RefSql]] started: RefSql
-  * runs the 7 files expressible over the driver testdata byte-for-byte;
+  * runs the 7 files expressible over the driver testdata unmodified;
   * the other 15 were blocked only by missing schema (partsupp,
   * o_shippriority, c_acctbal, l_shipmode, …). With TpchGen supplying every
-  * official table and column, ALL 22 files run unmodified — same bytes,
-  * not a port — and every result row hash-checks against DuckDB replaying
-  * the same text over the same generated inputs.
+  * official table and column, ALL 22 files run unmodified — same text on
+  * both engines, not a port — and every result row hash-checks against
+  * DuckDB replaying the same text over the same generated inputs.
   *
-  * The only text transformation is the [[TpcdsCasts]]-convention outer
-  * SELECT on q12, whose `sum(case … then 1 else 0 end)` outputs DuckDB
-  * widens to HUGEINT (the banned int128 class); the wrapper casts exactly
-  * those two columns to BIGINT, applied identically to both engines. */
+  * The only text transformation is the [[TpcdsCasts]] outer SELECT on
+  * q12, whose `sum(case … then 1 else 0 end)` outputs DuckDB widens to
+  * HUGEINT (the banned int128 class); the wrapper casts exactly those two
+  * columns to BIGINT, applied identically to both engines. */
 object RefTpchFull {
 
-  /** Output columns DuckDB widens to int128, per query (empirically
-    * probed, as for [[TpcdsCasts]]). */
-  private val casts: Map[Int, Seq[(String, Boolean)]] = Map(
-    12 -> Seq(("l_shipmode", false), ("high_line_count", true),
-      ("low_line_count", true)))
-
-  private def castWrap(n: Int, text: String): String = casts.get(n) match {
-    case Some(cols) =>
-      val items = cols.map { case (c, huge) =>
-        if (huge) s"cast($c as bigint) as $c" else c }
-      s"select ${items.mkString(", ")}\nfrom (\n$text\n) graft_cast"
-    case None => text
-  }
-
-  private def usedTables(text: String): Seq[String] =
-    TpchGen.rows.keys.toSeq.sorted
-      // (?i): SQL identifiers are case-insensitive — an uppercased table
-      // reference must still register its view (and its oracle CTE)
-      .filter(t => s"(?i)\\b$t\\b".r.findFirstIn(text).isDefined)
-
-  /** DuckDB oracle: generator prelude + the same text; a query that itself
-    * starts WITH (q15) merges its CTE list into the prelude's, and its own
-    * CTEs materialize for the same DuckDB-1.0 determinism reason as the
-    * TPC-DS family ([[Tpcds.oracleFor]]). */
-  private def oracleFor(text: String): String = {
-    val prelude = TpchGen.duckPrelude(usedTables(text))
-    val mat = text.replaceAll(
-      "(?is)\\b(\\w+)\\s+as\\s*\\(\\s*select\\b", "$1 AS MATERIALIZED (select")
-    if (mat.matches("(?is)^\\s*with\\b.*"))
-      prelude.stripSuffix("\n") + ",\n" +
-        mat.replaceFirst("(?is)^\\s*with\\b", "")
-    else prelude + mat
-  }
+  /** Entry for file n over [[TpchGen]]; `scale` > 1 gives the bench-only
+    * `reftpch_q<n>_x<scale>` twin over orders/lineitem ×scale
+    * ([[TpchGen.rowsAt]]). */
+  def entry(n: Int, scale: Long = 1): Q = SqlCorpus.reference.entry(
+    s"reftpch_q$n", RefSql.file(n), gen = TpchGen, scale = scale)
 
   /** Verbatim (cast-wrapped) text of file n — public for the spec-side
-    * order-independence pin (RefTpchFullSpec evaluates it under 1 vs 32
-    * input partitions and requires bit-identical doubles). */
-  def text(n: Int): String = castWrap(n, RefSql.text(n))
+    * order-independence pin (OrderIndependenceSpec evaluates it under 1 vs
+    * 32 input partitions and requires bit-identical doubles). */
+  def text(n: Int): String =
+    SqlCorpus.reference.text(s"reftpch_q$n", RefSql.file(n))
 
-  private def q(n: Int): Q = {
-    val t = text(n)
-    Q(s"reftpch_q$n", oracleFor(t)) { (s, _) =>
-      val isolated = s.newSession()
-      TpchGen.register(isolated, tables = usedTables(t))
-      isolated.sql(t)
-    }
-  }
-
-  val all: Seq[Q] = (1 to 22).map(q)
+  val all: Seq[Q] = (1 to 22).map(entry(_))
 
   /** Bench-only scaled variants (NOT in the correctness registry — the
-    * scale-1 oracle twins above carry correctness): the same verbatim
-    * texts over orders/lineitem ×scale ([[TpchGen.rowsAt]]). */
-  def benchQ(n: Int, scale: Long): Q = {
-    val text = castWrap(n, RefSql.text(n))
-    Q.noOracle(s"reftpch_q${n}_x$scale") { (s, _) =>
-      val isolated = s.newSession()
-      TpchGen.register(isolated, scale, tables = usedTables(text))
-      isolated.sql(text)
-    }
-  }
-
-  /** q9 (6-table join through partsupp over every part) and q21 (the
-    * multi-supplier EXISTS/NOT-EXISTS self-joins) at 10M-row lineitem. */
-  lazy val benchOnly: Seq[Q] = Seq(benchQ(9, 167), benchQ(21, 167))
+    * scale-1 oracle twins above carry correctness): q9 (6-table join
+    * through partsupp over every part) and q21 (the multi-supplier
+    * EXISTS/NOT-EXISTS self-joins) at 10M-row lineitem. */
+  lazy val benchOnly: Seq[Q] = Seq(entry(9, 167), entry(21, 167))
 }

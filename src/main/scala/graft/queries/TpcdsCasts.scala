@@ -1,6 +1,8 @@
 package graft.queries
 
-/** Output-schema cast lists for the executed TPC-DS slice.
+/** Output-schema cast lists for the generated-corpus entries (the executed
+  * TPC-DS slice and reftpch_q12), keyed by entry name and applied by
+  * [[SqlCorpus.castWrap]].
   *
   * DuckDB widens sum(INTEGER/BIGINT) to HUGEINT (int128); the driver's
   * hasher treats widened integer outputs asymmetrically between the Spark
@@ -19,6 +21,7 @@ package graft.queries
   * types as HUGEINT. */
 object TpcdsCasts {
   val cols: Map[String, Seq[(String, Boolean)]] = Map(
+    "reftpch_q12" -> Seq(("l_shipmode", false), ("high_line_count", true), ("low_line_count", true)),
     "tpcds_q12" -> Seq(("i_item_id", false), ("i_item_desc", false), ("i_category", false), ("i_class", false), ("i_current_price", false), ("itemrevenue", true), ("revenueratio", false)),
     "tpcds_q13" -> Seq(("avg_qty", false), ("avg_sp", false), ("avg_wc", false), ("sum_wc", true)),
     "tpcds_q14a" -> Seq(("channel", false), ("i_brand_id", false), ("i_class_id", false), ("i_category_id", false), ("sum_sales", true), ("sum_number_sales", true)),

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
 /** Deterministic TPC-DS slice generator, one definition for BOTH engines.
@@ -20,7 +19,8 @@ import org.apache.spark.sql.types._
   *
   * Because both engines evaluate the identical integer/date arithmetic,
   * the inputs match bit-for-bit and the query outputs compare exactly.
-  * Schemas come from the reference's official DDL (RefTpcds.tables());
+  * Schemas come from `corpus`'s official DDL ([[RefTpcds.tables]]; the
+  * companion object reads the reference corpus, a test can pass a fixture);
   * every DECIMAL money column is generated as BIGINT cents — exact in
   * both engines and immune to the driver hasher's decimal asymmetry.
   * Expression dialect rules (each construct validated in both engines):
@@ -28,7 +28,7 @@ import org.apache.spark.sql.types._
   * for integer division, `||` concat, lpad, substr, year/month/day,
   * DATE literal + INT days.
   */
-object TpcdsGen {
+class TpcdsGen(corpus: SqlCorpus) extends TableGen {
 
   /** Rows per generated table — small enough that verify stays fast, big
     * enough that every slice query has non-trivial matching groups. */
@@ -65,17 +65,12 @@ object TpcdsGen {
     * grows. Dimensions and the weekly inventory snapshots stay fixed: the
     * expressions key dimension lookups off small moduli that stay valid at
     * any fact count, while inventory's date arithmetic is calendar-bound
-    * (scaling it would run the snapshot dates off the 2191-day calendar). */
-  private val factTables = Set("store_sales", "web_sales", "catalog_sales",
-    "store_returns", "catalog_returns", "web_returns")
-
-  /** Row counts with the fact streams scaled ×k (k=1 → [[rows]] exactly).
+    * (scaling it would run the snapshot dates off the 2191-day calendar).
     * Correctness entries always run at k=1; the bench-only `tpcds_*_x{k}`
     * entries use k≫1 so the TPC-DS plans move real data (the r6 verdict:
     * toy row counts measure planning overhead, not shuffle behavior). */
-  def rowsAt(k: Long): Map[String, Long] =
-    if (k <= 1) rows
-    else rows.map { case (t, n) => t -> (if (factTables(t)) n * k else n) }
+  protected val scaled = Set("store_sales", "web_sales", "catalog_sales",
+    "store_returns", "catalog_returns", "web_returns")
 
   /** Cross-table row-count references inside the echo/mirror expressions:
     * returns and re-purchase echoes address sale ROWS by `% <fact count>`,
@@ -94,10 +89,6 @@ object TpcdsGen {
   }
 
   private val BaseDate = "CAST('1998-01-01' AS DATE)"
-
-  /** Integer division, portable: DuckDB `/` on ints is float division and
-    * its double→int CAST rounds (Spark truncates), so always floor. */
-  private def div(a: String, b: Long) = s"CAST(floor(($a)/$b) AS BIGINT)"
 
   /** q58's promo week: days 1260..1266 (the week of 2001-06-16). Surge
     * items (i % 11 = 4 and i % 5 <> 0 — the echo construction owns every
@@ -123,11 +114,6 @@ object TpcdsGen {
     s"CASE WHEN ($itemExpr) % 7 = 2 AND id % 3 = 1 THEN " +
       s"(CASE ${div("id", 3)} % 3 WHEN 0 THEN 1288 WHEN 1 THEN 1344 " +
       s"ELSE 1414 END) + id % 7 ELSE $old END"
-
-  /** Simple-CASE pick from a string pool, keyed by a 0-based expr. */
-  private def pick(key: String, pool: Seq[String]): String =
-    pool.zipWithIndex.map { case (v, i) => s"WHEN $i THEN '$v'" }
-      .mkString(s"CASE CAST($key AS INT) ", " ", " END")
 
   // ------------------------------------------------------- semantic pools
   // Category/class/brand wiring satisfies the slice queries' literal
@@ -572,10 +558,7 @@ object TpcdsGen {
     case _ => s"'x' || CAST((id + $ci) % 53 AS STRING)"
   }
 
-  /** (column, expr) list for one table, DDL order; `r` carries the (possibly
-    * scaled) row counts the cross-table references resolve against. */
-  def columns(table: String,
-      r: Map[String, Long] = rows): Seq[(String, String)] = {
+  def columns(table: String, r: Map[String, Long]): Seq[(String, String)] = {
     val schema = ddlSchemas(table)
     val ov = overrides.getOrElse(table, Map.empty)
     schema.fields.zipWithIndex.map { case (f, i) =>
@@ -585,64 +568,8 @@ object TpcdsGen {
   }
 
   private lazy val ddlSchemas: Map[String, StructType] =
-    RefTpcds.tables().toMap
-
-  /** Parsed projection cache: registration is per-query-RUN (each registry
-    * call gets a fresh isolated session), and parsing the ~25 expression
-    * strings per table × 24 tables dominated registration time — pure
-    * driver-side overhead charged to every timed tpcds entry. Parsed
-    * expression trees are immutable and session-independent, so one parse
-    * per (table, scale) serves every run; the generated DATA is still
-    * computed from scratch on each execution. */
-  private val parsedCols = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), Seq[org.apache.spark.sql.Column]]
-
-  /** Register slice tables as temp views in `s` (call on an isolated
-    * `newSession()` — the generated names must not shadow the shared TPC-H
-    * views). `tables` lets a query register only the views its text
-    * references (the oracle prelude already restricts itself the same way
-    * via `usedTables`); the default registers the full slice. */
-  def register(s: SparkSession, scale: Long = 1,
-      partitions: Option[Int] = None,
-      tables: Seq[String] = rows.keys.toSeq): Unit = {
-    val r = rowsAt(scale)
-    tables.foreach { t =>
-      val n = r(t)
-      val cols = parsedCols.computeIfAbsent((t, scale), _ =>
-        columns(t, r).map { case (c, e) =>
-          org.apache.spark.sql.functions.expr(e).as(c) })
-      val base = partitions match {
-        case Some(p) => s.range(0, n, 1, numPartitions = p)
-        // Scale-adaptive input partitioning (optimization guide §2): bare
-        // range(n) always splits into defaultParallelism (=cores) tasks, so
-        // a 12-row dimension scan costs as many task launches as a 10M-row
-        // fact scan. Toy tables (<256k rows) get ~64k-row tasks (usually
-        // one); anything larger keeps the full session parallelism — a
-        // pure rows/64k rule starved the 0.5-3M-row ×167 side tables
-        // (web_returns, inventory) to 14-21 tasks and regressed the heavy
-        // movers ~2× (tpcds_q78_x167 6.1→12.0 s), so large tables keep the
-        // parallelism floor. Row content depends only on `id`, never on
-        // partitioning (the OrderIndependenceSpec pin).
-        case None => s.range(0, n, 1, numPartitions =
-          if (n < 262144) math.max(1, ((n + 65535) / 65536).toInt)
-          else s.sparkContext.defaultParallelism)
-      }
-      base.select(cols: _*).createOrReplaceTempView(t)
-    }
-  }
-
-  /** DuckDB WITH-prelude defining the same tables from the same exprs.
-    * `AS MATERIALIZED` is load-bearing, not an optimization hint: DuckDB
-    * 1.0.0 returns NONDETERMINISTIC row sets when a multi-join + string
-    * filter plan streams directly over these range() CTEs (q46 flaked
-    * between 995 and 1003 rows across runs; materialized inputs give the
-    * stable, correct 1011 — reproduced and bisected in round 6).
-    * Spark never sees this text — it registers the same expressions as
-    * temp views over spark.range. */
-  def duckPrelude(tables: Seq[String]): String =
-    tables.map { t =>
-      val cols = columns(t)
-        .map { case (c, e) => s"$e AS $c" }.mkString(",\n    ")
-      s"$t AS MATERIALIZED (\n  SELECT $cols\n  FROM (SELECT range AS id FROM range(${rows(t)})))"
-    }.mkString("WITH ", ",\n", "\n")
+    RefTpcds.tables(corpus).toMap
 }
+
+/** The generator over the reference corpus's DDL. */
+object TpcdsGen extends TpcdsGen(SqlCorpus.reference)

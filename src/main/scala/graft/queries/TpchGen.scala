@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
-
 /** Deterministic FULL-schema TPC-H generator, one definition for BOTH
   * engines — the TPC-H sibling of [[TpcdsGen]], built so the reference's
   * PRIMARY test corpus (cases/tpch/query/q1..q22.sql, the exact files its
@@ -62,7 +60,7 @@ import org.apache.spark.sql.SparkSession
   *     `sum(l_quantity) > 314` band is populated (4 lines × ≤50 caps
   *     organic sums at 200).
   */
-object TpchGen {
+object TpchGen extends TableGen {
 
   val rows: Map[String, Long] = Map(
     "region" -> 5L,
@@ -74,23 +72,13 @@ object TpchGen {
     "orders" -> 15000L,
     "lineitem" -> 60000L)
 
-  /** Row counts with the orders/lineitem fact pair scaled ×k (k=1 →
-    * [[rows]] exactly). Only those two scale: lineitem's order key is
+  /** Only the orders/lineitem fact pair scales: lineitem's order key is
     * div(id, 4), so the 4-lines-per-order structure (and q18's boost
     * band, q13's custkey lumps — all modular in id) is scale-invariant,
     * and l_suppkey/l_partkey reference only the FIXED part/supplier
     * dimensions, so the partsupp FK shape survives any k. Used by the
     * bench-only `reftpch_q*_x{k}` variants. */
-  def rowsAt(k: Long): Map[String, Long] =
-    if (k <= 1) rows
-    else rows.map { case (t, n) =>
-      t -> (if (t == "orders" || t == "lineitem") n * k else n) }
-
-  private def div(a: String, b: Long) = s"CAST(floor(($a)/$b) AS BIGINT)"
-
-  private def pick(key: String, pool: Seq[String]): String =
-    pool.zipWithIndex.map { case (v, i) => s"WHEN $i THEN '$v'" }
-      .mkString(s"CASE CAST($key AS INT) ", " ", " END")
+  protected val scaled = Set("orders", "lineitem")
 
   private val regions =
     Seq("AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST")
@@ -155,8 +143,12 @@ object TpchGen {
     s"(${odate(oid)}) + CAST(30 + (id*7) % 60 AS INT)"
   private val receiptdate = s"($shipdate) + CAST(1 + (id*3) % 30 AS INT)"
 
+  /** The column exprs don't depend on the scale. */
+  def columns(table: String, r: Map[String, Long]): Seq[(String, String)] =
+    exprs(table)
+
   /** (column, expr) list per table, official DDL order. */
-  val columns: Map[String, Seq[(String, String)]] = Map(
+  private val exprs: Map[String, Seq[(String, String)]] = Map(
     "region" -> Seq(
       "r_regionkey" -> "CAST(id AS INT)",
       "r_name" -> pick("id", regions),
@@ -243,46 +235,4 @@ object TpchGen {
       "l_shipinstruct" -> pick("id % 4", instructs),
       "l_shipmode" -> pick("id % 7", modes),
       "l_comment" -> "'line note ' || CAST((id*23) % 91 AS STRING)"))
-
-  /** Register every table as a temp view in `s` (call on an isolated
-    * `newSession()` — these names shadow the driver-testdata views).
-    * `partitions` forces the input partitioning — RefTpchFullSpec's
-    * order-independence pin evaluates every query under 1 vs 32 input
-    * partitions and requires bit-identical doubles (the dyadic-grid
-    * exactness guarantee above). */
-  def register(s: SparkSession, scale: Long = 1,
-      partitions: Option[Int] = None,
-      tables: Seq[String] = rows.keys.toSeq): Unit = {
-    val r = rowsAt(scale)
-    tables.foreach { t =>
-      val n = r(t)
-      // Parse each table's projection once per JVM (see TpcdsGen.register:
-      // expression parsing is per-run driver overhead; the column exprs here
-      // don't depend on scale, so the cache keys by table alone).
-      val cols = parsedCols.computeIfAbsent(t, _ =>
-        columns(t).map { case (c, e) =>
-          org.apache.spark.sql.functions.expr(e).as(c) })
-      val base = partitions match {
-        case Some(p) => s.range(0, n, 1, numPartitions = p)
-        // rows-sized partitioning with a parallelism floor for large
-        // tables, same rationale as TpcdsGen.register
-        case None => s.range(0, n, 1, numPartitions =
-          if (n < 262144) math.max(1, ((n + 65535) / 65536).toInt)
-          else s.sparkContext.defaultParallelism)
-      }
-      base.select(cols: _*).createOrReplaceTempView(t)
-    }
-  }
-
-  private val parsedCols = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[org.apache.spark.sql.Column]]
-
-  /** DuckDB WITH-prelude over the same expressions (MATERIALIZED for the
-    * same DuckDB-1.0 range-CTE determinism reason as [[TpcdsGen]]). */
-  def duckPrelude(tables: Seq[String]): String =
-    tables.map { t =>
-      val cols = columns(t)
-        .map { case (c, e) => s"$e AS $c" }.mkString(",\n    ")
-      s"$t AS MATERIALIZED (\n  SELECT $cols\n  FROM (SELECT range AS id FROM range(${rows(t)})))"
-    }.mkString("WITH ", ",\n", "\n")
 }

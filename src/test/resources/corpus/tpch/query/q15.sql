@@ -1,0 +1,32 @@
+-- TPC-H-style fixture: the statement opens with WITH, so the oracle merges
+-- its CTE list into the generator prelude's.
+with revenue as (
+	select
+		l_suppkey as supplier_no,
+		sum(l_extendedprice * (1 - l_discount)) as total_revenue
+	from
+		lineitem
+	-- whole-line comment inside the statement
+	where
+		l_shipdate >= date '1996-01-01'
+		and l_shipdate < date '1996-01-01' + interval '3' month
+	group by
+		l_suppkey
+)
+select
+	s_suppkey,
+	s_name,
+	total_revenue
+from
+	supplier,
+	revenue
+where
+	s_suppkey = supplier_no
+	and total_revenue = (
+		select
+			max(total_revenue)
+		from
+			revenue
+	)
+order by
+	s_suppkey;

@@ -190,11 +190,8 @@ class PlanSpec extends SparkTestBase {
     // scale-independent; only the row counts change).
     graft.queries.Tpcds.benchOnly.map(_.name).foreach { name =>
       val slug = name.split("_x")(0) // tpcds_q64 or tpcds_q14a
-      val num = slug.stripPrefix("tpcds_q")
-      val q =
-        if (num.forall(_.isDigit)) graft.queries.Tpcds.benchQ(num.toInt, 2)
-        else graft.queries.Tpcds.benchSplitQ(slug, 2)
-      val plan = q.run(spark, sf0001).queryExecution.sparkPlan
+      val plan = graft.queries.Tpcds.entry(slug, 2).run(spark, sf0001)
+        .queryExecution.sparkPlan
       val products = plan.collect {
         case j: org.apache.spark.sql.execution.joins.CartesianProductExec => j
       }
@@ -202,7 +199,7 @@ class PlanSpec extends SparkTestBase {
     }
     graft.queries.RefTpchFull.benchOnly.map(_.name).foreach { name =>
       val n = name.split("_x")(0).stripPrefix("reftpch_q").toInt
-      val plan = graft.queries.RefTpchFull.benchQ(n, 2).run(spark, sf0001)
+      val plan = graft.queries.RefTpchFull.entry(n, 2).run(spark, sf0001)
         .queryExecution.sparkPlan
       val products = plan.collect {
         case j: org.apache.spark.sql.execution.joins.CartesianProductExec => j

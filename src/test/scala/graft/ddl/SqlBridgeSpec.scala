@@ -1,48 +1,55 @@
 package graft.ddl
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import graft.SparkTestBase
+import graft.queries.SqlCorpus
 
 /** The reference's ddl.sql, byte-for-byte, through the dialect bridge —
   * plus pg-COPY round-trips over the TPC-H `.tbl`-style pipe CSV. */
 class SqlBridgeSpec extends SparkTestBase {
 
-  private val ddlPath = "/root/reference/cases/tpch/query/ddl.sql"
+  private val ddlPath = SqlCorpus.Root.resolve("tpch/query/ddl.sql")
+
+  /** Its own temp-view namespace: registry queries run by other suites in
+    * the same JVM register the driver testdata (nation, part, ...) as temp
+    * views on the shared session, which would shadow the tables created
+    * here. */
+  private lazy val session = spark.newSession()
 
   private def inScratchDb[A](name: String)(f: => A): A = {
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS $name")
-    val prev = spark.catalog.currentDatabase
-    spark.catalog.setCurrentDatabase(name)
+    session.sql(s"CREATE DATABASE IF NOT EXISTS $name")
+    val prev = session.catalog.currentDatabase
+    session.catalog.setCurrentDatabase(name)
     try f finally {
-      spark.catalog.setCurrentDatabase(prev)
-      spark.sql(s"DROP DATABASE IF EXISTS $name CASCADE")
+      session.catalog.setCurrentDatabase(prev)
+      session.sql(s"DROP DATABASE IF EXISTS $name CASCADE")
     }
   }
 
   test("the reference's ddl.sql runs byte-for-byte through the bridge") {
     inScratchDb("ref_ddl") {
-      val stmts = new String(Files.readAllBytes(Paths.get(ddlPath)), "UTF-8")
+      val stmts = new String(Files.readAllBytes(ddlPath), "UTF-8")
         .split(";").map(_.trim).filter(_.nonEmpty)
-      stmts.foreach(SqlBridge.execute(spark, _))
-      val tables = spark.catalog.listTables("ref_ddl")
+      stmts.foreach(SqlBridge.execute(session, _))
+      val tables = session.catalog.listTables("ref_ddl")
         .collect().map(_.name.toLowerCase).toSet
       assert(Set("nation", "region", "part", "supplier", "partsupp",
         "customer", "orders", "lineitem").subsetOf(tables))
       // inline constraints landed as enforceable properties
-      assert(Engine.primaryKeyOf(spark, "nation") == Seq("n_nationkey"))
-      assert(Engine.primaryKeyOf(spark, "partsupp") ==
+      assert(Engine.primaryKeyOf(session, "nation") == Seq("n_nationkey"))
+      assert(Engine.primaryKeyOf(session, "partsupp") ==
         Seq("ps_partkey", "ps_suppkey"))
-      assert(Engine.notNullOf(spark, "region").contains("r_name"))
+      assert(Engine.notNullOf(session, "region").contains("r_name"))
       // declared types survived Spark's own DDL type parser
-      val part = spark.table("part").schema
+      val part = session.table("part").schema
       assert(part("p_retailprice").dataType.sql == "DECIMAL(15,2)")
     }
   }
 
   test("pg COPY FROM pipe-delimited csv loads and enforces the PK") {
     inScratchDb("ref_copy") {
-      SqlBridge.execute(spark,
+      SqlBridge.execute(session,
         """CREATE TABLE NATION  ( N_NATIONKEY  INTEGER NOT NULL,
           |  N_NAME VARCHAR(25) NOT NULL,
           |  N_REGIONKEY INTEGER NOT NULL,
@@ -51,26 +58,26 @@ class SqlBridgeSpec extends SparkTestBase {
       val tbl = Files.createTempFile("nation-", ".tbl")
       Files.writeString(tbl,
         "0|ALGERIA|0|ok\n1|ARGENTINA|1|fine\n2|BRAZIL|1|\n")
-      val res = SqlBridge.execute(spark,
+      val res = SqlBridge.execute(session,
         s"COPY nation FROM '$tbl' (FORMAT csv, DELIMITER '|')")
       assert(res.collect().head.getLong(0) == 3L)
-      assert(spark.table("nation").count() == 3)
+      assert(session.table("nation").count() == 3)
       // re-copying the same keys violates the enforced PRIMARY KEY
       intercept[ConstraintViolationException] {
-        SqlBridge.execute(spark,
+        SqlBridge.execute(session,
           s"COPY nation FROM '$tbl' (FORMAT csv, DELIMITER '|')")
       }
       // COPY (query) TO parquet round-trips
       val out = Files.createTempDirectory("copyto-").toString + "/nation_out"
-      SqlBridge.execute(spark,
+      SqlBridge.execute(session,
         s"COPY (SELECT n_nationkey, n_name FROM nation) TO '$out' " +
           "(FORMAT parquet)")
-      assert(spark.read.parquet(out).count() == 3)
+      assert(session.read.parquet(out).count() == 3)
     }
   }
 
   test("plain SQL passes through untouched") {
-    val df = SqlBridge.execute(spark, "SELECT 1 + 1 AS two")
+    val df = SqlBridge.execute(session, "SELECT 1 + 1 AS two")
     assert(df.collect().head.getInt(0) == 2)
   }
 }

@@ -32,8 +32,9 @@ class RefSqlSpec extends SparkTestBase {
     val schemaGap = Set("TABLE_OR_VIEW_NOT_FOUND",
       "UNRESOLVED_COLUMN.WITH_SUGGESTION", "UNRESOLVED_COLUMN")
     ((1 to 22).toSet -- RefSql.Runnable).toSeq.sorted.foreach { n =>
+      val text = RefSql.text(n)
       val e = intercept[AnalysisException] {
-        spark.sql(RefSql.text(n)).collect()
+        spark.sql(text).collect()
       }
       assert(e.getCondition != null &&
         schemaGap.exists(e.getCondition.startsWith),

@@ -139,7 +139,7 @@ class TpcdsSpec extends SparkTestBase {
         |""".stripMargin).collect().head.getLong(0)
     assert(echo > 0)
     // the bench entry itself executes end-to-end at a small multiplier
-    assert(Tpcds.benchQ(64, 2).run(spark, "").limit(1).count() >= 0)
+    assert(Tpcds.entry("tpcds_q64", 2).run(spark, "").limit(1).count() >= 0)
   }
 
   test("q51 cumulative maxima are monotone per item") {
