@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
@@ -7,7 +8,11 @@ import java.nio.file.{Files, Paths}
   * `noop`-format write so output expressions are not pruned the way a bare
   * `.count()` allows (round-1 verdict #3). The single JSON result line goes
   * to stdout AND to the file named by SPARK_GRAFT_BENCH_OUT (if set), so an
-  * extra sbt log line can't wipe the round's numbers (verdict #4). */
+  * extra sbt log line can't wipe the round's numbers (verdict #4).
+  * `compiles` counts the classes Janino compiled during each entry's
+  * measured run: after a warm-up that is 0 unless generated code is
+  * specialized to values that change between runs, or the codegen cache
+  * evicts the entry's classes. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -44,11 +49,15 @@ object Bench {
       timed.view.filterKeys(!untimed.contains(_)).toMap)(names =>
       timed.view.filterKeys(names).toMap)
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val compiles = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       val t =
         try {
           val warm = once(fn) // JIT/codegen/IO cache
+          val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
           val measured = once(fn)
+          compiles(name) =
+            CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
           // A measured run slower than its own warm-up is an environmental
           // artifact (GC pause, page-cache eviction, a one-off AQE flip),
           // not the query's cost — BENCH_r04 recorded two such 10× modes
@@ -90,9 +99,11 @@ object Bench {
       .mkString("{", ",", "}")
     val fails = failed.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
       .mkString("{", ",", "}")
+    val compiled = compiles.map { case (k, v) => "\"" + k + "\":" + v }
+      .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fails,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fails,"compiles":$compiled,"sf":"$sfDir"}"""
     sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { p =>
       Files.writeString(Paths.get(p), json + "\n")
     }

@@ -1,7 +1,7 @@
 package graft.ddl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Dialect bridge for the two statement shapes the reference's SQL surface
   * has and Spark SQL's parser doesn't: CREATE TABLE with inline
@@ -53,6 +53,17 @@ object SqlBridge {
         copyReaderOptions(o))
       copyResult(spark, -1L)
     case other => spark.sql(other)
+  }
+
+  /** The result schema of a statement this bridge runs itself, or None
+    * for one that passes through to `spark.sql`. Known without running
+    * the statement, so a wire Describe can report it. */
+  def bridgedSchema(stmt: String): Option[StructType] = stmt match {
+    case CreateTableRe(_, _, body) if hasConstraintSyntax(body) =>
+      Some(new StructType())
+    case CopyFromRe(_, _, _) | CopyToRe(_, _, _, _) =>
+      Some(StructType(Seq(StructField("count", LongType, nullable = false))))
+    case _ => None
   }
 
   private def copyResult(spark: SparkSession, n: Long): DataFrame = {

@@ -233,16 +233,19 @@ case class MinHashSig(child: Expression, kExpr: Expression)
     copy(child = l, kExpr = r)
 }
 
-/** Puts the graft functions in every SparkSession. Listed in
+/** Puts the graft functions and the [[ParamLiterals]] rule in every
+  * SparkSession. Listed in
   * `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`,
   * so Spark's `ServiceLoader` hands it each new session (and each
   * `newSession()` child) at build time: no config key, no call site. */
 class GraftExtensions extends org.apache.spark.sql.SparkSessionExtensionsProvider {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftFunctions.builders.foreach { case (name, b) =>
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo(classOf[GraftFunctions.type].getName, name), b))
     }
+    ext.injectColumnar(_ => ParamLiterals.columnar)
+  }
 }
 
 /** The graft functions, callable through `call_function` / SQL in every

@@ -1,6 +1,7 @@
 package graft.server
 
 import java.util
+import java.util.OptionalLong
 
 import scala.jdk.CollectionConverters._
 
@@ -10,7 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{FunctionCatalog, Identifier, SupportsRead, Table, TableCapability, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder, Statistics, SupportsReportStatistics}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -25,10 +26,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * queries only, cmd/main/main.go:68) — here `\dt` actually lists tables.
   *
   * Everything is driver-local metadata: tables materialize as [[LocalScan]]
-  * rows snapshotted from the session catalog at scan time — never a
-  * distributed job, never remotely large. Registered on the wire server's
-  * session as `spark.sql.catalog.pg_catalog`, so `pg_catalog.pg_class`
-  * resolves through normal DSv2 lookup.
+  * rows snapshotted from the session catalog at scan time, never remotely
+  * large. A query over them still runs as Spark jobs (joins, sorts), which
+  * the scans' reported sizes keep to broadcast joins. Registered on the
+  * wire server's session as `spark.sql.catalog.pg_catalog`, so
+  * `pg_catalog.pg_class` resolves through normal DSv2 lookup.
   */
 class PgCatalog extends TableCatalog with FunctionCatalog {
 
@@ -454,7 +456,9 @@ class InformationSchemaCatalog extends TableCatalog {
     throw new UnsupportedOperationException("information_schema is read-only")
 }
 
-/** One driver-local metadata relation: rows snapshot at scan creation. */
+/** One driver-local metadata relation: rows snapshot at scan creation.
+  * The scan reports their count and size, so joins between catalog
+  * relations plan as broadcasts, not shuffled sort-merge joins. */
 private[server] final class PgLocalTable(tname: String, tschema: StructType,
     rowsFn: () => Array[InternalRow]) extends Table with SupportsRead {
   override def name(): String = tname
@@ -463,10 +467,17 @@ private[server] final class PgLocalTable(tname: String, tschema: StructType,
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder = new ScanBuilder {
-    override def build(): Scan = new LocalScan {
+    override def build(): Scan = new LocalScan with SupportsReportStatistics {
+      private val snapshot = rowsFn()
       override def readSchema(): StructType = tschema
-      override def rows(): Array[InternalRow] = rowsFn()
+      override def rows(): Array[InternalRow] = snapshot
       override def description(): String = s"pg_catalog.$tname"
+      override def estimateStatistics(): Statistics = new Statistics {
+        override def sizeInBytes(): OptionalLong =
+          OptionalLong.of(snapshot.length.toLong * tschema.defaultSize)
+        override def numRows(): OptionalLong =
+          OptionalLong.of(snapshot.length.toLong)
+      }
     }
   }
 }

@@ -8,7 +8,11 @@ import java.util.concurrent.atomic.AtomicBoolean
 import scala.collection.mutable
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession, classic}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.parser.NamedParameterContext
+import org.apache.spark.sql.catalyst.plans.logical.Command
+import org.apache.spark.sql.execution.CommandExecutionMode
 import org.apache.spark.sql.types._
 
 /** PostgreSQL wire-protocol (v3) server over Spark SQL.
@@ -156,6 +160,8 @@ final class WireServer(
     val pid = pidGen.incrementAndGet()
     val secret = rnd.nextInt()
     val jobGroup = s"graft-wire-$pid"
+    // this thread parses and plans for `spark` only
+    SparkSession.setActiveSession(spark)
     cancelKeys.put((pid, secret), jobGroup)
     // statements run on THIS thread; the group is thread-local, so every
     // job a statement triggers is cancellable by key
@@ -410,41 +416,33 @@ final class WireServer(
         case 'D' => // Describe 'S' statement | 'P' portal
           val kind = body(0).toChar
           val (name, _) = cString(body, 1)
-          val target: Option[(String, Map[String, Any], Vector[Int])] =
-            if (kind == 'S')
-              statements.get(name).map { p =>
-                // schema derivation needs bound markers: typed zero values
-                val zeros = p.paramOids.zipWithIndex.map { case (oid, i) =>
-                  s"p${i + 1}" -> zeroValue(oid)
-                }.toMap
-                (p.sql, zeros, p.paramOids)
-              }
-            else portals.get(name).map(p => (p.sql, p.args, Vector.empty))
-          target.filter(_._1.trim.nonEmpty) match {
-            case None => msg(out, 'n') { _ => () }             // NoData
-            case Some((sql, _, oids)) if txnTag(sql).isDefined =>
-              // txn control never reaches the SQL parser: zero params,
-              // no row description (a command tag is its whole result)
+          try {
+            // (parameter oids, plan): planning runs nothing, so Describe
+            // never executes the statement
+            val described: Option[(Vector[Int], Plan)] =
               if (kind == 'S')
-                msg(out, 't') { b =>
-                  b.writeShort(oids.length)
-                  oids.foreach(oid => b.writeInt(if (oid == 0) 25 else oid))
+                statements.get(name).filter(_.sql.trim.nonEmpty).map { p =>
+                  // schema derivation needs bound markers: typed zero values
+                  val zeros = p.paramOids.zipWithIndex.map { case (oid, i) =>
+                    s"p${i + 1}" -> zeroValue(oid)
+                  }.toMap
+                  (p.paramOids, plan(p.sql, zeros))
                 }
-              msg(out, 'n') { _ => () }                        // NoData
-            case Some((sql, args, oids)) =>
-              try {
-                val df =
-                  if (args.isEmpty) spark.sql(sql) else spark.sql(sql, args)
+              else portals.get(name).filter(_.sql.trim.nonEmpty)
+                .map(p => (Vector.empty, p.plan))
+            described match {
+              case None => msg(out, 'n') { _ => () }           // NoData
+              case Some((oids, plan)) =>
                 if (kind == 'S')
                   msg(out, 't') { b =>                         // ParameterDescription
                     b.writeShort(oids.length)
                     oids.foreach(oid => b.writeInt(if (oid == 0) 25 else oid))
                   }
-                if (df.schema.isEmpty) msg(out, 'n') { _ => () }
-                else rowDescription(out, df.schema)
-              } catch {
-                case NonFatal(e) => extErr("42601", exMessage(e))
-              }
+                if (plan.schema.isEmpty) msg(out, 'n') { _ => () }
+                else rowDescription(out, plan.schema)
+            }
+          } catch {
+            case NonFatal(e) => extErr("42601", exMessage(e))
           }
 
         case 'E' => // Execute: portal name, max rows (0 = all)
@@ -482,13 +480,15 @@ final class WireServer(
     * plus the declared parameter type OIDs (padded to the marker count). */
   private final case class Prepared(sql: String, paramOids: Vector[Int])
 
-  /** A bound portal. Holds the result iterator across Execute messages so
-    * a max-rows Execute can suspend and a later one resume. Once run to
+  /** A bound portal. Plans its statement once, on first Describe or
+    * Execute, and holds the result iterator across Execute messages so a
+    * max-rows Execute can suspend and a later one resume. Once run to
     * completion, `completedTag` records the final CommandComplete tag — a
     * later Execute on the same portal answers with that tag idempotently
     * instead of re-running the statement (re-running DML twice on a client
     * retry would be a silent double-write). */
   private final class Portal(val sql: String, val args: Map[String, Any]) {
+    lazy val plan: Plan = WireServer.this.plan(sql, args)
     var it: java.util.Iterator[org.apache.spark.sql.Row] = _
     var schema: StructType = _
     var rowsSent: Long = 0
@@ -501,6 +501,36 @@ final class WireServer(
         case _ => ()
       }
       it = null
+    }
+  }
+
+  /** A statement planned with its values bound, before anything runs:
+    * its result schema, and for a query the analyzed frame Execute
+    * streams. A command has no frame: `spark.sql` runs a command as it
+    * builds the frame, so only Execute builds one. */
+  private final class Plan(val schema: StructType, val query: Option[DataFrame])
+
+  /** Parse and analyze `sql` with `args` bound, the way `spark.sql(sql,
+    * args)` does, but run nothing. Transaction control and the statements
+    * [[graft.ddl.SqlBridge]] runs itself (Spark's parser rejects them) are
+    * commands without reaching the parser. */
+  private def plan(sql: String, args: Map[String, Any]): Plan = {
+    // txn control never reaches the SQL parser: its tag is its whole result
+    val commandSchema =
+      if (txnTag(sql).isDefined) Some(new StructType())
+      else if (args.isEmpty) graft.ddl.SqlBridge.bridgedSchema(sql)
+      else None
+    commandSchema match {
+      case Some(schema) => new Plan(schema, None)
+      case None =>
+        val parsed = spark.sessionState.sqlParser.parsePlanWithParameters(sql,
+          NamedParameterContext(args.map { case (k, v) => k -> Literal.create(v) }))
+        val qe = spark.sessionState.executePlan(parsed, CommandExecutionMode.SKIP)
+        qe.assertAnalyzed()
+        val schema = qe.analyzed.schema
+        if (qe.analyzed.exists(_.isInstanceOf[Command])) new Plan(schema, None)
+        else new Plan(schema, Some(new classic.Dataset[Row](
+          qe.sparkSession, qe.analyzed, Encoders.row(schema))))
     }
   }
 
@@ -526,11 +556,13 @@ final class WireServer(
         case None => ()
       }
       if (p.it == null) {
-        val df =
+        // a query streams the portal's one plan; a command runs here, once
+        val df = p.plan.query.getOrElse {
           if (p.args.isEmpty)
             // no parameters: full statement surface (DDL/COPY via the bridge)
             graft.ddl.SqlBridge.execute(spark, p.sql)
           else spark.sql(p.sql, p.args)
+        }
         p.schema = df.schema
         if (p.schema.isEmpty) {
           df.collect()

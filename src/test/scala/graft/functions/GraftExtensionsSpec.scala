@@ -8,22 +8,6 @@ import org.apache.spark.sql.SparkSession
   * `newSession()` child both resolve all of them through SQL. */
 class GraftExtensionsSpec extends SparkTestBase {
 
-  /** Runs `body` on a session the bare builder creates on the running
-    * SparkContext, then restores the shared test session. */
-  private def withBareSession(body: SparkSession => Unit): Unit = {
-    val shared = spark // the SparkContext is the test base's, not this one's
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val bare = SparkSession.builder().getOrCreate()
-      assert(bare ne shared)
-      body(bare)
-    } finally {
-      SparkSession.setDefaultSession(shared)
-      SparkSession.setActiveSession(shared)
-    }
-  }
-
   private def assertResolves(s: SparkSession): Unit = {
     GraftFunctions.builders.foreach { case (name, _) =>
       assert(s.catalog.functionExists(name), name)

@@ -1,11 +1,13 @@
 package graft.server
 
 import graft.{SparkTestBase, Tables}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 
 /** Wire-protocol server oracle: a raw-socket client (no pg library — the
   * framing itself is under test) drives the simple-query cycle and pins
   * message-level behavior against the public protocol spec. */
-class WireServerSpec extends SparkTestBase {
+class WireServerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private def withServer[A](f: WireClient.Conn => A): A = {
     val server = new WireServer(spark, 0, Tables.register(_, sf0001))
@@ -351,6 +353,79 @@ class WireServerSpec extends SparkTestBase {
           .rows.head.head.get == "1")
       } finally conn.query(
         "USE default; DROP DATABASE IF EXISTS wire_portal CASCADE")
+    }
+  }
+
+  test("psql's \\dt query joins the catalog relations by broadcast") {
+    withServer { conn =>
+      // the catalog query psql 14-16 sends for `\dt`
+      val dt =
+        """SELECT n.nspname as "Schema",
+          |  c.relname as "Name",
+          |  CASE c.relkind WHEN 'r' THEN 'table' WHEN 'v' THEN 'view' WHEN 'm' THEN 'materialized view' WHEN 'i' THEN 'index' WHEN 'S' THEN 'sequence' WHEN 't' THEN 'TOAST table' WHEN 'f' THEN 'foreign table' WHEN 'p' THEN 'partitioned table' WHEN 'I' THEN 'partitioned index' END as "Type",
+          |  pg_catalog.pg_get_userbyid(c.relowner) as "Owner"
+          |FROM pg_catalog.pg_class c
+          |     LEFT JOIN pg_catalog.pg_namespace n ON n.oid = c.relnamespace
+          |     LEFT JOIN pg_catalog.pg_am am ON am.oid = c.relam
+          |WHERE c.relkind IN ('r','p','')
+          |      AND n.nspname <> 'pg_catalog'
+          |      AND n.nspname !~ '^pg_toast'
+          |      AND n.nspname <> 'information_schema'
+          |  AND pg_catalog.pg_table_is_visible(c.oid)
+          |ORDER BY 1,2""".stripMargin
+      val names = conn.query(dt).head.rows.map(_(1).get)
+      Tables.all.foreach(t => assert(names.contains(t), names))
+      val df = spark.sql(PgDialect.translate(dt))
+      df.collect()
+      val smj = collect(df.queryExecution.executedPlan) {
+        case j: SortMergeJoinExec => j
+      }
+      assert(smj.isEmpty, df.queryExecution.executedPlan)
+    }
+  }
+
+  /** Runs `f` with `CREATE TABLE t ( A INTEGER )` in a fresh database. */
+  private def withTable[A](db: String)(f: WireClient.Conn => A): A =
+    withServer { conn =>
+      conn.query(s"CREATE DATABASE IF NOT EXISTS $db; USE $db")
+      try {
+        conn.query("CREATE TABLE t ( A INTEGER )")
+        f(conn)
+      } finally conn.query(s"USE default; DROP DATABASE IF EXISTS $db CASCADE")
+    }
+
+  private def rows(conn: WireClient.Conn): String =
+    conn.query("SELECT count(*) AS c FROM t").head.rows.head.head.get
+
+  test("Describe of an INSERT statement runs nothing") {
+    withTable("wire_describe") { conn =>
+      val (oids, fields) =
+        conn.describeStatement("INSERT INTO t VALUES ($1)", Seq(23))
+      assert(oids == Vector(23))
+      assert(fields.isEmpty)
+      assert(rows(conn) == "0")
+    }
+  }
+
+  test("Parse/Bind/Describe/Execute of an INSERT inserts exactly once") {
+    withTable("wire_insert") { conn =>
+      val res = conn.queryExtended("INSERT INTO t VALUES ($1)", Seq(23 -> Some("5")))
+      assert(res.fields.isEmpty)
+      assert(rows(conn) == "1")
+      assert(conn.query("SELECT a FROM t").head.rows == Vector(Vector(Some("5"))))
+    }
+  }
+
+  test("bridged DDL and COPY describe and run over the extended protocol") {
+    withTable("wire_bridge") { conn =>
+      val create = conn.queryExtended(
+        "CREATE TABLE T2 ( A INTEGER NOT NULL, B VARCHAR(10), PRIMARY KEY (A) )")
+      assert(create.tag == "CREATE TABLE")
+      val f = java.nio.file.Files.createTempFile("wire-", ".tbl")
+      java.nio.file.Files.writeString(f, "1|x\n2|y\n")
+      val copied = conn.queryExtended(s"COPY t2 FROM '$f' (FORMAT csv, DELIMITER '|')")
+      assert(copied.fields == Vector("count" -> 20))
+      assert(copied.rows == Vector(Vector(Some("2"))))
     }
   }
 
