@@ -26,7 +26,10 @@ object Bench {
 
     // Session warm-up: first query in a JVM pays codegen + executor spin-up.
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(
+        s"[bench] warm-up failed: ${e.getClass.getName}: ${e.getMessage}")
+    }
 
     // Planning-only gates stay in CORRECTNESS/Verify but out of the timed
     // loop: ref_tpcds_plan re-plans 99 queries driver-side (~2.4 s, 4% of

@@ -47,8 +47,11 @@ object HardLinkCommitHandler extends CommitHandler {
   *  - Commits are manifest swaps via atomic hard-link publish (the local-FS
   *    analogue of the reference's LocalRenameCommitHandler,
   *    storage2/commit.go:22-25; on S3 this becomes a conditional PUT).
-  *    Concurrent writers race on the version file; losers get
-  *    [[CommitConflictException]] (appends auto-rebase and retry).
+  *    Every write commits through ONE path, `commitOp`: the operation's
+  *    plan returns the next manifest, `commitOp` stamps and publishes it,
+  *    and a writer that loses the version-file race refreshes, checks the
+  *    conflict matrix (conflict.go:33-360) against every intervening
+  *    commit, and re-plans — or fails with [[CommitConflictException]].
   *  - Stable row ids: a physical `_rowid` column claimed from the manifest's
   *    `nextRowId` range at append time and preserved verbatim by every
   *    rewrite (delete/update/merge/compact) — the storage2 rowids.go model.
@@ -109,11 +112,7 @@ final class LakeDataset private (
   def checkout(v: Long): LakeDataset =
     new LakeDataset(spark, root, loadV(v), branch = branch)
 
-  def versions: Seq[Long] =
-    io.listNames(manifestsDir)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.substring(1, n.length - 5).toLong)
-      .sorted
+  def versions: Seq[Long] = versionsIn(manifestsDir)
 
   /** Commit log across all retained versions (Delta DESCRIBE HISTORY
     * shape): version, operation, parent, fragment/row counts, timestamp. */
@@ -397,26 +396,11 @@ final class LakeDataset private (
     * callers that would otherwise append-then-setProperties (e.g. the MV
     * initial build recording its refresh cursor) save a whole manifest
     * swap, and the property can never be observed without the data. */
-  def append(df: DataFrame,
-      extraProps: Map[String, String]): Unit = withOpRetry(OpKind.Append, 5) {
-    val checked = enforcePrimaryKey(df)
-    try {
-      val base = m.nextRowId
-      val (frags, maxRid) =
-        stageFragments(toPhysical(checked, m)
-          .withColumn(RowIdCol, lit(base) + monotonically_increasing_id()), m)
-      commit(m.copy(
-        version = m.version + 1,
-        fragments = m.fragments ++ frags,
-        maxFragmentId = m.maxFragmentId + frags.size,
-        nextRowId = math.max(m.nextRowId, maxRid + 1),
-        properties = m.properties ++ extraProps,
-        parentVersion = Some(m.version),
-        createdMs = System.currentTimeMillis(),
-        operation = "append",
-        touchedFragmentIds = Nil))
-    } finally if (checked ne df) graft.Materialize.unpin(checked)
-  }
+  def append(df: DataFrame, extraProps: Map[String, String]): Unit =
+    commitOp(OpKind.Append, "append") {
+      withPrimaryKeyChecked(df)(appended(m, _))
+        .copy(properties = m.properties ++ extraProps)
+    }
 
   /** Append that auto-evolves the schema (reference Merge(fragments,
     * newSchema), sdk/dataset.go:1038; Delta's mergeSchema): columns present
@@ -430,45 +414,53 @@ final class LakeDataset private (
     * cleanly; racing overwrite/merge still conflicts. A concurrent
     * appendMergeSchema that already added the same column simply drops it
     * from this commit's additions on retry (idempotent column add). */
-  def appendMergeSchema(df: DataFrame): Unit = {
-    // Session-resolver name comparison (round-4 ADVICE): Spark resolution
-    // is case-insensitive by default, so a batch column differing only in
-    // case must NOT be added as a duplicate field.
+  def appendMergeSchema(df: DataFrame): Unit =
+    if (!evolvesSchema(df)) append(df)
+    else commitOp(OpKind.Project, "append_merge_schema") {
+      val (man2, filled) = mergedSchema(df)
+      // the PK gate applies to THIS insert door too (a batch missing a
+      // key column null-fills it and is rejected as a null key)
+      withPrimaryKeyChecked(filled)(appended(man2, _))
+    }
+
+  /** Overwrite that evolves the schema in the SAME commit (round-4 ADVICE:
+    * DSv2 mode("overwrite") + mergeSchema previously skipped alignment and
+    * silently dropped new columns). Column semantics mirror
+    * [[appendMergeSchema]]: columns new in `df` are ADDED (nullable, fresh
+    * field ids), dataset columns missing from `df` are kept and null-filled,
+    * names resolve with the session resolver. All prior data is replaced. */
+  def overwriteMergeSchema(df: DataFrame): Unit =
+    if (!evolvesSchema(df)) overwrite(df)
+    else commitOp(OpKind.Overwrite, "overwrite_merge_schema") {
+      val (man2, filled) = mergedSchema(df)
+      overwritten(man2, filled)
+    }
+
+  /** The current manifest with `df`'s new columns added (nullable, fresh
+    * field ids), and `df` null-filled for every dataset column it lacks.
+    * Session-resolver name comparison (round-4 ADVICE): Spark resolution
+    * is case-insensitive by default, so a batch column differing only in
+    * case must NOT be added as a duplicate field. */
+  private def mergedSchema(df: DataFrame): (Manifest, DataFrame) = {
     val resolver = df.sparkSession.sessionState.conf.resolver
-    def newCols = df.schema.fields
+    val added = df.schema.fields
       .filterNot(f => m.fields.exists(mf => resolver(mf.name, f.name)))
-    def missingCols =
-      m.fields.filterNot(f => df.columns.exists(resolver(_, f.name)))
-    if (newCols.isEmpty && missingCols.isEmpty) return append(df)
-    withOpRetry(OpKind.Project, 5) {
-      val added = newCols.zipWithIndex.map { case (sf, i) =>
+      .zipWithIndex.map { case (sf, i) =>
         FieldDef(m.maxFieldId + i + 1, sf.name, sf.dataType.json,
           nullable = true)
       }
-      val man2 = m.copy(fields = m.fields ++ added,
-        maxFieldId = m.maxFieldId + added.length)
-      val filled = man2.fields.foldLeft(df)((d, f) =>
-        if (d.columns.exists(resolver(_, f.name))) d
-        else d.withColumn(f.name, lit(null).cast(DataType.fromJson(f.dataType))))
-      // the PK gate applies to THIS insert door too (a batch missing a
-      // key column null-fills it and is rejected as a null key)
-      val checked = enforcePrimaryKey(filled)
-      try {
-        val base = man2.nextRowId
-        val (frags, maxRid) = stageFragments(toPhysical(checked, man2)
-          .withColumn(RowIdCol, lit(base) + monotonically_increasing_id()),
-          man2)
-        commit(man2.copy(
-          version = m.version + 1,
-          fragments = man2.fragments ++ frags,
-          maxFragmentId = man2.maxFragmentId + frags.size,
-          nextRowId = math.max(man2.nextRowId, maxRid + 1),
-          parentVersion = Some(m.version),
-          createdMs = System.currentTimeMillis(),
-          operation = "append_merge_schema",
-          touchedFragmentIds = Nil))
-      } finally if (checked ne filled) graft.Materialize.unpin(checked)
-    }
+    val man2 = m.copy(fields = m.fields ++ added,
+      maxFieldId = m.maxFieldId + added.length)
+    val filled = man2.fields.foldLeft(df)((d, f) =>
+      if (d.columns.exists(resolver(_, f.name))) d
+      else d.withColumn(f.name, lit(null).cast(DataType.fromJson(f.dataType))))
+    (man2, filled)
+  }
+
+  /** True when `df` adds a column or lacks one of the dataset's. */
+  private def evolvesSchema(df: DataFrame): Boolean = {
+    val (man2, filled) = mergedSchema(df)
+    man2.maxFieldId != m.maxFieldId || (filled ne df)
   }
 
   /** Exactly-once micro-batch append for Structured Streaming's
@@ -477,72 +469,41 @@ final class LakeDataset private (
     * failure (foreachBatch is at-least-once) is detected and skipped.
     * Returns false when the batch was already committed. */
   def appendStreamingBatch(df: DataFrame, queryKey: String,
-      batchId: Long): Boolean = {
-    val key = s"streaming.$queryKey.lastBatchId"
-    var applied = false
-    withOpRetry(OpKind.Append, 5) {
-      if (m.properties.get(key).exists(_.toLong >= batchId)) {
-        applied = false
-      } else {
-        val base = m.nextRowId
-        val (frags, maxRid) =
-          stageFragments(toPhysical(df, m)
-            .withColumn(RowIdCol, lit(base) + monotonically_increasing_id()), m)
-        commit(m.copy(
-          version = m.version + 1,
-          fragments = m.fragments ++ frags,
-          maxFragmentId = m.maxFragmentId + frags.size,
-          nextRowId = math.max(m.nextRowId, maxRid + 1),
-          properties = m.properties + (key -> batchId.toString),
-          parentVersion = Some(m.version),
-          createdMs = System.currentTimeMillis(),
-          operation = s"append_stream($queryKey,$batchId)",
-      touchedFragmentIds = Nil))
-        applied = true
-      }
-    }
-    applied
-  }
+      batchId: Long): Boolean =
+    streamingAppend("append_stream", queryKey, batchId)(df)
 
   /** Deduplicating exactly-once micro-batch append: `df` is anti-joined on
-    * `keys` against the CURRENT table state INSIDE the commit retry loop.
-    * The commit is a create-if-absent CAS on the next version file, so a
+    * `keys` against the CURRENT table state INSIDE the commit plan. The
+    * commit is a create-if-absent CAS on the next version file, so a
     * success proves no other writer landed between the anti-join's manifest
     * snapshot and the publish; when a concurrent commit does land first, the
-    * CAS fails, [[withOpRetry]] refreshes the manifest, and the anti-join is
+    * CAS fails, [[commitOp]] refreshes the manifest, and the anti-join is
     * REBUILT against the refreshed state before the next attempt — two
     * queries racing the same key cannot both land it (the losing racer
     * re-checks and drops the now-duplicate rows). Returns false when the
     * `(queryKey, batchId)` high-water mark shows a replay. */
   def dedupAppendStreamingBatch(df: DataFrame, keys: Seq[String],
       queryKey: String, batchId: Long): Boolean = {
-    val key = s"streaming.$queryKey.lastBatchId"
-    var applied = false
     val incoming = df.dropDuplicates(keys)
-    withOpRetry(OpKind.Append, 5) {
-      if (m.properties.get(key).exists(_.toLong >= batchId)) {
-        applied = false
-      } else {
-        val existing = read().select(keys.map(col): _*).distinct()
-        val fresh = incoming.join(existing, keys, "left_anti")
-        val base = m.nextRowId
-        val (frags, maxRid) =
-          stageFragments(toPhysical(fresh, m)
-            .withColumn(RowIdCol, lit(base) + monotonically_increasing_id()), m)
-        commit(m.copy(
-          version = m.version + 1,
-          fragments = m.fragments ++ frags,
-          maxFragmentId = m.maxFragmentId + frags.size,
-          nextRowId = math.max(m.nextRowId, maxRid + 1),
-          properties = m.properties + (key -> batchId.toString),
-          parentVersion = Some(m.version),
-          createdMs = System.currentTimeMillis(),
-          operation = s"append_stream_dedup($queryKey,$batchId)",
-          touchedFragmentIds = Nil))
-        applied = true
-      }
+    streamingAppend("append_stream_dedup", queryKey, batchId) {
+      incoming.join(read().select(keys.map(col): _*).distinct(), keys,
+        "left_anti")
     }
-    applied
+  }
+
+  private def streamingKey(queryKey: String): String =
+    s"streaming.$queryKey.lastBatchId"
+
+  /** Appends `batch` (re-evaluated per attempt) with the batch's high-water
+    * mark, unless the mark shows a replay. */
+  private def streamingAppend(op: String, queryKey: String, batchId: Long)(
+      batch: => DataFrame): Boolean = {
+    val key = streamingKey(queryKey)
+    commitOp(OpKind.Append, s"$op($queryKey,$batchId)") {
+      if (m.properties.get(key).exists(_.toLong >= batchId)) m
+      else appended(m, batch)
+        .copy(properties = m.properties + (key -> batchId.toString))
+    }
   }
 
   /** Two-phase ("detached") append: phase 1 writes the fragment files
@@ -551,11 +512,8 @@ final class LakeDataset private (
     * transactions (storage2/detached_txn.go:23-330). A staged append that
     * is never committed is garbage-collected by [[vacuum]]. */
   def stageAppend(df: DataFrame): StagedAppend = {
-    val base = m.nextRowId
-    val (frags, maxRid) =
-      stageFragments(toPhysical(df, m)
-        .withColumn(RowIdCol, lit(base) + monotonically_increasing_id()), m)
-    StagedAppend(frags, base, maxRid)
+    val (frags, nextRowId) = stageFresh(df, m)
+    StagedAppend(frags, m.nextRowId, nextRowId - 1)
   }
 
   // ------------------------------------------------- detached transactions
@@ -599,12 +557,10 @@ final class LakeDataset private (
 
   /** Durable phase-1 overwrite (reference CreateDetachedOverwrite). */
   def createDetachedOverwrite(df: DataFrame): String = {
-    val base = m.nextRowId
-    val (frags, maxRid) =
-      stageFragments(toPhysical(df, m)
-        .withColumn(RowIdCol, lit(base) + monotonically_increasing_id()), m)
+    val staged = stageAppend(df)
     persistDetached(DetachedTxn(UUID.randomUUID().toString, "overwrite",
-      frags, Nil, base, maxRid, 0L, System.currentTimeMillis()))
+      staged.fragments, Nil, staged.baseRowId, staged.maxRowId, 0L,
+      System.currentTimeMillis()))
   }
 
   /** Pending detached transactions (reference ListDetached). */
@@ -623,7 +579,8 @@ final class LakeDataset private (
 
   /** Phase 2: commit a persisted detached txn through the same matrix-
     * checked paths as the live operations, then drop the intent record
-    * (reference CommitDetached). Returns rows affected (appended rows /
+    * (reference CommitDetached). Staged fragment ids are renumbered against
+    * the manifest they commit to. Returns rows affected (appended rows /
     * deleted rows / new row count for overwrite). */
   def commitDetached(id: String): Long = {
     val p = detachedDir.resolve(s"$id.json")
@@ -634,31 +591,14 @@ final class LakeDataset private (
         commitStaged(StagedAppend(t.fragments, t.baseRowId, t.maxRowId))
         t.fragments.map(_.rowCount).sum
       case "delete" =>
-        if (t.touchedFragmentIds.nonEmpty) {
-          // renumber: fragment ids assigned at stage time may collide with
-          // ids the manifest handed out since
-          var nid = m.maxFragmentId
-          val frags = t.fragments.map { f => nid += 1; f.copy(id = nid) }
+        if (t.touchedFragmentIds.nonEmpty)
           commitRewrite(OpKind.DeleteUpdate, t.touchedFragmentIds.toSet,
-            frags, "delete")
-        }
+            t.fragments, "delete")
         t.matchedRows
       case "overwrite" =>
-        var nid = m.maxFragmentId
-        val frags = t.fragments.map { f => nid += 1; f.copy(id = nid) }
-        withOpRetry(OpKind.Overwrite, 5) {
-          commit(m.copy(
-            version = m.version + 1,
-            fragments = frags,
-            maxFragmentId = math.max(m.maxFragmentId,
-              (0L +: frags.map(_.id)).max),
-            nextRowId = math.max(m.nextRowId, t.maxRowId + 1),
-            deletionFiles = Nil, // all replaced rows are gone with the data
-            deletedRowCount = 0L,
-            parentVersion = Some(m.version),
-            createdMs = System.currentTimeMillis(),
-            operation = "overwrite",
-            touchedFragmentIds = Nil))
+        commitOp(OpKind.Overwrite, "overwrite") {
+          replacedBy(m, numbered(t.fragments))
+            .copy(nextRowId = math.max(m.nextRowId, t.maxRowId + 1))
         }
         t.fragments.map(_.rowCount).sum
       case other =>
@@ -689,83 +629,20 @@ final class LakeDataset private (
   /** Commit a staged append (rebases like [[append]], but staged files
     * carry their rowids already — if a concurrent commit claimed the same
     * rowid range, the conflict is surfaced instead of silently colliding). */
-  def commitStaged(staged: StagedAppend): Unit = withOpRetry(OpKind.Append, 5) {
-    if (m.nextRowId > staged.baseRowId)
-      throw new CommitConflictException(
-        s"rowid range from ${staged.baseRowId} was claimed concurrently; re-stage")
-    var nid = m.maxFragmentId
-    val frags = staged.fragments.map { f => nid += 1; f.copy(id = nid) }
-    commit(m.copy(
-      version = m.version + 1,
-      fragments = m.fragments ++ frags,
-      maxFragmentId = nid,
-      nextRowId = math.max(m.nextRowId, staged.maxRowId + 1),
-      parentVersion = Some(m.version),
-      createdMs = System.currentTimeMillis(),
-      operation = "append_detached",
-      touchedFragmentIds = Nil))
-  }
+  def commitStaged(staged: StagedAppend): Unit =
+    commitOp(OpKind.Append, "append_detached") {
+      if (m.nextRowId > staged.baseRowId)
+        throw new CommitConflictException(
+          s"rowid range from ${staged.baseRowId} was claimed concurrently; re-stage")
+      m.copy(fragments = m.fragments ++ numbered(staged.fragments),
+        nextRowId = math.max(m.nextRowId, staged.maxRowId + 1))
+    }
 
   /** Replace all data with `df` in one commit. Overwrite depends on no
     * prior state, so it rebases over any concurrent commit (matrix row:
     * all compatible). */
-  def overwrite(df: DataFrame): Unit = withOpRetry(OpKind.Overwrite, 5) {
-    val base = m.nextRowId
-    val (frags, maxRid) =
-      stageFragments(toPhysical(df, m)
-        .withColumn(RowIdCol, lit(base) + monotonically_increasing_id()), m)
-    commit(m.copy(
-      version = m.version + 1,
-      fragments = frags,
-      maxFragmentId = m.maxFragmentId + frags.size,
-      nextRowId = math.max(m.nextRowId, maxRid + 1),
-      deletionFiles = Nil, // all replaced rows are gone with the data
-      deletedRowCount = 0L,
-      parentVersion = Some(m.version),
-      createdMs = System.currentTimeMillis(),
-      operation = "overwrite",
-      touchedFragmentIds = Nil))
-  }
-
-  /** Overwrite that evolves the schema in the SAME commit (round-4 ADVICE:
-    * DSv2 mode("overwrite") + mergeSchema previously skipped alignment and
-    * silently dropped new columns). Column semantics mirror
-    * [[appendMergeSchema]]: columns new in `df` are ADDED (nullable, fresh
-    * field ids), dataset columns missing from `df` are kept and null-filled,
-    * names resolve with the session resolver. All prior data is replaced. */
-  def overwriteMergeSchema(df: DataFrame): Unit = {
-    val resolver = df.sparkSession.sessionState.conf.resolver
-    def newCols = df.schema.fields
-      .filterNot(f => m.fields.exists(mf => resolver(mf.name, f.name)))
-    def missingCols =
-      m.fields.filterNot(f => df.columns.exists(resolver(_, f.name)))
-    if (newCols.isEmpty && missingCols.isEmpty) return overwrite(df)
-    withOpRetry(OpKind.Overwrite, 5) {
-      val added = newCols.zipWithIndex.map { case (sf, i) =>
-        FieldDef(m.maxFieldId + i + 1, sf.name, sf.dataType.json,
-          nullable = true)
-      }
-      val man2 = m.copy(fields = m.fields ++ added,
-        maxFieldId = m.maxFieldId + added.length)
-      val filled = man2.fields.foldLeft(df)((d, f) =>
-        if (d.columns.exists(resolver(_, f.name))) d
-        else d.withColumn(f.name, lit(null).cast(DataType.fromJson(f.dataType))))
-      val base = man2.nextRowId
-      val (frags, maxRid) = stageFragments(toPhysical(filled, man2)
-        .withColumn(RowIdCol, lit(base) + monotonically_increasing_id()), man2)
-      commit(man2.copy(
-        version = m.version + 1,
-        fragments = frags,
-        maxFragmentId = man2.maxFragmentId + frags.size,
-        nextRowId = math.max(man2.nextRowId, maxRid + 1),
-        deletionFiles = Nil, // all replaced rows are gone with the data
-        deletedRowCount = 0L,
-        parentVersion = Some(m.version),
-        createdMs = System.currentTimeMillis(),
-        operation = "overwrite_merge_schema",
-        touchedFragmentIds = Nil))
-    }
-  }
+  def overwrite(df: DataFrame): Unit =
+    commitOp(OpKind.Overwrite, "overwrite")(overwritten(m, df))
 
   /** Delete rows matching the predicate (Spark SQL expression string — a
     * superset of the reference filter DSL, filter_parser.go:15-270).
@@ -867,17 +744,15 @@ final class LakeDataset private (
     val touchedNames = matchedPerFile.map(r => fileName(r.getString(0))).toSet
     val touched = m.fragments.filter(f => touchedNames(fileName(f.file)))
     val touchedIds = touched.map(_.id).toSet
-    val untouched = m.fragments.filterNot(f => touchedIds(f.id))
 
     var matched = 0L
     var newFrags = Seq.empty[Fragment]
-    var maxFragId = m.maxFragmentId
     if (touched.nonEmpty) {
       matched = matchedPerFile.map(_.getLong(1)).sum
       // same job-level chunking as DELETE/UPDATE: a merge matching most of
       // a huge table must not rewrite it in one Spark job (the source side
       // re-joins per group — broadcast-sized by the usual merge shape)
-      val fr = stageRewriteGroups(touched, g => {
+      newFrags ++= stageRewriteGroups(touched, g => {
         val joined = readFragments(m, g, withRowId = true)
           .join(src, keyCond, "left_outer")
         val isMatch = col(s"_src_${keys.head}").isNotNull
@@ -890,8 +765,6 @@ final class LakeDataset private (
         merged0.select(
           (m.fields.map(f => col(f.name)) :+ col(RowIdCol)): _*)
       })
-      newFrags ++= fr
-      maxFragId += fr.size
     }
 
     var inserted = 0L
@@ -913,23 +786,16 @@ final class LakeDataset private (
       }.select(m.fields.map(f => col(f.name)): _*)
       // Stage first, count from the written fragments — running the insert
       // plan once, not count()-then-write twice.
-      val (fr, maxRid) = stageFragments(
-        toPhysical(insLogical, m)
-          .withColumn(RowIdCol, lit(nextRid) + monotonically_increasing_id()), m)
+      val (fr, next) = stageFresh(insLogical, m)
       inserted = fr.map(_.rowCount).sum
       if (inserted > 0) {
         newFrags ++= fr
-        maxFragId += fr.size
-        nextRid = math.max(nextRid, maxRid + 1)
+        nextRid = next
       }
     }
     if (newFrags.isEmpty && matched == 0) return (0L, 0L)
-    // The rewrite and insert stages each assigned ids from the SAME base
-    // manifest, so a merge doing both produced colliding fragment ids —
-    // silently collapsing entries in the chunk-reuse id map and breaking
-    // touched-id conflict refinement. Renumber the combined set once.
-    var nid = m.maxFragmentId
-    newFrags = newFrags.map { f => nid += 1; f.copy(id = nid) }
+    // the rewrite and insert stages each numbered from the same base
+    // manifest; commitRewrite renumbers the combined set
     commitRewrite(OpKind.Merge, touchedIds, newFrags, "merge",
       nextRowIdOpt = Some(nextRid), extraProps = extraProps)
     (matched, inserted)
@@ -945,7 +811,7 @@ final class LakeDataset private (
     * with any Structured Streaming sink. */
   def upsertStreamingBatch(source: DataFrame, keys: Seq[String],
       queryKey: String, batchId: Long): Boolean = {
-    val key = s"streaming.$queryKey.lastBatchId"
+    val key = streamingKey(queryKey)
     refresh()
     if (m.properties.get(key).exists(_.toLong >= batchId)) return false
     mergeInsert(source, keys, extraProps = Map(key -> batchId.toString))
@@ -961,26 +827,15 @@ final class LakeDataset private (
     * Reserved keys steer engine behavior — e.g. `write.dml.mode = mor`
     * switches SQL UPDATE/DELETE to merge-on-read deltas. */
   def setProperties(props: Map[String, String]): Unit =
-      withOpRetry(OpKind.Project, 5) {
-    commit(m.copy(
-      version = m.version + 1,
-      properties = m.properties ++ props,
-      parentVersion = Some(m.version),
-      createdMs = System.currentTimeMillis(),
-      operation = s"set_properties(${props.keys.mkString(",")})",
-      touchedFragmentIds = Nil))
-  }
+    commitOp(OpKind.Project,
+      s"set_properties(${props.keys.mkString(",")})") {
+      m.copy(properties = m.properties ++ props)
+    }
 
   def removeProperties(keys: Seq[String]): Unit =
-      withOpRetry(OpKind.Project, 5) {
-    commit(m.copy(
-      version = m.version + 1,
-      properties = m.properties -- keys,
-      parentVersion = Some(m.version),
-      createdMs = System.currentTimeMillis(),
-      operation = s"unset_properties(${keys.mkString(",")})",
-      touchedFragmentIds = Nil))
-  }
+    commitOp(OpKind.Project, s"unset_properties(${keys.mkString(",")})") {
+      m.copy(properties = m.properties -- keys)
+    }
 
   /** Commit a merge-on-read delta: tombstone rowids (deletion-vector files
     * already written under `_deletes/`) plus appended delta fragments, in
@@ -992,84 +847,47 @@ final class LakeDataset private (
     * `nextRowId` past the base the ids were minted from means a potential
     * rowid collision — surfaced as a conflict instead of committed. */
   private[lake] def commitDelta(touchedIds: Set[Long], dvNames: Seq[String],
-      nDeleted: Long, newFrags0: Seq[Fragment],
-      idBase: Option[Long], nextRowIdOpt: Option[Long], op: String): Unit = {
-    var newFrags = newFrags0
-    var left = 5
-    while (true) {
-      try {
-        commit(m.copy(
-          version = m.version + 1,
-          fragments = m.fragments ++ newFrags,
-          maxFragmentId = math.max(m.maxFragmentId,
-            (0L +: newFrags.map(_.id)).max),
-          nextRowId = math.max(m.nextRowId,
-            nextRowIdOpt.getOrElse(m.nextRowId)),
-          deletionFiles = m.deletionFiles ++ dvNames,
-          deletedRowCount = m.deletedRowCount + nDeleted,
-          parentVersion = Some(m.version),
-          createdMs = System.currentTimeMillis(),
-          operation = op,
-          touchedFragmentIds = touchedIds.toSeq.sorted))
-        return
-      } catch {
-        case e: CommitConflictException =>
-          left -= 1
-          if (left == 0) throw e
-          val base = m.version
-          refresh()
-          checkIntervening(base, OpKind.DeleteUpdate, touchedIds)
-          idBase.foreach { b =>
-            if (m.nextRowId > b)
-              throw new CommitConflictException(
-                s"rowid block raced: minted from $b but nextRowId is now " +
-                  s"${m.nextRowId}")
-          }
-          // tombstoned fragments must still exist (a compatible winner
-          // can't have rewritten them, but stay defensive)
-          val ids = m.fragments.map(_.id).toSet
-          if (!touchedIds.subsetOf(ids)) throw e
-          var nid = m.maxFragmentId
-          newFrags = newFrags.map { f => nid += 1; f.copy(id = nid) }
+      nDeleted: Long, newFrags: Seq[Fragment],
+      idBase: Option[Long], nextRowIdOpt: Option[Long], op: String): Unit =
+    commitOp(OpKind.DeleteUpdate, op, touchedIds) {
+      idBase.foreach { b =>
+        if (m.nextRowId > b)
+          throw new CommitConflictException(
+            s"rowid block raced: minted from $b but nextRowId is now " +
+              s"${m.nextRowId}")
       }
+      // tombstoned fragments must still exist
+      requireUnrewritten(touchedIds)
+      m.copy(
+        fragments = m.fragments ++ numbered(newFrags),
+        nextRowId = math.max(m.nextRowId, nextRowIdOpt.getOrElse(m.nextRowId)),
+        deletionFiles = m.deletionFiles ++ dvNames,
+        deletedRowCount = m.deletedRowCount + nDeleted)
     }
-  }
 
   // ------------------------------------------------------ schema evolution
 
   /** Add null-filled columns: metadata-only commit (field-id mapping means
     * old fragments simply lack the physical column → read as NULL). */
   def addColumns(newCols: StructType): Unit =
-      withOpRetry(OpKind.Project, 5) {
-    val existing = m.fields.map(_.name).toSet
-    require(newCols.fields.forall(f => !existing(f.name)), "column exists")
-    val added = newCols.fields.zipWithIndex.map { case (sf, i) =>
-      FieldDef(m.maxFieldId + i + 1, sf.name, sf.dataType.json, nullable = true)
+    commitOp(OpKind.Project, "add_columns") {
+      val existing = m.fields.map(_.name).toSet
+      require(newCols.fields.forall(f => !existing(f.name)), "column exists")
+      val added = newCols.fields.zipWithIndex.map { case (sf, i) =>
+        FieldDef(m.maxFieldId + i + 1, sf.name, sf.dataType.json, nullable = true)
+      }
+      m.copy(fields = m.fields ++ added,
+        maxFieldId = m.maxFieldId + added.length)
     }
-    commit(m.copy(
-      version = m.version + 1,
-      fields = m.fields ++ added,
-      maxFieldId = m.maxFieldId + added.length,
-      parentVersion = Some(m.version),
-      createdMs = System.currentTimeMillis(),
-      operation = "add_columns",
-      touchedFragmentIds = Nil))
-  }
 
   /** Drop columns: metadata-only (data stays in old fragments, unread). */
   def dropColumns(names: Seq[String]): Unit =
-      withOpRetry(OpKind.Project, 5) {
-    val keep = m.fields.filterNot(f => names.contains(f.name))
-    require(keep.size + names.size == m.fields.size, "unknown column")
-    require(keep.nonEmpty, "cannot drop all columns")
-    commit(m.copy(
-      version = m.version + 1,
-      fields = keep,
-      parentVersion = Some(m.version),
-      createdMs = System.currentTimeMillis(),
-      operation = "drop_columns",
-      touchedFragmentIds = Nil))
-  }
+    commitOp(OpKind.Project, "drop_columns") {
+      val keep = m.fields.filterNot(f => names.contains(f.name))
+      require(keep.size + names.size == m.fields.size, "unknown column")
+      require(keep.nonEmpty, "cannot drop all columns")
+      m.copy(fields = keep)
+    }
 
   /** Widen a column's type: metadata-only commit (reference AlterColumns
     * with type change, sdk/dataset.go:623-965). Old fragments keep their
@@ -1080,178 +898,117 @@ final class LakeDataset private (
     * physical types — keeping them would cause false-negative pruning);
     * re-run [[enableBloomIndex]] to rebuild at the new type. */
   def alterColumnType(name: String, to: DataType): Unit =
-      withOpRetry(OpKind.Project, 5) {
-    val f = m.fields.find(_.name == name)
-      .getOrElse(throw new IllegalArgumentException(s"no column $name"))
-    val from = DataType.fromJson(f.dataType)
-    val ok = (from, to) match {
-      case (IntegerType, LongType) => true
-      case (IntegerType, DoubleType) => true
-      case (FloatType, DoubleType) => true
-      case _ => from == to
+    commitOp(OpKind.Project, s"alter_column_type($name)") {
+      val f = m.fields.find(_.name == name)
+        .getOrElse(throw new IllegalArgumentException(s"no column $name"))
+      val from = DataType.fromJson(f.dataType)
+      val ok = (from, to) match {
+        case (IntegerType, LongType) => true
+        case (IntegerType, DoubleType) => true
+        case (FloatType, DoubleType) => true
+        case _ => from == to
+      }
+      require(ok, s"unsupported type change $from -> $to (widening only)")
+      if (from == to) m
+      else m.copy(
+        fields = m.fields.map(x =>
+          if (x.id == f.id) x.copy(dataType = to.json) else x),
+        fragments = m.fragments.map(fr =>
+          fr.copy(blooms = fr.blooms - f.id.toString)),
+        bloomFields = m.bloomFields.filterNot(_ == f.id))
     }
-    require(ok, s"unsupported type change $from -> $to (widening only)")
-    if (from == to) return
-    commit(m.copy(
-      version = m.version + 1,
-      fields = m.fields.map(x =>
-        if (x.id == f.id) x.copy(dataType = to.json) else x),
-      fragments = m.fragments.map(fr =>
-        fr.copy(blooms = fr.blooms - f.id.toString)),
-      bloomFields = m.bloomFields.filterNot(_ == f.id),
-      parentVersion = Some(m.version),
-      createdMs = System.currentTimeMillis(),
-      operation = s"alter_column_type($name)",
-      touchedFragmentIds = Nil))
-  }
 
   /** Drop a NESTED field inside a struct column (reference sdk DropPath,
     * sdk/dataset.go:623-965). Unlike top-level [[dropColumns]] — metadata-
     * only via field-id projection — a nested drop must rewrite data: the
-    * struct is one physical parquet column. The rewrite runs in bounded
-    * groups (the DELETE/UPDATE machinery) staged against the POST-change
-    * schema, and lands with the field-type update in ONE commit; rowids
-    * are preserved, and pending merge-on-read tombstones are folded in by
-    * the rewrite (the staged rows are the live set). `path` is
-    * dot-separated relative to the struct column (`Column.dropFields`
-    * semantics: `"a"` or `"a.b"`). Full-table rewrite → Overwrite conflict
-    * kind. */
+    * struct is one physical parquet column. `path` is dot-separated
+    * relative to the struct column (`Column.dropFields` semantics: `"a"`
+    * or `"a.b"`). See [[rewriteStruct]]. */
   def dropNestedField(column: String, path: String): Unit =
-      withOpRetry(OpKind.Overwrite, 5) {
-    val f = m.fields.find(_.name == column).getOrElse(
-      throw new IllegalArgumentException(s"no column $column"))
-    val st = DataType.fromJson(f.dataType) match {
-      case s: StructType => s
-      case other =>
-        throw new IllegalArgumentException(s"$column is $other, not a struct")
+    rewriteStruct(column, s"drop_nested_field($column.$path)") { st =>
+      val newDt = LakeDataset
+        .dropPathFromStruct(st, path.split('.').toList)
+        .getOrElse(throw new IllegalArgumentException(
+          s"no nested path $path in $column"))
+      require(newDt.fields.nonEmpty,
+        s"dropping $path would empty $column; use dropColumns instead")
+      (newDt, col(column).dropFields(path))
     }
-    val newDt = LakeDataset
-      .dropPathFromStruct(st, path.split('.').toList)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no nested path $path in $column"))
-    require(newDt.fields.nonEmpty,
-      s"dropping $path would empty $column; use dropColumns instead")
-    val man2 = m.copy(fields = m.fields.map(x =>
-      if (x.id == f.id) x.copy(dataType = newDt.json) else x))
-    val frags = stageRewriteGroups(m.fragments, g =>
-      readFragments(m, g, withRowId = true)
-        .withColumn(column, col(column).dropFields(path)),
-      stageMan = man2)
-    commit(man2.copy(
-      version = m.version + 1,
-      fragments = frags,
-      maxFragmentId = math.max(m.maxFragmentId, (0L +: frags.map(_.id)).max),
-      deletionFiles = Nil,
-      deletedRowCount = 0L,
-      parentVersion = Some(m.version),
-      createdMs = System.currentTimeMillis(),
-      operation = s"drop_nested_field($column.$path)",
-      touchedFragmentIds = m.fragments.map(_.id).sorted))
-  }
 
   /** Add a NESTED field inside a struct column (the reference schema model
     * is nested via parent ids — sdk AddColumns reaches sub-structs). The
     * new field is appended to the struct at `path`'s parent with NULL for
-    * every existing row; same grouped schema-changing rewrite as
-    * [[dropNestedField]] (one physical column → data rewrite), one commit,
-    * rowids preserved. `path` is the dotted location of the NEW field. */
+    * every existing row. `path` is the dotted location of the NEW field. */
   def addNestedField(column: String, path: String, dt: DataType): Unit =
-      withOpRetry(OpKind.Overwrite, 5) {
-    val f = m.fields.find(_.name == column).getOrElse(
-      throw new IllegalArgumentException(s"no column $column"))
-    val st = DataType.fromJson(f.dataType) match {
-      case s: StructType => s
-      case other =>
-        throw new IllegalArgumentException(s"$column is $other, not a struct")
+    rewriteStruct(column, s"add_nested_field($column.$path)") { st =>
+      val newDt = LakeDataset
+        .addPathToStruct(st, path.split('.').toList, dt)
+        .getOrElse(throw new IllegalArgumentException(
+          s"cannot add $path to $column (missing parent or field exists)"))
+      (newDt, col(column).withField(path, lit(null).cast(dt)))
     }
-    val newDt = LakeDataset
-      .addPathToStruct(st, path.split('.').toList, dt)
-      .getOrElse(throw new IllegalArgumentException(
-        s"cannot add $path to $column (missing parent or field exists)"))
-    val man2 = m.copy(fields = m.fields.map(x =>
-      if (x.id == f.id) x.copy(dataType = newDt.json) else x))
-    val frags = stageRewriteGroups(m.fragments, g =>
-      readFragments(m, g, withRowId = true)
-        .withColumn(column,
-          col(column).withField(path, lit(null).cast(dt))),
-      stageMan = man2)
-    commit(man2.copy(
-      version = m.version + 1,
-      fragments = frags,
-      maxFragmentId = math.max(m.maxFragmentId, (0L +: frags.map(_.id)).max),
-      deletionFiles = Nil,
-      deletedRowCount = 0L,
-      parentVersion = Some(m.version),
-      createdMs = System.currentTimeMillis(),
-      operation = s"add_nested_field($column.$path)",
-      touchedFragmentIds = m.fragments.map(_.id).sorted))
-  }
 
   /** Rename a NESTED field inside a struct column: data-preserving —
     * the value is copied to the new name and the old path dropped in the
-    * same grouped rewrite ([[dropNestedField]] machinery), one commit,
-    * rowids preserved. `path` is the dotted OLD location; `to` the new
-    * leaf name within the same parent. */
+    * same rewrite. `path` is the dotted OLD location; `to` the new leaf
+    * name within the same parent. */
   def renameNestedField(column: String, path: String, to: String): Unit =
-      withOpRetry(OpKind.Overwrite, 5) {
-    val f = m.fields.find(_.name == column).getOrElse(
-      throw new IllegalArgumentException(s"no column $column"))
-    val st = DataType.fromJson(f.dataType) match {
-      case s: StructType => s
-      case other =>
-        throw new IllegalArgumentException(s"$column is $other, not a struct")
+    rewriteStruct(column, s"rename_nested_field($column.$path -> $to)") { st =>
+      val parts = path.split('.').toList
+      val parent = parts.dropRight(1)
+      val leafDt = LakeDataset.nestedFieldType(st, parts).getOrElse(
+        throw new IllegalArgumentException(s"no nested path $path in $column"))
+      val newDt = LakeDataset.dropPathFromStruct(st, parts)
+        .flatMap(LakeDataset.addPathToStruct(_, parent :+ to, leafDt))
+        .getOrElse(throw new IllegalArgumentException(
+          s"cannot rename $path to $to in $column (target exists?)"))
+      (newDt, col(column)
+        .withField((parent :+ to).mkString("."), col(s"$column.$path"))
+        .dropFields(path))
     }
-    val parts = path.split('.').toList
-    val parent = parts.dropRight(1)
-    val leafDt = LakeDataset.nestedFieldType(st, parts).getOrElse(
-      throw new IllegalArgumentException(s"no nested path $path in $column"))
-    val toPath = (parent :+ to).mkString(".")
-    val newDt = LakeDataset.dropPathFromStruct(st, parts)
-      .flatMap(LakeDataset.addPathToStruct(_, parent :+ to, leafDt))
-      .getOrElse(throw new IllegalArgumentException(
-        s"cannot rename $path to $to in $column (target exists?)"))
-    val man2 = m.copy(fields = m.fields.map(x =>
-      if (x.id == f.id) x.copy(dataType = newDt.json) else x))
-    val frags = stageRewriteGroups(m.fragments, g =>
-      readFragments(m, g, withRowId = true)
-        .withColumn(column, col(column)
-          .withField(toPath, col(s"$column.$path"))
-          .dropFields(path)),
-      stageMan = man2)
-    commit(man2.copy(
-      version = m.version + 1,
-      fragments = frags,
-      maxFragmentId = math.max(m.maxFragmentId, (0L +: frags.map(_.id)).max),
-      deletionFiles = Nil,
-      deletedRowCount = 0L,
-      parentVersion = Some(m.version),
-      createdMs = System.currentTimeMillis(),
-      operation = s"rename_nested_field($column.$path -> $to)",
-      touchedFragmentIds = m.fragments.map(_.id).sorted))
-  }
+
+  /** Shared body of the nested-field ops: `change` maps the struct type of
+    * `column` to its new type and the column expression producing it. The
+    * struct is one physical parquet column, so every fragment is rewritten
+    * in bounded groups (the DELETE/UPDATE machinery) staged against the
+    * POST-change schema, and lands with the field-type update in ONE
+    * commit; rowids are preserved, and pending merge-on-read tombstones are
+    * folded in by the rewrite (the staged rows are the live set).
+    * Full-table rewrite → Overwrite conflict kind. */
+  private def rewriteStruct(column: String, operation: String)(
+      change: StructType => (StructType, Column)): Unit =
+    commitOp(OpKind.Overwrite, operation, m.fragments.map(_.id).toSet) {
+      val f = m.fields.find(_.name == column).getOrElse(
+        throw new IllegalArgumentException(s"no column $column"))
+      val (newDt, rewritten) = DataType.fromJson(f.dataType) match {
+        case s: StructType => change(s)
+        case other =>
+          throw new IllegalArgumentException(s"$column is $other, not a struct")
+      }
+      val man2 = m.copy(fields = m.fields.map(x =>
+        if (x.id == f.id) x.copy(dataType = newDt.json) else x))
+      val frags = stageRewriteGroups(m.fragments, g =>
+        readFragments(m, g, withRowId = true).withColumn(column, rewritten),
+        stageMan = man2)
+      replacedBy(man2, numbered(frags))
+    }
 
   /** Rename a column: metadata-only (physical name is the field id). */
   def renameColumn(from: String, to: String): Unit =
-      withOpRetry(OpKind.Project, 5) {
-    require(m.fields.exists(_.name == from), s"no column $from")
-    require(!m.fields.exists(_.name == to), s"column $to exists")
-    commit(m.copy(
-      version = m.version + 1,
-      fields = m.fields.map(f => if (f.name == from) f.copy(name = to) else f),
-      parentVersion = Some(m.version),
-      createdMs = System.currentTimeMillis(),
-      operation = "rename_column",
-      touchedFragmentIds = Nil))
-  }
+    commitOp(OpKind.Project, "rename_column") {
+      require(m.fields.exists(_.name == from), s"no column $from")
+      require(!m.fields.exists(_.name == to), s"column $to exists")
+      m.copy(fields =
+        m.fields.map(f => if (f.name == from) f.copy(name = to) else f))
+    }
 
   // ----------------------------------------------------------- time travel
 
   /** Restore: new commit whose content is an old version's (refs.go model —
     * history is preserved; restore is itself a version). */
-  def restore(v: Long): Unit = withOpRetry(OpKind.Overwrite, 5) {
+  def restore(v: Long): Unit = commitOp(OpKind.Overwrite, s"restore($v)") {
     val old = loadV(v)
-    commit(m.copy(
-      version = m.version + 1,
+    m.copy(
       fields = old.fields,
       maxFieldId = math.max(m.maxFieldId, old.maxFieldId),
       fragments = old.fragments,
@@ -1265,11 +1022,7 @@ final class LakeDataset private (
       bloomNumBits = old.bloomNumBits,
       bloomNumHashes = old.bloomNumHashes,
       valueSetFields = old.valueSetFields,
-      valueSetMaxDistinct = old.valueSetMaxDistinct,
-      parentVersion = Some(m.version),
-      createdMs = System.currentTimeMillis(),
-      operation = s"restore($v)",
-      touchedFragmentIds = Nil))
+      valueSetMaxDistinct = old.valueSetMaxDistinct)
   }
 
   /** Shallow clone (reference ShallowClone, sdk/dataset.go:623-965): a new
@@ -1359,9 +1112,7 @@ final class LakeDataset private (
     require(name.matches("[A-Za-z0-9][A-Za-z0-9._-]*"),
       s"invalid branch name '$name'")
     val dir = branchesDir.resolve(name)
-    require(!io.exists(dir) || !io.listNames(dir)
-        .exists(f => f.startsWith("v") && f.endsWith(".json")),
-      s"branch $name exists")
+    require(!io.exists(dir) || versionsIn(dir).isEmpty, s"branch $name exists")
     val src = manifestsDir.resolve(Manifest.versionFileName(v))
     require(io.exists(src), s"no version $v")
     io.mkdirs(dir)
@@ -1378,10 +1129,7 @@ final class LakeDataset private (
   def branches: Map[String, Long] = {
     if (!io.exists(branchesDir)) return Map.empty
     io.listNames(branchesDir).flatMap { n =>
-      val heads = io.listNames(branchesDir.resolve(n))
-        .filter(f => f.startsWith("v") && f.endsWith(".json"))
-        .map(Manifest.versionOfFileName)
-      heads.maxOption.map(n -> _)
+      versionsIn(branchesDir.resolve(n)).lastOption.map(n -> _)
     }.toMap
   }
 
@@ -1411,24 +1159,13 @@ final class LakeDataset private (
     * the atomic publish, so a concurrent writer on this namespace loses
     * the race cleanly (first copied version wins or conflicts). */
   def mergeBranch(name: String): Long = {
-    val dir = branchesDir.resolve(name)
-    require(io.exists(dir), s"no branch $name")
-    val meta = io.readString(dir.resolve("branch.json"))
-    val forkedFrom = """"forkedFrom"\s*:\s*"([^"]+)"""".r
-      .findFirstMatchIn(meta).get.group(1)
-    val forkV = """"forkVersion"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(meta).get.group(1).toLong
-    require(forkedFrom == namespaceId,
-      s"branch $name forked from $forkedFrom, not $namespaceId")
+    val (dir, forkV) = forkOf(name)
     refresh()
     if (m.version != forkV)
       throw new CommitConflictException(
         s"$namespaceId advanced to v${m.version} since branch $name forked " +
           s"at v$forkV — fast-forward impossible; re-branch and replay")
-    val bvs = io.listNames(dir)
-      .filter(f => f.startsWith("v") && f.endsWith(".json"))
-      .map(Manifest.versionOfFileName).sorted
-    bvs.filter(_ > forkV).foreach { v =>
+    versionsIn(dir).filter(_ > forkV).foreach { v =>
       try io.publishAtomic(
         manifestsDir.resolve(Manifest.versionFileName(v)),
         io.readString(dir.resolve(Manifest.versionFileName(v))))
@@ -1440,6 +1177,19 @@ final class LakeDataset private (
     }
     refresh()
     m.version
+  }
+
+  /** Manifest dir and fork version of branch `name`, which must have forked
+    * from THIS namespace (its `branch.json`). */
+  private def forkOf(name: String): (Path, Long) = {
+    val dir = branchesDir.resolve(name)
+    require(io.exists(dir), s"no branch $name")
+    val meta = io.readString(dir.resolve("branch.json"))
+    def field(re: String): String = re.r.findFirstMatchIn(meta).get.group(1)
+    val forkedFrom = field(""""forkedFrom"\s*:\s*"([^"]+)"""")
+    require(forkedFrom == namespaceId,
+      s"branch $name forked from $forkedFrom, not $namespaceId")
+    (dir, field(""""forkVersion"\s*:\s*(\d+)""").toLong)
   }
 
   /** Merge a DIVERGED branch into this namespace (the non-fast-forward
@@ -1473,24 +1223,14 @@ final class LakeDataset private (
     * onto fresh target ids (both sides allocate from the fork point, so
     * ids collide even when rowids do not). */
   def mergeBranchRebase(name: String): Long = {
-    val dir = branchesDir.resolve(name)
-    require(io.exists(dir), s"no branch $name")
-    val meta = io.readString(dir.resolve("branch.json"))
-    val forkedFrom = """"forkedFrom"\s*:\s*"([^"]+)"""".r
-      .findFirstMatchIn(meta).get.group(1)
-    val forkV = """"forkVersion"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(meta).get.group(1).toLong
-    require(forkedFrom == namespaceId,
-      s"branch $name forked from $forkedFrom, not $namespaceId")
+    val (dir, forkV) = forkOf(name)
     refresh()
     if (m.version == forkV) return mergeBranch(name) // pure fast-forward
 
     def branchManifest(v: Long): Manifest =
       LakeDataset.decodeManifest(io, rootPath,
         Manifest.fromJson(io.readString(dir.resolve(Manifest.versionFileName(v)))))
-    val branchVersions = io.listNames(dir)
-      .filter(f => f.startsWith("v") && f.endsWith(".json"))
-      .map(Manifest.versionOfFileName).filter(_ > forkV).sorted
+    val branchVersions = versionsIn(dir).filter(_ > forkV)
     if (branchVersions.isEmpty) return m.version // nothing to merge
     val fork = loadV(forkV)
     val bh = branchManifest(branchVersions.last)
@@ -1529,7 +1269,7 @@ final class LakeDataset private (
         s"both $namespaceId and branch $name changed the schema since " +
           s"fork v$forkV — re-branch and replay the schema change")
 
-    withOpRetry(OpKind.Merge, 5, touched = branchRemovedIds) {
+    commitOp(OpKind.Merge, s"merge_branch($name)", branchRemovedIds) {
       // Rowid disposition per added fragment, from a rowid-only columnar
       // scan of just the branch-added files (min/max of one long column).
       val targetClaimed = m.nextRowId > fork.nextRowId
@@ -1545,12 +1285,11 @@ final class LakeDataset private (
             .groupBy(input_file_name().as("_f"))
             .agg(min(col(RowIdCol)).as("_lo"), max(col(RowIdCol)).as("_hi"))
             .collect()
-            .map(r => (fileBaseName(r.getString(0)),
-              (r.getLong(1), r.getLong(2))))
+            .map(r => (fileName(r.getString(0)), (r.getLong(1), r.getLong(2))))
             .toMap
         }
       def rangeOf(f: Fragment): (Long, Long) =
-        ranges.getOrElse(fileBaseName(f.file),
+        ranges.getOrElse(fileName(f.file),
           throw new IllegalStateException(s"no rowid range for ${f.file}"))
       val (preserved, toRebase) =
         if (!needRebase) (branchAdds, Nil)
@@ -1593,38 +1332,22 @@ final class LakeDataset private (
               col(RowIdCol) - lit(fork.nextRowId) + lit(rebaseBase))
           stageFragments(phys, manForStage)
         }
-      // Preserved branch fragments: metadata adopt with fresh ids (file
-      // bytes, stats, blooms, value-sets all carry over unchanged).
-      // stageFragments assigned (maxFragmentId, maxFragmentId+n]; continue.
-      var nextFid =
-        rebasedFrags.map(_.id).maxOption.getOrElse(manForStage.maxFragmentId)
-      val adopted = preserved.map { f =>
-        nextFid += 1
-        f.copy(id = nextFid)
-      }
       val preservedMaxRid =
         if (!needRebase && branchClaimed) bh.nextRowId - 1 else m.nextRowId - 1
-      commit(manForStage.copy(
-        version = m.version + 1,
-        fragments = m.fragments.filterNot(f =>
-          branchRemovedIds.contains(f.id)) ++ rebasedFrags ++ adopted,
-        maxFragmentId = nextFid,
+      // preserved branch fragments are adopted by metadata (file bytes,
+      // stats, blooms, value-sets all carry over) under fresh ids
+      manForStage.copy(
+        fragments = m.fragments.filterNot(f => branchRemovedIds.contains(f.id))
+          ++ numbered(rebasedFrags ++ preserved),
         nextRowId = math.max(m.nextRowId,
           math.max(rebasedMaxRid, preservedMaxRid) + 1),
         deletionFiles =
           m.deletionFiles.filterNot(dvRemoved.contains) ++ dvAdds,
         deletedRowCount = math.max(0L,
-          m.deletedRowCount + (bh.deletedRowCount - fork.deletedRowCount)),
-        parentVersion = Some(m.version),
-        createdMs = System.currentTimeMillis(),
-        operation = s"merge_branch($name)",
-        touchedFragmentIds = branchRemovedIds.toSeq.sorted))
+          m.deletedRowCount + (bh.deletedRowCount - fork.deletedRowCount)))
     }
     m.version
   }
-
-  private def fileBaseName(p: String): String =
-    p.substring(p.lastIndexOf('/') + 1)
 
   // ------------------------------------------------------- secondary index
 
@@ -1637,29 +1360,18 @@ final class LakeDataset private (
     * (Reference: bloomfilter_index.go; consulted by the equality arm of
     * [[pruneFragments]] per index_selector.go:36-170.) */
   def enableBloomIndex(cols: Seq[String], bitsPerRow: Int = 10,
-      numHashes: Int = 5): Unit = withOpRetry(OpKind.CreateIndex, 5) {
-    val fields = cols.map(c => m.fields.find(_.name == c).getOrElse(
-      throw new IllegalArgumentException(s"no column $c")))
-    val maxRows = (m.fragments.map(_.rowCount) :+ 4096L).max
-    val numBits = bitsPerRow * maxRows
-    val next = m.copy(bloomFields = fields.map(_.id),
-      bloomNumBits = numBits, bloomNumHashes = numHashes)
-    val updatedFrags =
-      if (m.fragments.isEmpty) m.fragments
-      else {
-        val byFile = buildBlooms(next, m.fragments)
-        // merge: keep blooms already present on other fields
-        m.fragments.map(f =>
-          f.copy(blooms = f.blooms ++ byFile.getOrElse(f.id, Map.empty)))
-      }
-    commit(next.copy(
-      version = m.version + 1,
-      fragments = updatedFrags,
-      parentVersion = Some(m.version),
-      createdMs = System.currentTimeMillis(),
-      operation = s"create_bloom_index(${cols.mkString(",")})",
-      touchedFragmentIds = Nil))
-  }
+      numHashes: Int = 5): Unit =
+    commitOp(OpKind.CreateIndex, s"create_bloom_index(${cols.mkString(",")})") {
+      val fields = cols.map(c => m.fields.find(_.name == c).getOrElse(
+        throw new IllegalArgumentException(s"no column $c")))
+      val maxRows = (m.fragments.map(_.rowCount) :+ 4096L).max
+      val next = m.copy(bloomFields = fields.map(_.id),
+        bloomNumBits = bitsPerRow * maxRows, bloomNumHashes = numHashes)
+      val byFile = buildBlooms(next, m.fragments)
+      // merge: keep blooms already present on other fields
+      next.copy(fragments = m.fragments.map(f =>
+        f.copy(blooms = f.blooms ++ byFile.getOrElse(f.id, Map.empty))))
+    }
 
   /** One job: per (fragment, bloom field) serialized bloom → sidecar file.
     * Returns fragmentId → (fieldId → sidecar relative path). */
@@ -1720,65 +1432,44 @@ final class LakeDataset private (
     // is conservative, so candidates ⊇ the fragments actually holding
     // deleted rows. Tombstone-only deletes themselves commute (rowid
     // unions are order-independent), hence the dedicated DeleteDv kind;
-    // the purge lost-update hole is closed by commitRewrite's
-    // foldedDeletes guard.
+    // a purge re-plans its fold on every attempt, so it never clears a
+    // tombstone it did not fold.
     // Recomputed from the CURRENT manifest on every attempt: a rebase over
     // a concurrent compaction replaces fragment ids (rowids survive, ids
     // don't), and committing the pre-race ids would rob later
     // value-rewriting ops of the overlap refinement — their rewrite of the
     // compacted fragment would see no overlap with this delete and could
     // resurrect its rows.
-    def candidateIdsNow: Set[Long] = pruneFragments(m, predicate).map(_.id).toSet
-    withOpRetry(OpKind.DeleteDv, 5, touched = candidateIdsNow) {
-      commit(m.copy(
-        version = m.version + 1,
-        deletionFiles = m.deletionFiles :+ dvName,
-        deletedRowCount = m.deletedRowCount + n,
-        parentVersion = Some(m.version),
-        createdMs = System.currentTimeMillis(),
-        operation = "delete_dv",
-        touchedFragmentIds = candidateIdsNow.toSeq.sorted))
+    commitOp(OpKind.DeleteDv, "delete_dv",
+        pruneFragments(m, predicate).map(_.id).toSet) {
+      m.copy(deletionFiles = m.deletionFiles :+ dvName,
+        deletedRowCount = m.deletedRowCount + n)
     }
     n
   }
 
   /** Fold all deletion vectors into the data: rewrite every fragment
     * without the tombstoned rows and clear the deletion list, in one
-    * commit. */
-  def purgeDeletes(targetRows: Long = 1 << 20): Unit = {
-    var attempts = 3
-    while (true) {
-      if (m.deletionFiles.isEmpty) return
-      val all = m.fragments.map(_.id).toSet
-      val folded = m.deletionFiles
-      val total = m.fragments.map(_.rowCount).sum
-      val parts = math.max(1, (total / targetRows).toInt +
-        (if (total % targetRows > 0) 1 else 0))
-      val live = readFragments(m, m.fragments, withRowId = true)
-        .repartition(parts)
-      val (frags, _) = stageFragments(toPhysicalPreservingRowId(live, m), m)
-      try {
-        commitRewrite(OpKind.Rewrite, all, frags, "purge_deletes",
-          clearDeletes = true, foldedDeletes = folded)
-        return
-      } catch {
-        // a concurrent tombstone landed between planning and commit:
-        // rebasing would DROP it (clearDeletes) and resurrect its rows, so
-        // re-plan the whole fold from the refreshed manifest instead
-        case e: CommitConflictException =>
-          attempts -= 1
-          if (attempts == 0) throw e
-          refresh()
+    * commit. The fold is staged inside the plan: a retry after a lost
+    * publish re-stages from the refreshed manifest, so a tombstone that
+    * landed meanwhile is folded too instead of dropped with the list. */
+  def purgeDeletes(targetRows: Long = 1 << 20): Unit =
+    commitOp(OpKind.Rewrite, "purge_deletes", m.fragments.map(_.id).toSet) {
+      if (m.deletionFiles.isEmpty) m
+      else {
+        val live = readFragments(m, m.fragments, withRowId = true)
+          .repartition(partsFor(m.fragments, targetRows))
+        replacedBy(m, stageFragments(toPhysicalPreservingRowId(live, m), m)._1)
       }
     }
-  }
 
   /** Declare a value-set (bitmap-style) index on low-cardinality `cols`:
     * one job computes each fragment's complete distinct set (discarded per
     * fragment when it exceeds `maxDistinct`); future stages maintain it.
     * Equality and IN predicates then prune exactly on membership. */
   def enableValueSetIndex(cols: Seq[String], maxDistinct: Int = 64): Unit =
-      withOpRetry(OpKind.CreateIndex, 5) {
+      commitOp(OpKind.CreateIndex,
+          s"create_valueset_index(${cols.mkString(",")})") {
     val fields = cols.map(c => m.fields.find(_.name == c).getOrElse(
       throw new IllegalArgumentException(s"no column $c")))
     val next = m.copy(valueSetFields = fields.map(_.id),
@@ -1807,13 +1498,7 @@ final class LakeDataset private (
           }.getOrElse(f)
         }
       }
-    commit(next.copy(
-      version = m.version + 1,
-      fragments = updated,
-      parentVersion = Some(m.version),
-      createdMs = System.currentTimeMillis(),
-      operation = s"create_valueset_index(${cols.mkString(",")})",
-      touchedFragmentIds = Nil))
+    next.copy(fragments = updated)
   }
 
   /** Rewrite the dataset range-partitioned and sorted by `sortCol` so
@@ -1848,13 +1533,8 @@ final class LakeDataset private (
     cols.foreach(c =>
       require(m.fields.exists(_.name == c), s"no column $c"))
     if (m.fragments.isEmpty) return
-    val all = m.fragments.map(_.id).toSet
-    val total = m.fragments.map(_.rowCount).sum
-    val parts = math.max(1, (total / targetRows).toInt +
-      (if (total % targetRows > 0) 1 else 0))
-    val laid = layout(readFragments(m, m.fragments, withRowId = true), parts)
-    val (frags, _) = stageFragments(toPhysicalPreservingRowId(laid, m), m)
-    commitRewrite(OpKind.Rewrite, all, frags, operation)
+    rewriteFragments(m.fragments, operation)(df =>
+      layout(df, partsFor(m.fragments, targetRows)))
   }
 
   /** Z-order (Morton) layout: rank each z column into 256 quantile buckets,
@@ -1913,13 +1593,8 @@ final class LakeDataset private (
   def compact(targetRows: Long = 1 << 20): Unit = {
     val small = m.fragments.filter(_.rowCount < targetRows)
     if (small.size <= 1) return
-    val smallIds = small.map(_.id).toSet
-    val total = small.map(_.rowCount).sum
-    val parts = math.max(1, (total / targetRows).toInt +
-      (if (total % targetRows > 0) 1 else 0))
-    val merged = readFragments(m, small, withRowId = true).repartition(parts)
-    val (frags, _) = stageFragments(toPhysicalPreservingRowId(merged, m), m)
-    commitRewrite(OpKind.Rewrite, smallIds, frags, "compact")
+    rewriteFragments(small, "compact")(
+      _.repartition(partsFor(small, targetRows)))
   }
 
   /** Compaction plan: greedy bin-pack of small fragments into groups of
@@ -1952,12 +1627,24 @@ final class LakeDataset private (
     val ids = fragmentIds.toSet
     val frags = m.fragments.filter(f => ids(f.id))
     require(frags.size == ids.size, "plan is stale: fragment(s) gone")
+    rewriteFragments(frags, "compact")(
+      _.repartition(partsFor(frags, targetRows)))
+  }
+
+  /** Parts for rewriting `frags` into ~`targetRows`-row fragments. */
+  private def partsFor(frags: Seq[Fragment], targetRows: Long): Int = {
     val total = frags.map(_.rowCount).sum
-    val parts = math.max(1, (total / targetRows).toInt +
+    math.max(1, (total / targetRows).toInt +
       (if (total % targetRows > 0) 1 else 0))
-    val merged = readFragments(m, frags, withRowId = true).repartition(parts)
-    val (newFrags, _) = stageFragments(toPhysicalPreservingRowId(merged, m), m)
-    commitRewrite(OpKind.Rewrite, ids, newFrags, "compact")
+  }
+
+  /** One rowid-preserving Rewrite commit replacing `frags` with their rows
+    * as laid out by `layout` (the compaction and layout ops). */
+  private def rewriteFragments(frags: Seq[Fragment], operation: String)(
+      layout: DataFrame => DataFrame): Unit = {
+    val laid = layout(readFragments(m, frags, withRowId = true))
+    commitRewrite(OpKind.Rewrite, frags.map(_.id).toSet,
+      stageFragments(toPhysicalPreservingRowId(laid, m), m)._1, operation)
   }
 
   /** Plan + execute all groups with `parallelism` workers (the
@@ -2053,15 +1740,8 @@ final class LakeDataset private (
     if (io.exists(chunksDir)) {
       // the chunk store is shared by every namespace — liveness must scan
       // main + all branch manifest dirs
-      val refChunks = allNamespaceDirs.flatMap { d =>
-        io.listNames(d)
-          .filter(n => n.startsWith("v") && n.endsWith(".json"))
-          .flatMap { n =>
-            try Manifest.fromJson(io.readString(d.resolve(n)))
-              .chunkFiles.map(_.file)
-            catch { case _: Exception => Nil }
-          }
-      }.toSet
+      val refChunks = allNamespaceDirs.flatMap(manifestsIn)
+        .flatMap(_.chunkFiles.map(_.file)).toSet
       io.listNames(chunksDir).foreach { n =>
         val p = chunksDir.resolve(n)
         if (!refChunks(n) && oldEnough(p)) {
@@ -2117,101 +1797,94 @@ final class LakeDataset private (
       graft.functions.BloomFilter.deserialize(
         io.readBytes(rootPath.resolve(r))))
 
-  /** Commit a copy-on-write rewrite (delete/update/compact/merge): replace
-    * `touchedIds` with `newFrags`. On a concurrent-commit conflict, every
-    * intervening committed txn is checked against the conflict matrix
-    * (conflict.go:33-360): delete/update/rewrite pairs conflict only when
-    * their touched fragment sets overlap; merge tolerates only disjoint
-    * rewrites; schema ops, overwrite and restore always conflict with an
-    * in-flight rewrite. Compatible winners → rebase (recompute untouched
-    * from the winner, renumber new fragment ids) and retry. */
-  private[lake] def commitRewrite(kind: OpKind.Value, touchedIds: Set[Long],
-      newFrags0: Seq[Fragment], op: String, nextRowIdOpt: Option[Long] = None,
-      attempts: Int = 5, clearDeletes: Boolean = false,
-      foldedDeletes: Seq[String] = Nil,
-      extraProps: Map[String, String] = Map.empty): Unit = {
-    var left = attempts
-    var newFrags = newFrags0
-    while (true) {
-      // validate BEFORE attempting: every fragment this rewrite replaces
-      // must still exist in the current manifest. Without this, a commit
-      // whose staged state predates another rewrite of the same fragments
-      // (e.g. a detached delete after a live delete) would silently
-      // resurrect rows — a lost update the version-file race alone cannot
-      // catch when commits are sequential on one handle.
-      val currentIds = m.fragments.map(_.id).toSet
-      if (!touchedIds.subsetOf(currentIds))
-        throw new CommitConflictException(
-          s"fragments ${(touchedIds -- currentIds).toSeq.sorted.mkString(",")}" +
-            " were rewritten since this operation was planned")
-      // a clearing rewrite folded a SPECIFIC deletion-vector list into its
-      // staged rows; if the manifest's list changed since planning (a
-      // concurrent merge-on-read delete landed), dropping it would
-      // resurrect those rows — belt to the matrix overlap check above
-      if (clearDeletes && m.deletionFiles != foldedDeletes)
-        throw new CommitConflictException(
-          "deletion vectors changed since this purge was planned; re-run")
-      val untouched = m.fragments.filterNot(f => touchedIds(f.id))
-      try {
-        commit(m.copy(
-          version = m.version + 1,
-          fragments = untouched ++ newFrags,
-          maxFragmentId = math.max(m.maxFragmentId,
-            (0L +: newFrags.map(_.id)).max),
-          nextRowId = nextRowIdOpt.getOrElse(m.nextRowId),
-          deletionFiles = if (clearDeletes) Nil else m.deletionFiles,
-          deletedRowCount = if (clearDeletes) 0L else m.deletedRowCount,
-          properties = m.properties ++ extraProps,
-          parentVersion = Some(m.version),
-          createdMs = System.currentTimeMillis(),
-          operation = op,
-          touchedFragmentIds = touchedIds.toSeq.sorted))
-        return
-      } catch {
-        case e: CommitConflictException =>
-          left -= 1
-          if (left == 0) throw e
-          val base = m.version
-          refresh()
-          checkIntervening(base, kind, touchedIds)
-          // defensive invariant: compatible winners must have left our
-          // touched fragments in place
-          val winnerIds = m.fragments.map(_.id).toSet
-          if (!touchedIds.subsetOf(winnerIds)) throw e
-          // avoid fragment-id collisions with the winner's new fragments
-          var nid = m.maxFragmentId
-          newFrags = newFrags.map { f => nid += 1; f.copy(id = nid) }
+  /** The one commit path: every manifest change of this dataset goes
+    * through here (reference storage2/commit.go:22-25 + conflict.go).
+    *  - `plan` reads the current `m` (it may stage files, as appends do to
+    *    claim fresh rowids) and returns the next manifest; returning `m`
+    *    itself commits nothing. A [[CommitConflictException]] raised by
+    *    `plan` means the plan is stale and fails the operation at once.
+    *  - The version, parent, timestamp, operation, touched fragment ids and
+    *    `maxFragmentId` are stamped here; the result is published through
+    *    `commitHandler`, the version file's create-if-absent swap.
+    *  - Only a lost publish retries: refresh, check every intervening
+    *    commit against the conflict matrix, and re-run `plan` —
+    *    [[CommitAttempts]] attempts in all.
+    * `touched` is by-name so the stamp and the matrix check see the ids of
+    * the manifest the attempt planned against (a rebase over a compaction
+    * replaces fragment ids). Returns false when `plan` committed nothing. */
+  private def commitOp(kind: OpKind.Value, operation: String,
+      touched: => Set[Long] = Set.empty)(plan: => Manifest): Boolean = {
+    @scala.annotation.tailrec
+    def attempt(left: Int): Boolean = {
+      val next = plan
+      if (next eq m) return false
+      require(!partial,
+        "this handle was opened chunk-pruned (openPruned) and holds a partial " +
+          "fragment list; committing would drop the pruned fragments — " +
+          "use LakeDataset.open for writes")
+      val (mat, content) = LakeDataset.encodeManifest(io, rootPath, next.copy(
+        version = m.version + 1,
+        maxFragmentId = (next.maxFragmentId +: next.fragments.map(_.id)).max,
+        parentVersion = Some(m.version),
+        createdMs = System.currentTimeMillis(),
+        operation = operation,
+        touchedFragmentIds = touched.toSeq.sorted),
+        parent = Some(m), chunkSize = manifestChunkSize,
+        threshold = manifestChunkThreshold)
+      val published =
+        try {
+          commitHandler.publish(
+            manifestsDir.resolve(Manifest.versionFileName(mat.version)), content)
+          true
+        } catch { case _: CommitConflictException if left > 1 => false }
+      if (published) { m = mat; true }
+      else {
+        val base = m.version
+        refresh()
+        checkIntervening(base, kind, touched)
+        attempt(left - 1)
       }
     }
+    attempt(CommitAttempts)
   }
 
-  /** Retry loop for ops whose body recomputes everything from the current
-    * manifest (append re-stages to claim fresh rowids; schema ops re-derive
-    * and re-validate their field transforms; overwrite just re-bases the
-    * version number). Before each retry, every intervening committed
-    * operation is checked against the conflict matrix — incompatible
-    * winners surface as [[CommitConflictException]] instead of a blind
-    * rebase. */
-  // `touched` is by-name: it re-evaluates AFTER each refresh(), so a retry
-  // that rebased over a fragment-rewriting intervener (e.g. compaction)
-  // checks the matrix against CURRENT fragment ids, not the ids planned
-  // before the race (stale ids under-claim overlap and can let a real
-  // conflict slip through the refinement).
-  private def withOpRetry(kind: OpKind.Value, attempts: Int,
-      touched: => Set[Long] = Set.empty)(body: => Unit): Unit = {
-    var left = attempts
-    while (true) {
-      val base = m.version
-      try { body; return }
-      catch {
-        case e: CommitConflictException =>
-          left -= 1
-          if (left == 0) throw e
-          refresh()
-          checkIntervening(base, kind, touched) // throws on matrix conflict
-      }
+  /** Commit a copy-on-write rewrite (delete/update/compact/merge): replace
+    * `touchedIds` with `newFrags`. A compatible concurrent winner (see
+    * [[commitOp]]) is rebased over: untouched fragments come from the
+    * winner, new fragment ids are renumbered past its own. Every attempt
+    * first checks that the fragments this rewrite replaces still exist —
+    * a plan whose staged state predates another rewrite of the same
+    * fragments (e.g. a detached delete after a live delete) would
+    * otherwise silently resurrect rows, a lost update the version-file
+    * race alone cannot catch when commits are sequential on one handle. */
+  private[lake] def commitRewrite(kind: OpKind.Value, touchedIds: Set[Long],
+      newFrags: Seq[Fragment], op: String, nextRowIdOpt: Option[Long] = None,
+      extraProps: Map[String, String] = Map.empty): Unit =
+    commitOp(kind, op, touchedIds) {
+      requireUnrewritten(touchedIds)
+      m.copy(
+        fragments = m.fragments.filterNot(f => touchedIds(f.id)) ++
+          numbered(newFrags),
+        nextRowId = math.max(m.nextRowId, nextRowIdOpt.getOrElse(m.nextRowId)),
+        properties = m.properties ++ extraProps)
     }
+
+  /** Stale-plan check: every fragment in `ids` is still in `m`. */
+  private def requireUnrewritten(ids: Set[Long]): Unit = {
+    val gone = ids -- m.fragments.map(_.id)
+    if (gone.nonEmpty)
+      throw new CommitConflictException(
+        s"fragments ${gone.toSeq.sorted.mkString(",")}" +
+          " were rewritten since this operation was planned")
   }
+
+  /** The one place new fragments get their ids: after `m.maxFragmentId`.
+    * Staging numbers from the same base, so on a first attempt this keeps
+    * the staged ids; on a retry it moves them past a winner's fragments. */
+  private def numbered(frags: Seq[Fragment]): Seq[Fragment] =
+    frags.zipWithIndex.map { case (f, i) =>
+      f.copy(id = m.maxFragmentId + 1 + i)
+    }
 
   /** Every manifest dir: main + each branch. */
   private def allNamespaceDirs: Seq[Path] = {
@@ -2222,18 +1895,32 @@ final class LakeDataset private (
     b.result().filter(io.exists)
   }
 
+  /** Version numbers published in a manifest dir, ascending. */
+  private def versionsIn(dir: Path): Seq[Long] =
+    io.listNames(dir)
+      .filter(n => n.startsWith("v") && n.endsWith(".json"))
+      .map(Manifest.versionOfFileName)
+      .sorted
+
+  /** The version files of `dir`, parsed but not chunk-decoded. Only a
+    * version deleted between the listing and the read is skipped: a vacuum
+    * must never take a manifest it cannot read for one that references
+    * nothing, so any other failure propagates. */
+  private def manifestsIn(dir: Path): Seq[Manifest] =
+    versionsIn(dir).flatMap { v =>
+      try Some(Manifest.fromJson(
+        io.readString(dir.resolve(Manifest.versionFileName(v)))))
+      catch {
+        case _: java.io.FileNotFoundException |
+            _: java.nio.file.NoSuchFileException => None
+      }
+    }
+
   /** Decoded manifests of every namespace EXCEPT this handle's — a vacuum
     * in one namespace must treat all of their references as live. */
   private def otherNamespaceManifests(): Seq[Manifest] =
-    allNamespaceDirs.filterNot(_ == manifestsDir).flatMap { d =>
-      io.listNames(d)
-        .filter(n => n.startsWith("v") && n.endsWith(".json"))
-        .flatMap { n =>
-          try Some(LakeDataset.decodeManifest(io, rootPath,
-            Manifest.fromJson(io.readString(d.resolve(n)))))
-          catch { case _: Exception => None }
-        }
-    }
+    allNamespaceDirs.filterNot(_ == manifestsDir).flatMap(manifestsIn)
+      .map(LakeDataset.decodeManifest(io, rootPath, _))
 
   /** Matrix-check every committed txn in (base, current]. */
   private def checkIntervening(base: Long, kind: OpKind.Value,
@@ -2781,10 +2468,17 @@ final class LakeDataset private (
   private val MaxInlinePkProbe = 1000
 
   /** PK gate for [[append]]: pins the batch (the rows checked ARE the
-    * rows written), rejects null keys and in-batch duplicates, then
-    * probes the table for the incoming keys. Returns the pinned batch.
-    * Runs inside the commit-retry loop so a rebase re-probes against the
-    * rebased snapshot. */
+    * rows written), rejects null keys and in-batch duplicates, probes the
+    * table for the incoming keys, then runs `write` on the pinned batch
+    * and unpins it. Runs inside the commit plan so a rebase re-probes
+    * against the rebased snapshot. */
+  private def withPrimaryKeyChecked[A](df: DataFrame)(
+      write: DataFrame => A): A = {
+    val checked = enforcePrimaryKey(df)
+    try write(checked)
+    finally if (checked ne df) graft.Materialize.unpin(checked)
+  }
+
   private def enforcePrimaryKey(df: DataFrame): DataFrame = {
     val pk = primaryKey
     if (pk.isEmpty) return df
@@ -2875,6 +2569,33 @@ final class LakeDataset private (
     adoptStagedFiles(parts, man, Some(stage))
   }
 
+  /** Stage logical `df` under fresh rowids claimed from `man.nextRowId`:
+    * the new fragments and the `nextRowId` past them. */
+  private def stageFresh(df: DataFrame,
+      man: Manifest): (Seq[Fragment], Long) = {
+    val (frags, maxRid) = stageFragments(toPhysical(df, man)
+      .withColumn(RowIdCol, lit(man.nextRowId) + monotonically_increasing_id()),
+      man)
+    (frags, math.max(man.nextRowId, maxRid + 1))
+  }
+
+  /** `man` with `df` appended under fresh rowids. */
+  private def appended(man: Manifest, df: DataFrame): Manifest = {
+    val (frags, nextRowId) = stageFresh(df, man)
+    man.copy(fragments = man.fragments ++ frags, nextRowId = nextRowId)
+  }
+
+  /** `man` with all its data replaced by `df` under fresh rowids. */
+  private def overwritten(man: Manifest, df: DataFrame): Manifest = {
+    val (frags, nextRowId) = stageFresh(df, man)
+    replacedBy(man, frags).copy(nextRowId = nextRowId)
+  }
+
+  /** `man` with all its data replaced by `frags`: the tombstones of the
+    * replaced rows go with them. */
+  private def replacedBy(man: Manifest, frags: Seq[Fragment]): Manifest =
+    man.copy(fragments = frags, deletionFiles = Nil, deletedRowCount = 0L)
+
   /** Copy-on-write rewrite with job-level chunking (SCALE.md "what breaks
     * first" #1): a predicate that touches most of a 100 TB dataset must not
     * rewrite it in ONE Spark job — staging temp space, shuffle state, and
@@ -2887,9 +2608,9 @@ final class LakeDataset private (
     * and the results land in a SINGLE atomic commit, so readers never see a
     * partial update. On abort, already-staged group files are deleted
     * eagerly (they are unreferenced by any manifest, so vacuum would also
-    * collect them). Fragment ids are renumbered after all groups complete —
-    * per-group staging would otherwise hand out colliding ids since each
-    * group stages against the same base manifest. */
+    * collect them). Each group stages against the same base manifest, so
+    * fragment ids collide across groups until the commit renumbers them
+    * ([[numbered]]). */
   private def stageRewriteGroups(touched: Seq[Fragment],
       rewrite: Seq[Fragment] => DataFrame,
       // stage against a DIFFERENT manifest than the read side when the
@@ -2929,8 +2650,7 @@ final class LakeDataset private (
           catch { case scala.util.control.NonFatal(_) => () })
         throw e
     }
-    var nid = m.maxFragmentId
-    staged.toSeq.map { f => nid += 1; f.copy(id = nid) }
+    staged.toSeq
   }
 
   /** Adopt already-written physical-schema parquet files (from a staging
@@ -3061,19 +2781,6 @@ final class LakeDataset private (
     (frags, maxRid)
   }
 
-  private def commit(next: Manifest): Unit = {
-    require(!partial,
-      "this handle was opened chunk-pruned (openPruned) and holds a partial " +
-        "fragment list; committing would drop the pruned fragments — " +
-        "use LakeDataset.open for writes")
-    val (mat, content) = LakeDataset.encodeManifest(io, rootPath, next,
-      parent = Some(m), chunkSize = manifestChunkSize,
-      threshold = manifestChunkThreshold)
-    commitHandler.publish(
-      manifestsDir.resolve(Manifest.versionFileName(next.version)), content)
-    m = mat
-  }
-
   /** Manifest-list split knobs (SCALE.md): above `threshold` fragments the
     * version JSON stops inlining the fragment list and spills it to
     * content-addressed chunk files, keeping commit IO O(delta). Session
@@ -3193,9 +2900,8 @@ object LakeDataset {
       // the schema/overwrite family like any delete.
       case OpKind.DeleteDv => other match {
         case OpKind.Append | OpKind.CreateIndex | OpKind.DeleteDv => false
-        // plain compaction/optimize preserve rowids and values; the purge
-        // case (clearing tombstones) is guarded in commitRewrite, which
-        // refuses to clear a deletion list that changed since planning
+        // compaction/optimize/purge preserve rowids and values, so the
+        // tombstones still address the same rows after them
         case OpKind.Rewrite => false
         case OpKind.DeleteUpdate => overlap
         case _ => true
@@ -3204,8 +2910,8 @@ object LakeDataset {
         case OpKind.Append => false
         case OpKind.DeleteUpdate | OpKind.Rewrite => overlap
         // rowids survive this rewrite, so committed tombstones keep
-        // applying to the rewritten fragments; a CLEARING rewrite
-        // (purge) is instead stopped by the foldedDeletes guard
+        // applying to the rewritten fragments; a purge re-plans its fold
+        // on every attempt, so it folds them rather than dropping them
         case OpKind.DeleteDv => false
         case _ => true
       }
@@ -3224,6 +2930,9 @@ object LakeDataset {
       }
     }
   }
+
+  /** Publish attempts a commit gets (see `commitOp`). */
+  private val CommitAttempts = 5
 
   /** Default vacuum retention: 7 days, Delta VACUUM's model. */
   val DefaultVacuumGraceMs: Long = 7L * 24 * 3600 * 1000

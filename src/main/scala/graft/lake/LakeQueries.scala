@@ -729,9 +729,15 @@ object LakeQueries {
       s.createDataFrame(java.util.Arrays.asList(rows: _*), ds.schema)
         .coalesce(1)
     val vBefore = ds.version
+    // only the refusal this demo means counts; any other failure of the
+    // append is a fault and propagates
+    def isViolation(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists(c =>
+        Option(c.getMessage)
+          .exists(_.contains("CHECK constraint 'region_range' violated")))
     val refused =
       try { ds.append(frame(row(200, 9), row(201, 9))); 0L }
-      catch { case _: Exception => 1L }
+      catch { case e: Exception if isViolation(e) => 1L }
     val afterRefusal = ds.refresh().read().count()
     require(ds.version == vBefore, "aborted write must not commit")
     ds.append(frame(row(100, 1), row(101, 2)))

@@ -830,60 +830,59 @@ final class WireServer(
     ((b(at) & 0xff) << 24) | ((b(at + 1) & 0xff) << 16) |
       ((b(at + 2) & 0xff) << 8) | (b(at + 3) & 0xff)
 
-  /** Rewrite `$1..$n` placeholders (outside string literals, quoted
-    * identifiers, and SQL comments) to Spark named parameter markers
-    * `:p1..:pn`; returns the rewritten SQL and the highest placeholder
-    * index seen. `--` line comments and (nested) bracketed comments pass
-    * through untouched — a `$1`-shaped token inside a comment must not
-    * inflate the statement's parameter count. Dollar-quoted strings
+  /** The one SQL scanner: walks `sql` past `--` line comments and
+    * (nested, per pg & Spark) bracketed comments, calling `code(i)` at each
+    * index of top-level code; `code` returns how many characters it
+    * consumed (≥ 1). A string literal or quoted identifier is reported at
+    * its opening quote only and then skipped whole; a doubled quote inside
+    * a literal closes and reopens it. Dollar-quoted strings
     * ($tag$...$tag$) are not parsed — Spark SQL has no such literal, so a
     * statement using one fails at parse, not silently. */
-  private def rewriteParams(sql: String): (String, Int) = {
-    val out = new StringBuilder(sql.length)
+  private def scanSqlCode(sql: String)(code: Int => Int): Unit = {
     var i = 0
-    var inSingle = false
-    var inDouble = false
-    var inLine = false   // -- to end of line
-    var blockDepth = 0   // /* */, nested per pg & Spark
-    var maxIdx = 0
     while (i < sql.length) {
       val c = sql.charAt(i)
-      if (inLine) {
-        if (c == '\n') inLine = false
-        out.append(c)
-      } else if (blockDepth > 0) {
-        if (c == '*' && i + 1 < sql.length && sql.charAt(i + 1) == '/') {
-          blockDepth -= 1; out.append("*/"); i += 1
-        } else if (c == '/' && i + 1 < sql.length &&
-            sql.charAt(i + 1) == '*') {
-          blockDepth += 1; out.append("/*"); i += 1
-        } else out.append(c)
-      } else c match {
-        case '\'' if !inDouble =>
-          if (inSingle && i + 1 < sql.length && sql.charAt(i + 1) == '\'') {
-            out.append("''"); i += 1
-          } else { inSingle = !inSingle; out.append(c) }
-        case '"' if !inSingle =>
-          inDouble = !inDouble; out.append(c)
-        case '-' if !inSingle && !inDouble && i + 1 < sql.length &&
-            sql.charAt(i + 1) == '-' =>
-          inLine = true; out.append("--"); i += 1
-        case '/' if !inSingle && !inDouble && i + 1 < sql.length &&
-            sql.charAt(i + 1) == '*' =>
-          blockDepth = 1; out.append("/*"); i += 1
-        case '$' if !inSingle && !inDouble && i + 1 < sql.length &&
-            sql.charAt(i + 1).isDigit =>
-          var j = i + 1
-          while (j < sql.length && sql.charAt(j).isDigit) j += 1
-          val idx = sql.substring(i + 1, j).toInt
-          maxIdx = math.max(maxIdx, idx)
-          out.append(":p").append(idx)
-          i = j - 1
-        case _ => out.append(c)
-      }
-      i += 1
+      if (c == '\'' || c == '"') {
+        code(i)
+        val close = sql.indexOf(c, i + 1)
+        i = if (close < 0) sql.length else close + 1
+      } else if (sql.startsWith("--", i)) {
+        val eol = sql.indexOf('\n', i)
+        i = if (eol < 0) sql.length else eol + 1
+      } else if (sql.startsWith("/*", i)) {
+        var depth = 1
+        i += 2
+        while (i < sql.length && depth > 0) {
+          if (sql.startsWith("*/", i)) { depth -= 1; i += 2 }
+          else if (sql.startsWith("/*", i)) { depth += 1; i += 2 }
+          else i += 1
+        }
+      } else i += code(i)
     }
-    (out.toString, maxIdx)
+  }
+
+  /** Rewrite `$1..$n` placeholders in code (not in literals, quoted
+    * identifiers or comments — a `$1`-shaped token inside a comment must
+    * not inflate the statement's parameter count) to Spark named parameter
+    * markers `:p1..:pn`; returns the rewritten SQL and the highest
+    * placeholder index seen. */
+  private def rewriteParams(sql: String): (String, Int) = {
+    val out = new StringBuilder(sql.length)
+    var copied = 0
+    var maxIdx = 0
+    scanSqlCode(sql) { i =>
+      if (sql.charAt(i) == '$' && i + 1 < sql.length &&
+          sql.charAt(i + 1).isDigit) {
+        var j = i + 1
+        while (j < sql.length && sql.charAt(j).isDigit) j += 1
+        val idx = sql.substring(i + 1, j).toInt
+        maxIdx = math.max(maxIdx, idx)
+        out.append(sql.substring(copied, i)).append(":p").append(idx)
+        copied = j
+        j - i
+      } else 1
+    }
+    (out.append(sql.substring(copied)).toString, maxIdx)
   }
 
   /** Decode one bound parameter to a typed Scala value `spark.sql(_, args)`
@@ -946,32 +945,24 @@ final class WireServer(
     b.write(s.getBytes(UTF_8)); b.writeByte(0)
   }
 
-  /** Split on top-level ';' (quote/dollar-free split is enough: quoted ';'
-    * inside string literals is respected; comments are not parsed). */
+  /** Split on top-level ';' — one outside literals, quoted identifiers
+    * and comments ([[scanSqlCode]]). A piece holding only whitespace and
+    * comments is no statement (pg answers it with EmptyQueryResponse). */
   private def splitStatements(sql: String): Seq[String] = {
     val out = mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var i = 0
-    var inSingle = false
-    var inDouble = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      c match {
-        case '\'' if !inDouble =>
-          // doubled '' inside a literal stays inside the literal
-          if (inSingle && i + 1 < sql.length && sql.charAt(i + 1) == '\'') {
-            cur.append("''"); i += 1
-          } else { inSingle = !inSingle; cur.append(c) }
-        case '"' if !inSingle =>
-          inDouble = !inDouble; cur.append(c)
-        case ';' if !inSingle && !inDouble =>
-          if (cur.toString.trim.nonEmpty) out += cur.toString.trim
-          cur.clear()
-        case _ => cur.append(c)
-      }
-      i += 1
+    var start = 0
+    var hasCode = false
+    def cut(end: Int): Unit = {
+      if (hasCode) out += sql.substring(start, end).trim
+      start = end + 1
+      hasCode = false
     }
-    if (cur.toString.trim.nonEmpty) out += cur.toString.trim
+    scanSqlCode(sql) { i =>
+      val c = sql.charAt(i)
+      if (c == ';') cut(i) else if (!c.isWhitespace) hasCode = true
+      1
+    }
+    cut(sql.length)
     out.toSeq
   }
 

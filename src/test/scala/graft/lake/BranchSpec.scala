@@ -1,6 +1,6 @@
 package graft.lake
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
@@ -108,6 +108,22 @@ class BranchSpec extends SparkTestBase {
     ds.vacuum(keepVersions = 1, graceMs = 0)
     assert(ds.branches.isEmpty)
     assert(ids(ds) == Set(1L, 2L, 98L, 97L))
+  }
+
+  test("vacuum on main fails, deleting nothing, on an unreadable branch manifest") {
+    val ds = makeDs()
+    ds.createBranch("corrupt")
+    val br = ds.checkoutBranch("corrupt")
+    br.append(rows(41L -> "branch-only"))
+    val fork = ds.manifest.fragments.map(_.file).toSet
+    val branchOnly = br.manifest.fragments.map(_.file).filterNot(fork)
+    assert(branchOnly.size == 1)
+    Files.writeString(
+      Paths.get(ds.root, "_refs", "branches", "corrupt",
+        Manifest.versionFileName(br.version)),
+      "{\"version\": ")
+    intercept[Exception](ds.vacuum(keepVersions = 1, graceMs = 0))
+    assert(Files.exists(Paths.get(ds.root, branchOnly.head)))
   }
 
   test("concurrent appends on one branch rebase like on main") {

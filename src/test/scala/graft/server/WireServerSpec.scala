@@ -69,6 +69,21 @@ class WireServerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("statement split ignores ';', quotes and whole pieces in comments") {
+    withServer { conn =>
+      val two = conn.query("SELECT 1 AS a; -- don't\nSELECT 2 AS b")
+      assert(two.map(_.rows) ==
+        Vector(Vector(Vector(Some("1"))), Vector(Vector(Some("2")))))
+      val split = conn.query("SELECT 1 AS a -- don't\n; SELECT 2 AS b")
+      assert(split.map(_.rows.head.head.get) == Vector("1", "2"))
+      val one = conn.query("SELECT 1 AS a /* ; */")
+      assert(one.map(_.rows) == Vector(Vector(Vector(Some("1")))))
+      // a piece of only comments is no statement
+      assert(conn.query("SELECT 1 AS a; -- done").size == 1)
+      assert(conn.query("-- only a comment").isEmpty)
+    }
+  }
+
   test("multiple statements in one Query message get one result each") {
     withServer { conn =>
       val res = conn.query(
