@@ -1,9 +1,8 @@
 package graft.ddl
 
-import java.nio.file.Files
 import java.util.UUID
 
-import graft.Q
+import graft.{Q, ScratchDir}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
@@ -31,7 +30,7 @@ object DdlQueries {
   val roundTrip: Q = Q("ddl_roundtrip", roundTripOracle) { (s, dir) =>
     val id = UUID.randomUUID().toString.replace("-", "").take(10)
     val db = s"graft_$id"
-    val loc = Files.createTempDirectory(s"graft-ddl-$id").toString
+    val loc = ScratchDir(s"graft-ddl-$id")
     try {
       Engine.createSchema(s, db, Some(s"$loc/db"))
       Engine.createTable(s, s"$db.items",
@@ -69,16 +68,7 @@ object DdlQueries {
         math.round(exportedTotal * 100) / 100.0))
         .toDF("n_items", "total_price", "n_copied", "n_region", "n_exported",
           "exported_total")
-    } finally {
-      Engine.dropSchema(s, db)
-      // dropSchema only removes managed tables; the export dir and the
-      // temp root itself would otherwise accumulate one orphan per run
-      try {
-        Files.walk(java.nio.file.Paths.get(loc))
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.deleteIfExists(p))
-      } catch { case _: Exception => () }
-    }
+    } finally Engine.dropSchema(s, db)
   }
 
   def all: Seq[Q] = Seq(roundTrip)

@@ -15,18 +15,16 @@ final case class FtsPruneStats(scoredDocs: Long, matchingDocs: Long) {
   * counterpart of the reference's inverted index + persistence
   * (pkg/storage2/fts_index.go, fts_persistence.go).
   *
-  * Layout: `<root>/_indexes/<name>/v<version>/{postings,doclen,stats,
-  * terminfo}`. Postings are parquet sorted by term, so a query's term
-  * filter prunes to its own terms' row groups — the batch analogue of
-  * posting-list seeks. `terminfo` holds per-term (max_tf, min_len) bounds
-  * powering [[searchPruned]]'s MaxScore/WAND-style top-k pruning
-  * (fts_wand.go:35-260). Like [[VectorIndex]], postings key on stable
-  * `_rowid` and join back to live data, so deletes after build don't
-  * poison results. */
+  * Segments live in the [[IndexStore]], per namespace (main or branch):
+  * `_indexes/<name>/v<version>/{postings,doclen,stats,terminfo}`, each
+  * refresh a delta segment chained to its parent. Postings are parquet
+  * sorted by term, so a query's term filter prunes to its own terms' row
+  * groups — the batch analogue of posting-list seeks. `terminfo` holds
+  * per-term (max_tf, min_len) bounds powering [[searchPruned]]'s
+  * MaxScore/WAND-style top-k pruning (fts_wand.go:35-260). Like
+  * [[VectorIndex]], postings key on stable `_rowid` and join back to live
+  * data, so deletes after build don't poison results. */
 object FtsIndex {
-
-  private def dir(ds: LakeDataset, name: String, v: Long) =
-    new Path(ds.root).resolve("_indexes").resolve(name).resolve(f"v$v%020d")
 
   /** Tokenize (with the named tokenizer — whitespace/simple/cjk, see
     * [[Fts.tokens]]) + persist postings/doc-lengths/corpus stats at the
@@ -34,142 +32,67 @@ object FtsIndex {
     * queries are tokenized identically at search time. */
   def build(ds: LakeDataset, textCol: String, name: String = "fts",
       tokenizer: String = "whitespace"): Unit = {
-    val rows = ds.scanner().withRowId.build()
-      .select(col(LakeDataset.RowIdCol).as("_rowid"), col(textCol).as("text"))
-      .filter(col("text").isNotNull)
-    val toks = rows.select(col("_rowid"),
-      posexplode(Fts.tokens(col("text"), tokenizer)).as(Seq("pos", "term")))
-    val d = dir(ds, name, ds.version)
-    ds.io.mkdirs(d)
-    // positional postings (Lucene shape): tf for BM25, sorted 0-based
-    // in-doc positions for phrase queries — one int per token, the
-    // standard positional-index storage trade
-    toks.groupBy("term", "_rowid").agg(count(lit(1)).as("tf"),
-        sort_array(collect_list(col("pos"))).as("positions"))
-      .repartition(1).sortWithinPartitions("term")
-      .write.mode("overwrite").parquet(s"$d/postings")
-    toks.groupBy("_rowid").agg(count(lit(1)).cast("double").as("len"))
-      .write.mode("overwrite").parquet(s"$d/doclen")
-    // corpus stats from the written doclen (docs with >= 1 token) — the
-    // same population bm25TopK and the refresh path's chain stats use, so
-    // indexed and direct scores agree even with zero-token docs around
-    ds.spark.read.parquet(s"$d/doclen")
-      .agg(count(lit(1)).cast("double").as("n_docs"),
-        avg("len").as("avglen"))
-      .write.mode("overwrite").parquet(s"$d/stats")
-    writeTermInfo(ds, d)
-    // meta.json is the COMMIT POINT (written after every data file):
-    // builtVersion ignores dirs without it, so a build that dies mid-write
-    // can't brick the index. The high-water marks make refresh independent
-    // of dataset manifests, which vacuum may delete.
-    ds.io.writeString(d.resolve("meta.json"),
-      s"""{"tokenizer": "$tokenizer",""" +
-        s""" "max_rowid": "${ds.manifest.nextRowId - 1}",""" +
-        s""" "max_fragment_id": "${ds.manifest.maxFragmentId}"}""")
+    val store = new IndexStore(ds, name)
+    writeSegment(ds, store, ds.scanner().withRowId.build()
+      .select(col(LakeDataset.RowIdCol), col(textCol))
+      .filter(col(textCol).isNotNull), tokenizer, None)
   }
 
   /** The tokenizer an index was built with. */
-  def tokenizerOf(ds: LakeDataset, name: String = "fts"): String =
-    metaField(ds, name, "tokenizer").getOrElse("whitespace")
-
-  private def metaField(ds: LakeDataset, name: String,
-      field: String): Option[String] = {
-    val v = builtVersion(ds, name).getOrElse(
-      throw new IllegalStateException(s"no FTS index '$name'"))
-    metaFieldAt(ds, name, v, field)
+  def tokenizerOf(ds: LakeDataset, name: String = "fts"): String = {
+    val store = new IndexStore(ds, name)
+    tokenizerIn(store.metaAt(builtOf(store, name)).get)
   }
 
-  private def metaFieldAt(ds: LakeDataset, name: String, v: Long,
-      field: String): Option[String] = {
-    val meta = dir(ds, name, v).resolve("meta.json")
-    if (!ds.io.exists(meta)) None
-    else (""""""" + field + """"\s*:\s*"([^"]+)"""").r
-      .findFirstMatchIn(ds.io.readString(meta))
-      .map(_.group(1))
-  }
+  private def builtOf(store: IndexStore, name: String): Long =
+    store.built.getOrElse(
+      throw new IllegalStateException(s"no FTS index '$name' — call build()"))
 
-  /** Index segment dirs for the version chain ending at the latest built
-    * version ≤ the dataset version: each refresh adds a DELTA segment (its
-    * own postings/doclen) with a parent pointer instead of rewriting the
-    * whole index — the LSM shape: extending a 100 TB index costs
-    * tokenizing the appended rows, not the corpus. */
-  private def segmentDirs(ds: LakeDataset, name: String,
-      v: Long): Seq[Path] = {
-    var cur = Option(v)
-    val out = Seq.newBuilder[Path]
-    while (cur.isDefined) {
-      val d = dir(ds, name, cur.get)
-      out += d
-      cur = metaFieldAt(ds, name, cur.get, "parent").map(_.drop(1).toLong)
-    }
-    out.result()
-  }
+  private def tokenizerIn(meta: IndexStore.Meta): String =
+    meta.get("tokenizer").getOrElse("whitespace")
 
   /** Incrementally extend the index to the current dataset version:
-    * tokenize ONLY rows appended since the last built version (rowids above
-    * the old manifest's high-water mark, read from fragments the old
-    * manifest didn't have) and write them as a delta segment. Safe across
+    * tokenize ONLY rows appended since the last built version (the store's
+    * refresh cursor) and write them as a delta segment. Safe across
     * deletes (search joins live rows) and compaction (rowids survive
     * rewrites); a text UPDATE changes rows in place, so those need a full
     * [[build]] — same contract as the reference's inverted index. */
   def refresh(ds: LakeDataset, textCol: String, name: String = "fts"): Unit = {
-    val v0 = builtVersion(ds, name) match {
-      case None => build(ds, textCol, name); return
-      case Some(v) => v
+    val store = new IndexStore(ds, name)
+    store.pending(textCol)(build(ds, textCol, name)).foreach { p =>
+      writeSegment(ds, store, p.rows, tokenizerIn(p.meta), Some(p.base))
     }
-    if (v0 == ds.version) return
-    val tokenizer = tokenizerOf(ds, name)
-    // High-water marks from the built segment's own meta, NOT the dataset
-    // manifest at v0 — vacuum deletes old manifests, and an index must
-    // stay refreshable after them. (Manifest fallback for segments built
-    // before the marks existed.)
-    def legacyMan = LakeDataset.loadVersion(new Path(ds.root), v0)
-    val maxIndexed = metaFieldAt(ds, name, v0, "max_rowid").map(_.toLong)
-      .getOrElse(legacyMan.nextRowId - 1)
-    // fragments beyond the built high-water mark: appended data, plus
-    // compaction outputs (whose OLD rows the rowid filter screens out)
-    val newFrags = metaFieldAt(ds, name, v0, "max_fragment_id")
-      .map(_.toLong) match {
-      case Some(mf) => ds.manifest.fragments.filter(_.id > mf)
-      case None =>
-        val oldIds = legacyMan.fragments.map(_.id).toSet
-        ds.manifest.fragments.filterNot(f => oldIds(f.id))
-    }
-    val d = dir(ds, name, ds.version)
-    // nothing appended (pure deletes/schema ops): the old segments already
-    // cover every live row — leave the chain as-is
-    if (newFrags.isEmpty) return
-    val rows = ds.readFragments(ds.manifest, newFrags, withRowId = true)
-      .select(col(LakeDataset.RowIdCol).as("_rowid"), col(textCol).as("text"))
-      .filter(col("text").isNotNull && col("_rowid") > maxIndexed)
-    // compaction-only advance: fresh fragment ids, no post-mark rowids
-    if (rows.isEmpty) return
-    val toks = rows.select(col("_rowid"),
-      posexplode(Fts.tokens(col("text"), tokenizer)).as(Seq("pos", "term")))
-    ds.io.mkdirs(d)
-    toks.groupBy("term", "_rowid").agg(count(lit(1)).as("tf"),
-        sort_array(collect_list(col("pos"))).as("positions"))
-      .repartition(1).sortWithinPartitions("term")
-      .write.mode("overwrite").parquet(s"$d/postings")
-    toks.groupBy("_rowid").agg(count(lit(1)).cast("double").as("len"))
-      .write.mode("overwrite").parquet(s"$d/doclen")
-    // global corpus stats re-derived from the (small) doclen segments; the
-    // chain is named explicitly (new dir + old chain) because the new
-    // dir's meta — the commit point — is not written yet
-    val spark = ds.spark
-    val allLens = (d +: segmentDirs(ds, name, v0))
-      .map(sd => spark.read.parquet(s"$sd/doclen"))
-      .reduce(_ unionByName _)
-    allLens.agg(count(lit(1)).cast("double").as("n_docs"),
-        avg("len").as("avglen"))
-      .write.mode("overwrite").parquet(s"$d/stats")
-    writeTermInfo(ds, d)
-    // meta last = commit point (see build)
-    ds.io.writeString(d.resolve("meta.json"),
-      s"""{"tokenizer": "$tokenizer", "parent": "v$v0",""" +
-        s""" "max_rowid": "${ds.manifest.nextRowId - 1}",""" +
-        s""" "max_fragment_id": "${ds.manifest.maxFragmentId}"}""")
   }
+
+  /** One segment over `rows` (`_rowid`, text): positional postings,
+    * doc lengths, corpus stats over the whole chain, per-term bounds. */
+  private def writeSegment(ds: LakeDataset, store: IndexStore, rows: DataFrame,
+      tokenizer: String, parent: Option[Long]): Unit =
+    store.commit(parent, "tokenizer" -> tokenizer) { d =>
+      val toks = rows.toDF("_rowid", "text").select(col("_rowid"),
+        posexplode(Fts.tokens(col("text"), tokenizer)).as(Seq("pos", "term")))
+      // positional postings (Lucene shape): tf for BM25, sorted 0-based
+      // in-doc positions for phrase queries — one int per token, the
+      // standard positional-index storage trade
+      toks.groupBy("term", "_rowid").agg(count(lit(1)).as("tf"),
+          sort_array(collect_list(col("pos"))).as("positions"))
+        .repartition(1).sortWithinPartitions("term")
+        .write.mode("overwrite").parquet(s"$d/postings")
+      toks.groupBy("_rowid").agg(count(lit(1)).cast("double").as("len"))
+        .write.mode("overwrite").parquet(s"$d/doclen")
+      // corpus stats from the written doc lengths of the whole chain (docs
+      // with >= 1 token) — the population bm25TopK uses, so indexed and
+      // direct scores agree even with zero-token docs around. The chain is
+      // named explicitly because this segment is not committed yet.
+      val spark = ds.spark
+      (d +: parent.fold(Seq.empty[Path])(store.chain))
+        .map(sd => spark.read.parquet(s"$sd/doclen"))
+        .reduce(_ unionByName _)
+        .agg(count(lit(1)).cast("double").as("n_docs"),
+          avg("len").as("avglen"))
+        .write.mode("overwrite").parquet(s"$d/stats")
+      writeTermInfo(ds, d)
+    }
 
   /** Per-term pruning bounds for one segment: (term, max_tf, min_len).
     * BM25's per-doc term contribution is increasing in tf and decreasing
@@ -191,14 +114,8 @@ object FtsIndex {
       name: String = "fts"): DataFrame =
     search(ds, Fts.tokenizeQuery(query, tokenizerOf(ds, name)), k, name)
 
-  def builtVersion(ds: LakeDataset, name: String = "fts"): Option[Long] = {
-    val base = new Path(ds.root).resolve("_indexes").resolve(name)
-    if (!ds.io.exists(base)) return None
-    ds.io.listNames(base)
-      .filter(n => ds.io.exists(base.resolve(n).resolve("meta.json"))) // commit marker
-      .filter(_.startsWith("v")).map(_.drop(1).toLong)
-      .filter(_ <= ds.version).maxOption
-  }
+  def builtVersion(ds: LakeDataset, name: String = "fts"): Option[Long] =
+    new IndexStore(ds, name).built
 
   /** Chain context for one query: query-term postings, doc lengths,
     * corpus stats, and the newest segment dir. */
@@ -208,13 +125,11 @@ object FtsIndex {
   private def queryCtx(ds: LakeDataset, queryTerms: Seq[String],
       name: String): QueryCtx = {
     val spark = ds.spark
-    val v = builtVersion(ds, name).getOrElse(
-      throw new IllegalStateException(s"no FTS index '$name' — call build()"))
-    val d = dir(ds, name, v)
     // read every delta segment in the chain (newest dir carries the
     // refreshed global stats); a rowid appears in exactly one segment
-    val segs = segmentDirs(ds, name, v)
-      .filter(sd => ds.io.exists(sd.resolve("postings")))
+    val chain = chainOf(ds, name)
+    val segs = withPostings(ds, chain)
+    val d = chain.head
     val post = spark.read
       .parquet(segs.map(sd => s"$sd/postings"): _*)
       .filter(col("term").isin(queryTerms: _*))
@@ -239,15 +154,20 @@ object FtsIndex {
       .groupBy("_rowid").agg(round(sum("s"), 4).as("score"))
   }
 
-  private def topK(ds: LakeDataset, scored: DataFrame, k: Int): DataFrame = {
-    val live = ds.scanner().withRowId.build()
-    live.join(scored.withColumnRenamed("_rowid", "_idx_rowid"),
-        col(LakeDataset.RowIdCol) === col("_idx_rowid"))
-      .drop("_idx_rowid")
+  /** Segment dirs of the built chain, newest first. */
+  private def chainOf(ds: LakeDataset, name: String): Seq[Path] = {
+    val store = new IndexStore(ds, name)
+    store.chain(builtOf(store, name))
+  }
+
+  private def withPostings(ds: LakeDataset, segs: Seq[Path]): Seq[Path] =
+    segs.filter(sd => ds.io.exists(sd.resolve("postings")))
+
+  private def topK(ds: LakeDataset, scored: DataFrame, k: Int): DataFrame =
+    IndexStore.joinLive(ds.scanner().withRowId.build(), scored)
       .orderBy(col("score").desc, col(LakeDataset.RowIdCol))
       .limit(k)
       .select((ds.schema.fieldNames.map(col) :+ col("score")): _*)
-  }
 
   /** BM25 top-k over the persisted index; only the query terms' postings
     * are read. Results join back to live rows (delete-safe). */
@@ -273,11 +193,7 @@ object FtsIndex {
       name: String = "fts"): DataFrame = {
     require(phrase.nonEmpty, "empty phrase")
     val spark = ds.spark
-    val v = builtVersion(ds, name).getOrElse(
-      throw new IllegalStateException(s"no FTS index '$name' — call build()"))
-    val segs = segmentDirs(ds, name, v)
-      .filter(sd => ds.io.exists(sd.resolve("postings")))
-    val perSeg = segs.map { sd =>
+    val perSeg = withPostings(ds, chainOf(ds, name)).map { sd =>
       val df = spark.read.parquet(s"$sd/postings")
       if (!df.columns.contains("positions"))
         throw new IllegalStateException(
@@ -327,10 +243,7 @@ object FtsIndex {
     val occ = byDoc
       .select(col("_rowid"), expr(occExpr).as("n_occ"))
       .filter(col("n_occ") > 0)
-    val live = ds.scanner().withRowId.build()
-    live.join(occ.withColumnRenamed("_rowid", "_idx_rowid"),
-        col(LakeDataset.RowIdCol) === col("_idx_rowid"))
-      .drop("_idx_rowid")
+    IndexStore.joinLive(ds.scanner().withRowId.build(), occ)
       .orderBy(col("n_occ").desc, col(LakeDataset.RowIdCol))
       .limit(k)
       .select((ds.schema.fieldNames.map(col) :+ col("n_occ")): _*)

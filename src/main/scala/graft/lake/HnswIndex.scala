@@ -16,19 +16,19 @@ import org.apache.spark.sql.functions._
   * parallel tasks, beams every query through it, and merges per-shard
   * top-k. No driver-side graph, no executor ever holds more than a shard.
   *
-  * Layout: `<root>/_indexes/<name>/v<version>/graph` + `meta.json`
-  * (commit point, written last — a build that dies mid-write leaves a dir
-  * without meta, which [[VectorIndex.builtVersion]]-style discovery
-  * ignores). Incremental [[refresh]] follows the segment-chain pattern of
-  * [[VectorIndex]]/[[FtsIndex]] with shard-replacement semantics: HNSW
-  * inserts rewire EXISTING nodes' neighbor lists, so the rewrite unit is
-  * the touched shard (only shards that received new rows are rewritten;
-  * untouched shards resolve through the parent chain).
+  * Segments live in the [[IndexStore]], per namespace (main or branch):
+  * `_indexes/<name>/v<version>/graph`, with the shard count, `m` and `ef`
+  * in the segment meta. Incremental [[refresh]] takes the store's refresh
+  * cursor and chains a delta segment, like [[VectorIndex]]/[[FtsIndex]],
+  * with shard-replacement semantics: HNSW inserts rewire EXISTING nodes'
+  * neighbor lists, so the rewrite unit is the touched shard (only shards
+  * that received new rows are rewritten; untouched shards resolve through
+  * the parent chain).
   *
-  * Delete-safety mirrors [[VectorIndex.search]]: graph hits are joined
-  * back to the live dataset by `_rowid`, so rows deleted since build drop
-  * out; the per-shard beam over-fetches (`OverFetch`·k) to keep k results
-  * under moderate deletion. Vector-value rewrites require a rebuild (same
+  * Delete-safety is the store's live join, as in [[VectorIndex.search]]:
+  * graph hits are joined back to the live dataset by `_rowid`, so rows
+  * deleted since build drop out; the per-shard beam over-fetches
+  * (`OverFetch`·k) to keep k results under moderate deletion. Vector-value rewrites require a rebuild (same
   * contract as the reference and the IVF family).
   */
 object HnswIndex {
@@ -37,10 +37,6 @@ object HnswIndex {
   /** Per-shard over-fetch multiplier: slack for deleted rows + merge. */
   val OverFetch = 4
 
-  private def indexDir(ds: LakeDataset, name: String, version: Long) =
-    new HPath(ds.root).resolve("_indexes").resolve(name)
-      .resolve(f"v$version%020d")
-
   private def shardOf(rowid: org.apache.spark.sql.Column, shards: Int) =
     pmod(rowid, lit(shards.toLong)).cast("int")
 
@@ -48,137 +44,85 @@ object HnswIndex {
   def build(ds: LakeDataset, vecCol: String, name: String = "hnsw",
       shards: Int = DefaultShards, m: Int = HnswGraph.DefaultM,
       efConstruction: Int = HnswGraph.DefaultEfConstruction): Unit = {
-    val spark = ds.spark
+    val store = new IndexStore(ds, name)
     val rows = ds.scanner().withRowId.build()
       .select(col(LakeDataset.RowIdCol).as("_rowid"), col(vecCol).as("vec"))
       .filter(col("vec").isNotNull)
-    val dir = indexDir(ds, name, ds.version)
-    ds.io.mkdirs(dir)
-    writeShardGraphs(spark, rows, shards, m, efConstruction, s"$dir/graph")
-    ds.io.writeString(dir.resolve("meta.json"),
-      s"""{"max_rowid": "${ds.manifest.nextRowId - 1}",""" +
-        s""" "max_fragment_id": "${ds.manifest.maxFragmentId}",""" +
-        s""" "shards": "$shards", "m": "$m", "ef": "$efConstruction"}""")
+    writeSegment(store, None, rows, shards, m, efConstruction)
   }
 
-  /** Partition by shard, build one graph per partition, persist nodes. */
-  private def writeShardGraphs(spark: SparkSession, rows: DataFrame,
-      shards: Int, m: Int, efC: Int, outPath: String,
+  /** A segment of shard graphs: partition by shard, build one graph per
+    * partition, persist nodes; the meta records the graph parameters. */
+  private def writeSegment(store: IndexStore, parent: Option[Long],
+      rows: DataFrame, shards: Int, m: Int, efC: Int,
       onlyShards: Option[Set[Int]] = None,
-      restored: Option[DataFrame] = None): Unit = {
-    import spark.implicits._
-    val withShard = rows
-      .select(shardOf(col("_rowid"), shards).as("shard"),
-        col("_rowid"), col("vec"))
-    val scoped = onlyShards.fold(withShard)(ss =>
-      withShard.filter(col("shard").isin(ss.toSeq: _*)))
-    val fresh = scoped
-      .select(col("shard"), col("_rowid"), col("vec"),
-        lit(false).as("pre"), lit(0).as("level"),
-        lit(null).cast("array<array<bigint>>").as("nbrs"))
-    // Restored nodes (refresh path) carry their built graph structure and
-    // already-normalized vectors; fresh rows are inserted into them.
-    val all = restored.fold(fresh)(r => fresh.unionByName(r))
-    all
-      .select(col("shard"), col("_rowid"), col("vec"), col("pre"),
-        col("level"), col("nbrs"))
-      .as[(Int, Long, Array[Float], Boolean, Int, Array[Array[Long]])]
-      .groupByKey(_._1)
-      .flatMapGroups { (shard, it) =>
-        val (preRows, newRows) = it.toArray.partition(_._4)
-        val g =
-          if (preRows.isEmpty) {
-            HnswGraph.build(
-              newRows.iterator.map(r => (r._2, r._3)), m, efC)
-          } else {
-            val base = HnswGraph.fromNodes(
-              preRows.map(r => HnswGraph.Node(r._2, r._3, r._5, r._6)).toSeq,
-              m, efC)
-            newRows.sortBy(_._2).foreach(r => base.insert(r._2, r._3))
-            base
-          }
-        HnswGraph.toNodes(g)
-          .map(n => (shard, n.id, n.vec, n.level, n.nbrs))
-      }
-      .toDF("shard", "_rowid", "vec", "level", "nbrs")
-      .repartition(1).sortWithinPartitions("shard", "_rowid")
-      .write.mode("overwrite").parquet(outPath)
-  }
-
-  private def metaStr(ds: LakeDataset, dir: HPath,
-      field: String): Option[String] = {
-    val meta = dir.resolve("meta.json")
-    if (!ds.io.exists(meta)) None
-    else (""""""" + field + """"\s*:\s*"([^"]+)"""").r
-      .findFirstMatchIn(ds.io.readString(meta))
-      .map(_.group(1))
-  }
+      restored: Option[DataFrame] = None): Unit =
+    store.commit(parent, "shards" -> shards.toString, "m" -> m.toString,
+        "ef" -> efC.toString) { dir =>
+      val spark = rows.sparkSession
+      import spark.implicits._
+      val withShard = rows
+        .select(shardOf(col("_rowid"), shards).as("shard"),
+          col("_rowid"), col("vec"))
+      val scoped = onlyShards.fold(withShard)(ss =>
+        withShard.filter(col("shard").isin(ss.toSeq: _*)))
+      val fresh = scoped
+        .select(col("shard"), col("_rowid"), col("vec"),
+          lit(false).as("pre"), lit(0).as("level"),
+          lit(null).cast("array<array<bigint>>").as("nbrs"))
+      // Restored nodes (refresh path) carry their built graph structure and
+      // already-normalized vectors; fresh rows are inserted into them.
+      val all = restored.fold(fresh)(r => fresh.unionByName(r))
+      all
+        .select(col("shard"), col("_rowid"), col("vec"), col("pre"),
+          col("level"), col("nbrs"))
+        .as[(Int, Long, Array[Float], Boolean, Int, Array[Array[Long]])]
+        .groupByKey(_._1)
+        .flatMapGroups { (shard, it) =>
+          val (preRows, newRows) = it.toArray.partition(_._4)
+          val g =
+            if (preRows.isEmpty) {
+              HnswGraph.build(
+                newRows.iterator.map(r => (r._2, r._3)), m, efC)
+            } else {
+              val base = HnswGraph.fromNodes(
+                preRows.map(r => HnswGraph.Node(r._2, r._3, r._5, r._6)).toSeq,
+                m, efC)
+              newRows.sortBy(_._2).foreach(r => base.insert(r._2, r._3))
+              base
+            }
+          HnswGraph.toNodes(g)
+            .map(n => (shard, n.id, n.vec, n.level, n.nbrs))
+        }
+        .toDF("shard", "_rowid", "vec", "level", "nbrs")
+        .repartition(1).sortWithinPartitions("shard", "_rowid")
+        .write.mode("overwrite").parquet(s"$dir/graph")
+    }
 
   /** Newest committed (meta-bearing) version ≤ the dataset's current one. */
-  def builtVersion(ds: LakeDataset, name: String): Option[Long] = {
-    val base = new HPath(ds.root).resolve("_indexes").resolve(name)
-    if (!ds.io.exists(base)) return None
-    ds.io.listNames(base)
-      .filter(n => ds.io.exists(base.resolve(n).resolve("meta.json")))
-      .filter(_.startsWith("v"))
-      .map(_.drop(1).toLong)
-      .filter(_ <= ds.version)
-      .maxOption
-  }
-
-  /** Segment chain newest→oldest via parent pointers. */
-  private def segmentDirs(ds: LakeDataset, name: String, v: Long): Seq[HPath] = {
-    var cur = Option(v)
-    val out = Seq.newBuilder[HPath]
-    while (cur.isDefined) {
-      val d = indexDir(ds, name, cur.get)
-      out += d
-      cur = metaStr(ds, d, "parent").map(_.drop(1).toLong)
-    }
-    out.result()
-  }
+  def builtVersion(ds: LakeDataset, name: String): Option[Long] =
+    new IndexStore(ds, name).built
 
   /** Insert rows appended since the last build into their shard graphs and
     * rewrite ONLY the touched shards as a chained segment. */
   def refresh(ds: LakeDataset, vecCol: String, name: String = "hnsw"): Unit = {
-    val spark = ds.spark
-    val v0 = builtVersion(ds, name) match {
-      case None => build(ds, vecCol, name); return
-      case Some(v) => v
+    val store = new IndexStore(ds, name)
+    store.pending(vecCol)(build(ds, vecCol, name)).foreach { p =>
+      val shards = p.meta("shards").toInt
+      val rows = p.rows.toDF("_rowid", "vec")
+      val touched = rows.select(shardOf(col("_rowid"), shards).as("s"))
+        .distinct().collect().map(_.getInt(0)).toSet
+      // Rebuild each touched shard from its newest persisted nodes + inserts.
+      val current = currentShardNodes(ds.spark, store.chain(p.base), touched)
+        .select(col("shard"), col("_rowid"), col("vec"),
+          lit(true).as("pre"), col("level"), col("nbrs"))
+      writeSegment(store, Some(p.base), rows, shards, p.meta("m").toInt,
+        p.meta("ef").toInt, Some(touched), Some(current))
     }
-    if (v0 == ds.version) return
-    val v0dir = indexDir(ds, name, v0)
-    val maxIndexed = metaStr(ds, v0dir, "max_rowid").get.toLong
-    val maxFrag = metaStr(ds, v0dir, "max_fragment_id").get.toLong
-    val shards = metaStr(ds, v0dir, "shards").get.toInt
-    val m = metaStr(ds, v0dir, "m").get.toInt
-    val efC = metaStr(ds, v0dir, "ef").get.toInt
-    val newFrags = ds.manifest.fragments.filter(_.id > maxFrag)
-    if (newFrags.isEmpty) return
-    val rows = ds.readFragments(ds.manifest, newFrags, withRowId = true)
-      .select(col(LakeDataset.RowIdCol).as("_rowid"), col(vecCol).as("vec"))
-      .filter(col("vec").isNotNull && col("_rowid") > maxIndexed)
-    if (rows.isEmpty) return
-    val touched = rows.select(shardOf(col("_rowid"), shards).as("s"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    // Rebuild each touched shard from its newest persisted nodes + inserts.
-    val chain = segmentDirs(ds, name, v0)
-    val current = currentShardNodes(spark, ds, chain, touched)
-      .select(col("shard"), col("_rowid"), col("vec"),
-        lit(true).as("pre"), col("level"), col("nbrs"))
-    val dir = indexDir(ds, name, ds.version)
-    ds.io.mkdirs(dir)
-    writeShardGraphs(spark, rows, shards, m, efC, s"$dir/graph",
-      Some(touched), Some(current))
-    ds.io.writeString(dir.resolve("meta.json"),
-      s"""{"parent": "v$v0",""" +
-        s""" "max_rowid": "${ds.manifest.nextRowId - 1}",""" +
-        s""" "max_fragment_id": "${ds.manifest.maxFragmentId}",""" +
-        s""" "shards": "$shards", "m": "$m", "ef": "$efC"}""")
   }
 
   /** Per shard, the newest segment in the chain that persisted it wins. */
-  private def currentShardNodes(spark: SparkSession, ds: LakeDataset,
+  private def currentShardNodes(spark: SparkSession,
       chain: Seq[HPath], wanted: Set[Int] = Set.empty): DataFrame = {
     // (segment ord, shards present) is tiny — resolve ownership on the
     // driver, then read only the owning segment's rows per shard.
@@ -207,16 +151,17 @@ object HnswIndex {
     val spark = ds.spark
     val live = ds.scanner().withRowId.build()
     val qvec = typedlit(query)
-    val ranked = builtVersion(ds, name) match {
+    val store = new IndexStore(ds, name)
+    val ranked = store.built match {
       case Some(v) =>
         import spark.implicits._
-        val chain = segmentDirs(ds, name, v)
-        val dir = chain.head
-        val m = metaStr(ds, dir, "m").get.toInt
-        val efC = metaStr(ds, dir, "ef").get.toInt
+        val chain = store.chain(v)
+        val meta = store.metaAt(v).get
+        val m = meta("m").toInt
+        val efC = meta("ef").toInt
         val qB = spark.sparkContext.broadcast(query.toArray)
         val fetch = OverFetch * k
-        val hits = currentShardNodes(spark, ds, chain)
+        val hits = currentShardNodes(spark, chain)
           .select(col("shard"), col("_rowid"), col("vec"),
             col("level"), col("nbrs"))
           .as[(Int, Long, Array[Float], Int, Array[Array[Long]])]
@@ -228,9 +173,8 @@ object HnswIndex {
             g.search(qB.value, fetch, math.max(efC, fetch)).iterator
               .map { case (id, _) => id }
           }
-          .toDF("_idx_rowid")
-        live.join(hits, col(LakeDataset.RowIdCol) === col("_idx_rowid"))
-          .drop("_idx_rowid")
+          .toDF(LakeDataset.RowIdCol)
+        IndexStore.joinLive(live, hits)
       case None => live
     }
     ranked

@@ -366,24 +366,12 @@ final class LakeDataset private (
         case _: Exception => 0L
       }).sum
 
-  /** Names of persisted secondary indexes (FTS/vector) under `_indexes/`
-    * (reference ListVectorIndexes, generalized). */
-  def listIndexes(): Seq[String] = {
-    val dir = rootPath.resolve("_indexes")
-    if (!io.exists(dir)) Nil
-    else io.listNames(dir)
-      .filter(n => io.isDirectory(dir.resolve(n)))
-      .filterNot(_ == "bloom") // bloom sidecars are manifest-managed
-      .sorted
-  }
+  /** Names of this namespace's persisted secondary indexes (FTS/vector,
+    * see [[IndexStore]]; reference ListVectorIndexes, generalized). */
+  def listIndexes(): Seq[String] = IndexStore.list(this)
 
   /** Drop a persisted secondary index by name (reference DropVectorIndex). */
-  def dropIndex(name: String): Boolean = {
-    require(name != "bloom", "bloom index is manifest-managed; " +
-      "drop via schema ops or rebuild with enableBloomIndex")
-    val dir = rootPath.resolve("_indexes").resolve(name)
-    io.deleteRecursive(dir)
-  }
+  def dropIndex(name: String): Boolean = new IndexStore(this, name).drop()
 
   // --------------------------------------------------------------- writes
 
@@ -1141,9 +1129,9 @@ final class LakeDataset private (
     b.refresh()
   }
 
-  /** Delete a branch's manifests (shared data files are untouched; chunks
-    * and fragments referenced only by the branch become garbage for
-    * [[vacuum]], whose liveness scan spans every namespace). */
+  /** Delete a branch's manifests and its indexes (shared data files are
+    * untouched; chunks and fragments referenced only by the branch become
+    * garbage for [[vacuum]], whose liveness scan spans every namespace). */
   def deleteBranch(name: String): Unit = {
     val dir = branchesDir.resolve(name)
     require(io.exists(dir), s"no branch $name")

@@ -1,9 +1,6 @@
 package graft.lake
 
-import java.nio.file.Files
-import java.util.UUID
-
-import graft.{Q, Tables}
+import graft.{Q, ScratchDir, Tables}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -36,8 +33,7 @@ object LakeQueries {
       |  CAST(2 - m0.m AS BIGINT) AS n_merge_inserted,
       |  CAST(n.total AS BIGINT) AS rows_after_restore
       |FROM d, u, m0, n""".stripMargin) { (s, dir) =>
-    val root = Files.createTempDirectory(s"lake-demo-${UUID.randomUUID()}")
-      .toString
+    val root = ScratchDir("lake-demo-")
     val nation = Tables.load(s, dir, "nation")
     val ds = LakeDataset.create(s, root, StructType(Seq(
       StructField("n_nationkey", IntegerType),
@@ -75,8 +71,7 @@ object LakeQueries {
     "lake_dsv2_read",
     """SELECT n_nationkey, n_name, n_regionkey FROM nation
       |WHERE n_regionkey >= 2 ORDER BY n_nationkey""".stripMargin) { (s, dir) =>
-    val root = Files.createTempDirectory(s"lake-dsv2-${UUID.randomUUID()}")
-      .toString
+    val root = ScratchDir("lake-dsv2-")
     val nation = Tables.load(s, dir, "nation")
       .select("n_nationkey", "n_name", "n_regionkey")
     nation.filter(col("n_nationkey") < 13).coalesce(1)
@@ -89,49 +84,51 @@ object LakeQueries {
             |WHERE n_regionkey >= 2 ORDER BY n_nationkey""".stripMargin)
   }
 
+  // An index is built once and searched many times; memoize the indexed
+  // dataset root per (session, key) — same precedent as Ann's ivfCache,
+  // except the state here is a path string (the index itself is on disk),
+  // so there is nothing to sweep between bench queries.
+  private val indexedRoots = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
+      java.util.concurrent.ConcurrentHashMap[String, String]]())
+
+  /** The first `vec_id < 5000` embeddings in a lake dataset indexed by
+    * `index`, built once per (session, key), and the query vector of
+    * vec_id 0. A bounded deterministic corpus: the demo exercises the full
+    * persisted path (create → train → encode → search) at a fixed cost
+    * regardless of SF; recall/footprint at scale are the index specs'
+    * job. */
+  private def indexedEmbeddings(s: org.apache.spark.sql.SparkSession,
+      dir: String, key: String)(index: LakeDataset => Unit)
+      : (LakeDataset, Seq[Float]) = {
+    val emb = Tables.load(s, dir, "embeddings")
+      .select("vec_id", "label", "embedding")
+      .filter(col("vec_id") < 5000)
+    val root = indexedRoots
+      .computeIfAbsent(s, _ => new java.util.concurrent.ConcurrentHashMap)
+      .computeIfAbsent(s"$key:$dir", _ => {
+        val r = ScratchDir(s"lake-$key-")
+        val ds = LakeDataset.create(s, r, emb.schema)
+        ds.append(emb.coalesce(1))
+        index(ds)
+        r
+      })
+    (LakeDataset.open(s, root), emb.filter(col("vec_id") === 0)
+      .select("embedding").head().getSeq[Float](0))
+  }
+
   /** IVF-PQ over a lake dataset: build a persisted product-quantized index
     * on the embeddings corpus, then search one query through probed
     * clusters → byte-code ADC ranking → exact re-rank. Deterministic
     * (seeded init, fixed data); rows-only driver check, recall pinned by
     * VectorIndexSpec. */
-  // A PQ index is built once and searched many times; memoize the built
-  // dataset root per (session, corpus dir) — same precedent as Ann's
-  // ivfCache, except the state here is a path string (the index itself is
-  // on disk), so there is nothing to sweep between bench queries.
-  private val pqRoots = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, String]]())
-
   private def quantizedTopK(quantizer: String, nprobe: Int = 4,
       probeVia: String = "exact"): (
       org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
     (s, dir) => {
-      // bounded deterministic corpus: the demo exercises the full persisted
-      // path (create → train → encode → search) at a fixed cost regardless
-      // of SF; recall/footprint at scale are VectorIndexSpec's job
-      val emb = Tables.load(s, dir, "embeddings")
-        .select("vec_id", "label", "embedding")
-        .filter(col("vec_id") < 5000)
-      val perSession = {
-        var m = pqRoots.get(s)
-        if (m == null) {
-          m = new java.util.concurrent.ConcurrentHashMap[String, String]
-          pqRoots.put(s, m)
-        }
-        m
-      }
-      val root = perSession.computeIfAbsent(s"$quantizer:$dir", _ => {
-        val r = Files.createTempDirectory(s"lake-$quantizer-${UUID.randomUUID()}")
-          .toString
-        val ds = LakeDataset.create(s, r, emb.schema)
-        ds.append(emb.coalesce(1))
-        VectorIndex.build(ds, "embedding", name = s"ivf$quantizer",
-          quantizer = quantizer)
-        r
-      })
-      val ds = LakeDataset.open(s, root)
-      val q = emb.filter(col("vec_id") === 0)
-        .select("embedding").head().getSeq[Float](0)
+      val (ds, q) = indexedEmbeddings(s, dir, quantizer)(
+        VectorIndex.build(_, "embedding", name = s"ivf$quantizer",
+          quantizer = quantizer))
       VectorIndex.search(ds, "embedding", q, k = 10, nprobe = nprobe,
         name = s"ivf$quantizer", probeVia = probeVia)
         .select("vec_id", "label", "similarity")
@@ -164,28 +161,8 @@ object LakeQueries {
     * recall), so no SQL oracle — HnswIndexSpec pins recall, refresh, and
     * delete-safety. */
   val hnswIdx: Q = Q.noOracle("ann_hnswidx_topk") { (s, dir) =>
-    val emb = Tables.load(s, dir, "embeddings")
-      .select("vec_id", "label", "embedding")
-      .filter(col("vec_id") < 5000)
-    val perSession = {
-      var m = pqRoots.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, String]
-        pqRoots.put(s, m)
-      }
-      m
-    }
-    val root = perSession.computeIfAbsent(s"hnsw:$dir", _ => {
-      val r = Files.createTempDirectory(s"lake-hnsw-${UUID.randomUUID()}")
-        .toString
-      val ds = LakeDataset.create(s, r, emb.schema)
-      ds.append(emb.coalesce(1))
-      HnswIndex.build(ds, "embedding")
-      r
-    })
-    val ds = LakeDataset.open(s, root)
-    val q = emb.filter(col("vec_id") === 0)
-      .select("embedding").head().getSeq[Float](0)
+    val (ds, q) = indexedEmbeddings(s, dir, "hnsw")(
+      HnswIndex.build(_, "embedding"))
     HnswIndex.search(ds, "embedding", q, k = 10)
       .select("vec_id", "label", "similarity")
   }
@@ -206,8 +183,7 @@ object LakeQueries {
     "lake_catalog_read",
     """SELECT n_nationkey, n_name, n_regionkey FROM nation
       |WHERE n_nationkey % 2 = 0 ORDER BY n_nationkey""".stripMargin) { (s, dir) =>
-    val root = Files.createTempDirectory(s"lake-cat-${UUID.randomUUID()}")
-      .toString
+    val root = ScratchDir("lake-cat-")
     val cat = s"lakeq_${math.abs(root.hashCode)}"
     s.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
     s.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -239,8 +215,7 @@ object LakeQueries {
       |DELETE FROM lake_dml_scratch WHERE n_name LIKE 'A%';
       |SELECT n_nationkey, n_name, n_regionkey FROM lake_dml_scratch
       |ORDER BY n_nationkey""".stripMargin) { (s, dir) =>
-    val root = Files.createTempDirectory(s"lake-dml-${UUID.randomUUID()}")
-      .toString
+    val root = ScratchDir("lake-dml-")
     val cat = s"lakedml_${math.abs(root.hashCode)}"
     s.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
     s.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -282,8 +257,7 @@ object LakeQueries {
       |DELETE FROM lake_mor_scratch WHERE n_name LIKE 'A%';
       |SELECT n_nationkey, n_name, n_regionkey FROM lake_mor_scratch
       |ORDER BY n_nationkey""".stripMargin) { (s, dir) =>
-    val root = Files.createTempDirectory(s"lake-mor-${UUID.randomUUID()}")
-      .toString
+    val root = ScratchDir("lake-mor-")
     val cat = s"lakemor_${math.abs(root.hashCode)}"
     s.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
     s.conf.set(s"spark.sql.catalog.$cat.root", root)
@@ -337,8 +311,7 @@ object LakeQueries {
       |    AS cnt_pk,
       |  (SELECT CAST(sum(qty) AS BIGINT) FROM li WHERE l_partkey < 100)
       |    AS qty_pk""".stripMargin) { (s, dir) =>
-    val root = Files.createTempDirectory(s"lake-zorder-${UUID.randomUUID()}")
-      .toString
+    val root = ScratchDir("lake-zorder-")
     // bounded deterministic corpus (the PQ-demo precedent): the demo
     // exercises create → quantile pass → z-rewrite → pruned scans at a
     // fixed cost regardless of SF; scale guarantees are ZOrderSpec's job
@@ -394,8 +367,7 @@ object LakeQueries {
       |  CAST(sum(p_size) AS BIGINT) AS sum_size
       |FROM part WHERE p_brand IN ('Brand#13', 'Brand#22')
       |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
-    val root = Files.createTempDirectory(s"lake-pl-${UUID.randomUUID()}")
-      .toString
+    val root = ScratchDir("lake-pl-")
     val src = Tables.load(s, dir, "part")
       .select(col("p_partkey"), col("p_brand"),
         col("p_size").cast("long").as("p_size"))
@@ -439,8 +411,7 @@ object LakeQueries {
     "lake_compaction",
     """SELECT n_nationkey, n_name, n_regionkey FROM nation
       |ORDER BY n_nationkey""".stripMargin) { (s, dir) =>
-    val root = Files.createTempDirectory(s"lake-cpct-${UUID.randomUUID()}")
-      .toString
+    val root = ScratchDir("lake-cpct-")
     val nation = Tables.load(s, dir, "nation")
       .select("n_nationkey", "n_name", "n_regionkey")
     val ds = LakeDataset.create(s, root, nation.schema)
@@ -471,8 +442,7 @@ object LakeQueries {
     """SELECT n_nationkey, n_name AS nation_name,
       |  CAST(n_regionkey * 10 AS BIGINT) AS score
       |FROM nation ORDER BY n_nationkey""".stripMargin) { (s, dir) =>
-    val root = Files.createTempDirectory(s"lake-sev-${UUID.randomUUID()}")
-      .toString
+    val root = ScratchDir("lake-sev-")
     val nation = Tables.load(s, dir, "nation")
       .select("n_nationkey", "n_name", "n_regionkey")
     val ds = LakeDataset.create(s, root, nation.schema)
@@ -512,8 +482,7 @@ object LakeQueries {
       |  FROM nation WHERE n_nationkey >= 20)
       |SELECT change_type, n_nationkey, n_name FROM ch
       |ORDER BY change_type, n_nationkey""".stripMargin) { (s, dir) =>
-    val root = Files.createTempDirectory(s"lake-cdf-${UUID.randomUUID()}")
-      .toString
+    val root = ScratchDir("lake-cdf-")
     val nation = Tables.load(s, dir, "nation")
       .select("n_nationkey", "n_name", "n_regionkey")
     val ds = LakeDataset.create(s, root, nation.schema)
@@ -544,8 +513,7 @@ object LakeQueries {
       |  CAST(max(n_nationkey) AS INT) AS max_key,
       |  min(n_name) AS min_name, max(n_name) AS max_name
       |FROM nation""".stripMargin) { (s, dir) =>
-    val root = Files.createTempDirectory(s"lake-aggpd-${UUID.randomUUID()}")
-      .toString
+    val root = ScratchDir("lake-aggpd-")
     val nation = Tables.load(s, dir, "nation")
       .select("n_nationkey", "n_name", "n_regionkey")
     nation.coalesce(1).write.format("lake").mode("append").save(root)
@@ -575,8 +543,7 @@ object LakeQueries {
       |      FROM e)
       |SELECT event_id, CAST(round(dist * 10000) AS BIGINT) AS dist_e4
       |FROM d ORDER BY dist, event_id LIMIT 15""".stripMargin) { (s, dir) =>
-    val root = Files.createTempDirectory(s"lake-spatial-${UUID.randomUUID()}")
-      .toString
+    val root = ScratchDir("lake-spatial-")
     val pts = Tables.load(s, dir, "events")
       .filter(col("event_id") < 8000)
       .select(col("event_id"), col("value").as("x"), col("user_id").as("y"))
@@ -608,8 +575,7 @@ object LakeQueries {
       |FROM b
       |WHERE x_min <= 150.0 AND x_max >= 50.0
       |  AND y_min <= 40.0 AND y_max >= 0.0""".stripMargin) { (s, dir) =>
-    val root = Files.createTempDirectory(s"lake-spatial-${UUID.randomUUID()}")
-      .toString
+    val root = ScratchDir("lake-spatial-")
     val boxes = Tables.load(s, dir, "events")
       .filter(col("event_id") < 8000)
       .select(col("event_id"),
@@ -650,8 +616,7 @@ object LakeQueries {
       |  CAST(1 AS BIGINT) AS ff_rejected,
       |  CAST(n.total - d.nd + 5 AS BIGINT) AS main_after_rebase
       |FROM d, n""".stripMargin) { (s, dir) =>
-    val root = Files.createTempDirectory(s"lake-br-${UUID.randomUUID()}")
-      .toString
+    val root = ScratchDir("lake-br-")
     val nation = Tables.load(s, dir, "nation")
     val ds = LakeDataset.create(s, root, StructType(Seq(
       StructField("n_nationkey", IntegerType),
@@ -713,8 +678,7 @@ object LakeQueries {
       |  CAST(n.total + 2 AS BIGINT) AS after_valid,
       |  CAST(n.total + 4 AS BIGINT) AS after_drop
       |FROM n""".stripMargin) { (s, dir) =>
-    val root = Files.createTempDirectory(s"lake-ck-${UUID.randomUUID()}")
-      .toString
+    val root = ScratchDir("lake-ck-")
     val nation = Tables.load(s, dir, "nation")
       .select("n_nationkey", "n_name", "n_regionkey")
     val ds = LakeDataset.create(s, root, StructType(Seq(
@@ -776,8 +740,7 @@ object LakeQueries {
       |  CAST(sum(cents) AS BIGINT) AS sum_cents,
       |  CAST(max(cents) AS BIGINT) AS max_cents
       |FROM final GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
-    val root = Files.createTempDirectory(s"lake-mv-${UUID.randomUUID()}")
-      .toString
+    val root = ScratchDir("lake-mv-")
     val src = Tables.load(s, dir, "orders")
       .filter(col("o_orderkey") <= 4000)
       .select(col("o_orderkey"), col("o_orderpriority"),
@@ -828,8 +791,7 @@ object LakeQueries {
       |  CAST(max(cents) AS BIGINT) AS max_cents
       |FROM final WHERE o_orderstatus <> 'P'
       |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
-    val root = Files.createTempDirectory(s"lake-mvr-${UUID.randomUUID()}")
-      .toString
+    val root = ScratchDir("lake-mvr-")
     val src = Tables.load(s, dir, "orders")
       .filter(col("o_orderkey") <= 4000)
       .select(col("o_orderkey").cast("long").as("o_orderkey"),
@@ -883,8 +845,7 @@ object LakeQueries {
       |FROM final WHERE o_orderstatus <> 'P'
       |GROUP BY ROLLUP (o_orderpriority, o_orderstatus)""".stripMargin) {
     (s, dir) =>
-      val root = Files.createTempDirectory(s"lake-mvru-${UUID.randomUUID()}")
-        .toString
+      val root = ScratchDir("lake-mvru-")
       val src = Tables.load(s, dir, "orders")
         .filter(col("o_orderkey") <= 4000)
         .select(col("o_orderkey").cast("long").as("o_orderkey"),
@@ -940,8 +901,7 @@ object LakeQueries {
       |  CAST(max(cents) AS BIGINT) AS max_cents
       |FROM final JOIN dim ON o_custkey = c_custkey
       |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
-    val root = Files.createTempDirectory(s"lake-mvj-${UUID.randomUUID()}")
-      .toString
+    val root = ScratchDir("lake-mvj-")
     val srcFact = Tables.load(s, dir, "orders")
       .filter(col("o_orderkey") <= 4000)
       .select(col("o_orderkey").cast("long").as("o_orderkey"),

@@ -1,9 +1,6 @@
 package graft.lake
 
-import java.nio.file.Files
-import java.util.UUID
-
-import graft.{Q, Tables}
+import graft.{Q, ScratchDir, Tables}
 import org.apache.spark.sql.functions._
 
 /** Driver-gate scenario for the streaming ingest sinks
@@ -33,8 +30,7 @@ object StreamIngestQueries {
       |  CAST(1 AS BIGINT) AS replay_skipped,
       |  CAST(1 AS BIGINT) AS fresh_query_added
       |FROM n""".stripMargin) { (s, dir) =>
-    val root = Files.createTempDirectory(s"lake-sd-${UUID.randomUUID()}")
-      .toString
+    val root = ScratchDir("lake-sd-")
     val nation = Tables.load(s, dir, "nation")
       .select("n_nationkey", "n_name", "n_regionkey")
     val sinkA = graft.streaming.LakeSink.dedupAppendTo(

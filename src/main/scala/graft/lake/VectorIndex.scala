@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
   * and the PQ refinement of ivf_pq_index.go / pq_quantizer.go (design per
   * Jégou et al., TPAMI 2011).
   *
-  * Layout: `<root>/_indexes/<name>/v<version>/{centroids,assignments
-  * [,codebooks]}` — an index is built against a dataset VERSION; `search`
+  * Segments live in the [[IndexStore]], per namespace (main or branch):
+  * `_indexes/<name>/v<version>/{centroids,assignments[,codebooks|sq|bq]}`
+  * — an index is built against a dataset VERSION; `search`
   * uses it when it matches the current version's vectors and silently stays
   * correct under later deletes because assignments are keyed by stable
   * `_rowid` and joined back to the live data (rows deleted since build
@@ -42,10 +43,6 @@ object VectorIndex {
     * wider. */
   val BqRefine = 16
 
-  private def indexDir(ds: LakeDataset, name: String, version: Long) =
-    new HPath(ds.root).resolve("_indexes").resolve(name)
-      .resolve(f"v$version%020d")
-
   /** Build (train + assign + persist) at the dataset's current version.
     *
     * `quantizer` picks the per-vector code stored beside the cluster
@@ -63,84 +60,94 @@ object VectorIndex {
   def build(ds: LakeDataset, vecCol: String, name: String = "ivf",
       quantizer: String = "flat"): Unit = {
     val spark = ds.spark
-    val data = ds.scanner().withRowId.build()
-      .select(col(LakeDataset.RowIdCol).as("_rowid"), col(vecCol).as("vec"))
-      .filter(col("vec").isNotNull)
-    val e = data.select(col("_rowid").as("vec_id"), col("vec").as("embedding"))
+    val store = new IndexStore(ds, name)
+    val e = ds.scanner().withRowId.build()
+      .select(col(LakeDataset.RowIdCol).as("vec_id"), col(vecCol).as("embedding"))
+      .filter(col("embedding").isNotNull)
     val (assign, centroids) = Ann.trainIvf(e)
-    val dir = indexDir(ds, name, ds.version)
-    ds.io.mkdirs(dir)
-    centroids.write.mode("overwrite").parquet(s"$dir/centroids")
-
-    // quantize UNIT vectors in all three schemes: the search metric is
-    // cosine, and on the unit sphere L2² = 2 − 2·cos (resp. sign-pattern
-    // Hamming ≈ angle), so approximate ranking agrees with cosine
-    def normalizedE = e.withColumn("embedding", normalized(col("embedding")))
-
-    val withCodes = quantizer match {
-      case "flat" => assign.select(col("cluster"), col("vec_id").as("_rowid"))
-      case "sq" =>
-        val en = normalizedE
-        val stats = en
-          .select(posexplode(col("embedding")).as(Seq("pos", "v")))
-          .groupBy("pos")
-          .agg(min("v").as("mn"), max("v").as("mx"))
-          .collect()
-        val dim = stats.map(_.getInt(0)).max + 1
-        val mins = new Array[Float](dim)
-        val spans = new Array[Float](dim)
-        stats.foreach { r =>
-          mins(r.getInt(0)) = r.getFloat(1)
-          spans(r.getInt(0)) = r.getFloat(2) - r.getFloat(1)
-        }
-        import spark.implicits._
-        Seq((mins.toSeq, spans.toSeq)).toDF("mins", "spans")
-          .write.mode("overwrite").parquet(s"$dir/sq")
-        en.join(assign, "vec_id")
-          .select(col("cluster"), col("vec_id").as("_rowid"),
-            call_function("sq_encode", col("embedding"),
-              typedlit(mins.toSeq), typedlit(spans.toSeq)).as("codes"))
-      case "bq" =>
-        import spark.implicits._
-        val dim = e.select(size(col("embedding"))).head().getInt(0)
-        Seq(dim).toDF("dim").write.mode("overwrite").parquet(s"$dir/bq")
-        normalizedE.join(assign, "vec_id")
-          .select(col("cluster"), col("vec_id").as("_rowid"),
-            call_function("bq_encode", col("embedding")).as("codes"))
-      case "pq" =>
-        val dim = e.select(size(col("embedding"))).head().getInt(0)
-        require(dim % PqM == 0, s"dim $dim not divisible by $PqM subspaces")
-        val dsub = dim / PqM
-        val n = e.count()
-        // codebook size scales with corpus, capped at 128: doubling k past
-        // that buys little recall (the exact re-rank absorbs residual
-        // quantization error) but doubles every training join
-        val k = math.min(128L, math.max(16L, n / 4)).toInt
-        val en = normalizedE
-        val cb = trainPqCodebooks(en, PqM, k, dsub)
-        cb.write.mode("overwrite").parquet(s"$dir/codebooks")
-        val flat = flattenCodebook(
-          spark.read.parquet(s"$dir/codebooks").collect()
-            .map(r => (r.getInt(0), r.getInt(1),
-              r.getSeq[Float](2).toArray)), PqM, k, dsub)
-        en.join(assign, "vec_id")
-          .select(col("cluster"), col("vec_id").as("_rowid"),
-            call_function("pq_encode", col("embedding"),
-              typedlit(flat.toSeq), lit(PqM), lit(k)).as("codes"))
-      case other => throw new IllegalArgumentException(
-        s"unknown quantizer '$other' (flat|pq|sq|bq)")
+    store.commit(None) { dir =>
+      centroids.write.mode("overwrite").parquet(s"$dir/centroids")
+      // quantizer parameters, trained on UNIT vectors in all three schemes:
+      // the search metric is cosine, and on the unit sphere L2² = 2 − 2·cos
+      // (resp. sign-pattern Hamming ≈ angle), so approximate ranking agrees
+      // with cosine
+      def normalizedE = e.withColumn("embedding", normalized(col("embedding")))
+      import spark.implicits._
+      quantizer match {
+        case "flat" =>
+        case "sq" =>
+          val stats = normalizedE
+            .select(posexplode(col("embedding")).as(Seq("pos", "v")))
+            .groupBy("pos")
+            .agg(min("v").as("mn"), max("v").as("mx"))
+            .collect()
+          val dim = stats.map(_.getInt(0)).max + 1
+          val mins = new Array[Float](dim)
+          val spans = new Array[Float](dim)
+          stats.foreach { r =>
+            mins(r.getInt(0)) = r.getFloat(1)
+            spans(r.getInt(0)) = r.getFloat(2) - r.getFloat(1)
+          }
+          Seq((mins.toSeq, spans.toSeq)).toDF("mins", "spans")
+            .write.mode("overwrite").parquet(s"$dir/sq")
+        case "bq" =>
+          val dim = e.select(size(col("embedding"))).head().getInt(0)
+          Seq(dim).toDF("dim").write.mode("overwrite").parquet(s"$dir/bq")
+        case "pq" =>
+          val dim = e.select(size(col("embedding"))).head().getInt(0)
+          require(dim % PqM == 0, s"dim $dim not divisible by $PqM subspaces")
+          // codebook size scales with corpus, capped at 128: doubling k past
+          // that buys little recall (the exact re-rank absorbs residual
+          // quantization error) but doubles every training join
+          val k = math.min(128L, math.max(16L, e.count() / 4)).toInt
+          trainPqCodebooks(normalizedE, PqM, k, dim / PqM)
+            .write.mode("overwrite").parquet(s"$dir/codebooks")
+        case other => throw new IllegalArgumentException(
+          s"unknown quantizer '$other' (flat|pq|sq|bq)")
+      }
+      writeAssignments(ds, dir, dir, assign, e)
     }
+  }
+
+  /** One segment's assignments: `assign` (vec_id, cluster) plus, when the
+    * base segment holds quantizer parameters, the codes of `rows` (vec_id,
+    * embedding) under them, sorted by cluster so probing reads only the
+    * probed clusters' row groups. */
+  private def writeAssignments(ds: LakeDataset, base: HPath, dir: HPath,
+      assign: DataFrame, rows: DataFrame): Unit = {
+    val spark = ds.spark
+    def encoded(code: org.apache.spark.sql.Column) =
+      rows.withColumn("embedding", normalized(col("embedding")))
+        .join(assign, "vec_id")
+        .select(col("cluster"), col("vec_id").as("_rowid"), code.as("codes"))
+    val withCodes =
+      if (ds.io.exists(base.resolve("codebooks"))) {
+        val cbRows = spark.read.parquet(s"$base/codebooks").collect()
+          .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray))
+        val k = cbRows.map(_._2).max + 1
+        // dimension from the trained codebook (codeword length × subspaces)
+        // — never from the data, which may legally be empty here
+        val dsub = cbRows.head._3.length
+        val flat = flattenCodebook(cbRows, PqM, k, dsub)
+        encoded(call_function("pq_encode", col("embedding"),
+          typedlit(flat.toSeq), lit(PqM), lit(k)))
+      } else if (ds.io.exists(base.resolve("sq"))) {
+        val (mins, spans) = sqParams(spark, base)
+        encoded(call_function("sq_encode", col("embedding"),
+          typedlit(mins), typedlit(spans)))
+      } else if (ds.io.exists(base.resolve("bq"))) {
+        encoded(call_function("bq_encode", col("embedding")))
+      } else assign.select(col("cluster"), col("vec_id").as("_rowid"))
     withCodes
       .repartition(1).sortWithinPartitions("cluster")
       .write.mode("overwrite").parquet(s"$dir/assignments")
-    // meta.json is the COMMIT POINT, written after every data file: a
-    // build that dies mid-write leaves a dir without meta, which
-    // builtVersion ignores — no half-built segment can brick the index.
-    // The high-water marks make refresh independent of dataset manifests
-    // (which vacuum may delete).
-    ds.io.writeString(dir.resolve("meta.json"),
-      s"""{"max_rowid": "${ds.manifest.nextRowId - 1}",""" +
-        s""" "max_fragment_id": "${ds.manifest.maxFragmentId}"}""")
+  }
+
+  private def sqParams(spark: SparkSession,
+      base: HPath): (Seq[Float], Seq[Float]) = {
+    val row = spark.read.parquet(s"$base/sq").head()
+    (row.getSeq[Float](row.fieldIndex("mins")),
+      row.getSeq[Float](row.fieldIndex("spans")))
   }
 
   /** Per-subspace k-means in DataFrame ops (no driver math): subvectors
@@ -197,131 +204,30 @@ object VectorIndex {
   }
 
   /** Newest built version ≤ the dataset's current version, if any. */
-  def builtVersion(ds: LakeDataset, name: String): Option[Long] = {
-    val base = new HPath(ds.root).resolve("_indexes").resolve(name)
-    if (!ds.io.exists(base)) return None
-    ds.io.listNames(base)
-      .filter(n => ds.io.exists(base.resolve(n).resolve("meta.json"))) // commit marker
-      .filter(_.startsWith("v"))
-      .map(_.drop(1).toLong)
-      .filter(_ <= ds.version)
-      .maxOption
-  }
-
-  private def metaStrAt(ds: LakeDataset, dir: HPath,
-      field: String): Option[String] = {
-    val meta = dir.resolve("meta.json")
-    if (!ds.io.exists(meta)) None
-    else (""""""" + field + """"\s*:\s*"([^"]+)"""").r
-      .findFirstMatchIn(ds.io.readString(meta))
-      .map(_.group(1))
-  }
-
-  private def parentOf(ds: LakeDataset, dir: HPath): Option[Long] =
-    metaStrAt(ds, dir, "parent").map(_.drop(1).toLong)
-
-  /** Segment chain newest→oldest; the OLDEST (base) segment holds the
-    * trained centroids + quantizer parameters, every segment holds its own
-    * delta assignments. */
-  private def segmentDirs(ds: LakeDataset, name: String,
-      v: Long): Seq[HPath] = {
-    var cur = Option(v)
-    val out = Seq.newBuilder[HPath]
-    while (cur.isDefined) {
-      val d = indexDir(ds, name, cur.get)
-      out += d
-      cur = parentOf(ds, d)
-    }
-    out.result()
-  }
+  def builtVersion(ds: LakeDataset, name: String): Option[Long] =
+    new IndexStore(ds, name).built
 
   /** Incrementally extend the index: assign ONLY rows appended since the
-    * last built version to the EXISTING centroids (no k-means retrain) and
-    * encode them with the existing quantizer parameters, writing a delta
-    * assignments segment. This is standard IVF maintenance at scale —
-    * centroids drift slowly, so appends ride the trained structure and a
-    * periodic full [[build]] re-trains (the reference rebuilds too;
-    * vector-value rewrites always need a rebuild). */
+    * last built version (the store's refresh cursor) to the EXISTING
+    * centroids (no k-means retrain) and encode them with the existing
+    * quantizer parameters, writing a delta assignments segment. This is
+    * standard IVF maintenance at scale — centroids drift slowly, so appends
+    * ride the trained structure and a periodic full [[build]] re-trains
+    * (the reference rebuilds too; vector-value rewrites always need a
+    * rebuild). */
   def refresh(ds: LakeDataset, vecCol: String, name: String = "ivf"): Unit = {
-    val spark = ds.spark
-    val v0 = builtVersion(ds, name) match {
-      case None => build(ds, vecCol, name); return
-      case Some(v) => v
-    }
-    if (v0 == ds.version) return
-    // High-water marks come from the built segment's own meta, NOT the
-    // dataset manifest at v0 — vacuum deletes old manifests, and an index
-    // must stay refreshable after them. (Manifest fallback for segments
-    // built before the marks existed.)
-    val v0dir = indexDir(ds, name, v0)
-    def legacyMan = LakeDataset.loadVersion(new HPath(ds.root), v0)
-    val maxIndexed = metaStrAt(ds, v0dir, "max_rowid").map(_.toLong)
-      .getOrElse(legacyMan.nextRowId - 1)
-    val newFrags = metaStrAt(ds, v0dir, "max_fragment_id").map(_.toLong) match {
-      case Some(mf) => ds.manifest.fragments.filter(_.id > mf)
-      case None =>
-        val oldIds = legacyMan.fragments.map(_.id).toSet
-        ds.manifest.fragments.filterNot(f => oldIds(f.id))
-    }
-    if (newFrags.isEmpty) return
-    val chain = segmentDirs(ds, name, v0)
-    val base = chain.last
-    val rows = ds.readFragments(ds.manifest, newFrags, withRowId = true)
-      .select(col(LakeDataset.RowIdCol).as("vec_id"),
-        col(vecCol).as("embedding"))
-      .filter(col("embedding").isNotNull && col("vec_id") > maxIndexed)
-    // compaction outputs carry fresh fragment ids but only pre-indexed
-    // rowids; nothing may survive the filter — and the PQ branch must not
-    // probe an empty frame for the dimension
-    if (rows.isEmpty) return
-    val centroids = spark.read.parquet(s"$base/centroids")
-    val assign = rows.crossJoin(broadcast(centroids))
-      .withColumn("d",
-        call_function("l2_distance", col("embedding"), col("centroid")))
-      .groupBy("vec_id")
-      .agg(min_by(col("cluster"), struct(col("d"), col("cluster")))
-        .as("cluster"))
-    def normalizedRows = rows
-      .withColumn("embedding", normalized(col("embedding")))
-    val withCodes =
-      if (ds.io.exists(base.resolve("codebooks"))) {
-        val cbRows = spark.read.parquet(s"$base/codebooks").collect()
-          .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray))
-        val k = cbRows.map(_._2).max + 1
-        // dimension from the trained codebook (codeword length × subspaces)
-        // — never from the data, which may legally be empty here
-        val dsub = cbRows.head._3.length
-        val flat = flattenCodebook(cbRows, PqM, k, dsub)
-        normalizedRows.join(assign, "vec_id")
-          .select(col("cluster"), col("vec_id").as("_rowid"),
-            call_function("pq_encode", col("embedding"),
-              typedlit(flat.toSeq), lit(PqM), lit(k)).as("codes"))
-      } else if (ds.io.exists(base.resolve("sq"))) {
-        val row = spark.read.parquet(s"$base/sq").head()
-        val mins = row.getSeq[Float](row.fieldIndex("mins"))
-        val spans = row.getSeq[Float](row.fieldIndex("spans"))
-        normalizedRows.join(assign, "vec_id")
-          .select(col("cluster"), col("vec_id").as("_rowid"),
-            call_function("sq_encode", col("embedding"),
-              typedlit(mins), typedlit(spans)).as("codes"))
-      } else if (ds.io.exists(base.resolve("bq"))) {
-        normalizedRows.join(assign, "vec_id")
-          .select(col("cluster"), col("vec_id").as("_rowid"),
-            call_function("bq_encode", col("embedding")).as("codes"))
-      } else {
-        assign.select(col("cluster"), col("vec_id").as("_rowid"))
+    val store = new IndexStore(ds, name)
+    store.pending(vecCol)(build(ds, vecCol, name)).foreach { p =>
+      // the OLDEST (base) segment holds the trained centroids + quantizer
+      // parameters; every segment holds its own delta assignments
+      val base = store.chain(p.base).last
+      val rows = p.rows.toDF("vec_id", "embedding")
+      val assign = Ann.assignClusters(rows,
+        ds.spark.read.parquet(s"$base/centroids"))
+      store.commit(Some(p.base)) { dir =>
+        writeAssignments(ds, base, dir, assign, rows)
       }
-    val d = indexDir(ds, name, ds.version)
-    ds.io.mkdirs(d)
-    withCodes
-      .repartition(1).sortWithinPartitions("cluster")
-      .write.mode("overwrite").parquet(s"$d/assignments")
-    // meta last = commit point (see build); a refresh that dies mid-write
-    // leaves an ignored dir and the old chain stays searchable
-    ds.io.writeString(d.resolve("meta.json"),
-      s"""{"parent": "v$v0",""" +
-        s""" "max_rowid": "${ds.manifest.nextRowId - 1}",""" +
-        s""" "max_fragment_id": "${ds.manifest.maxFragmentId}"}""")
+    }
   }
 
   /** IVF(-PQ) top-k cosine search with an optional SQL prefilter over the
@@ -347,11 +253,12 @@ object VectorIndex {
     val live0 = ds.scanner().withRowId.build()
     val live = prefilter.fold(live0)(p => live0.filter(expr(p)))
 
-    val candidates = builtVersion(ds, name) match {
+    val store = new IndexStore(ds, name)
+    val candidates = store.built match {
       case Some(v) =>
         // base segment = trained centroids + quantizer params; every
         // segment contributes its delta assignments
-        val segs = segmentDirs(ds, name, v)
+        val segs = store.chain(v)
         val dir = segs.last
         val centroids = spark.read.parquet(s"$dir/centroids")
         val probed =
@@ -386,9 +293,7 @@ object VectorIndex {
               .orderBy(col("_adc"), col("_rowid"))
               .limit(PqRefine * k)
           } else if (ds.io.exists(dir.resolve("sq"))) {
-            val row = spark.read.parquet(s"$dir/sq").head()
-            val mins = row.getSeq[Float](row.fieldIndex("mins"))
-            val spans = row.getSeq[Float](row.fieldIndex("spans"))
+            val (mins, spans) = sqParams(spark, dir)
             probedAssign
               .withColumn("_adc",
                 call_function("sq_adc", col("codes"),
@@ -406,9 +311,7 @@ object VectorIndex {
               .orderBy(col("_h"), col("_rowid"))
               .limit(BqRefine * k)
           } else probedAssign
-        live.join(assignments.select(col("_rowid").as("_idx_rowid")),
-          col(LakeDataset.RowIdCol) === col("_idx_rowid"))
-          .drop("_idx_rowid")
+        IndexStore.joinLive(live, assignments.select("_rowid"))
       case None => live
     }
     candidates

@@ -189,7 +189,7 @@ object Ann {
     (assignClusters(e, centroids), centroids)
   }
 
-  private def assignClusters(e: DataFrame, centroids: DataFrame): DataFrame =
+  private[graft] def assignClusters(e: DataFrame, centroids: DataFrame): DataFrame =
     // argmin as a hash aggregate (min_by with a (d, cluster) tiebreak
     // struct), not a row_number window — same result, no sort of the
     // N×clusters cross join

@@ -85,20 +85,6 @@ object Dedup {
       .select(col("doc_id"), col("ds.shh").as("shh"), col("ds.sig").as("sig"))
   }
 
-  // Signature temp dirs live for the process; without cleanup a long-lived
-  // harness leaks one parquet dir per (session, corpus) PAST process exit.
-  private val sigDirs = java.util.Collections.synchronizedList(
-    new java.util.ArrayList[String]())
-  sys.addShutdownHook {
-    sigDirs.forEach { p =>
-      try {
-        java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      } catch { case _: Exception => () }
-    }
-  }
-
   private def signatures(d: DataFrame, corpusKey: String): DataFrame = {
     val s = d.sparkSession
     val perSession = {
@@ -110,9 +96,7 @@ object Dedup {
       m
     }
     val path = perSession.computeIfAbsent(corpusKey, _ => {
-      val p = java.nio.file.Files
-        .createTempDirectory("dedup-sigs-").toString
-      sigDirs.add(p)
+      val p = graft.ScratchDir("dedup-sigs-")
       signatureFrame(d).write.mode("overwrite").parquet(p)
       p
     })

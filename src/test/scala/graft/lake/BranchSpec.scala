@@ -288,4 +288,47 @@ class BranchSpec extends SparkTestBase {
     assert(ids(h) == Set(1L, 2L, 61L))
     assert(ids(ds.refresh()) == Set(1L, 2L, 60L))
   }
+
+  test("an index built on a branch is the branch's alone") {
+    val vecSchema = StructType(Seq(StructField("id", LongType),
+      StructField("text", StringType),
+      StructField("vec", ArrayType(FloatType))))
+    // base rows spread over e1..e7; main appends near +e0, the branch near
+    // -e0, and both appends take the same rowids
+    def vecRows(ids: Range)(vec: Int => Seq[Float]) =
+      spark.createDataFrame(java.util.Arrays.asList(ids.map(i =>
+        Row(i.toLong, s"word$i shared", vec(i))): _*), vecSchema).coalesce(1)
+    def unit(d: Int, scale: Float = 1f) =
+      Seq.tabulate(8)(j => if (j == d) scale else 0f)
+    val ds = LakeDataset.create(spark,
+      Files.createTempDirectory("branch-").toString, vecSchema)
+    ds.append(vecRows(0 until 40)(i =>
+      unit(1 + i % 7).updated(0, 0.01f * (i % 3))))
+    ds.createBranch("dev")
+    val dev = ds.checkoutBranch("dev")
+    ds.append(vecRows(40 until 60)(i => unit(0).updated(1, 0.05f * (i - 40))))
+    dev.append(vecRows(100 until 120)(i =>
+      unit(0, -1f).updated(2, 0.05f * (i - 100))))
+    assert(ds.version == dev.version)
+    val q = unit(0).updated(1, 0.25f)
+    def top(d: LakeDataset) =
+      VectorIndex.search(d, "vec", q, k = 5, nprobe = 1).collect().toSeq
+    val brute = top(ds) // no index anywhere yet
+    VectorIndex.build(dev, "vec")
+    FtsIndex.build(dev, "text")
+    assert(VectorIndex.builtVersion(dev, "ivf").contains(dev.version))
+    assert(ds.listIndexes().isEmpty)
+    assert(dev.listIndexes() == Seq("fts", "ivf"))
+    // main at the same version number sees none of the branch's segments
+    assert(VectorIndex.builtVersion(ds, "ivf").isEmpty)
+    assert(top(ds) == brute)
+    val e = intercept[IllegalStateException](
+      FtsIndex.search(ds, Seq("shared"), 5).collect())
+    assert(e.getMessage.contains("no FTS index"))
+    // the branch's searches run on its own index
+    assert(FtsIndex.search(dev, Seq("word100"), 5)
+      .collect().map(_.getLong(0)).toSeq == Seq(100L))
+    ds.deleteBranch("dev")
+    assert(!Files.exists(Paths.get(ds.root, "_refs", "branches", "dev")))
+  }
 }

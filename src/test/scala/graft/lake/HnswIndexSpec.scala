@@ -88,19 +88,35 @@ class HnswIndexSpec extends SparkTestBase {
   }
 
   test("a build that died before meta.json is invisible") {
-    val ds = makeDs(rows = 100)
-    HnswIndex.build(ds, "embedding")
-    val good = HnswIndex.builtVersion(ds, "hnsw")
-    // advance the dataset, then fake a torn build AT the current version:
-    // graph data written, no meta (the commit marker) — discovery must
-    // keep resolving to the last committed build
-    ds.append(Tables.load(spark, sf0001, "embeddings")
-      .filter(col("vec_id") === 499)
-      .select("vec_id", "label", "embedding"))
-    val torn = new org.apache.hadoop.fs.Path(ds.root)
-      .resolve("_indexes").resolve("hnsw")
-      .resolve(f"v${ds.version}%020d")
-    ds.io.mkdirs(torn.resolve("graph"))
-    assert(HnswIndex.builtVersion(ds, "hnsw") == good)
+    // one input per index family: its build, its discovery, and a data
+    // dir its segments hold
+    val families: Seq[(String, LakeDataset => Unit,
+        LakeDataset => Option[Long], String)] = Seq(
+      ("hnsw", HnswIndex.build(_, "embedding"),
+        HnswIndex.builtVersion(_, "hnsw"), "graph"),
+      ("fts", FtsIndex.build(_, "text"), FtsIndex.builtVersion(_), "postings"),
+      ("ivf", VectorIndex.build(_, "embedding"),
+        VectorIndex.builtVersion(_, "ivf"), "assignments"))
+    def rows(p: org.apache.spark.sql.Column) =
+      Tables.load(spark, sf0001, "embeddings").filter(p)
+        .select(col("vec_id"), col("label"), col("embedding"),
+          concat_ws(" ", lit("label"), col("label")).as("text"))
+    families.foreach { case (name, build, builtVersion, dataDir) =>
+      val ds = LakeDataset.create(spark,
+        Files.createTempDirectory("hnswidx-").toString,
+        rows(lit(false)).schema)
+      ds.append(rows(col("vec_id") < 100).coalesce(2))
+      build(ds)
+      val good = builtVersion(ds)
+      // advance the dataset, then fake a torn build AT the current version:
+      // index data written, no meta (the commit marker) — discovery must
+      // keep resolving to the last committed build
+      ds.append(rows(col("vec_id") === 499))
+      val torn = new org.apache.hadoop.fs.Path(ds.root)
+        .resolve("_indexes").resolve(name)
+        .resolve(f"v${ds.version}%020d")
+      ds.io.mkdirs(torn.resolve(dataDir))
+      assert(builtVersion(ds) == good, name)
+    }
   }
 }
