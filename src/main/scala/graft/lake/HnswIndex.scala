@@ -143,10 +143,11 @@ object HnswIndex {
       .getOrElse(spark.read.parquet(s"${chain.head}/graph").limit(0))
   }
 
-  /** Top-k cosine search through the persisted shard graphs. Falls back to
-    * brute force over the live data when no index exists. */
+  /** Top-k cosine search through the persisted shard graphs. Each shard's
+    * beam is `max(ef, OverFetch * k)`, `ef` being the build's
+    * efConstruction, so recall is fixed at build time and by `k`. Falls
+    * back to brute force over the live data when no index exists. */
   def search(ds: LakeDataset, vecCol: String, query: Seq[Float], k: Int,
-      efSearch: Int = HnswGraph.DefaultEfSearch,
       name: String = "hnsw"): DataFrame = {
     val spark = ds.spark
     val live = ds.scanner().withRowId.build()

@@ -626,11 +626,15 @@ final class LakeDataset private (
         nextRowId = math.max(m.nextRowId, staged.maxRowId + 1))
     }
 
-  /** Replace all data with `df` in one commit. Overwrite depends on no
-    * prior state, so it rebases over any concurrent commit (matrix row:
+  /** Replace all data with `df` in one commit, with `extraProps` landing
+    * in the same manifest swap (as for [[append]]). Overwrite depends on
+    * no prior state, so it rebases over any concurrent commit (matrix row:
     * all compatible). */
-  def overwrite(df: DataFrame): Unit =
-    commitOp(OpKind.Overwrite, "overwrite")(overwritten(m, df))
+  def overwrite(df: DataFrame,
+      extraProps: Map[String, String] = Map.empty): Unit =
+    commitOp(OpKind.Overwrite, "overwrite") {
+      overwritten(m, df).copy(properties = m.properties ++ extraProps)
+    }
 
   /** Delete rows matching the predicate (Spark SQL expression string — a
     * superset of the reference filter DSL, filter_parser.go:15-270).

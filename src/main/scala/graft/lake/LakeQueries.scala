@@ -824,7 +824,7 @@ object LakeQueries {
     q
   }
 
-  /** ROLLUP answered by the MV ([[MvRewrite.tryRewriteExpand]]): same
+  /** ROLLUP answered by the MV ([[MvRewrite]]'s Expand rewrite): same
     * shape as [[mvRewrite]] but the base query is a two-level ROLLUP with
     * GROUPING() flags and a key filter — the Expand machinery stays, its
     * fact scan becomes the groups-sized view scan (the run `require`s
@@ -879,8 +879,8 @@ object LakeQueries {
       q
   }
 
-  /** Star-join MV rewriting ([[JoinMaterializedView]] + [[MvRewrite]]'s
-    * join path): lake fact (orders slice) ⋈ dim (customer segment), view
+  /** Star-join MV rewriting ([[MaterializedView]] with a dim +
+    * [[MvRewrite]]): lake fact (orders slice) ⋈ dim (customer segment), view
     * grouped by the DIM attribute with COUNT/SUM/MAX of fact cents. Fact
     * DML runs, then the same star-join aggregate is asked twice: while
     * STALE the run `require`s the plan does NOT touch the view (fallback
@@ -918,11 +918,12 @@ object LakeQueries {
     dim.append(Tables.load(s, dir, "customer")
       .select(col("c_custkey").cast("long").as("c_custkey"),
         col("c_mktsegment")).coalesce(1))
-    val jmv = JoinMaterializedView.create(s, fact,
-      Seq(MvDim(dim.root, "o_custkey", "c_custkey", Seq("c_mktsegment"))),
-      s"$root/view", keys = Seq("c_mktsegment"), sumCols = Seq("cents"),
-      maxCols = Seq("cents"))
-    MvRewrite.registerJoin(s, jmv.view.root)
+    val jmv = MaterializedView.create(s, fact, s"$root/view",
+      keys = Seq("c_mktsegment"), sumCols = Seq("cents"),
+      maxCols = Seq("cents"),
+      dims = Seq(MvDim(dim.root, "o_custkey", "c_custkey",
+        Seq("c_mktsegment"))))
+    MvRewrite.register(s, jmv.view.root)
     try {
       fact.delete("o_orderkey % 5 = 0")
       def star(): org.apache.spark.sql.DataFrame = {

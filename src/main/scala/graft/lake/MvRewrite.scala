@@ -13,22 +13,22 @@ import org.apache.spark.sql.types.DoubleType
 
 /** Transparent materialized-view query rewriting: a Catalyst optimizer
   * rule that redirects matching grouped aggregates over a lake BASE table
-  * — or a STAR JOIN of lake tables — to a registered view
-  * ([[MaterializedView]] / [[JoinMaterializedView]]): the classic
-  * answering-queries-using-views rewrite (Goldstein & Larson, SIGMOD
-  * 2001; §3 covers the SPJG view class), expressed as a
+  * — or a STAR JOIN of lake tables — to a registered [[MaterializedView]]:
+  * the classic answering-queries-using-views rewrite (Goldstein & Larson,
+  * SIGMOD 2001; §3 covers the SPJG view class), expressed as a
   * `Rule[LogicalPlan]` so any query — DataFrame or SQL — benefits without
   * the author knowing the view exists.
   *
   * A rewrite fires only when ALL of:
-  *   - the aggregate's input is a plain latest-version lake batch scan of
-  *     a registered base (no time travel / branch / change feed — their
-  *     results differ from the view's snapshot by construction), or, for
-  *     join views, an inner-join tree over exactly the registered fact +
-  *     dim scans whose equi-join conjuncts hit exactly the declared pairs;
+  *   - the aggregate's input is an inner-join tree (a single scan when
+  *     the view has no dims) over exactly the view's base + dim scans,
+  *     each a plain latest-version lake batch scan (no time travel /
+  *     branch / change feed — their results differ from the view's
+  *     snapshot by construction), whose equi-join conjuncts hit exactly
+  *     the declared pairs;
   *   - the view is CURRENT: its refresh cursor equals the base's head
-  *     version (and, for join views, every dim's recorded version equals
-  *     that dim's head — a stale view never answers; metadata-only);
+  *     version and every dim's recorded version equals that dim's head
+  *     (a stale or dropped view never answers; metadata-only);
   *   - grouping expressions reference only view key columns (full key
   *     set, any subset, or derived expressions of keys — every view row
   *     is constant in all keys, so re-aggregation to any coarser grouping
@@ -45,9 +45,9 @@ import org.apache.spark.sql.types.DoubleType
   *     non-nullable `c`, where row count equals value count); no
   *     DISTINCT, no FILTER clauses.
   *
-  * ROLLUP / CUBE / GROUPING SETS rewrite too — over flat AND join views:
-  * the Expand machinery is kept, its input swapped for the groups-sized
-  * view ([[rewriteExpandWith]]).
+  * ROLLUP / CUBE / GROUPING SETS rewrite too: the Expand machinery is
+  * kept, its input swapped for the groups-sized view
+  * ([[rewriteExpandWith]]).
   *
   * At 100 TB this is the difference between a dashboard group-by reading
   * the whole fact table (or re-running the star join) and reading a
@@ -56,30 +56,25 @@ import org.apache.spark.sql.types.DoubleType
   * rewritten plan unchanged. */
 object MvRewrite extends Rule[LogicalPlan] {
 
-  final case class ViewDef(viewRoot: String, basePath: String,
-      baseNorm: String, keys: Set[String], sumCols: Set[String],
-      maxCols: Set[String], minCols: Set[String])
-
-  /** A registered star-join view ([[JoinMaterializedView]]):
-    * @param tables  normalized roots of fact + every dim (set equality
+  /** A registered view:
+    * @param tables  normalized roots of base + every dim (set equality
     *                against the query's scan set is the match gate)
     * @param joinPairs declared equi-join pairs as unordered
     *                `Set((norm, col), (norm, col))` — each query conjunct
     *                must hit one, and all must be hit
     * @param keyOf   (table norm, column name) → view column, for grouping
     *                and filter re-sourcing
-    * @param sumCols/maxCols/minCols measure columns BY (fact norm, name) */
-  final case class JoinViewDef(viewRoot: String, factNorm: String,
+    * @param sumCols/maxCols/minCols measure columns BY (base norm, name) */
+  final case class ViewDef(viewRoot: String, baseNorm: String,
       tables: Set[String],
       joinPairs: Seq[Set[(String, String)]],
       keyOf: Map[(String, String), String],
       sumCols: Set[(String, String)], maxCols: Set[(String, String)],
       minCols: Set[(String, String)])
 
-  /** Unified per-candidate translation context: how the query side's
-    * (table norm, column name) pairs resolve to the FRESH view's scan.
-    * Flat and join views both compile to this, so the aggregate / group /
-    * filter / Expand rewrites are written once. */
+  /** Per-candidate translation context: how the query side's (table norm,
+    * column name) pairs resolve to the FRESH view's scan, so the
+    * aggregate / group / filter / Expand rewrites are written once. */
   private final case class RewriteCtx(
       viewRel: DataSourceV2ScanRelation,
       srcOf: Map[ExprId, (String, String)],
@@ -114,52 +109,32 @@ object MvRewrite extends Rule[LogicalPlan] {
   // covering view). Re-registering a view root replaces its entry.
   private val registry = new ConcurrentHashMap[String, List[ViewDef]]()
 
-  // fact norm -> join-view candidates whose fact it is
-  private val joinRegistry =
-    new ConcurrentHashMap[String, List[JoinViewDef]]()
-
-  /** Register a view for rewriting and enable the rule in the session. */
+  /** Register a view for rewriting and enable the rule in the session.
+    * The definition (base, dims, join pairs, exposed keys, measures) comes
+    * from the view's own properties via [[MaterializedView.open]]. */
   def register(spark: SparkSession, viewRoot: String): ViewDef = {
     val mv = MaterializedView.open(spark, viewRoot)
-    val d = ViewDef(viewRoot, mv.base.root, norm(mv.base.root),
-      mv.keys.toSet, mv.sumCols.toSet, mv.maxCols.toSet, mv.minCols.toSet)
-    registry.merge(d.baseNorm, List(d), (old, add) =>
-      (add ::: old.filterNot(_.viewRoot == d.viewRoot))
-        .sortBy(_.keys.size))
-    enable(spark)
-    d
-  }
-
-  /** Register a star-join view for rewriting. The definition (fact, dims,
-    * join pairs, exposed keys, measures) comes from the view's own
-    * properties via [[JoinMaterializedView.open]]. */
-  def registerJoin(spark: SparkSession, viewRoot: String): JoinViewDef = {
-    val jmv = JoinMaterializedView.open(spark, viewRoot)
-    val factNorm = norm(jmv.fact.root)
-    val factCols = jmv.fact.read().columns.toSet
-    val dimsN = jmv.dims.map { case (d, ds) => (d, norm(ds.root)) }
-    val keyOf = jmv.keys.map { k =>
-      val src: (String, String) =
-        if (factCols.contains(k)) (factNorm, k)
-        else dimsN.collectFirst {
-          case (d, n) if d.expose.contains(k) => (n, k)
-        }.getOrElse(throw new IllegalArgumentException(
-          s"view key $k is neither a fact column nor an exposed dim column"))
-      src -> k
+    val baseNorm = norm(mv.base.root)
+    val dimsN = mv.dims.map(d => (d, norm(d.root)))
+    // exposed dim columns never shadow base columns (create checks), so
+    // a key is a dim's exactly when that dim exposes it
+    val keyOf = mv.keys.map { k =>
+      dimsN.collectFirst { case (d, n) if d.expose.contains(k) => (n, k) }
+        .getOrElse((baseNorm, k)) -> k
     }.toMap
-    val d = JoinViewDef(
+    val d = ViewDef(
       viewRoot = viewRoot,
-      factNorm = factNorm,
-      tables = (factNorm +: dimsN.map(_._2)).toSet,
+      baseNorm = baseNorm,
+      tables = (baseNorm +: dimsN.map(_._2)).toSet,
       joinPairs = dimsN.map { case (dm, n) =>
-        Set((factNorm, dm.factCol), (n, dm.dimCol)) },
+        Set((baseNorm, dm.factCol), (n, dm.dimCol)) },
       keyOf = keyOf,
-      sumCols = jmv.sumCols.map(c => (factNorm, c)).toSet,
-      maxCols = jmv.maxCols.map(c => (factNorm, c)).toSet,
-      minCols = jmv.minCols.map(c => (factNorm, c)).toSet)
+      sumCols = mv.sumCols.map(c => (baseNorm, c)).toSet,
+      maxCols = mv.maxCols.map(c => (baseNorm, c)).toSet,
+      minCols = mv.minCols.map(c => (baseNorm, c)).toSet)
     require(d.tables.size == dimsN.size + 1,
-      "fact and dim roots must be distinct for join matching")
-    joinRegistry.merge(factNorm, List(d), (old, add) =>
+      "base and dim roots must be distinct for join matching")
+    registry.merge(baseNorm, List(d), (old, add) =>
       (add ::: old.filterNot(_.viewRoot == d.viewRoot))
         .sortBy(_.keyOf.size))
     enable(spark)
@@ -169,8 +144,6 @@ object MvRewrite extends Rule[LogicalPlan] {
   def unregister(spark: SparkSession, viewRoot: String): Unit = {
     registry.replaceAll((_, ds) => ds.filterNot(_.viewRoot == viewRoot))
     registry.entrySet().removeIf(_.getValue.isEmpty)
-    joinRegistry.replaceAll((_, ds) => ds.filterNot(_.viewRoot == viewRoot))
-    joinRegistry.entrySet().removeIf(_.getValue.isEmpty)
   }
 
   /** Idempotently add this rule to the session's extra optimizations. */
@@ -183,33 +156,32 @@ object MvRewrite extends Rule[LogicalPlan] {
   private def norm(p: String): String =
     new org.apache.hadoop.fs.Path(p).toUri.toString.stripSuffix("/")
 
+  /** ROLLUP / CUBE / GROUPING SETS: the analyzer compiles them to
+    * `Aggregate(keys + gid, aggs, Expand(rows, out, Project(input)))` —
+    * one projection row per grouping set, value columns passed through
+    * every row. [[rewriteExpandWith]] substitutes surgically: the Expand
+    * rows and the Aggregate's grouping side stay verbatim, the input
+    * becomes the groups-sized view. One view scan serves every grouping
+    * set — at 100 TB a CUBE over the fact table becomes a CUBE over the
+    * view, Expand fan-out included. Only grouping-analytics Expands carry
+    * the grouping id (DISTINCT-aggregate Expands do not). */
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (registry.isEmpty && joinRegistry.isEmpty) return plan
+    if (registry.isEmpty) return plan
     plan.transformUp {
-      case agg: Aggregate if agg.child.isInstanceOf[Expand] =>
-        tryRewriteExpand(agg, agg.child.asInstanceOf[Expand]).getOrElse(agg)
-      case agg: Aggregate =>
-        tryRewrite(agg).orElse(tryRewriteJoin(agg)).getOrElse(agg)
+      case agg: Aggregate => (agg.child match {
+        case ex: Expand =>
+          if (!ex.output.exists(_.name == "spark_grouping_id")) None
+          else lookup(ex.child)(rewriteExpandWith(agg, ex, _, _))
+        case child => lookup(child)(rewriteWith(agg, _, _))
+      }).getOrElse(agg)
     }
   }
 
   // -------------------------------------------------------- shape walkers
 
-  /** Unwrap optional attribute-only Project / residual Filter down to the
-    * base scan; anything else is not a shape we can reason about. */
-  private def unwrap(plan: LogicalPlan)
-      : Option[(Option[Expression], DataSourceV2ScanRelation)] = plan match {
-    case r: DataSourceV2ScanRelation => Some((None, r))
-    case Filter(c, r: DataSourceV2ScanRelation) => Some((Some(c), r))
-    case Project(pl, r: DataSourceV2ScanRelation)
-        if pl.forall(_.isInstanceOf[AttributeReference]) => Some((None, r))
-    case Project(pl, Filter(c, r: DataSourceV2ScanRelation))
-        if pl.forall(_.isInstanceOf[AttributeReference]) => Some((Some(c), r))
-    case _ => None
-  }
-
   /** Flatten an inner-join tree down to (filters, join conditions, scans);
-    * attribute-only Projects are transparent, anything else aborts. */
+    * a bare scan is the one-table tree. Attribute-only Projects are
+    * transparent, anything else aborts. */
   private def flattenJoin(p: LogicalPlan): Option[(List[Expression],
       List[Expression], List[DataSourceV2ScanRelation])] = p match {
     case Join(l, r, Inner, cond, _) =>
@@ -246,39 +218,38 @@ object MvRewrite extends Rule[LogicalPlan] {
     Some(root)
   }
 
-  // ----------------------------------------------------- context builders
+  // ------------------------------------------------------------ candidates
 
-  /** Freshness gate (metadata-only) + translation context for a flat view;
-    * None when stale or unopenable — a stale view never answers. */
-  private def flatCtx(rel: DataSourceV2ScanRelation,
-      d: ViewDef): Option[RewriteCtx] = {
-    val spark = SparkSession.active
-    val cursor = scala.util.Try(
-      LakeDataset.open(spark, d.viewRoot).manifest
-        .properties(MaterializedView.PropBaseVersion).toLong).toOption
-    val head = scala.util.Try(
-      LakeDataset.open(spark, d.basePath).version).toOption
-    if (cursor.isEmpty || cursor != head) return None
-    scala.util.Try(viewScanRelation(spark, d.viewRoot)).toOption.flatten
-      .map { viewRel =>
-        RewriteCtx(
-          viewRel = viewRel,
-          srcOf = rel.output.map(a =>
-            a.exprId -> ((d.baseNorm, a.name))).toMap,
-          keyOf = d.keys.map(k => ((d.baseNorm, k)) -> k).toMap,
-          sumCols = d.sumCols.map(c => (d.baseNorm, c)),
-          maxCols = d.maxCols.map(c => (d.baseNorm, c)),
-          minCols = d.minCols.map(c => (d.baseNorm, c)),
-          joinCols = Set.empty)
+  /** The first registered view that answers `input` (a single scan or an
+    * inner-join tree of scans, see [[flattenJoin]]) through `rewrite`,
+    * given the residual filters and that view's context. Candidates come
+    * from EVERY scanned root: a root can be a dim of this query while
+    * being the registered base of another view. */
+  private def lookup(input: LogicalPlan)(
+      rewrite: (List[Expression], RewriteCtx) => Option[Aggregate])
+      : Option[Aggregate] =
+    for {
+      (filters, joinConds, scans) <- flattenJoin(input)
+      roots <- {
+        val rs = scans.map(lakeRoot)
+        if (rs.forall(_.isDefined)) Some(rs.map(_.get)) else None
       }
-  }
+      // every table exactly once (self-joins don't match a star view)
+      if roots.distinct.size == roots.size
+      res <- roots.iterator
+        .flatMap(r => Option(registry.get(r)).toList.flatten)
+        .flatMap(d => ctxFor(joinConds, scans, roots, d)
+          .flatMap(rewrite(filters, _)))
+        .nextOption()
+    } yield res
 
-  /** Join-view gate: scan set and equi-join conjuncts must match the
-    * declared star exactly, and the view must be current w.r.t. fact AND
-    * every dim. Returns the translation context on success. */
-  private def joinCtx(joinConds: List[Expression],
+  /** The match gate: scan set and equi-join conjuncts must match the
+    * view's star exactly (Goldstein & Larson §3's SPJG containment,
+    * specialized to exact star-shape match), and the view must be fresh.
+    * Returns the translation context on success. */
+  private def ctxFor(joinConds: List[Expression],
       scans: List[DataSourceV2ScanRelation], roots: List[String],
-      d: JoinViewDef): Option[RewriteCtx] = {
+      d: ViewDef): Option[RewriteCtx] = {
     if (d.tables != roots.toSet) return None
     val srcOf: Map[ExprId, (String, String)] =
       scans.zip(roots).flatMap { case (s, r) =>
@@ -299,91 +270,17 @@ object MvRewrite extends Rule[LogicalPlan] {
     }
     if (matched.size != d.joinPairs.size) return None
     val spark = SparkSession.active
-    scala.util.Try {
-      val jmv = JoinMaterializedView.open(spark, d.viewRoot)
-      val current = jmv.factVersion == jmv.fact.version &&
-        jmv.dimVersions == jmv.dims.map(_._2.version)
-      if (current) viewScanRelation(spark, d.viewRoot) else None
-    }.toOption.flatten.map { viewRel =>
+    // freshness probe (metadata-only): a view, base or dim that no longer
+    // exists (LakeDataset.open's `no dataset at`) or a directory that is
+    // not a view (MaterializedView.open's check) means no rewrite; any
+    // other failure is a real fault and propagates
+    val current =
+      try MaterializedView.open(spark, d.viewRoot).isCurrent
+      catch { case _: IllegalArgumentException => false }
+    if (!current) return None
+    viewScanRelation(spark, d.viewRoot).map { viewRel =>
       RewriteCtx(viewRel, srcOf, d.keyOf, d.sumCols, d.maxCols, d.minCols,
         joinCols = d.joinPairs.flatten.toSet)
-    }
-  }
-
-  // ------------------------------------------------------------- attempts
-
-  private def tryRewrite(agg: Aggregate): Option[Aggregate] =
-    for {
-      (cond, rel) <- unwrap(agg.child)
-      cands <- lakeRoot(rel).flatMap(r => Option(registry.get(r)))
-      res <- cands.iterator
-        .flatMap(d => flatCtx(rel, d)
-          .flatMap(ctx => rewriteWith(agg, cond.toList, ctx)))
-        .nextOption()
-    } yield res
-
-  /** Aggregate over an inner-join tree of lake scans → answered from a
-    * registered star-join view (Goldstein & Larson §3's SPJG containment,
-    * specialized to exact star-shape match). */
-  private def tryRewriteJoin(agg: Aggregate): Option[Aggregate] = {
-    if (joinRegistry.isEmpty) return None
-    for {
-      (filters, joinConds, scans) <- flattenJoin(agg.child)
-      if scans.size >= 2
-      roots <- {
-        val rs = scans.map(lakeRoot)
-        if (rs.forall(_.isDefined)) Some(rs.map(_.get)) else None
-      }
-      // every table exactly once (self-joins don't match a star view)
-      if roots.distinct.size == roots.size
-      // candidates from EVERY root: a root can be a dim of this query
-      // while being the registered fact of another view — keying off the
-      // first hit alone would shadow the valid candidate behind it
-      res <- roots.iterator
-        .flatMap(r => Option(joinRegistry.get(r)).toList.flatten)
-        .flatMap(d => joinCtx(joinConds, scans, roots, d)
-          .flatMap(ctx => rewriteWith(agg, filters, ctx)))
-        .nextOption()
-    } yield res
-  }
-
-  /** ROLLUP / CUBE / GROUPING SETS: the analyzer compiles them to
-    * `Aggregate(keys + gid, aggs, Expand(rows, out, Project(input)))` —
-    * one projection row per grouping set, value columns passed through
-    * every row. Both flat scans and star-join trees under the Expand are
-    * answered ([[rewriteExpandWith]] substitutes surgically: the Expand
-    * rows and the Aggregate's grouping side stay verbatim, the input
-    * becomes the groups-sized view). One view scan serves every grouping
-    * set — at 100 TB a CUBE over the fact table becomes a CUBE over the
-    * view, Expand fan-out included. */
-  private def tryRewriteExpand(agg: Aggregate, ex: Expand)
-      : Option[Aggregate] = {
-    // only grouping-analytics Expands (DISTINCT-agg Expands lack the id)
-    if (!ex.output.exists(_.name == "spark_grouping_id")) return None
-    val flat = for {
-      (cond, rel) <- unwrap(ex.child)
-      cands <- lakeRoot(rel).flatMap(r => Option(registry.get(r)))
-      res <- cands.iterator
-        .flatMap(d => flatCtx(rel, d)
-          .flatMap(ctx => rewriteExpandWith(agg, ex, cond.toList, ctx)))
-        .nextOption()
-    } yield res
-    flat.orElse {
-      if (joinRegistry.isEmpty) return None
-      for {
-        (filters, joinConds, scans) <- flattenJoin(ex.child)
-        if scans.size >= 2
-        roots <- {
-          val rs = scans.map(lakeRoot)
-          if (rs.forall(_.isDefined)) Some(rs.map(_.get)) else None
-        }
-        if roots.distinct.size == roots.size
-        res <- roots.iterator
-          .flatMap(r => Option(joinRegistry.get(r)).toList.flatten)
-          .flatMap(d => joinCtx(joinConds, scans, roots, d)
-            .flatMap(ctx => rewriteExpandWith(agg, ex, filters, ctx)))
-          .nextOption()
-      } yield res
     }
   }
 
@@ -391,7 +288,7 @@ object MvRewrite extends Rule[LogicalPlan] {
 
   /** Translate one aggregate call to its view fold; None = untranslatable.
     * `need` resolves a view partial-aggregate column to the attribute the
-    * caller wants referenced (identity for the flat Aggregate rewrite; a
+    * caller wants referenced (identity for [[rewriteWith]]; a
     * fresh passthrough attribute for the Expand rewrite). */
   private def translateAggWith(ctx: RewriteCtx,
       need: String => Option[Expression])(
@@ -448,8 +345,7 @@ object MvRewrite extends Rule[LogicalPlan] {
     Some(out)
   }
 
-  /** Flat Aggregate (no Expand) over either shape → Aggregate over the
-    * view. */
+  /** Plain Aggregate (no Expand) → Aggregate over the view. */
   private def rewriteWith(agg: Aggregate, filters: List[Expression],
       ctx: RewriteCtx): Option[Aggregate] = {
 
@@ -498,7 +394,7 @@ object MvRewrite extends Rule[LogicalPlan] {
     * columns from the view (original exprIds kept, so the Expand rows and
     * the Aggregate's grouping side stay verbatim), value passthrough
     * positions are replaced by the view's partial-aggregate columns, and
-    * each aggregate call folds exactly as in the flat path. */
+    * each aggregate call folds exactly as in [[rewriteWith]]. */
   private def rewriteExpandWith(agg: Aggregate, ex: Expand,
       filters: List[Expression], ctx: RewriteCtx): Option[Aggregate] = {
 
@@ -585,7 +481,7 @@ object MvRewrite extends Rule[LogicalPlan] {
     }
 
     // residual filter: key predicates only, re-sourced to the view;
-    // IsNotNull on join columns drops as in the flat path
+    // IsNotNull on join columns drops as in [[rewriteWith]]
     def condToView(e: Expression): Option[Expression] = e match {
       case a: AttributeReference => ctx.keyView(a)
       case l: Literal => Some(l)

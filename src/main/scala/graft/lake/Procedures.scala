@@ -247,37 +247,26 @@ object LakeProcedures {
             if (input.isNullAt(i)) Nil
             else input.getUTF8String(i).toString
               .split(',').map(_.trim).filter(_.nonEmpty).toSeq
-          val jmv = JoinMaterializedView.create(SparkSession.active, fact,
-            dims, viewPath, cols(3), cols(4), cols(5), cols(6))
+          val mv = MaterializedView.create(SparkSession.active, fact,
+            viewPath, cols(3), cols(4), cols(5), cols(6), dims = dims)
           // same fail-safe auto-registration as mv_create
-          MvRewrite.registerJoin(SparkSession.active, viewPath)
+          MvRewrite.register(SparkSession.active, viewPath)
           summary(factName,
-            s"mv_create_join($viewName @ fact v${jmv.factVersion})",
-            jmv.view)
+            s"mv_create_join($viewName @ fact v${mv.baseVersion})",
+            mv.view)
         }
       }
       case "mv_refresh" => new LakeProc("mv_refresh", Array(
         ProcedureParameter.in("view", StringType).build())) {
         override def call(input: InternalRow): java.util.Iterator[Scan] = {
-          val spark = SparkSession.active
           val viewName = input.getUTF8String(0).toString
-          val viewPath = resolvePath(viewName.split('.').toSeq)
-          // one refresh door for both view kinds: the view's own
-          // properties say which family it belongs to
-          val isFlat = LakeDataset.open(spark, viewPath).manifest
-            .properties.contains(MaterializedView.PropBasePath)
-          val (st, viewDs) =
-            if (isFlat) {
-              val mv = MaterializedView.open(spark, viewPath)
-              (mv.refresh(), mv.view)
-            } else {
-              val jmv = JoinMaterializedView.open(spark, viewPath)
-              (jmv.refresh(), jmv.view)
-            }
+          val mv = MaterializedView.open(SparkSession.active,
+            resolvePath(viewName.split('.').toSeq))
+          val st = mv.refresh()
           summary(viewName,
             s"mv_refresh(v${st.fromVersion}->v${st.toVersion}, " +
               s"upserted=${st.upsertedGroups}, removed=${st.removedGroups})",
-            viewDs)
+            mv.view)
         }
       }
       case other => throw new IllegalArgumentException(

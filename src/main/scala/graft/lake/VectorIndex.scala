@@ -59,6 +59,10 @@ object VectorIndex {
     */
   def build(ds: LakeDataset, vecCol: String, name: String = "ivf",
       quantizer: String = "flat"): Unit = {
+    // checked before training, so a typo costs no k-means run and leaves
+    // no segment directory behind
+    require(Seq("flat", "pq", "sq", "bq").contains(quantizer),
+      s"unknown quantizer '$quantizer' (flat|pq|sq|bq)")
     val spark = ds.spark
     val store = new IndexStore(ds, name)
     val e = ds.scanner().withRowId.build()
@@ -102,8 +106,6 @@ object VectorIndex {
           val k = math.min(128L, math.max(16L, e.count() / 4)).toInt
           trainPqCodebooks(normalizedE, PqM, k, dim / PqM)
             .write.mode("overwrite").parquet(s"$dir/codebooks")
-        case other => throw new IllegalArgumentException(
-          s"unknown quantizer '$other' (flat|pq|sq|bq)")
       }
       writeAssignments(ds, dir, dir, assign, e)
     }

@@ -442,8 +442,9 @@ object Ann {
     * sharded: per-partition graphs built in `mapPartitions`, every shard
     * searched per query, global top-k from the per-shard candidates. The
     * union of per-shard exact top-k ⊇ global exact top-k when each shard
-    * search were exact — HNSW's beam (efSearch) is the recall knob, pinned
-    * vs [[brute]] in AnnSpec. */
+    * search were exact — each shard search uses the graph's default
+    * layer-0 beam (`HnswGraph.DefaultEfSearch`, not a parameter here), and
+    * the recall it gives is pinned vs [[brute]] in AnnSpec. */
   val hnsw = Q.noOracle("ann_hnsw_topk") { (s, dir) =>
     import graft.operators.HnswGraph
     val e = emb(s, dir)

@@ -92,15 +92,8 @@ object LakeSink {
       viewRoots: Seq[String]): (DataFrame, Long) => Unit = {
     (df, batchId) =>
       inner(df, batchId)
-      viewRoots.foreach { r =>
-        // one refresh door for both view kinds (same dispatch as the
-        // CALL lake.system.mv_refresh procedure)
-        val s = df.sparkSession
-        val isFlat = graft.lake.LakeDataset.open(s, r).manifest
-          .properties.contains(graft.lake.MaterializedView.PropBasePath)
-        if (isFlat) graft.lake.MaterializedView.open(s, r).refresh()
-        else graft.lake.JoinMaterializedView.open(s, r).refresh()
-      }
+      viewRoots.foreach(r =>
+        graft.lake.MaterializedView.open(df.sparkSession, r).refresh())
   }
 
   private def openOrCreate(df: DataFrame, root: String,

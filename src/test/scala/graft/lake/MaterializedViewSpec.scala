@@ -53,6 +53,20 @@ class MaterializedViewSpec extends SparkTestBase {
     assert(mv.baseVersion == base.version)
   }
 
+  test("a flat view's manifest carries exactly the six mv.* keys") {
+    val (base, mv) = fixture()
+    def mvProps() = mv.view.manifest.properties.filter(_._1.startsWith("mv."))
+    def want() = Map(
+      "mv.base.path" -> base.root,
+      "mv.base.version" -> base.version.toString,
+      "mv.keys" -> "k", "mv.sum.cols" -> "v", "mv.max.cols" -> "v",
+      "mv.min.cols" -> "")
+    assert(mvProps() == want())
+    base.append(frame(("a", 6L, 1L)))
+    mv.refresh()
+    assert(mvProps() == want())
+  }
+
   test("insert-only delta folds max without touching recompute path") {
     val (base, mv) = fixture()
     base.append(frame(("a", 6L, 99L), ("c", 7L, 7L)))

@@ -8,8 +8,8 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Star-join materialized views ([[JoinMaterializedView]] + the
-  * [[MvRewrite]] join path): a matching fact⋈dim aggregate must be
+/** Star-join materialized views ([[MaterializedView]] with dims + the
+  * [[MvRewrite]] join match): a matching fact⋈dim aggregate must be
   * answered from the view with identical rows; stale views, moved dims
   * and non-matching shapes must fall back to the base plan. */
 class MvJoinRewriteSpec extends SparkTestBase {
@@ -45,7 +45,7 @@ class MvJoinRewriteSpec extends SparkTestBase {
 
   /** fact(id, cust, v) ⋈ dim(ck, seg, region): 3 customers in 2 segments. */
   private def fixture()
-      : (LakeDataset, LakeDataset, JoinMaterializedView, String) = {
+      : (LakeDataset, LakeDataset, MaterializedView, String) = {
     val root = tmpDir()
     val fact = LakeDataset.create(spark, s"$root/fact", factSchema)
     fact.append(factRows(
@@ -54,11 +54,10 @@ class MvJoinRewriteSpec extends SparkTestBase {
     val dim = LakeDataset.create(spark, s"$root/dim", dimSchema)
     dim.append(dimRows(
       (10L, "auto", "emea"), (11L, "auto", "apac"), (12L, "bank", "emea")))
-    val jmv = JoinMaterializedView.create(spark, fact,
-      Seq(MvDim(dim.root, "cust", "ck", Seq("seg"))),
-      s"$root/view", keys = Seq("seg"), sumCols = Seq("v"),
-      maxCols = Seq("v"))
-    MvRewrite.registerJoin(spark, jmv.view.root)
+    val jmv = MaterializedView.create(spark, fact, s"$root/view",
+      keys = Seq("seg"), sumCols = Seq("v"), maxCols = Seq("v"),
+      dims = Seq(MvDim(dim.root, "cust", "ck", Seq("seg"))))
+    MvRewrite.register(spark, jmv.view.root)
     (fact, dim, jmv, jmv.view.root)
   }
 
@@ -119,9 +118,9 @@ class MvJoinRewriteSpec extends SparkTestBase {
       assert(!scansView(qStale, viewRoot))
       val stats = jmv.refresh()
       assert(stats.removedGroups >= 0L, "fact-only window must fold, not rebuild")
-      val expect = JoinMaterializedView.expected(spark, fact,
-        Seq(MvDim(dim.root, "cust", "ck", Seq("seg"))),
-        keys = Seq("seg"), sumCols = Seq("v"), maxCols = Seq("v"))
+      val expect = MaterializedView.expected(fact,
+        keys = Seq("seg"), sumCols = Seq("v"), maxCols = Seq("v"),
+        dims = Seq(MvDim(dim.root, "cust", "ck", Seq("seg"))))
         .orderBy("seg").collect().toSeq
       assert(jmv.read().select("seg", "mv_cnt", "sum_v", "max_v")
         .orderBy("seg").collect().toSeq == expect)
@@ -139,8 +138,12 @@ class MvJoinRewriteSpec extends SparkTestBase {
     try {
       dim.update("ck = 12", Map("seg" -> "'retail'"))
       assert(!scansView(starQuery(fact, dim), viewRoot))
+      val before = jmv.view.version
       val stats = jmv.refresh()
       assert(stats.removedGroups == -1L, "dim movement must take the rebuild path")
+      // state and cursor land in ONE commit
+      assert(jmv.view.version == before + 1)
+      assert(stats.upsertedGroups == 2L)
       val q = starQuery(fact, dim)
       assert(scansView(q, viewRoot))
       assert(q.orderBy("seg").collect()
@@ -204,5 +207,29 @@ class MvJoinRewriteSpec extends SparkTestBase {
         f.join(d, f("cust") === d("ck")).groupBy("seg")
           .agg(countDistinct("v")), viewRoot))
     } finally MvRewrite.unregister(spark, viewRoot)
+  }
+
+  test("dim roots with separator characters round-trip through the view") {
+    val root = tmpDir()
+    val fact = LakeDataset.create(spark, s"$root/fact", factSchema)
+    fact.append(factRows((1L, 10L, 100L), (2L, 11L, 3L)))
+    // '%7C' must come back as written, not as the '|' it escapes
+    val dim = LakeDataset.create(spark, s"$root/dim|a;b+c%7C", dimSchema)
+    dim.append(dimRows((10L, "auto", "emea"), (11L, "bank", "apac")))
+    val dims = Seq(MvDim(dim.root, "cust", "ck", Seq("seg", "region")))
+    val mv = MaterializedView.create(spark, fact, s"$root/view",
+      keys = Seq("seg", "region"), sumCols = Seq("v"), dims = dims)
+    val reopened = MaterializedView.open(spark, mv.view.root)
+    assert(reopened.dims == dims)
+    fact.append(factRows((3L, 11L, 7L)))
+    dim.update("ck = 10", Map("region" -> "'apac'"))
+    assert(reopened.refresh().removedGroups == -1L)
+    fact.append(factRows((4L, 10L, 1L)))
+    assert(reopened.refresh().removedGroups >= 0L)
+    val cols = Seq("seg", "region", "mv_cnt", "sum_v")
+    assert(reopened.read().select(cols.map(col): _*).orderBy("seg")
+      .collect().toSeq ==
+      MaterializedView.expected(fact, Seq("seg", "region"), Seq("v"),
+        dims = dims).select(cols.map(col): _*).orderBy("seg").collect().toSeq)
   }
 }

@@ -116,6 +116,19 @@ class MvRewriteSpec extends SparkTestBase {
     } finally MvRewrite.unregister(spark, viewRoot)
   }
 
+  test("a view whose directory is gone falls back to the base plan") {
+    val (base, _, viewRoot) = fixture()
+    try {
+      Files.walk(java.nio.file.Paths.get(viewRoot))
+        .sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => Files.delete(p))
+      val q = baseDf(base).groupBy("k").agg(sum("v").as("sv"))
+      assert(!scansView(q, viewRoot))
+      assert(q.orderBy("k").collect().map(r =>
+        (r.getString(0), r.getLong(1))).toSeq == Seq(("a", 60L), ("b", 55L)))
+    } finally MvRewrite.unregister(spark, viewRoot)
+  }
+
   test("untranslatable shapes are left alone") {
     val (base, _, viewRoot) = fixture()
     try {

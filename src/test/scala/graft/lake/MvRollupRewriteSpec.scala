@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** ROLLUP / CUBE / GROUPING SETS answered from a materialized view
-  * ([[MvRewrite.tryRewriteExpand]]): the Expand machinery survives, the
+  * ([[MvRewrite]]'s Expand rewrite): the Expand machinery survives, the
   * fact scan under it becomes the groups-sized view scan, every
   * aggregate folds, and all unsafe shapes fall back to the base. */
 class MvRollupRewriteSpec extends SparkTestBase {

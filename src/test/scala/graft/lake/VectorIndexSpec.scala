@@ -39,6 +39,16 @@ class VectorIndexSpec extends SparkTestBase {
     assert(full.toSeq == brute.toSeq)
   }
 
+  test("an unknown quantizer is rejected before training writes anything") {
+    val ds = makeDs()
+    intercept[IllegalArgumentException] {
+      VectorIndex.build(ds, "embedding", name = "ivfx", quantizer = "opq")
+    }
+    val dir = java.nio.file.Paths.get(ds.root, "_indexes", "ivfx")
+    assert(!Files.exists(dir) || Files.list(dir).count() == 0L)
+    assert(VectorIndex.builtVersion(ds, "ivfx").isEmpty)
+  }
+
   test("probed search prunes but overlaps exact; prefilter composes") {
     val ds = makeDs()
     val q = queryVec(ds)
