@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.SparkContext
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
@@ -12,8 +13,23 @@ import java.nio.file.{Files, Paths}
   * `compiles` counts the classes Janino compiled during each entry's
   * measured run: after a warm-up that is 0 unless generated code is
   * specialized to values that change between runs, or the codegen cache
-  * evicts the entry's classes. */
+  * evicts the entry's classes. `jobs` counts the Spark jobs each entry's
+  * measured run started (see [[jobsDuring]]). */
 object Bench {
+
+  /** `body`'s result and the Spark jobs it started: the job ids the
+    * scheduler hands out between two fence jobs over an empty RDD, which
+    * run no task. Every job, adaptive map stages included, takes the next
+    * id, so the count is exact while nothing else submits jobs, with no
+    * wait for listener events. */
+  def jobsDuring[A](sc: SparkContext)(body: => A): (A, Int) = {
+    def fence(): Int = sc.submitJob(sc.emptyRDD[Unit], (_: Iterator[Unit]) => (),
+      Nil, (_: Int, _: Unit) => (), ()).jobIds.head
+    val before = fence()
+    val result = body
+    (result, fence() - before - 1)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local()
@@ -53,12 +69,14 @@ object Bench {
       timed.view.filterKeys(names).toMap)
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val compiles = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    val jobs = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       val t =
         try {
           val warm = once(fn) // JIT/codegen/IO cache
           val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-          val measured = once(fn)
+          val (measured, started) = jobsDuring(spark.sparkContext)(once(fn))
+          jobs(name) = started
           compiles(name) =
             CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
           // A measured run slower than its own warm-up is an environmental
@@ -98,15 +116,15 @@ object Bench {
       SessionHygiene.sweep(spark)
       name -> t
     }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val fails = failed.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
-    val compiled = compiles.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    def obj(kvs: Iterable[(String, Any)]): String =
+      kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val qs = obj(results)
+    val fails = obj(failed.map { case (k, v) => k -> ("\"" + v + "\"") })
+    val compiled = obj(compiles)
+    val started = obj(jobs)
     val total = results.map(_._2).filter(_ >= 0).sum
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fails,"compiles":$compiled,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fails,"compiles":$compiled,"jobs":$started,"sf":"$sfDir"}"""
     sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { p =>
       Files.writeString(Paths.get(p), json + "\n")
     }

@@ -233,8 +233,8 @@ case class MinHashSig(child: Expression, kExpr: Expression)
     copy(child = l, kExpr = r)
 }
 
-/** Puts the graft functions and the [[ParamLiterals]] rule in every
-  * SparkSession. Listed in
+/** Puts the graft functions and the [[ParamLiterals]] and [[SmallSorts]]
+  * rules in every SparkSession. Listed in
   * `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`,
   * so Spark's `ServiceLoader` hands it each new session (and each
   * `newSession()` child) at build time: no config key, no call site. */
@@ -245,6 +245,7 @@ class GraftExtensions extends org.apache.spark.sql.SparkSessionExtensionsProvide
         new ExpressionInfo(classOf[GraftFunctions.type].getName, name), b))
     }
     ext.injectColumnar(_ => ParamLiterals.columnar)
+    ext.injectQueryStagePrepRule(_ => SmallSorts)
   }
 }
 

@@ -421,7 +421,7 @@ final class LakeDataset private (
     if (!evolvesSchema(df)) overwrite(df)
     else commitOp(OpKind.Overwrite, "overwrite_merge_schema") {
       val (man2, filled) = mergedSchema(df)
-      overwritten(man2, filled)
+      withPrimaryKeyChecked(filled, probe = false)(overwritten(man2, _))
     }
 
   /** The current manifest with `df`'s new columns added (nullable, fresh
@@ -633,7 +633,8 @@ final class LakeDataset private (
   def overwrite(df: DataFrame,
       extraProps: Map[String, String] = Map.empty): Unit =
     commitOp(OpKind.Overwrite, "overwrite") {
-      overwritten(m, df).copy(properties = m.properties ++ extraProps)
+      withPrimaryKeyChecked(df, probe = false)(overwritten(m, _))
+        .copy(properties = m.properties ++ extraProps)
     }
 
   /** Delete rows matching the predicate (Spark SQL expression string — a
@@ -2459,19 +2460,21 @@ final class LakeDataset private (
     * distributed semi-join of the batch keys against the key columns. */
   private val MaxInlinePkProbe = 1000
 
-  /** PK gate for [[append]]: pins the batch (the rows checked ARE the
-    * rows written), rejects null keys and in-batch duplicates, probes the
-    * table for the incoming keys, then runs `write` on the pinned batch
-    * and unpins it. Runs inside the commit plan so a rebase re-probes
-    * against the rebased snapshot. */
-  private def withPrimaryKeyChecked[A](df: DataFrame)(
+  /** PK gate for the insert doors: pins the batch (the rows checked ARE
+    * the rows written), rejects null keys and in-batch duplicates, and
+    * with `probe` probes the table for the incoming keys; then runs
+    * `write` on the pinned batch and unpins it. An overwrite replaces
+    * every row, so it checks the batch alone (`probe = false`). Runs
+    * inside the commit plan so a rebase re-probes against the rebased
+    * snapshot. */
+  private def withPrimaryKeyChecked[A](df: DataFrame, probe: Boolean = true)(
       write: DataFrame => A): A = {
-    val checked = enforcePrimaryKey(df)
+    val checked = enforcePrimaryKey(df, probe)
     try write(checked)
     finally if (checked ne df) graft.Materialize.unpin(checked)
   }
 
-  private def enforcePrimaryKey(df: DataFrame): DataFrame = {
+  private def enforcePrimaryKey(df: DataFrame, probe: Boolean): DataFrame = {
     val pk = primaryKey
     if (pk.isEmpty) return df
     val batch = df.localCheckpoint(true)
@@ -2483,6 +2486,7 @@ final class LakeDataset private (
       .agg(count(lit(1)).as("_n")).filter(col("_n") > 1).limit(1)
     if (!dupIn.isEmpty) throw new IllegalArgumentException(
       s"PRIMARY KEY violation: duplicate key within the batch on $pk")
+    if (!probe) return batch
     val keys = batch.select(pk.map(col): _*).distinct()
     // single small key set over a simple type: render an IN predicate and
     // prune fragments by zonemap/bloom/value-set stats FIRST — a probe of

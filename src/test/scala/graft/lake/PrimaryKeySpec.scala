@@ -102,6 +102,48 @@ class PrimaryKeySpec extends SparkTestBase {
     assert(ds.read().count() == 1)
   }
 
+  test("overwrite doors enforce the key on the batch, not on replaced rows") {
+    // a dataset the SQL catalog names pkcat.c.t
+    val dir = Files.createTempDirectory("lake-pk-ow-").toString
+    val ds = LakeDataset.create(spark, s"$dir/c/t", schema)
+    ds.append(rows((1L, "a"), (2L, "b")))
+    ds.setPrimaryKey(Seq("id"))
+    def evolved(r: (java.lang.Long, String)*) = {
+      val d = new java.util.ArrayList[Row]()
+      r.foreach { case (i, n) => d.add(Row(i, n, 9L)) }
+      spark.createDataFrame(d, schema.add("extra", LongType)).coalesce(1)
+    }
+    intercept[IllegalArgumentException](ds.overwrite(rows((3L, "x"), (3L, "y"))))
+    intercept[IllegalArgumentException](ds.overwrite(rows((null, "n"))))
+    intercept[IllegalArgumentException](
+      ds.overwriteMergeSchema(evolved((3L, "x"), (3L, "y"))))
+    intercept[IllegalArgumentException](ds.overwriteMergeSchema(evolved((null, "n"))))
+    spark.conf.set("spark.sql.catalog.pkcat", classOf[LakeCatalog].getName)
+    spark.conf.set("spark.sql.catalog.pkcat.root", dir)
+    val table = "pkcat.c.t"
+    def refusedByKey(sql: String): Unit = {
+      val e = intercept[Exception](spark.sql(sql))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("PRIMARY KEY")), e)
+    }
+    try {
+      refusedByKey(s"INSERT OVERWRITE $table VALUES (4, 'x'), (4, 'y')")
+      refusedByKey(s"INSERT OVERWRITE $table VALUES (CAST(NULL AS BIGINT), 'n')")
+      // nothing committed by the failed attempts
+      assert(ds.refresh().read().count() == 2)
+      // the rows being replaced are not probed: their keys may come back
+      spark.sql(s"INSERT OVERWRITE $table VALUES (1, 'c'), (5, 'e')")
+    } finally {
+      spark.conf.unset("spark.sql.catalog.pkcat")
+      spark.conf.unset("spark.sql.catalog.pkcat.root")
+    }
+    ds.refresh().overwrite(rows((1L, "a2"), (2L, "b2")))
+    ds.overwriteMergeSchema(evolved((2L, "b3"), (3L, "c")))
+    assert(ds.read().select("id").collect().map(_.getLong(0)).sorted.toSeq ==
+      Seq(2L, 3L))
+    assert(ds.primaryKey == Seq("id"))
+  }
+
   test("mergeInsert on a PK table must merge on the key; nulls refused") {
     val (_, ds) = fresh()
     ds.append(rows((1L, "a")))

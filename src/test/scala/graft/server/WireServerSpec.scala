@@ -371,23 +371,24 @@ class WireServerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
   }
 
+  /** The catalog query psql 14-16 sends for `\dt`. */
+  private val dt =
+    """SELECT n.nspname as "Schema",
+      |  c.relname as "Name",
+      |  CASE c.relkind WHEN 'r' THEN 'table' WHEN 'v' THEN 'view' WHEN 'm' THEN 'materialized view' WHEN 'i' THEN 'index' WHEN 'S' THEN 'sequence' WHEN 't' THEN 'TOAST table' WHEN 'f' THEN 'foreign table' WHEN 'p' THEN 'partitioned table' WHEN 'I' THEN 'partitioned index' END as "Type",
+      |  pg_catalog.pg_get_userbyid(c.relowner) as "Owner"
+      |FROM pg_catalog.pg_class c
+      |     LEFT JOIN pg_catalog.pg_namespace n ON n.oid = c.relnamespace
+      |     LEFT JOIN pg_catalog.pg_am am ON am.oid = c.relam
+      |WHERE c.relkind IN ('r','p','')
+      |      AND n.nspname <> 'pg_catalog'
+      |      AND n.nspname !~ '^pg_toast'
+      |      AND n.nspname <> 'information_schema'
+      |  AND pg_catalog.pg_table_is_visible(c.oid)
+      |ORDER BY 1,2""".stripMargin
+
   test("psql's \\dt query joins the catalog relations by broadcast") {
     withServer { conn =>
-      // the catalog query psql 14-16 sends for `\dt`
-      val dt =
-        """SELECT n.nspname as "Schema",
-          |  c.relname as "Name",
-          |  CASE c.relkind WHEN 'r' THEN 'table' WHEN 'v' THEN 'view' WHEN 'm' THEN 'materialized view' WHEN 'i' THEN 'index' WHEN 'S' THEN 'sequence' WHEN 't' THEN 'TOAST table' WHEN 'f' THEN 'foreign table' WHEN 'p' THEN 'partitioned table' WHEN 'I' THEN 'partitioned index' END as "Type",
-          |  pg_catalog.pg_get_userbyid(c.relowner) as "Owner"
-          |FROM pg_catalog.pg_class c
-          |     LEFT JOIN pg_catalog.pg_namespace n ON n.oid = c.relnamespace
-          |     LEFT JOIN pg_catalog.pg_am am ON am.oid = c.relam
-          |WHERE c.relkind IN ('r','p','')
-          |      AND n.nspname <> 'pg_catalog'
-          |      AND n.nspname !~ '^pg_toast'
-          |      AND n.nspname <> 'information_schema'
-          |  AND pg_catalog.pg_table_is_visible(c.oid)
-          |ORDER BY 1,2""".stripMargin
       val names = conn.query(dt).head.rows.map(_(1).get)
       Tables.all.foreach(t => assert(names.contains(t), names))
       val df = spark.sql(PgDialect.translate(dt))
@@ -396,6 +397,26 @@ class WireServerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
         case j: SortMergeJoinExec => j
       }
       assert(smj.isEmpty, df.queryExecution.executedPlan)
+    }
+  }
+
+  test("Spark jobs per statement: point 1, grouped aggregate 2, \\dt 3") {
+    withServer { conn =>
+      val point = "SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey = $1"
+      val agg =
+        """SELECT o_orderstatus, count(*) AS n FROM orders
+          |WHERE o_totalprice > 1000.5
+          |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin
+      def jobs(run: => Unit): Int = {
+        run // the first run may load table metadata
+        graft.Bench.jobsDuring(spark.sparkContext)(run)._2
+      }
+      assert(jobs(conn.queryExtended(point, Seq(20 -> Some("7")))) == 1)
+      // the scan-and-partial-aggregate stage, then the sort in one task: no
+      // range-partition sampling job and no range shuffle
+      assert(jobs(conn.query(agg)) == 2)
+      // one broadcast per joined catalog relation, then the result
+      assert(jobs(conn.query(dt)) == 3)
     }
   }
 
