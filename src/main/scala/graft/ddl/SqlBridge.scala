@@ -112,16 +112,24 @@ object SqlBridge {
     (StructType(fields), pk.toSeq)
   }
 
+  /** Split at commas outside parentheses and '…' literals ('' escapes a
+    * quote: the literal closes and reopens). */
   private def splitTopLevel(s: String): Seq[String] = {
     val out = Seq.newBuilder[String]
     val cur = new StringBuilder
     var depth = 0
-    s.foreach {
-      case '(' => depth += 1; cur.append('(')
-      case ')' => depth -= 1; cur.append(')')
-      case ',' if depth == 0 =>
-        if (cur.nonEmpty) out += cur.toString; cur.clear()
-      case c => cur.append(c)
+    var quoted = false
+    s.foreach { c =>
+      c match {
+        case '\'' => quoted = !quoted
+        case '(' if !quoted => depth += 1
+        case ')' if !quoted => depth -= 1
+        case _ => ()
+      }
+      if (c == ',' && depth == 0 && !quoted) {
+        if (cur.nonEmpty) out += cur.toString
+        cur.clear()
+      } else cur.append(c)
     }
     if (cur.toString.trim.nonEmpty) out += cur.toString
     out.result()

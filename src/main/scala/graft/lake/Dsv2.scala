@@ -467,13 +467,14 @@ private[lake] final class LakeScanBuilder(root: String,
   *  - COUNT(*): Σ fragment rowCounts;
   *  - COUNT(col): Σ rowCounts − Σ nullCounts, when every fragment carries
   *    stats for the field;
-  *  - MIN/MAX(col): fold of the exact (untruncated) per-fragment zonemap
-  *    min/max, when every fragment carries them and the type round-trips
-  *    through the stat string. All-null fragments contribute nothing;
-  *    an all-null column yields SQL NULL.
+  *  - MIN/MAX(col): [[ZoneMaps.extreme]] over the exact (untruncated)
+  *    per-fragment zonemap min/max, when every fragment carries them and
+  *    every bound decodes. All-null fragments contribute nothing; an
+  *    all-null column yields SQL NULL.
   * At 100 TB these turn metadata-only questions into actual metadata
   * reads — zero data IO instead of a full table scan. */
 private[lake] object LakeAggPushdown {
+  import org.apache.spark.sql.catalyst.CatalystTypeConverters
   import org.apache.spark.sql.connector.expressions.NamedReference
   import org.apache.spark.sql.connector.expressions.aggregate._
   import org.apache.spark.sql.types._
@@ -489,55 +490,6 @@ private[lake] object LakeAggPushdown {
     case _ => None
   }
 
-  private def parse(s: String, dt: org.apache.spark.sql.types.DataType): Any =
-    dt match {
-      case IntegerType => s.toInt
-      case LongType => s.toLong
-      case ShortType => s.toShort
-      case ByteType => s.toByte
-      case DoubleType => s.toDouble
-      case FloatType => s.toFloat
-      case BooleanType => s.toBoolean
-      case StringType => s
-      case DateType => java.sql.Date.valueOf(s)
-      case TimestampType => // stats store epoch micros (zone-independent)
-        java.sql.Timestamp.from(java.time.Instant.EPOCH.plus(
-          s.toLong, java.time.temporal.ChronoUnit.MICROS))
-      case d: DecimalType => new java.math.BigDecimal(s)
-      case other => throw new IllegalStateException(s"unplannable $other")
-    }
-
-  private def parseable(dt: org.apache.spark.sql.types.DataType): Boolean =
-    dt match {
-      case IntegerType | LongType | ShortType | ByteType | DoubleType |
-          FloatType | BooleanType | StringType | DateType | TimestampType =>
-        true
-      case _: DecimalType => true
-      case _ => false
-    }
-
-  private def ordering(dt: org.apache.spark.sql.types.DataType)
-      : Ordering[Any] = {
-    val o: Ordering[_] = dt match {
-      case IntegerType => Ordering.Int
-      case LongType => Ordering.Long
-      case ShortType => Ordering.Short
-      case ByteType => Ordering.Byte
-      case DoubleType => Ordering.Double.TotalOrdering
-      case FloatType => Ordering.Float.TotalOrdering
-      case BooleanType => Ordering.Boolean
-      case StringType => Ordering.String
-      case DateType => Ordering.by((d: java.sql.Date) => d.getTime)
-      case TimestampType =>
-        Ordering.by((t: java.sql.Timestamp) =>
-          (t.getTime, t.getNanos))
-      case _: DecimalType =>
-        Ordering.by((b: java.math.BigDecimal) => scala.math.BigDecimal(b))
-      case other => throw new IllegalStateException(s"unorderable $other")
-    }
-    o.asInstanceOf[Ordering[Any]]
-  }
-
   def plan(agg: Aggregation, man: Manifest): Option[Plan] = {
     if (agg.groupByExpressions.nonEmpty) return None
     if (man.deletionFiles.nonEmpty) return None
@@ -548,6 +500,19 @@ private[lake] object LakeAggPushdown {
       val per = man.fragments.map(_.stats.get(fid.toString))
       if (per.forall(_.isDefined)) Some(per.flatten) else None
     }
+    // a bound that does not decode (e.g. a legacy session-timezone
+    // timestamp) falls back to the scan path
+    def extreme(c: org.apache.spark.sql.connector.expressions.Expression,
+        prefix: String, greatest: Boolean): Option[(StructField, Any)] =
+      for {
+        name <- colNameOf(c)
+        f <- field(name)
+        dt = DataType.fromJson(f.dataType)
+        st <- statsFor(f.id)
+        v <- ZoneMaps.extreme(
+          st.flatMap(s => if (greatest) s.max else s.min), dt, greatest)
+      } yield (StructField(s"${prefix}_${f.name}", dt),
+        v.map(e => CatalystTypeConverters.convertToScala(e._2, dt)).orNull)
 
     val cols = agg.aggregateExpressions.toSeq.map {
       case _: CountStar =>
@@ -560,34 +525,8 @@ private[lake] object LakeAggPushdown {
           st <- statsFor(f.id)
         } yield (StructField(s"count_${f.name}", LongType, nullable = false),
           (totalRows - st.map(_.nullCount).sum): Any)
-      // Try-wrapped: a stat string that doesn't round-trip (e.g. legacy
-      // timestamp zonemaps rendered as session-timezone strings, which the
-      // batch pruner tolerates) must fall back to the scan path, not crash
-      // planning with a parse exception (round-4 ADVICE).
-      case m: Min =>
-        scala.util.Try {
-          for {
-            name <- colNameOf(m.column)
-            f <- field(name)
-            dt = DataType.fromJson(f.dataType)
-            if parseable(dt)
-            st <- statsFor(f.id)
-          } yield (StructField(s"min_${f.name}", dt),
-            st.flatMap(_.min).map(parse(_, dt))
-              .reduceOption((a, b) => ordering(dt).min(a, b)).orNull: Any)
-        }.toOption.flatten
-      case m: Max =>
-        scala.util.Try {
-          for {
-            name <- colNameOf(m.column)
-            f <- field(name)
-            dt = DataType.fromJson(f.dataType)
-            if parseable(dt)
-            st <- statsFor(f.id)
-          } yield (StructField(s"max_${f.name}", dt),
-            st.flatMap(_.max).map(parse(_, dt))
-              .reduceOption((a, b) => ordering(dt).max(a, b)).orNull: Any)
-        }.toOption.flatten
+      case m: Min => extreme(m.column, "min", greatest = false)
+      case m: Max => extreme(m.column, "max", greatest = true)
       case _ => None
     }
     if (cols.exists(_.isEmpty)) None

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression => CExpr, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.expressions.{And, Cast, EqualTo, EvalMode, Expression => CExpr, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -1937,131 +1937,8 @@ final class LakeDataset private (
     * min/max IS its bounding box, so a spatial intersects-predicate over
     * (x, y) columns prunes as the conjunction of two range probes; no
     * separate tree structure is needed at fragment granularity. */
-  def pruneFragments(man: Manifest, predicate: String): Seq[Fragment] = {
-    val parsed = spark.sessionState.sqlParser.parseExpression(predicate)
-    val byName = man.fields.map(f => f.name -> f).toMap
-    val conjuncts = splitAnd(parsed).map(coerceLiterals(_, byName))
-    // Past ~10⁷ fragments (≥ distributedPruneChunks chunk files) the
-    // driver's probe loop is itself the wall: ship the probes to executors
-    // over the JSONL chunk files instead (SCALE.md manifest-list split).
-    val distThreshold =
-      spark.conf.get("spark.graft.distributedPruneChunks", "1024").toInt
-    if (man.chunkFiles.size >= distThreshold)
-      pruneFragmentsDistributed(man, byName, conjuncts)
-    else pruneFragmentsDriver(man, byName, conjuncts)
-  }
-
-  private def pruneFragmentsDriver(man: Manifest,
-      byName: Map[String, FieldDef], conjuncts: Seq[CExpr]): Seq[Fragment] =
-    man.fragments.filter { frag =>
-      conjuncts.forall(c => mayMatch(frag, byName, c))
-    }
-
-  /** Distributed fragment pruning: compile the predicate's zonemap /
-    * value-set probes into serializable descriptors ([[StatProbes]]),
-    * evaluate them on EXECUTORS over the raw JSONL chunk files, and bring
-    * only surviving fragment ids back to the driver. Survivors then pass
-    * the exact driver probe once more — restoring bloom-sidecar checks and
-    * the legacy-timestamp refinement the executor pass conservatively
-    * skips — so the result is identical to the driver loop while driver
-    * CPU and probe IO scale with survivors, not the table. */
-  private def pruneFragmentsDistributed(man: Manifest,
-      byName: Map[String, FieldDef], conjuncts: Seq[CExpr]): Seq[Fragment] = {
-    val probes = buildStatProbes(byName, conjuncts)
-    if (probes.isEmpty) return pruneFragmentsDriver(man, byName, conjuncts)
-    val files = man.chunkFiles.map(r =>
-      io.absolute(chunksDirOf(rootPath).resolve(r.file)).toString)
-    val bc = spark.sparkContext.broadcast(probes)
-    val survivorIds = {
-      import spark.implicits._
-      spark.read.textFile(files: _*)
-        .mapPartitions { it =>
-          import Manifest.formats
-          val ps = bc.value
-          it.flatMap { line =>
-            val f = org.json4s.jackson.Serialization.read[Fragment](line)
-            if (StatProbes.mayMatch(f, ps)) Iterator.single(f.id)
-            else Iterator.empty
-          }
-        }.collect().toSet
-    }
-    man.fragments.filter(f => survivorIds.contains(f.id))
-      .filter(frag => conjuncts.forall(c => mayMatch(frag, byName, c)))
-  }
-
-  /** Compile conjuncts into serializable executor-side probes. A conjunct
-    * shape (or literal rendering) with no exact mirror is simply OMITTED —
-    * executors then keep every fragment for it and the driver re-check on
-    * survivors applies the full arsenal, so omission can only lose
-    * pruning, never rows. Literal renderings mirror `mayMatch`'s `cmp`:
-    * epoch micros for timestamps, ISO dates, decimal strings for numbers,
-    * raw strings otherwise; value-set renderings mirror
-    * `valueSetMayContain`'s cast-to-string. */
-  private def buildStatProbes(byName: Map[String, FieldDef],
-      conjuncts: Seq[CExpr]): Seq[StatProbe] = {
-    def fieldOf(attr: CExpr): Option[FieldDef] = attr match {
-      case UnresolvedAttribute(parts) => byName.get(parts.mkString("."))
-      case _ => None
-    }
-    // rendered compare value + (numeric, ts) flags, mirroring cmp()'s cases
-    def render(l: Literal): Option[(String, Boolean, Boolean)] =
-      (l.value, l.dataType) match {
-        case (null, _) => None
-        case (micros: java.lang.Long, _: TimestampType) =>
-          Some((micros.toString, false, true))
-        case (days: java.lang.Integer, DateType) =>
-          Some((java.time.LocalDate.ofEpochDay(days.longValue()).toString,
-            false, false))
-        case (v: Number, _) => Some((v.toString, true, false))
-        case (v: org.apache.spark.unsafe.types.UTF8String, _) =>
-          Some((v.toString, false, false))
-        case _ => None
-      }
-    def vsRender(f: FieldDef, l: Literal): Option[String] = {
-      val dt = DataType.fromJson(f.dataType)
-      (l.value, dt) match {
-        case (micros: java.lang.Long, TimestampType) => Some(micros.toString)
-        case _ =>
-          val casted =
-            try org.apache.spark.sql.catalyst.expressions.Cast(
-              l, StringType,
-              Some(spark.sessionState.conf.sessionLocalTimeZone)).eval(null)
-            catch { case _: RuntimeException => null }
-          Option(casted).map(_.toString)
-      }
-    }
-    def eqProbe(attr: CExpr, lits: Seq[Literal]): Option[StatProbe] =
-      fieldOf(attr).flatMap { f =>
-        val rendered = lits.map(l => render(l).map { case (s, num, ts) =>
-          ((s, vsRender(f, l)), num, ts)
-        })
-        if (rendered.exists(_.isEmpty)) None // any unknown value → keep all
-        else {
-          val rs = rendered.flatten
-          Some(EqProbe(f.id.toString, rs.map(_._1),
-            rs.headOption.exists(_._2), rs.headOption.exists(_._3)))
-        }
-      }
-    def rangeProbe(attr: CExpr, l: Literal, op: String): Option[StatProbe] =
-      fieldOf(attr).flatMap(f => render(l).map { case (s, num, ts) =>
-        RangeProbe(f.id.toString, op, s, num, ts)
-      })
-    conjuncts.flatMap {
-      case org.apache.spark.sql.catalyst.expressions.IsNull(a) =>
-        fieldOf(a).map(f => NullProbe(f.id.toString, wantNull = true))
-      case org.apache.spark.sql.catalyst.expressions.IsNotNull(a) =>
-        fieldOf(a).map(f => NullProbe(f.id.toString, wantNull = false))
-      case EqualTo(a, l: Literal) => eqProbe(a, Seq(l))
-      case org.apache.spark.sql.catalyst.expressions.In(a, vs)
-          if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
-        eqProbe(a, vs.map(_.asInstanceOf[Literal]))
-      case GreaterThan(a, l: Literal) => rangeProbe(a, l, "gt")
-      case GreaterThanOrEqual(a, l: Literal) => rangeProbe(a, l, "ge")
-      case LessThan(a, l: Literal) => rangeProbe(a, l, "lt")
-      case LessThanOrEqual(a, l: Literal) => rangeProbe(a, l, "le")
-      case _ => None
-    }
-  }
+  def pruneFragments(man: Manifest, predicate: String): Seq[Fragment] =
+    man.fragments.filter(statTest(man, predicate))
 
   /** Chunk-granularity pruning over ChunkRef aggregate stats — the same
     * probes as [[pruneFragments]], applied to a pseudo-fragment built from
@@ -2070,45 +1947,55 @@ final class LakeDataset private (
     * files to read AT ALL. */
   private[lake] def pruneChunks(man: Manifest, refs: Seq[ChunkRef],
       predicate: String): Seq[ChunkRef] = {
-    val parsed = spark.sessionState.sqlParser.parseExpression(predicate)
+    val mayMatch = statTest(man, predicate)
+    // rowCount = the chunk's TOTAL ROWS (ref.rows; 0 = legacy-unknown, which
+    // the IS NOT NULL probe treats as keep), not its fragment count
+    refs.filter(ref => ref.stats.isEmpty ||
+      mayMatch(Fragment(-1L, ref.file, ref.rows, ref.stats)))
+  }
+
+  /** The predicate's conjuncts, literals coerced to their columns' types,
+    * compiled by [[ZoneMaps.mayMatch]] into one fragment test. */
+  private def statTest(man: Manifest,
+      predicate: String): Fragment => Boolean = {
     val byName = man.fields.map(f => f.name -> f).toMap
-    val conjuncts = splitAnd(parsed).map(coerceLiterals(_, byName))
-    refs.filter { ref =>
-      ref.stats.isEmpty || {
-        // rowCount = the chunk's TOTAL ROWS (ref.rows; 0 = legacy-unknown,
-        // which the IS NOT NULL probe treats as keep). ref.count is the
-        // FRAGMENT count — using it here made `nullCount < rowCount`
-        // compare nulls against fragments and wrongly skip chunks.
-        val pseudo = Fragment(-1L, ref.file, ref.rows, ref.stats)
-        conjuncts.forall(c => mayMatch(pseudo, byName, c))
-      }
-    }
+    val conjuncts =
+      splitAnd(spark.sessionState.sqlParser.parseExpression(predicate))
+        .map(coerceLiterals(_, byName))
+    ZoneMaps.mayMatch(conjuncts, fieldOf(byName), bloomMayContain)
+  }
+
+  private def fieldOf(byName: Map[String, FieldDef])(attr: CExpr)
+      : Option[FieldDef] = attr match {
+    case UnresolvedAttribute(parts) => byName.get(parts.mkString("."))
+    case _ => None
   }
 
   /** The parsed predicate is UNRESOLVED — no analyzer coercion ever runs —
     * so `ts >= '2026-01-01'` arrives with a STRING literal while the stat
-    * is epoch micros, and a raw lexical compare would prune fragments that
-    * contain matches (silent wrong results). Cast every literal compared
-    * against a known column to that column's declared type up front (one
-    * pass per predicate, not per fragment); a literal that fails the cast
-    * (null result) is left as-is, and the probes below conservatively keep
-    * the fragment when types still disagree. */
+    * is epoch micros. Cast every literal compared against a known column to
+    * that column's declared type up front (one pass per predicate, not per
+    * fragment). The engine casts a string literal to the column's type as
+    * well, so one whose cast fails is NULL there too and matches no row.
+    * Any other literal compares in the wider of the two types, so only an
+    * exact cast may stand in for it (1.5 to BIGINT is 1: not exact), and
+    * never against a string column, which the engine casts to the
+    * literal's type instead ('05' = 5). A literal left as-is decides
+    * nothing: [[ZoneMaps]] keeps the fragment. */
   private def coerceLiterals(e: CExpr,
       byName: Map[String, FieldDef]): CExpr = {
-    def fieldType(attr: CExpr): Option[DataType] = attr match {
-      case UnresolvedAttribute(parts) =>
-        byName.get(parts.mkString(".")).map(f => DataType.fromJson(f.dataType))
-      case _ => None
-    }
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
     def coerce(attr: CExpr, l: Literal): Literal =
-      fieldType(attr) match {
-        case Some(t) if t != l.dataType && l.value != null =>
-          try {
-            val v = org.apache.spark.sql.catalyst.expressions.Cast(
-              l, t, Some(spark.sessionState.conf.sessionLocalTimeZone))
-              .eval(null)
-            if (v == null) l else Literal(v, t)
-          } catch { case _: Exception => l }
+      fieldOf(byName)(attr).map(f => DataType.fromJson(f.dataType)) match {
+        case Some(t) if t != l.dataType && l.value != null &&
+            Cast.canTryCast(l.dataType, t) =>
+          val v = Cast(l, t, tz, EvalMode.TRY).eval(null)
+          val exact = v != null &&
+            Cast(Literal(v, t), l.dataType, tz, EvalMode.TRY).eval(null) ==
+              l.value
+          if (l.dataType == StringType || exact && t != StringType)
+            Literal(v, t)
+          else l
         case _ => l
       }
     e transformUp {
@@ -2118,8 +2005,7 @@ final class LakeDataset private (
         GreaterThanOrEqual(a, coerce(a, l))
       case LessThan(a, l: Literal) => LessThan(a, coerce(a, l))
       case LessThanOrEqual(a, l: Literal) => LessThanOrEqual(a, coerce(a, l))
-      case in @ org.apache.spark.sql.catalyst.expressions.In(a, vs)
-          if vs.forall(_.isInstanceOf[Literal]) =>
+      case in @ In(a, vs) if vs.forall(_.isInstanceOf[Literal]) =>
         in.copy(list = vs.map(v => coerce(a, v.asInstanceOf[Literal])))
     }
   }
@@ -2133,165 +2019,18 @@ final class LakeDataset private (
     case other => Seq(other)
   }
 
-  /** Shape of a micros-rendered timestamp stat / value-set entry. */
-  private val epochMicrosRe = "-?\\d+".r
-
-  private def mayMatch(frag: Fragment, byName: Map[String, FieldDef],
-      c: CExpr): Boolean = {
-    def stats(attr: CExpr): Option[ColumnStats] = attr match {
-      case UnresolvedAttribute(parts) =>
-        byName.get(parts.mkString(".")).flatMap(f => frag.stats.get(f.id.toString))
-      case _ => None
-    }
-    def cmp(stat: String, l: Literal): Option[Int] = (l.value, l.dataType) match {
-      case (null, _) => None
-      // Timestamp stats are epoch micros (zone-independent, exact); legacy
-      // manifests rendered them as session-timezone strings — for those,
-      // lexical order == time order only at whole-second granularity AND
-      // only when reader and writer share a zone, so the fallback compares
-      // second-truncated and reports equality as UNKNOWN (None = keep the
-      // fragment, conservative).
-      case (micros: java.lang.Long, _: TimestampType) =>
-        if (epochMicrosRe.matches(stat))
-          Some(java.lang.Long.compare(stat.toLong, micros))
-        else {
-          val zone = java.time.ZoneId.of(
-            spark.sessionState.conf.sessionLocalTimeZone)
-          val iso = java.time.Instant.EPOCH.plusNanos(micros * 1000L)
-            .atZone(zone).toLocalDateTime
-            .format(java.time.format.DateTimeFormatter
-              .ofPattern("yyyy-MM-dd HH:mm:ss"))
-          val c = stat.take(iso.length).compareTo(iso)
-          if (c == 0) None else Some(c)
-        }
-      // DATE stats render as ISO yyyy-MM-dd (zone-free; lexical order ==
-      // chronological); the Catalyst literal carries epoch days. Must
-      // precede the Number case — Integer is a Number.
-      case (days: java.lang.Integer, DateType) =>
-        Some(stat.compareTo(
-          java.time.LocalDate.ofEpochDay(days.longValue()).toString))
-      case (v: Number, _) =>
-        try Some(BigDecimal(stat).compare(BigDecimal(v.toString)))
-        catch { case _: NumberFormatException => None }
-      case (v: org.apache.spark.unsafe.types.UTF8String, _) =>
-        Some(stat.compareTo(v.toString))
-      case _ => None
-    }
-    c match {
-      case org.apache.spark.sql.catalyst.expressions.IsNull(a) =>
-        stats(a).forall(_.nullCount > 0)
-      case org.apache.spark.sql.catalyst.expressions.IsNotNull(a) =>
-        stats(a).forall(s => frag.rowCount == 0 || s.nullCount < frag.rowCount)
-      case EqualTo(a, l: Literal) =>
-        stats(a).forall(s => (for {
-          mn <- s.min; mx <- s.max
-          c1 <- cmp(mn, l); c2 <- cmp(mx, l)
-        } yield c1 <= 0 && c2 >= 0).getOrElse(true)) &&
-          bloomMayContain(frag, byName, a, l) &&
-          valueSetMayContain(frag, byName, a, l)
-      // IN over literals: keep the fragment iff ANY value may match —
-      // each value gets the full equality arsenal (zonemap + bloom +
-      // value set), so a point-lookup IN list prunes like a disjunction
-      // of equalities (index_selector's equality arm applied per value)
-      case org.apache.spark.sql.catalyst.expressions.In(a, vs)
-          if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
-        vs.exists { v =>
-          val l = v.asInstanceOf[Literal]
-          stats(a).forall(s => (for {
-            mn <- s.min; mx <- s.max
-            c1 <- cmp(mn, l); c2 <- cmp(mx, l)
-          } yield c1 <= 0 && c2 >= 0).getOrElse(true)) &&
-            bloomMayContain(frag, byName, a, l) &&
-            valueSetMayContain(frag, byName, a, l)
-        }
-      case GreaterThan(a, l: Literal) =>
-        stats(a).forall(s =>
-          (for { mx <- s.max; c2 <- cmp(mx, l) } yield c2 > 0).getOrElse(true))
-      case GreaterThanOrEqual(a, l: Literal) =>
-        stats(a).forall(s =>
-          (for { mx <- s.max; c2 <- cmp(mx, l) } yield c2 >= 0).getOrElse(true))
-      case LessThan(a, l: Literal) =>
-        stats(a).forall(s =>
-          (for { mn <- s.min; c1 <- cmp(mn, l) } yield c1 < 0).getOrElse(true))
-      case LessThanOrEqual(a, l: Literal) =>
-        stats(a).forall(s =>
-          (for { mn <- s.min; c1 <- cmp(mn, l) } yield c1 <= 0).getOrElse(true))
-      case _ => true // unsupported shape: never prune on it
-    }
-  }
-
-  /** Low-cardinality value-set probe: if the fragment carries the complete
-    * distinct set for this field, equality can prune exactly (the
-    * fragment-granularity bitmap index). Values compare after casting the
-    * literal to the field type and rendering to string exactly as the
-    * stats job rendered column values. */
-  private def valueSetMayContain(frag: Fragment,
-      byName: Map[String, FieldDef], attr: CExpr, l: Literal): Boolean =
-    attr match {
-      case UnresolvedAttribute(parts) =>
-        (for {
-          f <- byName.get(parts.mkString("."))
-          set <- frag.valueSets.get(f.id.toString)
-        } yield {
-          val dt = DataType.fromJson(f.dataType)
-          // timestamp sets are rendered as epoch micros at build time
-          // (zone-independent); a legacy string-rendered set (non-numeric
-          // entries) keeps the fragment conservatively
-          (l.value, dt) match {
-            case (micros: java.lang.Long, TimestampType) =>
-              if (set.forall(epochMicrosRe.matches)) set.contains(micros.toString)
-              else true
-            case _ =>
-              val casted =
-                try org.apache.spark.sql.catalyst.expressions.Cast(
-                  l, StringType,
-                  Some(spark.sessionState.conf.sessionLocalTimeZone))
-                  .eval(null)
-              catch { case _: RuntimeException => null }
-              if (casted == null) true
-              else {
-                val lv = casted.toString
-                // numeric normalization mirrors the zonemap compare
-                (l.value, dt) match {
-                  case (_: Number, _) =>
-                    set.exists(v =>
-                      try BigDecimal(v) == BigDecimal(lv)
-                      catch { case _: NumberFormatException => v == lv })
-                  case _ => set.contains(lv)
-                }
-              }
-          }
-        }).getOrElse(true)
-      case _ => true
-    }
-
   /** Equality-predicate bloom probe (the index-selector rule: equality →
-    * bloom, ranges → zonemaps). The literal is cast to the FIELD's type and
-    * hashed exactly as the build job hashed column values (xxhash64 seed
-    * 42), so probe and index agree bit-for-bit. Conservative: any missing
-    * piece keeps the fragment. */
-  private def bloomMayContain(frag: Fragment, byName: Map[String, FieldDef],
-      attr: CExpr, l: Literal): Boolean = attr match {
-    case UnresolvedAttribute(parts) =>
-      (for {
-        f <- byName.get(parts.mkString("."))
-        rel <- frag.blooms.get(f.id.toString)
-      } yield {
-        val dt = DataType.fromJson(f.dataType)
-        val casted =
-          try org.apache.spark.sql.catalyst.expressions.Cast(
-            l, dt, Some(spark.sessionState.conf.sessionLocalTimeZone))
-            .eval(null)
-          catch { case _: RuntimeException => null }
-        if (casted == null) true
-        else {
-          val h = new org.apache.spark.sql.catalyst.expressions.XxHash64(
-            Seq(Literal(casted, dt))).eval(null).asInstanceOf[Long]
-          loadBloom(rel).mightContain(h)
-        }
-      }).getOrElse(true)
-    case _ => true
-  }
+    * bloom, ranges → zonemaps). The literal, already of the field's type,
+    * is hashed exactly as the build job hashed column values (xxhash64 seed
+    * 42), so probe and index agree bit-for-bit. A fragment without a bloom
+    * for the field is kept. */
+  private def bloomMayContain(frag: Fragment, f: FieldDef,
+      l: Literal): Boolean =
+    frag.blooms.get(f.id.toString).forall { rel =>
+      val h = new org.apache.spark.sql.catalyst.expressions.XxHash64(Seq(l))
+        .eval(null).asInstanceOf[Long]
+      loadBloom(rel).mightContain(h)
+    }
 
   /** (fragment, matchedRowCount) for fragments with ≥1 predicate match —
     * one job over the candidate files. */
@@ -2345,7 +2084,7 @@ final class LakeDataset private (
     DataType.fromJson(f.dataType) == TimestampType
 
   /** How a value-set entry for field `fid` is rendered at index-build time;
-    * [[valueSetMayContain]] renders probe literals the same way. */
+    * [[ZoneMaps.decoder]] reads entries back the same way. */
   private def valueSetRender(man: Manifest, fid: Int): Column = {
     val f = man.fields.find(_.id == fid).get
     if (isTimestampField(f)) unix_micros(col(physName(fid))).cast("string")
@@ -3218,44 +2957,6 @@ object LakeDataset {
     case Nil => None
   }
 
-  /** Aggregate a chunk's fragments' zonemap stats into one ColumnStats per
-    * field: min of mins, max of maxes, summed null counts. A field is
-    * DROPPED from the chunk stats (= unknown, never pruned on) when any
-    * fragment lacks stats for it, or when a numeric/timestamp stat string
-    * fails numeric parse (legacy session-timezone timestamp renders) —
-    * conservative by construction. Ordering matches [[mayMatch]]'s probes:
-    * numeric fields and epoch-micros timestamps compare as BigDecimal,
-    * everything else (ISO dates, strings, booleans) lexically. */
-  private[lake] def aggChunkStats(fields: Seq[FieldDef],
-      frags: Seq[Fragment]): Map[String, ColumnStats] = {
-    if (frags.isEmpty) return Map.empty
-    fields.flatMap { f =>
-      val key = f.id.toString
-      val per = frags.map(_.stats.get(key))
-      if (per.exists(_.isEmpty)) None
-      else {
-        val ss = per.flatten
-        val numeric = DataType.fromJson(f.dataType) match {
-          case _: NumericType | TimestampType => true
-          case _ => false
-        }
-        // all-null fragments contribute no values: fold over defined ends
-        def agg(vals: Seq[String], takeMin: Boolean): Option[Option[String]] =
-          if (vals.isEmpty) Some(None)
-          else if (numeric) {
-            try {
-              val bd = vals.map(v => (BigDecimal(v), v))
-              Some(Some((if (takeMin) bd.minBy(_._1) else bd.maxBy(_._1))._2))
-            } catch { case _: NumberFormatException => None }
-          } else Some(Some(if (takeMin) vals.min else vals.max))
-        for {
-          mn <- agg(ss.flatMap(_.min), takeMin = true)
-          mx <- agg(ss.flatMap(_.max), takeMin = false)
-        } yield key -> ColumnStats(mn, mx, ss.map(_.nullCount).sum)
-      }
-    }.toMap
-  }
-
   /** Returns (the materialized manifest to keep in memory, the version-file
     * JSON to publish). Inline below `threshold`; chunked above, reusing
     * every parent chunk that is still ≥ half full and fully unchanged
@@ -3279,7 +2980,8 @@ object LakeDataset {
         // in-memory fragments so older tables gain chunk skipping on
         // their next commit
         var r = ref
-        if (r.stats.isEmpty) r = r.copy(stats = aggChunkStats(next.fields, fs))
+        if (r.stats.isEmpty)
+          r = r.copy(stats = ZoneMaps.chunkStats(next.fields, fs))
         if (r.rows == 0L) r = r.copy(rows = fs.map(_.rowCount).sum)
         r -> fs
       }
@@ -3300,7 +3002,7 @@ object LakeDataset {
           try io.publishAtomic(p, content)
           catch { case _: CommitConflictException => () }
         }
-        ChunkRef(name, fs.size.toLong, aggChunkStats(next.fields, fs),
+        ChunkRef(name, fs.size.toLong, ZoneMaps.chunkStats(next.fields, fs),
           rows = fs.map(_.rowCount).sum) -> fs
       }.toSeq
       val groups = reused ++ fresh

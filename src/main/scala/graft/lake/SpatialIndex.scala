@@ -2,6 +2,7 @@ package graft.lake
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, Decimal}
 
 /** Spatial search over a [[LakeDataset]] — the Spark-native counterpart of
   * the reference's R-tree secondary index (pkg/storage2/rtree_index.go:
@@ -74,25 +75,7 @@ object SpatialIndex {
       px: Double, py: Double, k: Int, tieCol: String): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     val m = ds.manifest
-    def fidOf(c: String): String =
-      m.fields.find(_.name == c)
-        .getOrElse(throw new IllegalArgumentException(s"no column $c"))
-        .id.toString
-    val (fx, fy) = (fidOf(xCol), fidOf(yCol))
-
-    def numStat(s: Option[String]): Option[Double] =
-      s.flatMap(v => try Some(BigDecimal(v).toDouble)
-        catch { case _: NumberFormatException => None })
-    def axisDist(frag: Fragment, fid: String, p: Double): Option[Double] =
-      frag.stats.get(fid).flatMap { st =>
-        for (lo <- numStat(st.min); hi <- numStat(st.max)) yield
-          if (p < lo) lo - p else if (p > hi) p - hi else 0.0
-      }
-    def minDist(frag: Fragment): Double =
-      (axisDist(frag, fx, px), axisDist(frag, fy, py)) match {
-        case (Some(dx), Some(dy)) => math.sqrt(dx * dx + dy * dy)
-        case _ => 0.0 // unknown stats: always a candidate
-      }
+    val minDist = minDistOf(m, xCol, yCol, px, py)
 
     // (x-px)*(x-px) not pow(x-px, 2): sub/mul/add are exactly-rounded IEEE
     // ops and sqrt is correctly rounded, so an oracle computing the same
@@ -133,24 +116,32 @@ object SpatialIndex {
     * statistic specs assert on (mirrors [[LakeDataset.prunedFileCount]]). */
   def knnCandidateFiles(ds: LakeDataset, xCol: String, yCol: String,
       px: Double, py: Double, bound: Double): Int = {
-    val m = ds.manifest
-    def fidOf(c: String): String =
-      m.fields.find(_.name == c).get.id.toString
-    val (fx, fy) = (fidOf(xCol), fidOf(yCol))
-    def numStat(s: Option[String]): Option[Double] =
-      s.flatMap(v => try Some(BigDecimal(v).toDouble)
-        catch { case _: NumberFormatException => None })
-    m.fragments.count { frag =>
-      val d = (for {
-        stx <- frag.stats.get(fx); sty <- frag.stats.get(fy)
-        xlo <- numStat(stx.min); xhi <- numStat(stx.max)
-        ylo <- numStat(sty.min); yhi <- numStat(sty.max)
-      } yield {
-        val dx = if (px < xlo) xlo - px else if (px > xhi) px - xhi else 0.0
-        val dy = if (py < ylo) ylo - py else if (py > yhi) py - yhi else 0.0
-        math.sqrt(dx * dx + dy * dy)
-      }).getOrElse(0.0)
-      d <= bound
+    val minDist = minDistOf(ds.manifest, xCol, yCol, px, py)
+    ds.manifest.fragments.count(minDist(_) <= bound)
+  }
+
+  /** A fragment's MINDIST from (px, py): the distance to its zonemap box
+    * over the two columns. A fragment whose bounds do not decode to numbers
+    * gets 0 — always a candidate. */
+  private def minDistOf(m: Manifest, xCol: String, yCol: String,
+      px: Double, py: Double): Fragment => Double = {
+    def axisDist(c: String, p: Double): Fragment => Option[Double] = {
+      val f = m.fields.find(_.name == c)
+        .getOrElse(throw new IllegalArgumentException(s"no column $c"))
+      val decode = ZoneMaps.decoder(DataType.fromJson(f.dataType))
+      def num(s: Option[String]): Option[Double] = s.flatMap(decode).collect {
+        case n: java.lang.Number => n.doubleValue
+        case d: Decimal => d.toDouble
+      }
+      frag => frag.stats.get(f.id.toString).flatMap { st =>
+        for (lo <- num(st.min); hi <- num(st.max)) yield
+          if (p < lo) lo - p else if (p > hi) p - hi else 0.0
+      }
+    }
+    val (dx, dy) = (axisDist(xCol, px), axisDist(yCol, py))
+    frag => (dx(frag), dy(frag)) match {
+      case (Some(a), Some(b)) => math.sqrt(a * a + b * b)
+      case _ => 0.0 // unknown stats: always a candidate
     }
   }
 }

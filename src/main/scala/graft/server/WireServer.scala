@@ -590,17 +590,19 @@ final class WireServer(
   }
 
   /** Simple-query cycle: statements split on top-level ';', each with its
-    * own RowDescription + DataRows + CommandComplete. */
+    * own RowDescription + DataRows + CommandComplete. As in pg, the first
+    * ErrorResponse aborts the rest of the query string. */
   private def simpleQuery(out: DataOutputStream, sql: String): Unit = {
     val stmts = splitStatements(sql).map(PgDialect.translate)
     if (stmts.isEmpty) { msg(out, 'I') { _ => () }; return }   // EmptyQueryResponse
-    stmts.foreach { stmt => runStatement(out, stmt, describe = true) }
+    stmts.forall(stmt => runStatement(out, stmt, describe = true))
   }
 
   /** Execute one statement; on success emit (RowDescription +) DataRows +
-    * CommandComplete, on failure one ErrorResponse. */
+    * CommandComplete and return true, on failure one ErrorResponse and
+    * false. */
   private def runStatement(
-      out: DataOutputStream, stmt: String, describe: Boolean): Unit = {
+      out: DataOutputStream, stmt: String, describe: Boolean): Boolean = {
     try {
       // Transaction control: every pg client sends these (psql -1, JDBC
       // autocommit(false)); the engine is auto-commit like the reference,
@@ -614,7 +616,7 @@ final class WireServer(
         case Some(tag) =>
           warnIfRollback(out, tag)
           commandComplete(out, tag)
-          return
+          return true
         case None => ()
       }
       val df = graft.ddl.SqlBridge.execute(spark, stmt)
@@ -634,8 +636,9 @@ final class WireServer(
         }
         commandComplete(out, commandTag(stmt, n))
       }
+      true
     } catch {
-      case NonFatal(e) => sendStatementError(out, e)
+      case NonFatal(e) => sendStatementError(out, e); false
     }
   }
 

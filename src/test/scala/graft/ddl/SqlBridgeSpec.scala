@@ -76,6 +76,27 @@ class SqlBridgeSpec extends SparkTestBase {
     }
   }
 
+  test("a quoted comma in COPY options is a value, not a separator") {
+    assert(SqlBridge.parseOptions(Some("FORMAT csv, DELIMITER ','")) ==
+      Map("format" -> "csv", "delimiter" -> ","))
+    inScratchDb("ref_copy_comma") {
+      SqlBridge.execute(session,
+        "CREATE TABLE PTS ( ID INTEGER NOT NULL, NAME VARCHAR(10), " +
+          "PRIMARY KEY (ID) )")
+      val src = Files.createTempFile("pts-", ".csv")
+      Files.writeString(src, "1,a\n2,b\n")
+      val res = SqlBridge.execute(session,
+        s"COPY pts FROM '$src' (FORMAT csv, DELIMITER ',')")
+      assert(res.collect().head.getLong(0) == 2L)
+      val out = Files.createTempDirectory("copyto-").toString + "/pts_out"
+      SqlBridge.execute(session,
+        s"COPY (SELECT id, name FROM pts) TO '$out' " +
+          "(FORMAT csv, DELIMITER ',')")
+      val back = session.read.text(out).collect().map(_.getString(0)).sorted
+      assert(back.toSeq == Seq("1,a", "2,b"))
+    }
+  }
+
   test("plain SQL passes through untouched") {
     val df = SqlBridge.execute(session, "SELECT 1 + 1 AS two")
     assert(df.collect().head.getInt(0) == 2)

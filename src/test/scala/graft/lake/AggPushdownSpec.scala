@@ -123,6 +123,19 @@ class AggPushdownSpec extends SparkTestBase {
     assert(g2.getLong(0) == 1 && g2.getLong(1) == 4)
   }
 
+  test("pushed MIN/MAX over strings agree with a scan (UTF-8 byte order)") {
+    val root = tmpDir()
+    val ds = LakeDataset.create(spark, root, schema)
+    ds.append(rows((1, "a", 1.0, 1), (2, "\uFFFD", 2.0, 2)))
+    ds.append(rows((3, "b", 3.0, 3), (4, "\uD83D\uDE00", 4.0, 4)))
+    val t = spark.read.format("lake").load(root)
+    val g = t.agg(min("name"), max("name")).head()
+    assert(LakeDataSource.lastScan(root).contains((0, 2)))
+    val scanned = ds.read().agg(min("name"), max("name")).head()
+    assert(g.getString(0) == "a" && g.getString(1) == "\uD83D\uDE00")
+    assert(g == scanned)
+  }
+
   test("count(distinct) and avg are NOT pushed; results stay correct") {
     val (root, _) = fixture()
     val t = spark.read.format("lake").load(root)

@@ -107,7 +107,7 @@ abstract class SchemedLakeSpecBase extends SparkTestBase {
     assert(hits.headOption.contains(1L))
   }
 
-  test(s"chunked manifest over a $schemePrefix root: skip, distribute, slim-resolve") {
+  test(s"chunked manifest over a $schemePrefix root: skip, slim-resolve") {
     spark.conf.set("spark.graft.manifestChunkThreshold", "2")
     spark.conf.set("spark.graft.manifestChunkSize", "2")
     try {
@@ -123,15 +123,6 @@ abstract class SchemedLakeSpecBase extends SparkTestBase {
       val pruned = LakeDataset.openPruned(spark, root, Some("id = 21"))
       assert(pruned.manifest.fragments.size < 6)
       assert(pruned.scanner().withFilter("id = 21").build().count() == 1)
-
-      // distributed pruning: executors read the chunk files by scheme'd URI
-      val driver = ds.pruneFragments(ds.manifest, "id >= 40").map(_.id)
-      val dist =
-        try {
-          spark.conf.set("spark.graft.distributedPruneChunks", "1")
-          ds.pruneFragments(ds.manifest, "id >= 40").map(_.id)
-        } finally spark.conf.unset("spark.graft.distributedPruneChunks")
-      assert(dist.nonEmpty && dist == driver, s"dist=$dist driver=$driver")
 
       // DSv2 table resolution + filtered read over the scheme'd chunked root
       val got = spark.read.format("lake").load(root)

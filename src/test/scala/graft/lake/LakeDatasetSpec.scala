@@ -41,6 +41,29 @@ class LakeDatasetSpec extends SparkTestBase {
     assert(ds.versions == Seq(1L, 2L, 3L))
   }
 
+  test("string zonemaps compare in UTF-8 byte order, as the writers' min/max") {
+    // UTF-16 order puts U+1F600 (a surrogate pair) below U+FFFD; UTF-8 byte
+    // order, which Spark's min/max used for the stats, puts it above
+    val ds = LakeDataset.create(spark, tmpDir(), schema)
+    ds.append(rows((1, "a", 1.0), (2, "\uFFFD", 2.0)).coalesce(1))
+    ds.append(rows((3, "b", 3.0), (4, "\uD83D\uDE00", 4.0)).coalesce(1))
+    assert(ds.prunedFileCount("name >= '\uFFFD'") == 2)
+    assert(ds.countRows(Some("name >= '\uFFFD'")) == 2)
+  }
+
+  test("a literal the engine compares in another type prunes nothing") {
+    // id < 10.5 compares as decimal in the engine; as `id < 10` it would
+    // skip the fragment holding 10. name = 5 casts name to INT; as
+    // name = '5' it would skip the fragment holding '05'
+    val ds = LakeDataset.create(spark, tmpDir(), schema)
+    ds.append(rows((1, "05", 1.0), (2, "06", 2.0)).coalesce(1))
+    ds.append(rows((10, "7", 10.0), (11, "8", 11.0)).coalesce(1))
+    assert(ds.countRows(Some("id < 10.5")) == 3)
+    assert(ds.countRows(Some("id > 1.5")) == 3)
+    assert(ds.countRows(Some("name = 5")) == 1)
+    assert(ds.prunedFileCount("id < 5") == 1)
+  }
+
   test("delete is copy-on-write and only rewrites matching fragments") {
     val ds = LakeDataset.create(spark, tmpDir(), schema)
     ds.append(rows((1, "a", 1.0), (2, "b", 2.0)))

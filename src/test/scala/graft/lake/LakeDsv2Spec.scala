@@ -96,6 +96,19 @@ class LakeDsv2Spec extends SparkTestBase {
     assert(LakeDataSource.lastScan(root).contains((2, 2)))
   }
 
+  test("a pushed string equality keeps the fragment holding the value") {
+    // the fragment's max is U+1F600 by UTF-8 byte order; U+FFFD lies inside
+    // its range only in that order
+    val root = tmpDir()
+    rows((1, "a", 1.0), (2, "\uFFFD", 2.0), (3, "\uD83D\uDE00", 3.0))
+      .coalesce(1).write.format("lake").mode("append").save(root)
+    val t = spark.read.format("lake").load(root)
+    assert(t.filter(col("name") === "\uFFFD").count() == 1)
+    assert(LakeDataSource.lastScan(root).contains((1, 1)))
+    assert(LakeDataset.open(spark, root)
+      .prunedFileCount("name = '\uFFFD'") == 1)
+  }
+
   test("manifest statistics drive broadcast join planning") {
     val root = tmpDir()
     val ds = LakeDataset.create(spark, root, schema)

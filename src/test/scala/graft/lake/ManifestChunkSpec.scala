@@ -211,29 +211,26 @@ class ManifestChunkSpec extends SparkTestBase {
     }
   }
 
-  test("distributed pruning matches the driver loop exactly") {
+  test("chunk skipping folds and probes string bounds in UTF-8 order") {
     withChunking(threshold = 2, size = 2) {
-      val ds = newDs()
-      (0 until 6).foreach(i => appendBatch(ds, i * 10 until i * 10 + 10))
-      val preds = Seq(
-        "id = 25", "id >= 40 AND id < 45", "id < 0", "v >= 300",
-        "id IN (5, 35, 55)", "id IS NOT NULL", "v IS NULL",
-        "id >= 10 AND id <= 19 AND v = 150")
-      preds.foreach { p =>
-        val driver = ds.pruneFragments(ds.manifest, p).map(_.id)
-        val dist =
-          try {
-            spark.conf.set("spark.graft.distributedPruneChunks", "1")
-            ds.pruneFragments(ds.manifest, p).map(_.id)
-          } finally spark.conf.unset("spark.graft.distributedPruneChunks")
-        assert(dist == driver, s"predicate '$p': dist=$dist driver=$driver")
+      val strSchema = StructType(Seq(
+        StructField("id", LongType, nullable = false),
+        StructField("s", StringType)))
+      val ds = LakeDataset.create(spark,
+        Files.createTempDirectory("lake-chunks-").toString, strSchema)
+      import spark.implicits._
+      // U+E000 and U+FFFD sort above U+1F600 in UTF-16 but below it in
+      // UTF-8, the order of the writers' min/max
+      Seq(Seq(1L -> "\uE000", 2L -> "\uD83D\uDE00"), Seq(3L -> "\uFFFD"),
+          Seq(4L -> "a"), Seq(5L -> "b")).foreach { batch =>
+        ds.append(batch.toDF("id", "s").coalesce(1))
       }
-      // and the data answer through the distributed path stays right
-      try {
-        spark.conf.set("spark.graft.distributedPruneChunks", "1")
-        assert(ds.scanner().withFilter("id IN (5, 35, 55)").build()
-          .collect().map(_.getLong(0)).sorted.toSeq == Seq(5L, 35L, 55L))
-      } finally spark.conf.unset("spark.graft.distributedPruneChunks")
+      assert(ds.manifest.chunkFiles.size > 1)
+      val pruned = LakeDataset.openPruned(spark, ds.root,
+        Some("s = '\uD83D\uDE00'"))
+      assert(pruned.manifest.fragments.size < 4, "other chunks skip")
+      assert(pruned.scanner().withFilter("s = '\uD83D\uDE00'").build()
+        .select("id").collect().map(_.getLong(0)).toSeq == Seq(2L))
     }
   }
 

@@ -114,6 +114,23 @@ class WireServerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("a failing statement aborts the rest of its simple Query") {
+    withServer { conn =>
+      conn.query("CREATE DATABASE IF NOT EXISTS wire_abort")
+      try {
+        conn.query("USE wire_abort")
+        conn.query("CREATE TABLE probe_t (x INT) USING parquet")
+        intercept[WireClient.ServerError] {
+          conn.query(
+            "SELECT nope_col FROM probe_t; INSERT INTO probe_t VALUES (1)")
+        }
+        assert(conn.query("SELECT count(*) AS c FROM probe_t").head
+          .rows.head.head.get == "0")
+      } finally conn.query(
+        "USE default; DROP DATABASE IF EXISTS wire_abort CASCADE")
+    }
+  }
+
   test("empty query yields no results and stays ready") {
     withServer { conn =>
       assert(conn.query("   ").isEmpty)
