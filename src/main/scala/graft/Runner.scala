@@ -10,8 +10,10 @@ import java.nio.file.{Files, Paths}
   *   runMain graft.Runner <sfDir> <file.sql> [more.sql ...] [--out <dir>]
   * }}}
   *
-  * Each file may hold multiple `;`-separated statements; the last statement's
-  * result is shown (and written as parquet under --out/<basename>). */
+  * Each file may hold multiple `;`-separated statements, split by
+  * [[graft.ddl.PgText]] (a `;` in a literal or a comment splits nothing);
+  * the last statement's result is shown (and written as parquet under
+  * --out/<basename>). */
 object Runner {
   def main(args: Array[String]): Unit = {
     val (outDir, files0) = args.toSeq.drop(1) match {
@@ -25,8 +27,7 @@ object Runner {
     val spark = GraftSession.local()
     Tables.register(spark, sfDir)
     files0.foreach { f =>
-      val stmts = Files.readString(Paths.get(f))
-        .split(";").map(_.trim).filter(_.nonEmpty)
+      val stmts = graft.ddl.PgText.statements(Files.readString(Paths.get(f)))
       val results = stmts.map(graft.ddl.SqlBridge.execute(spark, _))
       val last = results.last
       println(s"== $f ==")

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * and pg-style `COPY <table|(query)> FROM/TO '<path>' [WITH] (options)`
   * (builder_dml.go:325-469). Everything else passes through `spark.sql`
   * untouched — this is the "tiny SQL-preprocess shim" SURVEY §7.1 allows,
-  * not a parser: a paren-depth splitter plus two anchored patterns.
+  * not a parser: [[PgText]]'s splitter plus two anchored patterns.
   *
   * [[graft.server.WireServer]] and [[graft.Runner]] route statements here,
   * so the reference's ddl.sql runs byte-for-byte through the wire. */
@@ -27,7 +27,7 @@ object SqlBridge {
     * statement's result frame (empty for DDL; a 1-row count for COPY). */
   def execute(spark: SparkSession, stmt: String): DataFrame = stmt match {
     case CreateTableRe(_, name, body) if hasConstraintSyntax(body) =>
-      val (schema, pk) = parseColumns(stripBlockComments(body))
+      val (schema, pk) = parseColumns(PgText.stripComments(body))
       Engine.createTable(spark, name, schema, pk)
       spark.emptyDataFrame
     case CopyFromRe(table, path, opts) =>
@@ -73,19 +73,16 @@ object SqlBridge {
 
   /** Inline constraints Spark's parser rejects for file-source tables. */
   private def hasConstraintSyntax(body: String): Boolean = {
-    val b = stripBlockComments(body).toUpperCase
+    val b = PgText.stripComments(body).toUpperCase
     b.contains("PRIMARY KEY") || b.contains("NOT NULL")
   }
-
-  private def stripBlockComments(s: String): String =
-    s.replaceAll("(?s)/\\*.*?\\*/", "")
 
   /** Split `body` at top-level commas into column defs + PRIMARY KEY
     * entries; NOT NULL marks nullable=false; types go through Spark's own
     * DDL type parser (VARCHAR(n)/CHAR(n)/DECIMAL(p,s)/INTEGER/... all
     * native). */
   private[ddl] def parseColumns(body: String): (StructType, Seq[String]) = {
-    val parts = splitTopLevel(body)
+    val parts = PgText.split(body, ',').filter(_.trim.nonEmpty)
     val pk = scala.collection.mutable.ArrayBuffer.empty[String]
     val fields = parts.flatMap { p0 =>
       val p = p0.trim
@@ -112,36 +109,13 @@ object SqlBridge {
     (StructType(fields), pk.toSeq)
   }
 
-  /** Split at commas outside parentheses and '…' literals ('' escapes a
-    * quote: the literal closes and reopens). */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var quoted = false
-    s.foreach { c =>
-      c match {
-        case '\'' => quoted = !quoted
-        case '(' if !quoted => depth += 1
-        case ')' if !quoted => depth -= 1
-        case _ => ()
-      }
-      if (c == ',' && depth == 0 && !quoted) {
-        if (cur.nonEmpty) out += cur.toString
-        cur.clear()
-      } else cur.append(c)
-    }
-    if (cur.toString.trim.nonEmpty) out += cur.toString
-    out.result()
-  }
-
   /** pg COPY option list: `FORMAT csv, DELIMITER '|', HEADER` →
     * reader options (lower-cased keys; bare flags become "true"). */
   private[ddl] def parseOptions(opts: Option[String]): Map[String, String] =
     opts.filter(_ != null).map(_.trim).filter(_.nonEmpty) match {
       case None => Map.empty
       case Some(s) =>
-        splitTopLevel(s).map { kv =>
+        PgText.split(s, ',').filter(_.trim.nonEmpty).map { kv =>
           kv.trim.split("\\s+", 2) match {
             case Array(k) => k.toLowerCase -> "true"
             case Array(k, v) =>

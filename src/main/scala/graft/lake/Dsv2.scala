@@ -540,18 +540,19 @@ private[lake] object LakeAggPushdown {
   * None and simply don't prune. */
 private[lake] object LakeFilters {
 
+  /** A filter value as Spark SQL text, by Spark's own `Literal.sql`: it
+    * escapes quotes and backslashes and types every temporal value. A
+    * FLOAT renders as a cast, which the zonemaps do not read, so it goes
+    * as the DOUBLE of the same value. A value no literal holds (a struct,
+    * array or map) is not pushed. */
   private def lit(v: Any): Option[String] = v match {
-    case s: String => Some("'" + s.replace("'", "''") + "'")
-    case u: org.apache.spark.unsafe.types.UTF8String =>
-      Some("'" + u.toString.replace("'", "''") + "'")
-    case t: java.sql.Timestamp => Some(s"TIMESTAMP '$t'")
-    case t: java.time.Instant =>
-      Some(s"TIMESTAMP '${java.sql.Timestamp.from(t)}'")
-    case d: java.sql.Date => Some(s"DATE '$d'")
-    case d: java.time.LocalDate => Some(s"DATE '$d'")
-    case n: java.lang.Number => Some(n.toString)
-    case b: java.lang.Boolean => Some(b.toString)
-    case _ => None
+    case f: java.lang.Float => lit(f.toDouble)
+    case _ =>
+      try Some(org.apache.spark.sql.catalyst.expressions.Literal.create(v).sql)
+      catch {
+        case e: org.apache.spark.SparkThrowable
+            if e.getCondition == "UNSUPPORTED_FEATURE.LITERAL_TYPE" => None
+      }
   }
 
   def toSql(f: Filter): Option[String] = f match {

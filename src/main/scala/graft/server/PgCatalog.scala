@@ -5,7 +5,7 @@ import java.util.OptionalLong
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{FunctionCatalog, Identifier, SupportsRead, Table, TableCapability, TableCatalog, TableChange}
@@ -285,7 +285,8 @@ object PgCatalog {
       .map(_.table).distinct.sorted
     names.flatMap { n =>
       try Some(n -> s.table(n).schema)
-      catch { case _: Exception => None }
+      // a temp view over a dropped table no longer analyzes: left out
+      catch { case _: AnalysisException => None }
     }
   }
 

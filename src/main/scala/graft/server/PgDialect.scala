@@ -1,11 +1,19 @@
 package graft.server
 
+import org.apache.spark.sql.internal.SQLConf
+
+import graft.ddl.PgText
+
 /** Text-level Postgres-isms → Spark SQL, applied to every statement that
   * arrives over the wire (the wire door speaks pg dialect end to end —
   * same posture as SqlBridge's COPY handling). Handles exactly the forms
   * real clients emit, most importantly psql's catalog introspection:
   *
   *   - `"ident"`                    → `` `ident` ``   (pg quoting)
+  *   - `'C:\x'`                     → `'C:\\x'`   (a standard string takes
+  *     no backslash escapes; Spark's do, so each backslash is doubled)
+  *   - `E'…'`                       → `'…'`   (Spark's strings already
+  *     take backslash escapes)
   *   - `a OPERATOR(pg_catalog.~) b` → `a RLIKE b`
   *   - `a ~ b` / `a !~ b`           → `a RLIKE b` / `NOT (a RLIKE b)`
   *     (binary regex-match only: `~` after an operand; unary bitwise-not
@@ -13,12 +21,14 @@ package graft.server
   *   - `expr::type`                 → `CAST(expr AS t)` for mappable types,
   *     cast dropped for pg-internal ones (regclass/regtype/…)
   *   - `COLLATE pg_catalog.default` → removed
+  *   - `array(SELECT …)`            → `array((SELECT …))`
   *   - `x = ANY(arr)`               → `array_contains(arr, x)` is NOT
   *     rewritten here — Spark's `= ANY` subquery form differs; psql's one
   *     use rides on an empty table and is rewritten by the targeted rule.
   *
-  * String literals (with '' escapes), dollar-quoted bodies, `--` and
-  * `/* */` comments pass through untouched.
+  * Every pass walks the regions of [[graft.ddl.PgText]], so nothing inside
+  * a literal, a quoted identifier, a dollar-quoted body or a comment is
+  * ever rewritten as code.
   */
 object PgDialect {
 
@@ -61,71 +71,26 @@ object PgDialect {
       case _ => None // regclass, regtype, regproc, regnamespace, ...
     }
 
-  /** If `sql(start)` opens a passthrough region — a string literal (with
-    * '' escapes), a `--` comment, a block comment, or a dollar-quoted
-    * `$tag$…$tag$` body — copy it verbatim to `out` and return the index
-    * past the region; otherwise -1. Shared by [[wrapArraySubqueries]] and
-    * [[translateBody]] so BOTH passes skip the same regions: an
-    * `array(select`, `::`, `"`, or `~` inside a comment or dollar-quoted
-    * body must never be rewritten. `$1` parameter markers are not
-    * dollar-quote tags (a tag cannot start with a digit) and fall through
-    * untouched for WireServer's quote-aware rewriteParams. */
-  private def copyRegion(sql: String, start: Int, out: StringBuilder): Int = {
-    val n = sql.length
-    sql(start) match {
-      case '\'' =>
-        var i = start + 1
-        out += '\''
-        var done = false
-        while (i < n && !done) {
-          out += sql(i)
-          if (sql(i) == '\'') {
-            if (i + 1 < n && sql(i + 1) == '\'') { out += '\''; i += 1 }
-            else done = true
-          }
-          i += 1
-        }
-        i
-      case '-' if start + 1 < n && sql(start + 1) == '-' =>
-        var i = start
-        while (i < n && sql(i) != '\n') { out += sql(i); i += 1 }
-        i
-      case '/' if start + 1 < n && sql(start + 1) == '*' =>
-        var i = start + 2
-        out.append("/*")
-        while (i < n && !(sql(i) == '*' && i + 1 < n && sql(i + 1) == '/')) {
-          out += sql(i); i += 1
-        }
-        if (i < n) { out.append("*/"); i += 2 }
-        i
-      case '$' =>
-        var j = start + 1
-        while (j < n && (sql(j).isLetterOrDigit || sql(j) == '_')) j += 1
-        val validTag = j < n && sql(j) == '$' &&
-          (j == start + 1 || !sql(start + 1).isDigit)
-        if (!validTag) -1
-        else {
-          val tag = sql.substring(start, j + 1)
-          val close = sql.indexOf(tag, j + 1)
-          val stop = if (close < 0) n else close + tag.length
-          out.append(sql.substring(start, stop))
-          stop
-        }
-      case _ => -1
-    }
-  }
+  /** pg SQL → Spark SQL; `$n` parameter markers stay as written. */
+  def translate(sql: String): String = translated(sql, markers = false)._1
 
-  def translate(sql: String): String = {
+  /** [[translate]], with each `$n` parameter marker in code rewritten to
+    * Spark's named marker `:pn`; also the highest n, the parameter count a
+    * Parse message declares. */
+  def translateParams(sql: String): (String, Int) =
+    translated(sql, markers = true)
+
+  private def translated(sql: String, markers: Boolean): (String, Int) = {
     // COPY rides SqlBridge's own pg-COPY parser untouched
     if (sql.dropWhile(_.isWhitespace).take(5).equalsIgnoreCase("COPY "))
-      return sql
+      return (sql, 0)
     // Logical-replication probes lean on pg-only constructs
     // (int2[] casts, generate_series/array_upper in FROM) that no Spark
     // rewrite can honor. Publications are empty by fiat here, so the
     // correct answer is always zero rows with the probed column count.
     if (sql.contains("pg_catalog.pg_publication"))
-      return "SELECT NULL AS pubname, NULL AS prqual, NULL AS prattrs " +
-        "WHERE 1 = 0"
+      return ("SELECT NULL AS pubname, NULL AS prqual, NULL AS prattrs " +
+        "WHERE 1 = 0", 0)
     // psql \d+'s toast-options fragment builds an array from a correlated
     // table function (pg_catalog.unnest in FROM) — inexpressible in Spark,
     // and reloptions is always NULL here, so the fragment IS NULL.
@@ -135,18 +100,22 @@ object PgDialect {
       if (sql.contains(toastFragment))
         sql.replace(toastFragment, "CAST(NULL AS ARRAY<STRING>)")
       else sql
-    // `SHOW <guc>` — answered for the settings pg clients read at connect
-    // (JDBC: transaction isolation; psql: server_version). Spark's own
-    // SHOW TABLES/DATABASES/… forms pass through untouched.
+    // `SHOW <guc>` — answered from [[settings]] for the settings pg clients
+    // read. Spark's own SHOW TABLES/DATABASES/… forms pass through
+    // untouched.
     val trimmed = sql0.trim.stripSuffix(";").trim
     if (trimmed.length >= 5 && trimmed.take(5).equalsIgnoreCase("SHOW ")) {
-      val guc = trimmed.drop(5).trim.toLowerCase.replaceAll("\\s+", " ")
-      gucAnswers.get(guc) match {
-        case Some((col, v)) => return s"SELECT '$v' AS $col"
+      val guc = trimmed.drop(5).trim.replaceAll("\\s+", " ") match {
+        case g if g.equalsIgnoreCase("transaction isolation level") =>
+          "transaction_isolation"
+        case g => g
+      }
+      settings(SQLConf.get).find(_._1.equalsIgnoreCase(guc)) match {
+        case Some((col, v)) => return (s"SELECT '$v' AS $col", 0)
         case None => ()
       }
     }
-    translateBody(wrapArraySubqueries(translateDdlTypes(sql0)))
+    translateBody(translateDdlTypes(sql0), markers)
   }
 
   /** pg column types in `CREATE TABLE` → Spark DDL types (`TEXT`,
@@ -168,52 +137,15 @@ object PgDialect {
     }
     val head = "(?is)^\\s*create\\s+(?:temp(?:orary)?\\s+)?table\\s+".r
     if (head.findFirstIn(sql).isEmpty) return sql
-    val open = sql.indexOf('(')
-    if (open < 0) return sql
-    // CTAS: the paren group is a query, not a column list
-    if ("(?is)\\bas\\s*$".r
-        .findFirstIn(sql.substring(0, open)).isDefined) return sql
-    // find the matching close paren of the column list (quote-aware)
-    var depth = 0; var i = open; var close = -1
-    while (i < sql.length && close < 0) {
-      sql.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) close = i
-        case '\'' => // skip string literal
-          i += 1
-          while (i < sql.length && sql.charAt(i) != '\'') i += 1
-        case '"' => // skip quoted identifier
-          i += 1
-          while (i < sql.length && sql.charAt(i) != '"') i += 1
-        case _ => ()
-      }
-      i += 1
+    PgText.parenGroup(sql) match {
+      // CTAS: the paren group is a query, not a column list
+      case Some((open, close))
+          if "(?is)\\bas\\s*$".r.findFirstIn(sql.substring(0, open)).isEmpty =>
+        val segs = PgText.split(sql.substring(open + 1, close), ',')
+        sql.substring(0, open + 1) + segs.map(rewriteColumnSeg).mkString(",") +
+          sql.substring(close)
+      case _ => sql
     }
-    if (close < 0) return sql
-    val body = sql.substring(open + 1, close)
-    // split top-level commas — quote-aware like the close-paren scan
-    // above: a paren or comma inside a string DEFAULT ('(' …) or a quoted
-    // identifier must not desync the depth counter
-    val segs = scala.collection.mutable.ArrayBuffer.empty[String]
-    var d = 0; var start = 0; var j = 0
-    while (j < body.length) {
-      body.charAt(j) match {
-        case '(' => d += 1
-        case ')' => d -= 1
-        case '\'' =>
-          j += 1
-          while (j < body.length && body.charAt(j) != '\'') j += 1
-        case '"' =>
-          j += 1
-          while (j < body.length && body.charAt(j) != '"') j += 1
-        case ',' if d == 0 => segs += body.substring(start, j); start = j + 1
-        case _ => ()
-      }
-      j += 1
-    }
-    segs += body.substring(start)
-    sql.substring(0, open + 1) + segs.map(rewriteColumnSeg).mkString(",") +
-      sql.substring(close)
   }
 
   private val constraintHeads = Set("primary", "unique", "check",
@@ -247,70 +179,44 @@ object PgDialect {
     }
   }
 
-  /** pg GUCs answered at the wire door; values mirror the startup-packet
-    * ParameterStatus fields where one exists. */
-  private val gucAnswers: Map[String, (String, String)] = Map(
-    "transaction isolation level" ->
-      ("transaction_isolation", "read committed"),
-    "transaction_isolation" -> ("transaction_isolation", "read committed"),
-    "server_version" -> ("server_version", "15.0"),
-    "server_encoding" -> ("server_encoding", "UTF8"),
-    "client_encoding" -> ("client_encoding", "UTF8"),
-    "datestyle" -> ("DateStyle", "ISO, MDY"),
-    "timezone" -> ("TimeZone", "UTC"),
-    "standard_conforming_strings" ->
-      ("standard_conforming_strings", "on"),
-    "search_path" -> ("search_path", "public"),
-    "application_name" -> ("application_name", ""),
-    "max_identifier_length" -> ("max_identifier_length", "63"))
+  /** The settings a connection reports in ParameterStatus at startup, and
+    * what `SHOW` answers for each. psql picks its catalog SQL by
+    * server_version; libpq and JDBC quote literals by
+    * standard_conforming_strings. The server reads and writes UTF-8 only,
+    * whatever encoding a client asks for. */
+  private[server] def reported(conf: SQLConf): Seq[(String, String)] = Seq(
+    "server_version" -> "16.0 (graft)",
+    "server_encoding" -> "UTF8",
+    "client_encoding" -> "UTF8",
+    "DateStyle" -> "ISO, YMD",
+    "TimeZone" -> conf.sessionLocalTimeZone,
+    "integer_datetimes" -> "on",
+    "standard_conforming_strings" -> "on")
 
-  /** `array(SELECT …)` (pg array-from-subquery) → `array((SELECT …))`: a
-    * Spark scalar subquery inside the array constructor. psql only builds
-    * arrays from always-empty catalog relations, so the ≤1-row scalar
-    * contract can't be violated at runtime. Quotes respected; parens
-    * balanced through nesting. */
-  private def wrapArraySubqueries(sql: String): String = {
-    val out = new StringBuilder(sql.length + 8)
-    var i = 0
-    val n = sql.length
-    while (i < n) {
-      val r = copyRegion(sql, i, out)
-      val c = sql(i)
-      if (r >= 0) { i = r }
-      else if ((c == 'a' || c == 'A') &&
-          sql.regionMatches(true, i, "array", 0, 5) &&
-          (i == 0 || !(sql(i - 1).isLetterOrDigit || sql(i - 1) == '_'))) {
-        var j = i + 5
-        while (j < n && sql(j).isWhitespace) j += 1
-        var k = if (j < n && sql(j) == '(') j + 1 else -1
-        while (k > 0 && k < n && sql(k).isWhitespace) k += 1
-        if (k > 0 && sql.regionMatches(true, k, "select", 0, 6)) {
-          // copy "array(", open the extra paren, then find the close
-          out.append(sql.substring(i, j + 1)).append('(')
-          i = j + 1
-          var depth = 1
-          while (i < n && depth > 0) {
-            val r2 = copyRegion(sql, i, out)
-            if (r2 >= 0) { i = r2 }
-            else sql(i) match {
-              case '(' => depth += 1; out += '('; i += 1
-              case ')' =>
-                depth -= 1
-                if (depth == 0) { out += ')' } // extra close BEFORE array's
-                out += ')'; i += 1
-              case ch => out += ch; i += 1
-            }
-          }
-        } else { out += c; i += 1 }
-      } else { out += c; i += 1 }
-    }
-    out.toString
-  }
+  /** Every setting `SHOW` answers: the reported ones and a few more that
+    * clients read (JDBC: transaction isolation). */
+  private def settings(conf: SQLConf): Seq[(String, String)] =
+    reported(conf) ++ Seq(
+      "transaction_isolation" -> "read committed",
+      "search_path" -> "public",
+      "application_name" -> "",
+      "max_identifier_length" -> "63")
 
-  private def translateBody(sql: String): String = {
+  /** One walk over the regions of `sql`: each non-code region is written
+    * in Spark's terms, and code is rewritten arm by arm. */
+  private def translateBody(sql: String, markers: Boolean): (String, Int) = {
     val out = new StringBuilder(sql.length + 16)
     var i = 0
     val n = sql.length
+    var params = 0
+    // [atomStart, atomEnd) of `out`: the last region or `$n` marker written;
+    // a `::` cast right after it binds to all of it
+    var atomStart = -1
+    var atomEnd = -1
+    // parenthesis depth in code, and the depths at which an `array((`
+    // wrap takes its extra `)`
+    var depth = 0
+    var wraps = List.empty[Int]
 
     def isIdentChar(c: Char) =
       c.isLetterOrDigit || c == '_' || c == '$' || c == '.'
@@ -330,12 +236,14 @@ object PgDialect {
         out.substring(j + 1, e + 1).toLowerCase)
     }
 
-    /** Start index in `out` of the operand that `::` binds to: a paren
-      * group, a quoted string, a backtick identifier, or a plain
-      * (possibly dotted) identifier/number — whichever ends at out.end. */
+    /** Start index in `out` of the operand that `::` binds to: a literal,
+      * identifier or marker just written, a paren group, a backtick
+      * identifier, or a plain (possibly dotted) identifier/number —
+      * whichever ends at out.end. */
     def operandStart: Int = {
       var j = out.length - 1
       if (j < 0) return 0
+      if (atomEnd == out.length) return atomStart
       out(j) match {
         case ')' =>
           var depth = 0
@@ -343,16 +251,6 @@ object PgDialect {
             if (out(j) == ')') depth += 1
             else if (out(j) == '(') { depth -= 1; if (depth == 0) return j }
             j -= 1
-          }
-          0
-        case '\'' =>
-          j -= 1
-          while (j >= 0) {
-            if (out(j) == '\'') {
-              // '' escape: keep scanning if the char before is also a quote
-              if (j > 0 && out(j - 1) == '\'') j -= 2
-              else return j
-            } else j -= 1
           }
           0
         case '`' =>
@@ -367,37 +265,36 @@ object PgDialect {
     }
 
     while (i < n) {
-      // pass-through regions (strings, comments, dollar-quoted bodies) —
-      // shared with wrapArraySubqueries via copyRegion
-      val region = copyRegion(sql, i, out)
-      if (region >= 0) { i = region }
-      else {
+      val region = PgText.regionAt(sql, i)
       val c = sql(i)
-      c match {
-        // ---- E'…' escape-string → plain literal (Spark's default string
-        // parsing already honors backslash escapes) -----------------------
-        case 'E' | 'e' if i + 1 < n && sql(i + 1) == '\'' &&
-            (i == 0 || !isIdentChar(sql(i - 1))) =>
-          out += '\''; i += 2
-          var done = false
-          while (i < n && !done) {
-            out += sql(i)
-            if (sql(i) == '\\' && i + 1 < n) { out += sql(i + 1); i += 1 }
-            else if (sql(i) == '\'') {
-              if (i + 1 < n && sql(i + 1) == '\'') { out += '\''; i += 1 }
-              else done = true
-            }
-            i += 1
-          }
-
-        // ---- pg double-quoted identifier → backticks -------------------
-        case '"' =>
-          out += '`'; i += 1
-          while (i < n && sql(i) != '"') {
-            if (sql(i) == '`') out += '`' // defensive; pg idents rarely
-            out += sql(i); i += 1
-          }
-          out += '`'; i += 1
+      if (region.kind != PgText.Code) {
+        val start = out.length
+        region.kind match {
+          case PgText.Str =>
+            out.append(sql.substring(i, region.end).replace("\\", "\\\\"))
+          case PgText.EscStr => out.append(sql.substring(i + 1, region.end))
+          case PgText.Ident =>
+            out += '`'
+            out.append(PgText.identName(sql, region).replace("`", "``"))
+            out += '`'
+          case _ => out.append(sql.substring(i, region.end))
+        }
+        if (region.kind != PgText.Comment) {
+          atomStart = start; atomEnd = out.length
+        }
+        i = region.end
+      } else c match {
+        // ---- $n parameter marker → :pn ---------------------------------
+        case '$' if markers && i + 1 < n && sql(i + 1).isDigit &&
+            !PgText.continuesWord(sql, i) =>
+          var j = i + 1
+          while (j < n && sql(j).isDigit) j += 1
+          val idx = sql.substring(i + 1, j).toInt
+          params = math.max(params, idx)
+          atomStart = out.length
+          out.append(":p").append(idx)
+          atomEnd = out.length
+          i = j
 
         // ---- :: cast ----------------------------------------------------
         case ':' if i + 1 < n && sql(i + 1) == ':' =>
@@ -405,11 +302,9 @@ object PgDialect {
           // type name: bare/qualified ident, or a quoted name (::"char")
           val bare =
             if (i < n && sql(i) == '"') {
-              val q0 = i + 1
-              i += 1; while (i < n && sql(i) != '"') i += 1
-              val name = sql.substring(q0, i)
-              if (i < n) i += 1
-              name
+              val q = PgText.regionAt(sql, i)
+              i = q.end
+              PgText.identName(sql, q)
             } else {
               val t0 = i
               while (i < n && (sql(i).isLetterOrDigit || sql(i) == '_' ||
@@ -497,12 +392,37 @@ object PgDialect {
             (i == 0 || !isIdentChar(sql(i - 1))) =>
           i += 7
           while (i < n && sql(i).isWhitespace) i += 1
-          if (i < n && sql(i) == '"') {
-            i += 1; while (i < n && sql(i) != '"') i += 1; i += 1
-          } else {
+          if (i < n && sql(i) == '"') i = PgText.regionAt(sql, i).end
+          else {
             while (i < n && (sql(i).isLetterOrDigit || sql(i) == '_' ||
               sql(i) == '.')) i += 1
           }
+
+        // ---- array(SELECT …) → array((SELECT …)) ----------------------
+        // A Spark scalar subquery inside the array constructor. psql only
+        // builds arrays from always-empty catalog relations, so the ≤1-row
+        // scalar contract can't be violated at runtime.
+        case 'a' | 'A' if sql.regionMatches(true, i, "array", 0, 5) &&
+            !PgText.continuesWord(sql, i) && {
+          var j = i + 5
+          while (j < n && sql(j).isWhitespace) j += 1
+          j < n && sql(j) == '(' && {
+            var k = j + 1
+            while (k < n && sql(k).isWhitespace) k += 1
+            sql.regionMatches(true, k, "select", 0, 6)
+          }
+        } =>
+          val open = sql.indexOf('(', i)
+          out.append(sql.substring(i, open)).append("((")
+          depth += 1
+          wraps = depth :: wraps
+          i = open + 1
+        case '(' => depth += 1; out += c; i += 1
+        case ')' =>
+          if (wraps.headOption.contains(depth)) {
+            out += ')'; wraps = wraps.tail
+          }
+          depth -= 1; out += c; i += 1
 
         // ---- `= ANY(x)` → `IN (x)` --------------------------------------
         // Plain equality only (`>= ANY` etc. keep comparison semantics),
@@ -551,8 +471,7 @@ object PgDialect {
         case _ =>
           out += c; i += 1
       }
-      }
     }
-    out.toString
+    (out.toString, params)
   }
 }

@@ -15,6 +15,8 @@ import org.apache.spark.sql.catalyst.plans.logical.Command
 import org.apache.spark.sql.execution.CommandExecutionMode
 import org.apache.spark.sql.types._
 
+import graft.ddl.PgText
+
 /** PostgreSQL wire-protocol (v3) server over Spark SQL.
   *
   * Capability parity with the reference's `plandb` binary, which serves
@@ -28,8 +30,9 @@ import org.apache.spark.sql.types._
   * SSL/GSS negotiation (refused with 'N'), trust auth, the simple query
   * cycle ('Q' → RowDescription, DataRows, CommandComplete, ReadyForQuery),
   * and the extended cycle (Parse/Bind/Describe/Execute/Close/Flush/Sync)
-  * with parameter binding: `$n` placeholders are rewritten (quote-aware)
-  * to Spark named parameter markers and bound through the public
+  * with parameter binding: `$n` placeholders in code are rewritten
+  * ([[PgDialect.translateParams]]) to Spark named parameter markers and
+  * bound through the public
   * `spark.sql(sqlText, args)` API, so a bound value is a typed literal in
   * the plan — never string-spliced into the query text. Text-format
   * parameters cover the OIDs the reference's type system exercises
@@ -149,14 +152,9 @@ final class WireServer(
     if (!authenticate(in, out, params.getOrElse("user", ""))) {
       out.flush(); return
     }
-    paramStatus(out, "server_version", "16.0 (graft)")
-    paramStatus(out, "server_encoding", "UTF8")
-    paramStatus(out, "client_encoding",
-      params.getOrElse("client_encoding", "UTF8"))
-    paramStatus(out, "DateStyle", "ISO, YMD")
-    paramStatus(out, "TimeZone",
-      spark.sessionState.conf.sessionLocalTimeZone)
-    paramStatus(out, "integer_datetimes", "on")
+    PgDialect.reported(spark.sessionState.conf).foreach { case (k, v) =>
+      msg(out, 'S') { b => writeCString(b, k); writeCString(b, v) }
+    }
     val pid = pidGen.incrementAndGet()
     val secret = rnd.nextInt()
     val jobGroup = s"graft-wire-$pid"
@@ -345,7 +343,7 @@ final class WireServer(
           val (query, p2) = cString(body, p1)
           val nOids = readShort(body, p2)
           val oids = Vector.tabulate(nOids)(i => readInt(body, p2 + 2 + i * 4))
-          val (rewritten, nParams) = rewriteParams(PgDialect.translate(query))
+          val (rewritten, nParams) = PgDialect.translateParams(query)
           // pg allows declaring fewer oids than $n markers; pad unknowns
           val padded = oids.padTo(nParams, 0)
           statements(name) = Prepared(rewritten, padded)
@@ -534,10 +532,11 @@ final class WireServer(
     }
   }
 
-  /** Extended-protocol Execute: stream up to `maxRows` (0 = all) rows off
-    * the portal's iterator; PortalSuspended if the limit hit with rows
+  /** Execute, for both protocols: stream up to `maxRows` (0 = all) rows
+    * off the portal's iterator; PortalSuspended if the limit hit with rows
     * remaining, CommandComplete when drained. Returns false when an error
-    * was sent (the caller enters skip-until-Sync). */
+    * was sent (an extended cycle then skips until Sync; a simple Query
+    * stops). */
   private def executePortal(
       out: DataOutputStream, p: Portal, maxRows: Int): Boolean = {
     try {
@@ -547,9 +546,15 @@ final class WireServer(
       }
       txnTag(p.sql) match {
         case Some(tag) =>
-          // transaction control is a tagged no-op (auto-commit engine);
-          // ROLLBACK warns like stock pg outside a transaction — see the
-          // simple-query path for the rationale
+          // Transaction control: every pg client sends these (psql -1,
+          // JDBC autocommit(false)); the engine is auto-commit like the
+          // reference, so BEGIN/COMMIT are no-ops acknowledged with the
+          // exact pg command tag. ROLLBACK additionally carries pg's own
+          // outside-a-transaction WARNING (25P01) so a client that wrote
+          // "inside" a transaction and rolled back cannot believe the
+          // already-persisted writes were undone — exactly what stock pg
+          // emits for ROLLBACK with no open transaction, which is the
+          // truthful description of this engine.
           warnIfRollback(out, tag)
           p.completedTag = tag
           commandComplete(out, p.completedTag); return true
@@ -589,56 +594,22 @@ final class WireServer(
     }
   }
 
-  /** Simple-query cycle: statements split on top-level ';', each with its
-    * own RowDescription + DataRows + CommandComplete. As in pg, the first
-    * ErrorResponse aborts the rest of the query string. */
+  /** Simple-query cycle: the protocol defines a simple Query as an
+    * unnamed portal per statement, so each statement is planned, described
+    * by a RowDescription when it returns rows, and executed with no row
+    * limit. As in pg, the first ErrorResponse aborts the rest of the query
+    * string. */
   private def simpleQuery(out: DataOutputStream, sql: String): Unit = {
-    val stmts = splitStatements(sql).map(PgDialect.translate)
+    val stmts = PgText.statements(sql).map(PgDialect.translate)
     if (stmts.isEmpty) { msg(out, 'I') { _ => () }; return }   // EmptyQueryResponse
-    stmts.forall(stmt => runStatement(out, stmt, describe = true))
-  }
-
-  /** Execute one statement; on success emit (RowDescription +) DataRows +
-    * CommandComplete and return true, on failure one ErrorResponse and
-    * false. */
-  private def runStatement(
-      out: DataOutputStream, stmt: String, describe: Boolean): Boolean = {
-    try {
-      // Transaction control: every pg client sends these (psql -1, JDBC
-      // autocommit(false)); the engine is auto-commit like the reference,
-      // so BEGIN/COMMIT are no-ops acknowledged with the exact pg command
-      // tag. ROLLBACK additionally carries pg's own outside-a-transaction
-      // WARNING (25P01) so a client that wrote "inside" a transaction and
-      // rolled back cannot believe the already-persisted writes were
-      // undone — exactly what stock pg emits for ROLLBACK with no open
-      // transaction, which is the truthful description of this engine.
-      txnTag(stmt) match {
-        case Some(tag) =>
-          warnIfRollback(out, tag)
-          commandComplete(out, tag)
-          return true
-        case None => ()
-      }
-      val df = graft.ddl.SqlBridge.execute(spark, stmt)
-      val schema = df.schema
-      if (schema.isEmpty) {
-        // Command (DDL/SET/...): force execution, then tag.
-        df.collect()
-        commandComplete(out, commandTag(stmt, -1))
-      } else {
-        if (describe) rowDescription(out, schema)
-        var n = 0L
-        val it = df.toLocalIterator()
-        while (it.hasNext) {
-          val row = it.next()
-          dataRow(out, row, schema)
-          n += 1
-        }
-        commandComplete(out, commandTag(stmt, n))
-      }
-      true
-    } catch {
-      case NonFatal(e) => sendStatementError(out, e); false
+    stmts.forall { stmt =>
+      val p = new Portal(stmt, Map.empty)
+      try {
+        if (p.plan.schema.nonEmpty) rowDescription(out, p.plan.schema)
+        executePortal(out, p, maxRows = 0)
+      } catch {
+        case NonFatal(e) => sendStatementError(out, e); false
+      } finally p.release()
     }
   }
 
@@ -668,9 +639,6 @@ final class WireServer(
     out.writeInt(4 + buf.size())
     buf.writeTo(out)
   }
-
-  private def paramStatus(out: DataOutputStream, k: String, v: String): Unit =
-    msg(out, 'S') { b => writeCString(b, k); writeCString(b, v) }
 
   private def readyForQuery(out: DataOutputStream): Unit =
     msg(out, 'Z') { b => b.writeByte('I') }
@@ -833,61 +801,6 @@ final class WireServer(
     ((b(at) & 0xff) << 24) | ((b(at + 1) & 0xff) << 16) |
       ((b(at + 2) & 0xff) << 8) | (b(at + 3) & 0xff)
 
-  /** The one SQL scanner: walks `sql` past `--` line comments and
-    * (nested, per pg & Spark) bracketed comments, calling `code(i)` at each
-    * index of top-level code; `code` returns how many characters it
-    * consumed (≥ 1). A string literal or quoted identifier is reported at
-    * its opening quote only and then skipped whole; a doubled quote inside
-    * a literal closes and reopens it. Dollar-quoted strings
-    * ($tag$...$tag$) are not parsed — Spark SQL has no such literal, so a
-    * statement using one fails at parse, not silently. */
-  private def scanSqlCode(sql: String)(code: Int => Int): Unit = {
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"') {
-        code(i)
-        val close = sql.indexOf(c, i + 1)
-        i = if (close < 0) sql.length else close + 1
-      } else if (sql.startsWith("--", i)) {
-        val eol = sql.indexOf('\n', i)
-        i = if (eol < 0) sql.length else eol + 1
-      } else if (sql.startsWith("/*", i)) {
-        var depth = 1
-        i += 2
-        while (i < sql.length && depth > 0) {
-          if (sql.startsWith("*/", i)) { depth -= 1; i += 2 }
-          else if (sql.startsWith("/*", i)) { depth += 1; i += 2 }
-          else i += 1
-        }
-      } else i += code(i)
-    }
-  }
-
-  /** Rewrite `$1..$n` placeholders in code (not in literals, quoted
-    * identifiers or comments — a `$1`-shaped token inside a comment must
-    * not inflate the statement's parameter count) to Spark named parameter
-    * markers `:p1..:pn`; returns the rewritten SQL and the highest
-    * placeholder index seen. */
-  private def rewriteParams(sql: String): (String, Int) = {
-    val out = new StringBuilder(sql.length)
-    var copied = 0
-    var maxIdx = 0
-    scanSqlCode(sql) { i =>
-      if (sql.charAt(i) == '$' && i + 1 < sql.length &&
-          sql.charAt(i + 1).isDigit) {
-        var j = i + 1
-        while (j < sql.length && sql.charAt(j).isDigit) j += 1
-        val idx = sql.substring(i + 1, j).toInt
-        maxIdx = math.max(maxIdx, idx)
-        out.append(sql.substring(copied, i)).append(":p").append(idx)
-        copied = j
-        j - i
-      } else 1
-    }
-    (out.append(sql.substring(copied)).toString, maxIdx)
-  }
-
   /** Decode one bound parameter to a typed Scala value `spark.sql(_, args)`
     * can take as a literal. Format 0 = text (pg text conventions per OID),
     * format 1 = binary (fixed-width numerics and bool only). */
@@ -946,27 +859,6 @@ final class WireServer(
 
   private def writeCString(b: DataOutputStream, s: String): Unit = {
     b.write(s.getBytes(UTF_8)); b.writeByte(0)
-  }
-
-  /** Split on top-level ';' — one outside literals, quoted identifiers
-    * and comments ([[scanSqlCode]]). A piece holding only whitespace and
-    * comments is no statement (pg answers it with EmptyQueryResponse). */
-  private def splitStatements(sql: String): Seq[String] = {
-    val out = mutable.ArrayBuffer.empty[String]
-    var start = 0
-    var hasCode = false
-    def cut(end: Int): Unit = {
-      if (hasCode) out += sql.substring(start, end).trim
-      start = end + 1
-      hasCode = false
-    }
-    scanSqlCode(sql) { i =>
-      val c = sql.charAt(i)
-      if (c == ';') cut(i) else if (!c.isWhitespace) hasCode = true
-      1
-    }
-    cut(sql.length)
-    out.toSeq
   }
 
   private def exMessage(e: Throwable): String = {

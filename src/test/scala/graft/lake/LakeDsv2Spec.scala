@@ -109,6 +109,29 @@ class LakeDsv2Spec extends SparkTestBase {
       .prunedFileCount("name = '\uFFFD'") == 1)
   }
 
+  test("a pushed string filter holding a backslash keeps its fragment") {
+    val root = tmpDir()
+    Seq(rows((1, "a\\b", 1.0)), rows((2, "z", 2.0))).foreach(
+      _.coalesce(1).write.format("lake").mode("append").save(root))
+    val t = spark.read.format("lake").load(root)
+    assert(t.filter(col("name") === "a\\b").count() == 1)
+    assert(LakeDataSource.lastScan(root).contains((1, 2)))
+  }
+
+  test("a pushed TIMESTAMP_NTZ filter prunes fragments") {
+    val root = tmpDir()
+    val ntz = StructType(Seq(StructField("ntz", TimestampNTZType)))
+    Seq("2024-01-01T00:00:00", "2025-01-01T00:00:00").foreach { t =>
+      spark.createDataFrame(
+        java.util.List.of(Row(java.time.LocalDateTime.parse(t))), ntz)
+        .coalesce(1).write.format("lake").mode("append").save(root)
+    }
+    val df = spark.read.format("lake").load(root)
+      .filter("ntz >= TIMESTAMP_NTZ '2024-06-01 00:00:00'")
+    assert(df.count() == 1)
+    assert(LakeDataSource.lastScan(root).contains((1, 2)))
+  }
+
   test("manifest statistics drive broadcast join planning") {
     val root = tmpDir()
     val ds = LakeDataset.create(spark, root, schema)

@@ -84,6 +84,63 @@ class WireServerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
   }
 
+  // Where pg ends a literal or a quoted identifier: an escape string's \'
+  // does not end it; a standard string takes no backslash escapes
+  // (standard_conforming_strings = on); "" doubles a quote in an identifier.
+  Seq(
+    "SELECT E'a\\';b' AS x" -> Vector("x" -> "a';b"),
+    "SELECT 'C:\\temp' AS x" -> Vector("x" -> "C:\\temp"),
+    "SELECT 'a\\' AS x" -> Vector("x" -> "a\\"),
+    "SELECT 'tax' ~ '^t\\.x$' AS m" -> Vector("m" -> "f"),
+    "SELECT 1 AS \"a\"\"b\"" -> Vector("a\"b" -> "1")
+  ).foreach { case (sql, want) =>
+    test(s"simple Query lexes like pg: $sql") {
+      withServer { conn =>
+        val res = conn.query(sql)
+        assert(res.size == 1)
+        assert(res.head.fields.map(_._1).zip(res.head.rows.head.map(_.orNull))
+          == want)
+      }
+    }
+  }
+
+  // A $n inside a literal or continuing an identifier is no parameter.
+  Seq(
+    "SELECT E'it\\'s $1' AS x" -> Vector("x" -> "it's $1"),
+    "SELECT 1 AS \"a$1\"" -> Vector("a$1" -> "1")
+  ).foreach { case (sql, want) =>
+    test(s"Parse counts only code markers: $sql") {
+      withServer { conn =>
+        val res = conn.queryExtended(sql)
+        assert(res.fields.map(_._1).zip(res.rows.head.map(_.orNull)) == want)
+      }
+    }
+  }
+
+  test("every reported setting is what SHOW answers") {
+    withServer { conn =>
+      assert(conn.parameters.get("standard_conforming_strings").contains("on"))
+      conn.parameters.foreach { case (name, v) =>
+        assert(conn.query(s"SHOW $name").head.rows == Vector(Vector(Some(v))),
+          name)
+      }
+    }
+  }
+
+  test("a temp view over a dropped table is skipped; the others list") {
+    Tables.register(spark, sf0001)
+    spark.sql(
+      "CREATE TABLE IF NOT EXISTS default.wire_gone (x INT) USING parquet")
+    spark.sql("CREATE OR REPLACE TEMP VIEW wire_gone_v AS " +
+      "SELECT * FROM default.wire_gone")
+    spark.sql("DROP TABLE default.wire_gone")
+    try {
+      val names = PgCatalog.sessionRelations().map(_._1)
+      assert(!names.contains("wire_gone_v"), names)
+      Tables.all.foreach(t => assert(names.contains(t), names))
+    } finally spark.catalog.dropTempView("wire_gone_v")
+  }
+
   test("multiple statements in one Query message get one result each") {
     withServer { conn =>
       val res = conn.query(
