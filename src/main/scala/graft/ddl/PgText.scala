@@ -136,6 +136,56 @@ object PgText {
     }.map(open -> _)
   }
 
+  /** The value `s` spells when it is exactly one string literal: in a
+    * standard string `''` is `'`; an escape string also decodes its
+    * backslash escapes: `b f n r t`, up to 3 octal digits, `x` and up to 2
+    * hex digits, `u` and 4 or `U` and 8 hex digits; any other escaped
+    * character is itself. None for anything else. */
+  def literal(s: String): Option[String] = {
+    val r = if (s.isEmpty) Region(Code, 0, 0) else regionAt(s, 0)
+    val open = s.indexOf('\'')
+    if ((r.kind != Str && r.kind != EscStr) || r.end != s.length ||
+        s.length - open < 2 || s.last != '\'') return None
+    val body = s.substring(open + 1, s.length - 1)
+    if (r.kind == Str) return Some(body.replace("''", "'"))
+    val out = new StringBuilder(body.length)
+    var i = 0
+    // up to `max` digits of base `radix` from i as one code point; with
+    // no digit there, the escaped character `e` itself
+    def code(e: Char, max: Int, radix: Int): Unit = {
+      var j = i
+      while (j < body.length && j - i < max &&
+          Character.digit(body(j), radix) >= 0) j += 1
+      if (j == i) out += e
+      else out.appendAll(
+        Character.toChars(Integer.parseInt(body.substring(i, j), radix)))
+      i = j
+    }
+    while (i < body.length) {
+      val c = body(i)
+      i += 1
+      if (c == '\'' && i < body.length && body(i) == '\'') { out += c; i += 1 }
+      else if (c != '\\' || i >= body.length) out += c
+      else {
+        val e = body(i)
+        i += 1
+        e match {
+          case 'b' => out += '\b'
+          case 'f' => out += '\f'
+          case 'n' => out += '\n'
+          case 'r' => out += '\r'
+          case 't' => out += '\t'
+          case d if d >= '0' && d <= '7' => i -= 1; code(d, 3, 8)
+          case 'x' => code('x', 2, 16)
+          case 'u' => code('u', 4, 16)
+          case 'U' => code('U', 8, 16)
+          case other => out += other
+        }
+      }
+    }
+    Some(out.toString)
+  }
+
   /** The name a quoted identifier region spells: its quotes dropped and
     * each `""` read as one `"`. */
   def identName(sql: String, r: Region): String = {

@@ -110,7 +110,8 @@ object SqlBridge {
   }
 
   /** pg COPY option list: `FORMAT csv, DELIMITER '|', HEADER` →
-    * reader options (lower-cased keys; bare flags become "true"). */
+    * reader options (lower-cased keys; bare flags become "true"; a string
+    * literal value is what it spells, so `E'\t'` is a TAB). */
   private[ddl] def parseOptions(opts: Option[String]): Map[String, String] =
     opts.filter(_ != null).map(_.trim).filter(_.nonEmpty) match {
       case None => Map.empty
@@ -119,7 +120,7 @@ object SqlBridge {
           kv.trim.split("\\s+", 2) match {
             case Array(k) => k.toLowerCase -> "true"
             case Array(k, v) =>
-              k.toLowerCase -> v.trim.stripPrefix("'").stripSuffix("'")
+              k.toLowerCase -> PgText.literal(v.trim).getOrElse(v.trim)
           }
         }.toMap
     }

@@ -75,42 +75,14 @@ final class LakeDataSource extends TableProvider with DataSourceRegister
     p
   }
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    // slim open: schema resolution must not pay a large table's chunk decode
-    val spark = SparkSession.active
-    val ds = LakeDataset.openSlim(spark, rootOf(options),
-      LakeDataSource.branchOf(options))
-    val base = LakeDataset.logicalSchema(pinnedManifestSlim(ds, options))
-    if (options.containsKey("changesFrom")) LakeDataSource.changesSchema(base)
-    else base
-  }
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    LakeDataSource.schemaOf(rootOf(options), options)
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table = {
     val options = new CaseInsensitiveStringMap(properties)
     new LakeTable(rootOf(options), options, Option(schema))
   }
-
-  private[lake] def pinnedManifest(ds: LakeDataset,
-      options: CaseInsensitiveStringMap): Manifest = {
-    val v = pinnedVersion(ds, options)
-    v.map(ds.checkout(_).manifest).getOrElse(ds.manifest)
-  }
-
-  /** [[pinnedManifest]] without chunk decode — fields/version only. */
-  private[lake] def pinnedManifestSlim(ds: LakeDataset,
-      options: CaseInsensitiveStringMap): Manifest =
-    pinnedVersion(ds, options)
-      .map(LakeDataset.loadVersionSlim(
-        new org.apache.hadoop.fs.Path(ds.root), _, ds.branchName))
-      .getOrElse(ds.manifest)
-
-  private def pinnedVersion(ds: LakeDataset,
-      options: CaseInsensitiveStringMap): Option[Long] =
-    Option(options.get("versionAsOf")).map(_.toLong)
-      .orElse(Option(options.get("tag")).map(t =>
-        ds.tags.getOrElse(t,
-          throw new IllegalArgumentException(s"lake: no tag '$t'"))))
 }
 
 object LakeDataSource {
@@ -118,6 +90,39 @@ object LakeDataSource {
     * are read-only through SQL — writes go through the native API. */
   private[lake] def branchOf(options: CaseInsensitiveStringMap): Option[String] =
     Option(options.get("branch"))
+
+  /** The version a read selects, in the namespace it selects. */
+  private[lake] final class Pin(val log: VersionLog, val version: Long) {
+    /** Fields, properties and chunk refs: no chunk decode. */
+    lazy val slim: Manifest = log.slim(version)
+    lazy val manifest: Manifest = log.decode(slim)
+  }
+
+  /** The one reading of a read's options: the namespace (`branch`, else
+    * main), then the version. A change-feed read (`changesFrom`) ends at
+    * `changesTo`, else the head, and ignores `versionAsOf` and `tag`; any
+    * other read pins `versionAsOf`, else `tag`, else the head, and ignores
+    * `changesTo`. Schema resolution, aggregate pushdown, the change feed
+    * and the batch scan all read the version it picks. */
+  private[lake] def pin(root: String,
+      options: CaseInsensitiveStringMap): Pin = {
+    val log = VersionLog(SparkSession.active, root, branchOf(options))
+    def opt(key: String) = Option(options.get(key))
+    val pinned =
+      if (options.containsKey("changesFrom")) opt("changesTo").map(_.toLong)
+      else opt("versionAsOf").map(_.toLong)
+        .orElse(opt("tag").map(t => log.tags.getOrElse(t,
+          throw new IllegalArgumentException(s"lake: no tag '$t'"))))
+    new Pin(log, pinned.getOrElse(log.latest))
+  }
+
+  /** A read's logical schema, from the pinned version file alone: table
+    * resolution (every query) must not pay a large table's chunk decode. */
+  private[lake] def schemaOf(root: String,
+      options: CaseInsensitiveStringMap): StructType = {
+    val base = LakeDataset.logicalSchema(pin(root, options).slim)
+    if (options.containsKey("changesFrom")) changesSchema(base) else base
+  }
 
   /** Output shape of a change-feed scan (`option("changesFrom", v)`). */
   private[lake] def changesSchema(base: StructType): StructType =
@@ -162,21 +167,8 @@ private[lake] final class LakeTable(root: String,
   // passed in (the write query's) only describes a dataset about to be
   // created on first insert.
   override lazy val schema: StructType =
-    if (LakeDataset.exists(root)) {
-      // slim open: table resolution (every query) must not pay a large
-      // table's chunk decode — fields are version-file data
-      val ds = LakeDataset.openSlim(SparkSession.active, root,
-        LakeDataSource.branchOf(options))
-      if (options.containsKey("changesFrom")) {
-        val toV = Option(options.get("changesTo")).map(_.toLong)
-          .getOrElse(ds.version)
-        LakeDataSource.changesSchema(
-          LakeDataset.logicalSchema(LakeDataset.loadVersionSlim(
-            new org.apache.hadoop.fs.Path(root), toV,
-            LakeDataSource.branchOf(options))))
-      } else LakeDataset.logicalSchema(
-        new LakeDataSource().pinnedManifestSlim(ds, options))
-    } else providedSchema.getOrElse(
+    if (LakeDataset.exists(root)) LakeDataSource.schemaOf(root, options)
+    else providedSchema.getOrElse(
       throw new IllegalArgumentException(s"lake: no dataset at $root"))
 
   override def capabilities(): java.util.Set[TableCapability] = {
@@ -283,6 +275,8 @@ private[lake] final class LakeScanBuilder(root: String,
   private var predicates: Seq[String] = Nil
   private var required: Option[StructType] = None
   private var pushedAgg: Option[LakeAggPushdown.Plan] = None
+  // the options read once: every scan this builder makes reads this version
+  private lazy val pin = LakeDataSource.pin(root, options)
 
   // Whole-table COUNT(*) / COUNT(col) / MIN / MAX answered from manifest
   // math + zonemap stats — zero data IO (the reference answers CountRows
@@ -305,11 +299,7 @@ private[lake] final class LakeScanBuilder(root: String,
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
       : Option[LakeAggPushdown.Plan] = {
     if (predicates.nonEmpty || options.containsKey("changesFrom")) return None
-    val ds = LakeDataSource.branchOf(options)
-      .map(LakeDataset.openBranch(SparkSession.active, root, _))
-      .getOrElse(LakeDataset.open(SparkSession.active, root))
-    val man = new LakeDataSource().pinnedManifest(ds, options)
-    LakeAggPushdown.plan(agg, man)
+    LakeAggPushdown.plan(agg, pin.manifest)
   }
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
@@ -353,16 +343,12 @@ private[lake] final class LakeScanBuilder(root: String,
     * the SQL door to [[LakeDataset.changes]]. Change sets are commit-sized,
     * so no fragment pruning is attempted; column pruning still applies. */
   private def changesScan(): Scan = new V1Scan {
-    private val spark = SparkSession.active
-    private val ds = LakeDataSource.branchOf(options)
-      .map(LakeDataset.openBranch(spark, root, _))
-      .getOrElse(LakeDataset.open(spark, root))
+    private val ds =
+      LakeDataset.reader(SparkSession.active, root, pin.log, pin.slim)
     private val fromV = options.get("changesFrom").toLong
-    private val toV = Option(options.get("changesTo")).map(_.toLong)
-      .getOrElse(ds.version)
+    private val toV = pin.version
     private val outSchema = required.getOrElse(
-      LakeDataSource.changesSchema(
-        LakeDataset.logicalSchema(ds.checkout(toV).manifest)))
+      LakeDataSource.changesSchema(LakeDataset.logicalSchema(pin.slim)))
 
     override def readSchema(): StructType = outSchema
 
@@ -381,20 +367,12 @@ private[lake] final class LakeScanBuilder(root: String,
 
   private def batchScan(): Scan = new V1Scan
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-    private val spark = SparkSession.active
-    // Chunk-pruned open (skips whole manifest chunks the pushed predicate
-    // excludes, never reading them) for latest-version reads; time-travel
-    // pins a historical manifest and keeps the full open.
-    private val timeTravel = Option(options.get("versionAsOf"))
-      .orElse(Option(options.get("tag"))).isDefined
-    private val branch = LakeDataSource.branchOf(options)
-    private val ds =
-      if (timeTravel || predicates.isEmpty)
-        branch.map(LakeDataset.openBranch(spark, root, _))
-          .getOrElse(LakeDataset.open(spark, root))
-      else LakeDataset.openPruned(spark, root,
-        Some(predicates.mkString(" AND ")), branch)
-    private val man = new LakeDataSource().pinnedManifest(ds, options)
+    // Chunk-pruned open of the pinned version: whole manifest chunks the
+    // pushed predicate excludes are never read.
+    private val ds = LakeDataset.openAt(SparkSession.active, root, pin.log,
+      pin.slim,
+      if (predicates.nonEmpty) Some(predicates.mkString(" AND ")) else None)
+    private val man = ds.manifest
     private val outSchema = required.getOrElse(LakeDataset.logicalSchema(man))
 
     // lazy val, not def: Catalyst may ask for statistics/description

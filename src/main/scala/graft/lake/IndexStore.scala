@@ -92,7 +92,7 @@ private[lake] final class IndexStore(ds: LakeDataset, name: String) {
     case Some(v0) if v0 == ds.version => None
     case Some(v0) =>
       val meta = metaAt(v0).get
-      def manifest = ds.loadV(v0)
+      def manifest = ds.log.manifest(v0)
       val maxIndexed = meta.long("max_rowid")
         .getOrElse(manifest.nextRowId - 1)
       // fragments beyond the built mark: appended data, plus compaction
@@ -143,11 +143,8 @@ private[lake] object IndexStore {
   private implicit val formats: Formats = DefaultFormats
 
   /** `_indexes/` of the handle's namespace. */
-  def rootOf(ds: LakeDataset): Path = {
-    val root = new Path(ds.root)
-    ds.branchName.fold(root)(b => LakeDataset.nsDir(root, Some(b)))
-      .resolve("_indexes")
-  }
+  def rootOf(ds: LakeDataset): Path =
+    ds.branchName.fold(new Path(ds.root))(_ => ds.log.dir).resolve("_indexes")
 
   /** Index names in the handle's namespace. */
   def list(ds: LakeDataset): Seq[String] = {

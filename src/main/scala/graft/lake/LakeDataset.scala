@@ -77,6 +77,9 @@ final class LakeDataset private (
   private[lake] val io: LakeIO =
     LakeIO.forRoot(root, spark.sparkContext.hadoopConfiguration)
 
+  /** This handle's namespace: every version it reads comes from here. */
+  private[lake] val log: VersionLog = new VersionLog(io, rootPath, branch)
+
   private var commitHandler: CommitHandler = new CommitHandler {
     def publish(target: Path, content: String): Unit =
       io.publishAtomic(target, content)
@@ -94,7 +97,7 @@ final class LakeDataset private (
   def schema: StructType = logicalSchema(m)
 
   /** Re-load the newest committed version. */
-  def refresh(): LakeDataset = { m = loadLatestHere(); this }
+  def refresh(): LakeDataset = { m = log.head; this }
 
   // ---------------------------------------------------------------- reads
 
@@ -103,22 +106,22 @@ final class LakeDataset private (
 
   /** Time travel: read as of a specific version. */
   def readVersion(v: Long): DataFrame = {
-    val old = loadV(v)
+    val old = log.manifest(v)
     readFragments(old, old.fragments, withRowId = false)
   }
 
   /** A pinned handle at an older version (reads only; any write from it
     * loses the commit race by construction). */
   def checkout(v: Long): LakeDataset =
-    new LakeDataset(spark, root, loadV(v), branch = branch)
+    new LakeDataset(spark, root, log.manifest(v), branch = branch)
 
-  def versions: Seq[Long] = versionsIn(manifestsDir)
+  def versions: Seq[Long] = log.versions
 
   /** Commit log across all retained versions (Delta DESCRIBE HISTORY
     * shape): version, operation, parent, fragment/row counts, timestamp. */
   def history(): DataFrame = {
     val rows = versions.map { v =>
-      val man = loadV(v)
+      val man = log.manifest(v)
       Row(man.version, man.operation, man.parentVersion.orNull,
         man.fragments.size, man.fragments.map(_.rowCount).sum,
         new java.sql.Timestamp(man.createdMs))
@@ -156,8 +159,8 @@ final class LakeDataset private (
     * fragments costs IO proportional to k, never to the dataset. */
   def changes(fromV: Long, toV: Long): DataFrame = {
     require(fromV <= toV, s"changes: from=$fromV > to=$toV")
-    val mt = loadV(toV)
-    changesBetween(loadV(fromV), mt, mt)
+    val mt = log.manifest(toV)
+    changesBetween(log.manifest(fromV), mt, mt)
   }
 
   /** Per-commit change feed over `(fromV, toV]`: one [[changes]] step per
@@ -172,14 +175,14 @@ final class LakeDataset private (
     require(vs.headOption.contains(fromV) &&
       vs == (fromV to toV).toSeq,
       s"changeLog: versions $fromV..$toV not fully retained (have $vs)")
-    val out = loadV(toV)
+    val out = log.manifest(toV)
     def stamp(df: DataFrame, man: Manifest): DataFrame = df
       .withColumn("_commit_version", lit(man.version))
       .withColumn("_commit_timestamp",
         timestamp_millis(lit(man.createdMs)))
     val steps = (fromV until toV).map { v =>
-      val mTo = loadV(v + 1)
-      stamp(changesBetween(loadV(v), mTo, out), mTo)
+      val mTo = log.manifest(v + 1)
+      stamp(changesBetween(log.manifest(v), mTo, out), mTo)
     }
     if (steps.isEmpty) stamp(changesBetween(out, out, out), out)
     else steps.reduce(_ unionByName _)
@@ -192,7 +195,7 @@ final class LakeDataset private (
     * the reader opted in (Delta's skipChangeCommits contract). */
   def changeCommitsBetween(fromV: Long, toV: Long): Seq[(Long, String)] =
     ((fromV + 1) to toV).flatMap { v =>
-      val op = loadV(v).operation
+      val op = log.slim(v).operation
       kindOf(op) match {
         case OpKind.DeleteUpdate | OpKind.DeleteDv | OpKind.Merge |
             OpKind.Overwrite => Some(v -> op)
@@ -362,8 +365,11 @@ final class LakeDataset private (
     * driver-side stat calls over manifest entries, no data read. */
   private[lake] def fragmentsSize(frags: Seq[Fragment]): Long =
     frags.map(f =>
+      // a file vacuumed under a stale handle counts 0; any other failure
+      // to stat it propagates
       try io.size(rootPath.resolve(f.file)) catch {
-        case _: Exception => 0L
+        case _: java.io.FileNotFoundException |
+            _: java.nio.file.NoSuchFileException => 0L
       }).sum
 
   /** Names of this namespace's persisted secondary indexes (FTS/vector,
@@ -1000,7 +1006,7 @@ final class LakeDataset private (
   /** Restore: new commit whose content is an old version's (refs.go model —
     * history is preserved; restore is itself a version). */
   def restore(v: Long): Unit = commitOp(OpKind.Overwrite, s"restore($v)") {
-    val old = loadV(v)
+    val old = log.manifest(v)
     m.copy(
       fields = old.fields,
       maxFieldId = math.max(m.maxFieldId, old.maxFieldId),
@@ -1029,12 +1035,8 @@ final class LakeDataset private (
   def shallowClone(targetPath: String): LakeDataset = {
     val tio = LakeIO.forRoot(targetPath, spark.sparkContext.hadoopConfiguration)
     val target = new Path(targetPath)
-    val manifests = target.resolve("_manifests")
-    require(!tio.exists(manifests) || tio.listNames(manifests).isEmpty,
-      s"dataset exists at $targetPath")
-    tio.mkdirs(manifests)
+    val tlog = VersionLog.init(tio, target, targetPath)
     tio.mkdirs(target.resolve("data"))
-    tio.mkdirs(target.resolve("_refs").resolve("tags"))
     val abs = io.absolute(rootPath)
     val frags = m.fragments.map(f => f.copy(
       file = abs.resolve(f.file).toString,
@@ -1055,34 +1057,18 @@ final class LakeDataset private (
     val (cmMat, cmJson) = LakeDataset.encodeManifest(tio, target, cm,
       parent = None, chunkSize = manifestChunkSize,
       threshold = manifestChunkThreshold)
-    tio.writeString(
-      manifests.resolve(Manifest.versionFileName(1)), cmJson)
+    tio.writeString(tlog.file(1), cmJson)
     new LakeDataset(spark, targetPath, cmMat)
   }
 
   def createTag(name: String, v: Long = version): Unit = {
     require(versions.contains(v), s"no version $v")
-    try io.publishAtomic(tagsDir.resolve(s"$name.json"),
-      s"""{"version": $v}""")
-    catch {
-      case _: CommitConflictException =>
-        throw new CommitConflictException(s"tag $name exists")
-    }
+    log.createTag(name, v)
   }
 
-  def deleteTag(name: String): Unit =
-    io.delete(tagsDir.resolve(s"$name.json")): Unit
+  def deleteTag(name: String): Unit = log.deleteTag(name)
 
-  def tags: Map[String, Long] =
-    io.listNames(tagsDir)
-      .filter(_.endsWith(".json"))
-      .map { fn =>
-        val n = fn.dropRight(5)
-        val v = """"version"\s*:\s*(\d+)""".r
-          .findFirstMatchIn(io.readString(tagsDir.resolve(fn))).get
-          .group(1).toLong
-        n -> v
-      }.toMap
+  def tags: Map[String, Long] = log.tags
 
   def checkoutTag(name: String): LakeDataset =
     checkout(tags.getOrElse(name,
@@ -1104,27 +1090,23 @@ final class LakeDataset private (
   def createBranch(name: String, v: Long = version): Unit = {
     require(name.matches("[A-Za-z0-9][A-Za-z0-9._-]*"),
       s"invalid branch name '$name'")
-    val dir = branchesDir.resolve(name)
-    require(!io.exists(dir) || versionsIn(dir).isEmpty, s"branch $name exists")
-    val src = manifestsDir.resolve(Manifest.versionFileName(v))
-    require(io.exists(src), s"no version $v")
-    io.mkdirs(dir)
+    val b = new VersionLog(io, rootPath, Some(name))
+    require(b.versions.isEmpty, s"branch $name exists")
+    val head = log.text(v)
+    io.mkdirs(b.dir)
     // fork metadata first (merge validates it), head manifest second; a
-    // fork that dies between the two is re-creatable (dir non-empty check
-    // only counts v*.json below — see branches())
-    io.writeString(dir.resolve("branch.json"),
+    // fork that dies between the two is re-creatable (the exists check
+    // above counts only version files)
+    io.writeString(b.dir.resolve("branch.json"),
       s"""{"forkedFrom": "$namespaceId", "forkVersion": $v}""")
-    io.publishAtomic(dir.resolve(Manifest.versionFileName(v)),
-      io.readString(src))
+    io.publishAtomic(b.file(v), head)
   }
 
   /** Branch name → head version. */
-  def branches: Map[String, Long] = {
-    if (!io.exists(branchesDir)) return Map.empty
-    io.listNames(branchesDir).flatMap { n =>
-      versionsIn(branchesDir.resolve(n)).lastOption.map(n -> _)
-    }.toMap
-  }
+  def branches: Map[String, Long] =
+    VersionLog.branchNames(io, rootPath).flatMap(n =>
+      new VersionLog(io, rootPath, Some(n)).versions.lastOption.map(n -> _))
+      .toMap
 
   /** Writable handle on a branch's head. */
   def checkoutBranch(name: String): LakeDataset = {
@@ -1138,7 +1120,7 @@ final class LakeDataset private (
     * untouched; chunks and fragments referenced only by the branch become
     * garbage for [[vacuum]], whose liveness scan spans every namespace). */
   def deleteBranch(name: String): Unit = {
-    val dir = branchesDir.resolve(name)
+    val dir = new VersionLog(io, rootPath, Some(name)).dir
     require(io.exists(dir), s"no branch $name")
     io.deleteRecursive(dir)
   }
@@ -1152,16 +1134,14 @@ final class LakeDataset private (
     * the atomic publish, so a concurrent writer on this namespace loses
     * the race cleanly (first copied version wins or conflicts). */
   def mergeBranch(name: String): Long = {
-    val (dir, forkV) = forkOf(name)
+    val (b, forkV) = forkOf(name)
     refresh()
     if (m.version != forkV)
       throw new CommitConflictException(
         s"$namespaceId advanced to v${m.version} since branch $name forked " +
           s"at v$forkV — fast-forward impossible; re-branch and replay")
-    versionsIn(dir).filter(_ > forkV).foreach { v =>
-      try io.publishAtomic(
-        manifestsDir.resolve(Manifest.versionFileName(v)),
-        io.readString(dir.resolve(Manifest.versionFileName(v))))
+    b.versions.filter(_ > forkV).foreach { v =>
+      try io.publishAtomic(log.file(v), b.text(v))
       catch {
         case _: CommitConflictException =>
           throw new CommitConflictException(
@@ -1172,17 +1152,17 @@ final class LakeDataset private (
     m.version
   }
 
-  /** Manifest dir and fork version of branch `name`, which must have forked
+  /** Version log and fork version of branch `name`, which must have forked
     * from THIS namespace (its `branch.json`). */
-  private def forkOf(name: String): (Path, Long) = {
-    val dir = branchesDir.resolve(name)
-    require(io.exists(dir), s"no branch $name")
-    val meta = io.readString(dir.resolve("branch.json"))
+  private def forkOf(name: String): (VersionLog, Long) = {
+    val b = new VersionLog(io, rootPath, Some(name))
+    require(io.exists(b.dir), s"no branch $name")
+    val meta = io.readString(b.dir.resolve("branch.json"))
     def field(re: String): String = re.r.findFirstMatchIn(meta).get.group(1)
     val forkedFrom = field(""""forkedFrom"\s*:\s*"([^"]+)"""")
     require(forkedFrom == namespaceId,
       s"branch $name forked from $forkedFrom, not $namespaceId")
-    (dir, field(""""forkVersion"\s*:\s*(\d+)""").toLong)
+    (b, field(""""forkVersion"\s*:\s*(\d+)""").toLong)
   }
 
   /** Merge a DIVERGED branch into this namespace (the non-fast-forward
@@ -1216,27 +1196,24 @@ final class LakeDataset private (
     * onto fresh target ids (both sides allocate from the fork point, so
     * ids collide even when rowids do not). */
   def mergeBranchRebase(name: String): Long = {
-    val (dir, forkV) = forkOf(name)
+    val (b, forkV) = forkOf(name)
     refresh()
     if (m.version == forkV) return mergeBranch(name) // pure fast-forward
 
-    def branchManifest(v: Long): Manifest =
-      LakeDataset.decodeManifest(io, rootPath,
-        Manifest.fromJson(io.readString(dir.resolve(Manifest.versionFileName(v)))))
-    val branchVersions = versionsIn(dir).filter(_ > forkV)
+    val branchVersions = b.versions.filter(_ > forkV)
     if (branchVersions.isEmpty) return m.version // nothing to merge
-    val fork = loadV(forkV)
-    val bh = branchManifest(branchVersions.last)
+    val fork = log.manifest(forkV)
+    val bh = b.manifest(branchVersions.last)
 
     // Pairwise matrix check: every branch op (my side) against every
     // target op committed since the fork (other side) — the exact check a
     // concurrent writer's rebase would run, applied across namespaces.
     val branchOps = branchVersions.map { v =>
-      val w = branchManifest(v)
+      val w = b.slim(v)
       (w.operation, LakeDataset.kindOf(w.operation), w.touchedFragmentIds.toSet)
     }
     val targetOps = (forkV + 1 to m.version).map { v =>
-      val w = loadV(v)
+      val w = log.slim(v)
       (w.operation, LakeDataset.kindOf(w.operation), w.touchedFragmentIds.toSet)
     }
     for ((bop, bk, bt) <- branchOps; (top, tk, tt) <- targetOps)
@@ -1677,17 +1654,23 @@ final class LakeDataset private (
     val all = versions
     val tagged = tags.values.toSet
     val keep = (all.takeRight(keepVersions).toSet ++ tagged + m.version)
-    val keptManifests = keep.toSeq.sorted.map(v => loadV(v)) ++
-      otherNamespaceManifests() // branches share data files: ALL their
-                                // versions are live w.r.t. this vacuum
+    val namespaces = VersionLog.namespaces(io, rootPath)
+    // branches share data files: every version of every other namespace
+    // is live w.r.t. this vacuum
+    val keptManifests = keep.toSeq.sorted.map(log.manifest) ++
+      namespaces.filterNot(_.dir == log.dir)
+        .flatMap(ns => ns.slims.map(ns.decode))
     // pending detached txns reference staged files too — not garbage
     val referenced =
       (keptManifests.flatMap(_.fragments.map(f => fileName(f.file))) ++
         listDetached().flatMap(_.fragments.map(f => fileName(f.file)))).toSet
     val cutoff = System.currentTimeMillis() - graceMs
+    // a file gone since the listing is not deleted; any other failure to
+    // stat it propagates
     def oldEnough(p: Path): Boolean =
       try io.lastModifiedMs(p) <= cutoff
-      catch { case _: Exception => false }
+      catch { case _: java.io.FileNotFoundException |
+          _: java.nio.file.NoSuchFileException => false }
     var deleted = 0
     // drop unreferenced data files older than the grace window
     io.listNames(dataDir).foreach { n =>
@@ -1723,17 +1706,15 @@ final class LakeDataset private (
       }
     }
     // drop unretained manifests
-    all.filterNot(keep).foreach { v =>
-      io.delete(manifestsDir.resolve(Manifest.versionFileName(v)))
-    }
+    all.filterNot(keep).foreach(v => io.delete(log.file(v)))
     // drop fragment-list chunks no surviving version references (manifest-
     // list split); the grace window covers a chunk published just before
     // its commit lands
-    val chunksDir = LakeDataset.chunksDirOf(rootPath)
+    val chunksDir = VersionLog.chunksDir(rootPath)
     if (io.exists(chunksDir)) {
       // the chunk store is shared by every namespace — liveness must scan
       // main + all branch manifest dirs
-      val refChunks = allNamespaceDirs.flatMap(manifestsIn)
+      val refChunks = namespaces.flatMap(_.slims)
         .flatMap(_.chunkFiles.map(_.file)).toSet
       io.listNames(chunksDir).foreach { n =>
         val p = chunksDir.resolve(n)
@@ -1749,34 +1730,6 @@ final class LakeDataset private (
 
   private def rootPath: Path = new Path(root)
   private[lake] def rootAbs: Path = rootPath
-  private def manifestsDir: Path = branch match {
-    case None => rootPath.resolve("_manifests")
-    case Some(b) => branchesDir.resolve(b)
-  }
-  private def branchesDir: Path = rootPath.resolve("_refs").resolve("branches")
-
-  /** Load + chunk-decode a version from THIS handle's namespace (main or
-    * branch). The chunk store is shared at the root, so branch manifests
-    * re-list main chunks verbatim. */
-  private[lake] def loadV(v: Long): Manifest = {
-    val p = manifestsDir.resolve(Manifest.versionFileName(v))
-    require(io.exists(p), s"no version $v" +
-      branch.map(b => s" on branch $b").getOrElse(""))
-    LakeDataset.decodeManifest(io, rootPath,
-      Manifest.fromJson(io.readString(p)))
-  }
-
-  /** Latest committed version in THIS namespace. */
-  private def loadLatestHere(): Manifest = {
-    val latest = io.listNames(manifestsDir)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .maxOption
-      .getOrElse(throw new IllegalArgumentException(
-        s"no manifests in $manifestsDir"))
-    LakeDataset.decodeManifest(io, rootPath,
-      Manifest.fromJson(io.readString(manifestsDir.resolve(latest))))
-  }
-  private def tagsDir: Path = rootPath.resolve("_refs").resolve("tags")
   private[lake] def dataDir: Path = rootPath.resolve("data")
   private def bloomDir: Path =
     rootPath.resolve("_indexes").resolve("bloom")
@@ -1826,8 +1779,7 @@ final class LakeDataset private (
         threshold = manifestChunkThreshold)
       val published =
         try {
-          commitHandler.publish(
-            manifestsDir.resolve(Manifest.versionFileName(mat.version)), content)
+          commitHandler.publish(log.file(mat.version), content)
           true
         } catch { case _: CommitConflictException if left > 1 => false }
       if (published) { m = mat; true }
@@ -1879,47 +1831,11 @@ final class LakeDataset private (
       f.copy(id = m.maxFragmentId + 1 + i)
     }
 
-  /** Every manifest dir: main + each branch. */
-  private def allNamespaceDirs: Seq[Path] = {
-    val b = Seq.newBuilder[Path]
-    b += rootPath.resolve("_manifests")
-    if (io.exists(branchesDir))
-      io.listNames(branchesDir).foreach(n => b += branchesDir.resolve(n))
-    b.result().filter(io.exists)
-  }
-
-  /** Version numbers published in a manifest dir, ascending. */
-  private def versionsIn(dir: Path): Seq[Long] =
-    io.listNames(dir)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(Manifest.versionOfFileName)
-      .sorted
-
-  /** The version files of `dir`, parsed but not chunk-decoded. Only a
-    * version deleted between the listing and the read is skipped: a vacuum
-    * must never take a manifest it cannot read for one that references
-    * nothing, so any other failure propagates. */
-  private def manifestsIn(dir: Path): Seq[Manifest] =
-    versionsIn(dir).flatMap { v =>
-      try Some(Manifest.fromJson(
-        io.readString(dir.resolve(Manifest.versionFileName(v)))))
-      catch {
-        case _: java.io.FileNotFoundException |
-            _: java.nio.file.NoSuchFileException => None
-      }
-    }
-
-  /** Decoded manifests of every namespace EXCEPT this handle's — a vacuum
-    * in one namespace must treat all of their references as live. */
-  private def otherNamespaceManifests(): Seq[Manifest] =
-    allNamespaceDirs.filterNot(_ == manifestsDir).flatMap(manifestsIn)
-      .map(LakeDataset.decodeManifest(io, rootPath, _))
-
   /** Matrix-check every committed txn in (base, current]. */
   private def checkIntervening(base: Long, kind: OpKind.Value,
       touched: Set[Long]): Unit =
     (base + 1 to m.version).foreach { v =>
-      val w = loadV(v)
+      val w = log.slim(v)
       if (conflicts(kind, touched, kindOf(w.operation),
           w.touchedFragmentIds.toSet))
         throw new CommitConflictException(
@@ -1976,12 +1892,13 @@ final class LakeDataset private (
     * is epoch micros. Cast every literal compared against a known column to
     * that column's declared type up front (one pass per predicate, not per
     * fragment). The engine casts a string literal to the column's type as
-    * well, so one whose cast fails is NULL there too and matches no row.
-    * Any other literal compares in the wider of the two types, so only an
-    * exact cast may stand in for it (1.5 to BIGINT is 1: not exact), and
-    * never against a string column, which the engine casts to the
-    * literal's type instead ('05' = 5). A literal left as-is decides
-    * nothing: [[ZoneMaps]] keeps the fragment. */
+    * well; one whose cast fails stays as written, so its conjunct prunes
+    * nothing and the engine's own evaluation decides (an error under ANSI
+    * mode, no row without it). Any other literal compares in the wider of
+    * the two types, so only an exact cast may stand in for it (1.5 to
+    * BIGINT is 1: not exact), and never against a string column, which the
+    * engine casts to the literal's type instead ('05' = 5). A literal left
+    * as-is decides nothing: [[ZoneMaps]] keeps the fragment. */
   private def coerceLiterals(e: CExpr,
       byName: Map[String, FieldDef]): CExpr = {
     val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
@@ -1993,7 +1910,7 @@ final class LakeDataset private (
           val exact = v != null &&
             Cast(Literal(v, t), l.dataType, tz, EvalMode.TRY).eval(null) ==
               l.value
-          if (l.dataType == StringType || exact && t != StringType)
+          if (v != null && l.dataType == StringType || exact && t != StringType)
             Literal(v, t)
           else l
         case _ => l
@@ -2689,42 +2606,30 @@ object LakeDataset {
   def create(spark: SparkSession, path: String, schema: StructType): LakeDataset = {
     val io = LakeIO.forRoot(path, spark.sparkContext.hadoopConfiguration)
     val root = new Path(path)
-    val manifests = root.resolve("_manifests")
-    require(!io.exists(manifests) || io.listNames(manifests).isEmpty,
-      s"dataset exists at $path")
-    io.mkdirs(manifests)
+    val log = VersionLog.init(io, root, path)
     io.mkdirs(root.resolve("data"))
-    io.mkdirs(root.resolve("_refs").resolve("tags"))
     val fields = schema.fields.zipWithIndex.map { case (sf, i) =>
       FieldDef(i + 1, sf.name, sf.dataType.json, sf.nullable)
     }.toSeq
     val m = Manifest(1, fields, fields.size, Nil, 0, 0, None,
       System.currentTimeMillis(), "create")
-    io.writeString(
-      manifests.resolve(Manifest.versionFileName(1)), Manifest.toJson(m))
+    io.writeString(log.file(1), Manifest.toJson(m))
     new LakeDataset(spark, path, m)
   }
 
   /** True iff a dataset (≥1 committed manifest) exists at `path`. */
-  def exists(path: String): Boolean = {
-    val io = LakeIO.forRoot(path)
-    val dir = new Path(path).resolve("_manifests")
-    io.exists(dir) && io.listNames(dir).exists(_.endsWith(".json"))
-  }
+  def exists(path: String): Boolean =
+    new VersionLog(LakeIO.forRoot(path), new Path(path), None).versions.nonEmpty
 
   /** Open the latest version of an existing dataset (main namespace). */
   def open(spark: SparkSession, path: String): LakeDataset =
-    new LakeDataset(spark, path, loadLatest(new Path(path)))
+    new LakeDataset(spark, path, VersionLog(spark, path, None).head)
 
   /** Writable handle on a branch's head (see createBranch). */
   def openBranch(spark: SparkSession, path: String,
-      name: String): LakeDataset = {
-    val root = new Path(path)
-    val io = LakeIO.forRoot(path, spark.sparkContext.hadoopConfiguration)
-    new LakeDataset(spark, path,
-      decodeManifest(io, root, latestSlim(io, root, Some(name))),
+      name: String): LakeDataset =
+    new LakeDataset(spark, path, VersionLog(spark, path, Some(name)).head,
       partial = false, branch = Some(name))
-  }
 
   /** Read-only open that consults per-chunk aggregate stats BEFORE reading
     * chunk files: chunks whose min/max range a conjunct of `predicate`
@@ -2738,45 +2643,39 @@ object LakeDataset {
   def openPruned(spark: SparkSession, path: String,
       predicate: Option[String],
       branch: Option[String] = None): LakeDataset = {
-    val root = new Path(path)
-    val io = LakeIO.forRoot(root.toString,
-      spark.sparkContext.hadoopConfiguration)
-    val slim = latestSlim(io, root, branch)
-    if (slim.chunkFiles.isEmpty || predicate.isEmpty)
-      new LakeDataset(spark, path, decodeManifest(io, root, slim),
-        partial = false, branch = branch)
-    else {
-      val probe = new LakeDataset(spark, path, slim.copy(fragments = Nil),
-        partial = true, branch = branch)
-      val keep = probe.pruneChunks(slim, slim.chunkFiles, predicate.get)
-      if (keep.size == slim.chunkFiles.size)
-        new LakeDataset(spark, path, decodeManifest(io, root, slim),
-          partial = false, branch = branch)
-      else new LakeDataset(spark, path,
-        decodeManifest(io, root, slim.copy(chunkFiles = keep)),
-        partial = true, branch = branch)
-    }
+    val log = VersionLog(spark, path, branch)
+    openAt(spark, path, log, log.slim(log.latest), predicate)
   }
 
-  private[lake] def loadLatest(root: Path): Manifest = {
-    val io = LakeIO.forRoot(root.toString)
-    decodeManifest(io, root, latestSlim(io, root))
+  /** A handle that reads `m`, a version of `log`'s namespace, and refuses
+    * commits. */
+  private[lake] def reader(spark: SparkSession, path: String, log: VersionLog,
+      m: Manifest): LakeDataset =
+    new LakeDataset(spark, path, m, partial = true, branch = log.branch)
+
+  /** [[openPruned]] at `slim`, a version of `log`'s namespace. */
+  private[lake] def openAt(spark: SparkSession, path: String, log: VersionLog,
+      slim: Manifest, predicate: Option[String]): LakeDataset = {
+    def handle(chunks: Seq[ChunkRef]) = new LakeDataset(spark, path,
+      log.decode(slim.copy(chunkFiles = chunks)),
+      partial = chunks.size < slim.chunkFiles.size, branch = log.branch)
+    if (slim.chunkFiles.isEmpty || predicate.isEmpty) handle(slim.chunkFiles)
+    else {
+      val probe = reader(spark, path, log, slim.copy(fragments = Nil))
+      handle(probe.pruneChunks(slim, slim.chunkFiles, predicate.get))
+    }
   }
 
   /** Read-only handle over the UNDECODED latest manifest: fields, version,
     * tags, refs and properties are all version-file data, so schema/metadata
-    * resolution (the DSv2 table-construction path — every SQL query over a
-    * lake table resolves its schema before any scan is planned) never pays
-    * the chunk decode of a large table. The handle refuses commits, and on
-    * a chunk-encoded table its fragment list is EMPTY — callers must not
-    * read data through it. */
+    * resolution never pays the chunk decode of a large table. The handle
+    * refuses commits, and on a chunk-encoded table its fragment list is
+    * EMPTY — callers must not read data through it, only versions it
+    * loads itself ([[changes]], [[readVersion]]). */
   private[graft] def openSlim(spark: SparkSession, path: String,
       branch: Option[String] = None): LakeDataset = {
-    val root = new Path(path)
-    val io = LakeIO.forRoot(root.toString,
-      spark.sparkContext.hadoopConfiguration)
-    new LakeDataset(spark, path, latestSlim(io, root, branch),
-      partial = true, branch = branch)
+    val log = VersionLog(spark, path, branch)
+    reader(spark, path, log, log.slim(log.latest))
   }
 
   /** Latest committed version number alone — version-file listing, no
@@ -2784,65 +2683,14 @@ object LakeDataset {
     * trigger; on a chunk-encoded table a full open per poll would decode
     * the whole fragment list just to read one number. */
   def latestVersion(spark: SparkSession, path: String,
-      branch: Option[String] = None): Long = {
-    val root = new Path(path)
-    val io = LakeIO.forRoot(root.toString,
-      spark.sparkContext.hadoopConfiguration)
-    val dir = nsDir(root, branch)
-    require(io.exists(dir),
-      branch.map(b => s"no branch $b at $root")
-        .getOrElse(s"no dataset at $root"))
-    io.listNames(dir)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .maxOption
-      .map(n => Manifest.versionOfFileName(n))
-      .getOrElse(throw new IllegalArgumentException(s"no manifests in $dir"))
-  }
+      branch: Option[String] = None): Long =
+    VersionLog(spark, path, branch).latest
 
   /** A pinned version's logical schema without chunk decode — fields are
     * version-file data (the streaming source's per-batch schema guard). */
   def schemaAtVersion(spark: SparkSession, path: String,
       v: Long, branch: Option[String] = None): StructType =
-    logicalSchema(loadVersionSlim(new Path(path), v, branch))
-
-  /** Manifest dir of a namespace: main or a branch. */
-  private[lake] def nsDir(root: Path, branch: Option[String]): Path =
-    branch match {
-      case None => root.resolve("_manifests")
-      case Some(b) =>
-        root.resolve("_refs").resolve("branches").resolve(b)
-    }
-
-  /** A pinned version's manifest, UNDECODED (schema resolution only). */
-  private[lake] def loadVersionSlim(root: Path, v: Long,
-      branch: Option[String] = None): Manifest = {
-    val io = LakeIO.forRoot(root.toString)
-    val p = nsDir(root, branch).resolve(Manifest.versionFileName(v))
-    require(io.exists(p), s"no version $v" +
-      branch.map(b => s" on branch $b").getOrElse(""))
-    Manifest.fromJson(io.readString(p))
-  }
-
-  /** Latest version file, parsed but NOT chunk-decoded. */
-  private def latestSlim(io: LakeIO, root: Path,
-      branch: Option[String] = None): Manifest = {
-    val dir = nsDir(root, branch)
-    require(io.exists(dir),
-      branch.map(b => s"no branch $b at $root")
-        .getOrElse(s"no dataset at $root"))
-    val latest = io.listNames(dir)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .maxOption
-      .getOrElse(throw new IllegalArgumentException(s"no manifests in $dir"))
-    Manifest.fromJson(io.readString(dir.resolve(latest)))
-  }
-
-  private[lake] def loadVersion(root: Path, v: Long): Manifest = {
-    val io = LakeIO.forRoot(root.toString)
-    val p = root.resolve("_manifests").resolve(Manifest.versionFileName(v))
-    require(io.exists(p), s"no version $v")
-    decodeManifest(io, root, Manifest.fromJson(io.readString(p)))
-  }
+    logicalSchema(VersionLog(spark, path, branch).slim(v))
 
   // ---- manifest-list split (SCALE.md "Manifest-list split") -------------
   //
@@ -2855,10 +2703,7 @@ object LakeDataset {
   // are untouched. JSON-lines rather than parquet keeps a small commit
   // free of Spark jobs; a distributed planner can still `spark.read
   // .json` the chunk files (per-fragment rows) when fragment pruning
-  // itself needs to leave the driver.
-
-  private[lake] def chunksDirOf(root: Path): Path =
-    root.resolve("_manifests").resolve("chunks")
+  // itself needs to leave the driver. [[VersionLog.decode]] reads them.
 
   /** Parent chunk grouping, recovered from the invariant that a decoded
     * manifest's fragment list is its chunks concatenated in order. */
@@ -2870,40 +2715,6 @@ object LakeDataset {
       ref -> head
     }
   }
-
-  private def readChunk(io: LakeIO, root: Path, ref: ChunkRef): Seq[Fragment] = {
-    import Manifest.formats
-    val lines = io.readString(chunksDirOf(root).resolve(ref.file))
-    val frags = lines.split('\n').iterator.filter(_.nonEmpty)
-      .map(org.json4s.jackson.Serialization.read[Fragment](_)).toSeq
-    require(frags.size == ref.count,
-      s"chunk ${ref.file}: ${frags.size} fragments, manifest says ${ref.count}")
-    frags
-  }
-
-  /** Bounded daemon pool for chunk-file decode: open latency on a
-    * chunk-encoded table divides by the pool width instead of paying one
-    * serial read+parse per chunk. */
-  private lazy val chunkDecodeEc =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, Runtime.getRuntime.availableProcessors()),
-        (r: Runnable) => {
-          val t = new Thread(r, "lake-chunk-decode")
-          t.setDaemon(true)
-          t
-        }))
-
-  private[lake] def decodeManifest(io: LakeIO, root: Path, m: Manifest): Manifest =
-    if (m.chunkFiles.isEmpty) m
-    else {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      val futs = m.chunkFiles.map(ref =>
-        Future(readChunk(io, root, ref))(chunkDecodeEc))
-      m.copy(fragments =
-        futs.flatMap(f => Await.result(f, Duration.Inf)))
-    }
 
   /** Remove a dot-path from a (possibly nested) struct type; None when the
     * path doesn't resolve through struct fields. */
@@ -2986,7 +2797,7 @@ object LakeDataset {
         r -> fs
       }
       val rest = next.fragments.filterNot(f => used.contains(f.id))
-      val dir = chunksDirOf(root)
+      val dir = VersionLog.chunksDir(root)
       io.mkdirs(dir)
       val fresh = rest.grouped(chunkSize).map { fs =>
         val content = fs.map(f =>
@@ -3038,7 +2849,7 @@ final case class Scanner(
 
   def build(): DataFrame = {
     val man = version
-      .map(v => ds.loadV(v))
+      .map(ds.log.manifest)
       .getOrElse(ds.manifest)
     val frags = filter.map(f => ds.pruneFragments(man, f))
       .getOrElse(man.fragments)

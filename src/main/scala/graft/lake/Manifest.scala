@@ -99,7 +99,7 @@ final case class Manifest(
     touchedFragmentIds: Seq[Long] = Nil,
     /** When non-empty, `fragments` was spilled to these chunk files on
       * storage (the version JSON then serializes with `fragments = Nil`);
-      * [[LakeDataset.loadVersion]] re-materializes them in chunk order, so
+      * [[VersionLog.manifest]] re-materializes them in chunk order, so
       * in-memory manifests ALWAYS carry the full fragment list and
       * `fragments` iterates as chunk-order concatenation. */
     chunkFiles: Seq[ChunkRef] = Nil)

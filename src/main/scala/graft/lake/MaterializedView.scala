@@ -93,10 +93,11 @@ final class MaterializedView private (
   def read(): DataFrame = view.read().filter(col("mv_cnt") > 0)
 
   /** True when the state is current to the base's head and every dim's
-    * head (metadata only: reopens manifests, reads no data). */
-  private[lake] def isCurrent: Boolean =
-    baseVersion == LakeDataset.open(base.spark, base.root).version &&
-      dimVersions == opened(base.spark, dims).map(_._2.version)
+    * head (version numbers only: lists version files, reads none). */
+  private[lake] def isCurrent: Boolean = {
+    def head(root: String) = LakeDataset.latestVersion(base.spark, root)
+    baseVersion == head(base.root) && dimVersions == dims.map(d => head(d.root))
+  }
 
   /** Bring the view up to the base's current version by applying the
     * change feed; no-op (and no commit) when already current, full

@@ -60,7 +60,7 @@ final class LakeRowLevelOperationBuilder(root: String,
     // the default is group-based copy-on-write, whose runtime group
     // filtering bounds rewrites to matched fragments.
     val mor = LakeDataset.exists(root) &&
-      LakeDataset.open(SparkSession.active, root)
+      LakeDataset.openSlim(SparkSession.active, root)
         .manifest.properties.get("write.dml.mode").contains("mor")
     if (mor) new LakeDeltaOperation(root, info.command)
     else new LakeRowLevelOperation(root, info.command)

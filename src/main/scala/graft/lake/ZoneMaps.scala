@@ -108,8 +108,9 @@ private[lake] object ZoneMaps {
 
   /** Compile a predicate's conjuncts into one fragment test: false only
     * when the stats prove no row of the fragment can match. Literals
-    * arrive cast to their column's type; a null one (written, or its cast
-    * failed) matches no row, as a SQL comparison with NULL is never true.
+    * arrive cast to their column's type where the cast succeeds; one whose
+    * cast fails stays as written and decides nothing. A written NULL
+    * matches no row, as a SQL comparison with NULL is never true.
     * Shapes the stats cannot decide keep the fragment. `fieldOf` resolves
     * a column reference; `bloomMayContain` probes the fragment's bloom
     * sidecar for an equality value. A chunk is tested as a pseudo-fragment

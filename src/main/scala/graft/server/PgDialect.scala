@@ -237,31 +237,52 @@ object PgDialect {
     }
 
     /** Start index in `out` of the operand that `::` binds to: a literal,
-      * identifier or marker just written, a paren group, a backtick
-      * identifier, or a plain (possibly dotted) identifier/number —
-      * whichever ends at out.end. */
+      * identifier or marker just written, a paren group, or a (possibly
+      * qualified) name — plain, backticked or mixed (`t`.`c`, t.`c`,
+      * `t`.c) — whichever ends at out.end. */
     def operandStart: Int = {
-      var j = out.length - 1
-      if (j < 0) return 0
-      if (atomEnd == out.length) return atomStart
-      out(j) match {
-        case ')' =>
-          var depth = 0
-          while (j >= 0) {
-            if (out(j) == ')') depth += 1
-            else if (out(j) == '(') { depth -= 1; if (depth == 0) return j }
-            j -= 1
-          }
-          0
-        case '`' =>
+      val end = out.length
+      if (end == 0) return 0
+      // start of the name segment whose last character is out(j)
+      def segmentStart(j0: Int): Int = {
+        var j = j0
+        if (out(j) == '`') {
           j -= 1
           while (j >= 0 && out(j) != '`') j -= 1
           math.max(j, 0)
-        case c if isIdentChar(c) =>
+        } else {
           while (j >= 0 && isIdentChar(out(j))) j -= 1
           j + 1
-        case _ => out.length
+        }
       }
+      def isName(j: Int) = j >= 0 && (out(j) == '`' || isIdentChar(out(j)))
+      var start =
+        if (atomEnd == end) atomStart
+        else out(end - 1) match {
+          case ')' =>
+            var depth = 0
+            var j = end - 1
+            while (j >= 0) {
+              if (out(j) == ')') depth += 1
+              else if (out(j) == '(') { depth -= 1; if (depth == 0) return j }
+              j -= 1
+            }
+            return 0
+          case c if c == '`' || isIdentChar(c) => segmentStart(end - 1)
+          case _ => return end
+        }
+      // extend over each qualifier in front of a name: a dot that opens
+      // the segment (t.c's run) or sits just before it (`c`)
+      var more = isName(start)
+      while (more) {
+        val prev =
+          if (out(start) == '.') start - 1
+          else if (start > 0 && out(start - 1) == '.') start - 2
+          else -1
+        more = isName(prev)
+        if (more) start = segmentStart(prev)
+      }
+      start
     }
 
     while (i < n) {

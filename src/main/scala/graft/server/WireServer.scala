@@ -11,8 +11,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession, classic}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.parser.NamedParameterContext
-import org.apache.spark.sql.catalyst.plans.logical.Command
-import org.apache.spark.sql.execution.CommandExecutionMode
+import org.apache.spark.sql.execution.{CommandExecutionMode, QueryExecution}
 import org.apache.spark.sql.types._
 
 import graft.ddl.PgText
@@ -503,10 +502,17 @@ final class WireServer(
   }
 
   /** A statement planned with its values bound, before anything runs:
-    * its result schema, and for a query the analyzed frame Execute
-    * streams. A command has no frame: `spark.sql` runs a command as it
-    * builds the frame, so only Execute builds one. */
-  private final class Plan(val schema: StructType, val query: Option[DataFrame])
+    * its result schema, and its analysis, which Execute runs as is. None
+    * for the statements [[graft.ddl.SqlBridge]] runs itself. */
+  private final class Plan(val schema: StructType,
+      val analyzed: Option[QueryExecution]) {
+    /** The statement's frame. Building it runs a command (Spark runs a
+      * command as it builds its frame); the analyzer leaves the analyzed
+      * plan as it is. */
+    def frame(): Option[DataFrame] = analyzed.map(qe =>
+      new classic.Dataset[Row](qe.sparkSession, qe.analyzed,
+        Encoders.row(schema)))
+  }
 
   /** Parse and analyze `sql` with `args` bound, the way `spark.sql(sql,
     * args)` does, but run nothing. Transaction control and the statements
@@ -525,10 +531,7 @@ final class WireServer(
           NamedParameterContext(args.map { case (k, v) => k -> Literal.create(v) }))
         val qe = spark.sessionState.executePlan(parsed, CommandExecutionMode.SKIP)
         qe.assertAnalyzed()
-        val schema = qe.analyzed.schema
-        if (qe.analyzed.exists(_.isInstanceOf[Command])) new Plan(schema, None)
-        else new Plan(schema, Some(new classic.Dataset[Row](
-          qe.sparkSession, qe.analyzed, Encoders.row(schema))))
+        new Plan(qe.analyzed.schema, Some(qe))
     }
   }
 
@@ -562,12 +565,8 @@ final class WireServer(
       }
       if (p.it == null) {
         // a query streams the portal's one plan; a command runs here, once
-        val df = p.plan.query.getOrElse {
-          if (p.args.isEmpty)
-            // no parameters: full statement surface (DDL/COPY via the bridge)
-            graft.ddl.SqlBridge.execute(spark, p.sql)
-          else spark.sql(p.sql, p.args)
-        }
+        val df = p.plan.frame()
+          .getOrElse(graft.ddl.SqlBridge.execute(spark, p.sql))
         p.schema = df.schema
         if (p.schema.isEmpty) {
           df.collect()

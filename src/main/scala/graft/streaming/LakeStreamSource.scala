@@ -104,8 +104,9 @@ final class LakeStreamSource(sqlContext: SQLContext, root: String,
       end: LegacyOffset): DataFrame = {
     val endV = versionOf(end)
     lastEnd = Some(math.max(endV, lastEnd.getOrElse(endV)))
-    val ds = branch.map(LakeDataset.openBranch(spark, root, _))
-      .getOrElse(LakeDataset.open(spark, root))
+    // slim: the batch reads only the versions it names, and the guard
+    // below needs only the head's fields
+    val ds = LakeDataset.openSlim(spark, root, branch)
     val batch = start match {
       case None =>
         startV0 match {

@@ -97,6 +97,37 @@ class SqlBridgeSpec extends SparkTestBase {
     }
   }
 
+  test("COPY option values read as pg literals") {
+    def opt(v: String) =
+      SqlBridge.parseOptions(Some(s"DELIMITER $v"))("delimiter")
+    assert(opt("E'\\t'") == "\t")
+    assert(opt("e'\\x7C'") == "|")
+    assert(opt("E'\\047'") == "'")
+    assert(opt("E'\\u00e9'") == "é")
+    assert(opt("E'\\\\'") == "\\")
+    assert(opt("E'\\''") == "'")
+    assert(opt("''''") == "'")
+    assert(opt("'\\t'") == "\\t") // a standard string keeps its backslash
+    assert(opt("'|'") == "|")
+    assert(opt("bare") == "bare")
+    inScratchDb("ref_copy_tab") {
+      SqlBridge.execute(session,
+        "CREATE TABLE TABS ( ID INTEGER NOT NULL, NAME VARCHAR(10), " +
+          "PRIMARY KEY (ID) )")
+      val src = Files.createTempFile("tabs-", ".tsv")
+      Files.writeString(src, "1\ta,b\n2\tc\n")
+      val res = SqlBridge.execute(session,
+        s"COPY tabs FROM '$src' (FORMAT csv, DELIMITER E'\\t')")
+      assert(res.collect().head.getLong(0) == 2L)
+      val out = Files.createTempDirectory("copyto-").toString + "/tabs_out"
+      SqlBridge.execute(session,
+        s"COPY (SELECT id, name FROM tabs) TO '$out' " +
+          "(FORMAT csv, DELIMITER E'\\t')")
+      val back = session.read.text(out).collect().map(_.getString(0)).sorted
+      assert(back.toSeq == Seq("1\ta,b", "2\tc"))
+    }
+  }
+
   test("plain SQL passes through untouched") {
     val df = SqlBridge.execute(session, "SELECT 1 + 1 AS two")
     assert(df.collect().head.getInt(0) == 2)

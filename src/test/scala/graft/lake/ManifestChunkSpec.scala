@@ -126,7 +126,7 @@ class ManifestChunkSpec extends SparkTestBase {
       // rewrite everything: compaction replaces every chunk
       ds.compact(targetRows = 1000)
       val live = storedManifest(ds, ds.version).chunkFiles.map(_.file).toSet
-      val chunksDir = LakeDataset.chunksDirOf(new Path(ds.root))
+      val chunksDir = VersionLog.chunksDir(new Path(ds.root))
       val allBefore = ds.io.listNames(chunksDir).toSet
       assert(live.subsetOf(allBefore) && allBefore.size > live.size)
       val deleted = ds.vacuum(keepVersions = 1, graceMs = 0L)
@@ -245,7 +245,7 @@ class ManifestChunkSpec extends SparkTestBase {
       assert(stored.fragments.isEmpty && stored.chunkFiles.nonEmpty)
       // clone's chunks live under ITS root, not the source's
       assert(clone.io.exists(
-        LakeDataset.chunksDirOf(new Path(clone.root))))
+        VersionLog.chunksDir(new Path(clone.root))))
     }
   }
 }

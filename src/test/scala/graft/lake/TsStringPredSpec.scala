@@ -53,13 +53,33 @@ class TsStringPredSpec extends SparkTestBase {
     assert(ds.read().count() == 2)
   }
 
-  test("unparseable literals agree with engine semantics (NULL matches nothing)") {
+  test("unparseable literals answer as spark.sql does, in both ANSI modes") {
     val ds = freshDs()
-    // cast('not-a-timestamp' as timestamp) is NULL, the comparison is NULL,
-    // and no row matches — a scan must return empty, however much pruning
-    // happened along the way
-    val got = ds.scanner().withFilter("ts >= 'not-a-timestamp'").build()
-    assert(got.collect().isEmpty)
+    val pred = "ts >= 'not-a-timestamp'"
+    ds.read().createOrReplaceTempView("ts_str_pred")
+    def engine() = spark.sql(s"SELECT id FROM ts_str_pred WHERE $pred").count()
+    val lake = Seq[() => Long](
+      () => ds.scanner().withFilter(pred).build().count(),
+      () => ds.countRows(Some(pred)),
+      () => ds.delete(pred))
+    def failsToCast(run: () => Long): Boolean = {
+      val e = intercept[Exception](run())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("CAST_INVALID_INPUT"))
+    }
+    val key = "spark.sql.ansi.enabled"
+    val before = spark.conf.get(key)
+    try {
+      // ANSI on (the default): the cast fails, and so does every lake path
+      spark.conf.set(key, "true")
+      assert(failsToCast(() => engine()))
+      lake.foreach(run => assert(failsToCast(run)))
+      // ANSI off: the cast is NULL, the comparison is NULL, no row matches
+      spark.conf.set(key, "false")
+      assert(engine() == 0L)
+      lake.foreach(run => assert(run() == 0L))
+    } finally spark.conf.set(key, before)
+    assert(ds.read().count() == 4)
   }
 
   test("z-order commits classify as Rewrite so concurrent appends rebase") {

@@ -31,6 +31,19 @@ class PgDialectSpec extends AnyFunSuite {
     assert(t("SELECT (a+b)::int8") == "SELECT CAST((a+b) AS BIGINT)")
   }
 
+  test(":: on a qualified name casts the whole name, quoted or not") {
+    assert(t("""SELECT "t"."c"::text FROM t""") ==
+      "SELECT CAST(`t`.`c` AS STRING) FROM t")
+    assert(t("""SELECT t."c"::text FROM t""") ==
+      "SELECT CAST(t.`c` AS STRING) FROM t")
+    assert(t("""SELECT "t".c::text FROM t""") ==
+      "SELECT CAST(`t`.c AS STRING) FROM t")
+    assert(t("""SELECT "s"."t"."c"::int8 FROM s.t""") ==
+      "SELECT CAST(`s`.`t`.`c` AS BIGINT) FROM s.t")
+    assert(t("""SELECT "c"::text, 'x'::text FROM t""") ==
+      "SELECT CAST(`c` AS STRING), CAST('x' AS STRING) FROM t")
+  }
+
   test("COLLATE clauses are stripped") {
     assert(t("x ~ '^(n)$' COLLATE pg_catalog.default AND y") ==
       "x RLIKE '^(n)$' AND y")

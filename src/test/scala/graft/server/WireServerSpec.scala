@@ -276,6 +276,27 @@ class WireServerSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("a quoted qualified column casts, and COPY reads an E'\\t' delimiter") {
+    withServer { conn =>
+      conn.query("CREATE DATABASE IF NOT EXISTS wire_tab")
+      try {
+        conn.query("USE wire_tab")
+        conn.query("CREATE TABLE tt (a INT, b STRING) USING parquet")
+        val f = java.nio.file.Files.createTempFile("wire-", ".tsv")
+        java.nio.file.Files.writeString(f, "1\tx|y\n2\tz\n")
+        val copied = conn.query(
+          s"COPY tt FROM '$f' (FORMAT csv, DELIMITER E'\\t')")
+        assert(copied.head.rows.head.head.get == "2")
+        val res = conn.query(
+          """SELECT "tt"."a"::text AS a, "tt"."b" FROM tt ORDER BY a""").head
+        assert(res.fields.map(_._2) == Vector(25, 25))
+        assert(res.rows == Vector(Vector(Some("1"), Some("x|y")),
+          Vector(Some("2"), Some("z"))))
+      } finally conn.query(
+        "USE default; DROP DATABASE IF EXISTS wire_tab CASCADE")
+    }
+  }
+
   test("extended protocol binds typed text parameters") {
     withServer { conn =>
       val res = conn.queryExtended(
