@@ -5,14 +5,17 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShims, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Expression => CExpr, Literal}
+import org.apache.spark.sql.catalyst.{expressions => E}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.functions.{col, regexp_extract}
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSource V2 integration for the lake: `spark.read.format("lake")`,
@@ -250,30 +253,26 @@ private[lake] final class LakeTable(root: String,
   // routed to the copy-on-write predicate delete, which plans touched
   // fragments by zonemap/bloom/value-set pruning first.
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    !pinned && filters.forall(f => LakeFilters.toSql(f).isDefined)
+    !pinned && filters.forall(f => LakeFilters.toExpr(f, schema).isDefined)
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
     val ds = LakeDataset.open(SparkSession.active, root)
     // honor the table's DML mode: `mor` tombstones rowids instead of
     // rewriting fragments
     val mor = ds.manifest.properties.get("write.dml.mode").contains("mor")
-    val pred =
-      if (filters.isEmpty) "true"
-      else filters.flatMap(LakeFilters.toSql).mkString(" AND ")
-    ds.delete(pred, useDeletionVectors = mor)
+    val where = filters.map(f => LakeFilters.toExpr(f, ds.schema).getOrElse(
+      throw new IllegalArgumentException(s"lake: cannot delete where $f")))
+      .reduceOption[CExpr](E.And(_, _)).getOrElse(Literal.TrueLiteral)
+    ds.deleteWhere(where, useDeletionVectors = mor)
     ()
   }
 }
 
 private[lake] final class LakeScanBuilder(root: String,
     options: CaseInsensitiveStringMap)
-  extends ScanBuilder with SupportsPushDownFilters
-  with SupportsPushDownRequiredColumns
+  extends ScanBuilder with LakePushdown
   with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
 
-  private var pushed: Array[Filter] = Array.empty
-  private var predicates: Seq[String] = Nil
-  private var required: Option[StructType] = None
   private var pushedAgg: Option[LakeAggPushdown.Plan] = None
   // the options read once: every scan this builder makes reads this version
   private lazy val pin = LakeDataSource.pin(root, options)
@@ -298,24 +297,11 @@ private[lake] final class LakeScanBuilder(root: String,
   private def plan(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
       : Option[LakeAggPushdown.Plan] = {
-    if (predicates.nonEmpty || options.containsKey("changesFrom")) return None
+    if (where.nonEmpty || options.containsKey("changesFrom")) return None
     LakeAggPushdown.plan(agg, pin.manifest)
   }
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val translated = filters.flatMap(f => LakeFilters.toSql(f).map(f -> _))
-    pushed = translated.map(_._1)
-    predicates = translated.map(_._2).toSeq
-    // Everything stays a residual: Spark re-evaluates every filter after the
-    // scan, so fragment pruning is purely an IO win and never a semantics
-    // risk (mirrors how conservative zonemap pruning must behave).
-    filters
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = Some(requiredSchema)
+  protected def tableSchema: StructType = LakeDataset.logicalSchema(pin.slim)
 
   override def build(): Scan =
     if (pushedAgg.isDefined) aggScan(pushedAgg.get)
@@ -370,20 +356,17 @@ private[lake] final class LakeScanBuilder(root: String,
     // Chunk-pruned open of the pinned version: whole manifest chunks the
     // pushed predicate excludes are never read.
     private val ds = LakeDataset.openAt(SparkSession.active, root, pin.log,
-      pin.slim,
-      if (predicates.nonEmpty) Some(predicates.mkString(" AND ")) else None)
+      pin.slim, where)
     private val man = ds.manifest
     private val outSchema = required.getOrElse(LakeDataset.logicalSchema(man))
 
     // lazy val, not def: Catalyst may ask for statistics/description
     // several times while planning a multi-join query, and each pruning
-    // pass re-parses the predicate and probes blooms/value-sets (plus one
-    // driver-side Files.size per fragment in fragmentsSize). The manifest
-    // is pinned, so one computation serves every call — including the
-    // actual scan below.
+    // pass probes blooms/value-sets (plus one driver-side Files.size per
+    // fragment in fragmentsSize). The manifest is pinned, so one
+    // computation serves every call — including the actual scan below.
     private lazy val prunedFrags =
-      if (predicates.isEmpty) man.fragments
-      else ds.pruneFragments(man, predicates.mkString(" AND "))
+      where.fold(man.fragments)(ds.pruneFragments(man, _))
 
     override def readSchema(): StructType = outSchema
 
@@ -405,7 +388,7 @@ private[lake] final class LakeScanBuilder(root: String,
     override def description(): String = {
       val frags = prunedFrags
       s"lake v${man.version} [${frags.size}/${man.fragments.size} fragments," +
-        s" pushed: ${predicates.mkString(" AND ")}]"
+        s" pushed: ${where.fold("")(_.sql)}]"
     }
 
     override def toV1TableScan[T <: BaseRelation with TableScan](
@@ -426,10 +409,10 @@ private[lake] final class LakeScanBuilder(root: String,
               withFileName = needFile)
           if (needFile) // absolute scan URI → manifest-relative basename
             df = df.withColumn(LakeDataset.FileCol,
-              expr(s"regexp_extract(${LakeDataset.FileCol}, '[^/]+$$', 0)"))
-          // Re-apply pushed predicates inside the inner parquet scan too, so
-          // row groups within surviving fragments are skipped natively.
-          predicates.foreach(p => df = df.filter(expr(p)))
+              regexp_extract(col(LakeDataset.FileCol), "[^/]+$", 0))
+          // Re-apply the pushed predicate inside the inner parquet scan too,
+          // so row groups within surviving fragments are skipped natively.
+          where.foreach(w => df = df.filter(GraftSqlShims.column(w)))
           df.select(outSchema.fieldNames.map(col).toSeq: _*).rdd
         }
       }.asInstanceOf[T]
@@ -513,46 +496,81 @@ private[lake] object LakeAggPushdown {
   }
 }
 
-/** Translate connector pushdown filters to the lake predicate DSL (Spark SQL
-  * expression strings) for zonemap pruning. Unsupported shapes translate to
-  * None and simply don't prune. */
+/** Filter and column pushdown for the lake's scan builders. The filters
+  * that translate ([[LakeFilters]]) are pushed as one predicate, which
+  * prunes fragments; every filter stays a residual, so Spark re-evaluates
+  * it after the scan and pruning is an IO win that never changes an
+  * answer. */
+private[lake] trait LakePushdown extends SupportsPushDownFilters
+  with SupportsPushDownRequiredColumns {
+
+  /** The schema pushed filters translate over. */
+  protected def tableSchema: StructType
+
+  private var pushed: Array[Filter] = Array.empty
+  /** The conjunction of the pushed filters. */
+  protected var where: Option[CExpr] = None
+  protected var required: Option[StructType] = None
+
+  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
+    val schema = tableSchema
+    val t = filters.flatMap(f => LakeFilters.toExpr(f, schema).map(f -> _))
+    pushed = t.map(_._1)
+    where = t.map(_._2).reduceOption[CExpr](E.And(_, _))
+    filters
+  }
+
+  override def pushedFilters(): Array[Filter] = pushed
+
+  override def pruneColumns(requiredSchema: StructType): Unit =
+    required = Some(requiredSchema)
+}
+
+/** Translates a connector pushdown filter into the lake's predicate
+  * expression: an attribute keeps its name parts (`` `my col` `` is one
+  * part, `s.x` two) and a value becomes a literal of its column's type. A
+  * filter that does not translate is not pushed and prunes nothing. */
 private[lake] object LakeFilters {
 
-  /** A filter value as Spark SQL text, by Spark's own `Literal.sql`: it
-    * escapes quotes and backslashes and types every temporal value. A
-    * FLOAT renders as a cast, which the zonemaps do not read, so it goes
-    * as the DOUBLE of the same value. A value no literal holds (a struct,
-    * array or map) is not pushed. */
-  private def lit(v: Any): Option[String] = v match {
-    case f: java.lang.Float => lit(f.toDouble)
-    case _ =>
-      try Some(org.apache.spark.sql.catalyst.expressions.Literal.create(v).sql)
-      catch {
-        case e: org.apache.spark.SparkThrowable
-            if e.getCondition == "UNSUPPORTED_FEATURE.LITERAL_TYPE" => None
-      }
+  def toExpr(f: Filter, schema: StructType): Option[CExpr] = {
+    def attr(a: String) = UnresolvedAttribute.quotedString(a)
+    // a value no literal of the column's type holds is not pushed
+    def lit(a: String, v: Any): Option[Literal] = scala.util.Try(
+      typeAt(schema, attr(a).nameParts)
+        .fold(Literal.create(v))(Literal.create(v, _))).toOption
+    def cmp(a: String, v: Any)(op: (CExpr, CExpr) => CExpr) =
+      lit(a, v).map(op(attr(a), _))
+    f match {
+      case _: AlwaysTrue => Some(Literal.TrueLiteral)
+      case _: AlwaysFalse => Some(Literal.FalseLiteral)
+      case EqualTo(a, v) => cmp(a, v)(E.EqualTo(_, _))
+      case GreaterThan(a, v) => cmp(a, v)(E.GreaterThan(_, _))
+      case GreaterThanOrEqual(a, v) => cmp(a, v)(E.GreaterThanOrEqual(_, _))
+      case LessThan(a, v) => cmp(a, v)(E.LessThan(_, _))
+      case LessThanOrEqual(a, v) => cmp(a, v)(E.LessThanOrEqual(_, _))
+      case IsNull(a) => Some(E.IsNull(attr(a)))
+      case IsNotNull(a) => Some(E.IsNotNull(attr(a)))
+      // point-lookup IN lists push so the value-set/bloom equality arsenal
+      // prunes per value (index_selector's equality arm per disjunct)
+      case In(a, vs) if vs.nonEmpty =>
+        val ls = vs.toSeq.map(lit(a, _))
+        if (ls.exists(_.isEmpty)) None else Some(E.In(attr(a), ls.flatten))
+      case And(l, r) =>
+        for { le <- toExpr(l, schema); re <- toExpr(r, schema) }
+        yield E.And(le, re)
+      case _ => None
+    }
   }
 
-  def toSql(f: Filter): Option[String] = f match {
-    case _: AlwaysTrue => Some("true")
-    case _: AlwaysFalse => Some("false")
-    case EqualTo(a, v) => lit(v).map(r => s"`$a` = $r")
-    case GreaterThan(a, v) => lit(v).map(r => s"`$a` > $r")
-    case GreaterThanOrEqual(a, v) => lit(v).map(r => s"`$a` >= $r")
-    case LessThan(a, v) => lit(v).map(r => s"`$a` < $r")
-    case LessThanOrEqual(a, v) => lit(v).map(r => s"`$a` <= $r")
-    case IsNull(a) => Some(s"`$a` IS NULL")
-    case IsNotNull(a) => Some(s"`$a` IS NOT NULL")
-    // point-lookup IN lists push so the value-set/bloom equality arsenal
-    // prunes per value (index_selector's equality arm per disjunct)
-    case In(a, vs) if vs.nonEmpty =>
-      val rs = vs.toSeq.map(lit)
-      if (rs.exists(_.isEmpty)) None
-      else Some(s"`$a` IN (${rs.flatten.mkString(", ")})")
-    case And(l, r) =>
-      for { ls <- toSql(l); rs <- toSql(r) } yield s"($ls AND $rs)"
-    case _ => None
-  }
+  /** The type of the (possibly nested) field at `parts`; None for a name
+    * the schema lacks, such as a metadata column. */
+  private def typeAt(t: DataType, parts: Seq[String]): Option[DataType] =
+    (t, parts) match {
+      case (_, Seq()) => Some(t)
+      case (s: StructType, p +: rest) =>
+        s.fields.find(_.name == p).flatMap(f => typeAt(f.dataType, rest))
+      case _ => None
+    }
 }
 
 private[lake] final class LakeWriteBuilder(root: String,

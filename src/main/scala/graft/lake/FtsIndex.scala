@@ -229,19 +229,17 @@ object FtsIndex {
       .agg(map_from_entries(collect_list(struct(col("term"), col("positions"))))
         .as("tp"))
       .filter(size(col("tp")) === distinctTerms.size)
-    val first = phrase.head.replace("'", "''")
-    val occExpr =
-      if (phrase.size == 1)
-        s"CAST(size(element_at(tp, '$first')) AS BIGINT)"
-      else {
-        val conds = phrase.zipWithIndex.tail.map { case (t, j) =>
-          val esc = t.replace("'", "''")
-          s"array_contains(element_at(tp, '$esc'), p + $j)"
-        }.mkString(" AND ")
-        s"CAST(size(filter(element_at(tp, '$first'), p -> $conds)) AS BIGINT)"
-      }
+    // a phrase occurrence starts at a position p of its first term where
+    // each later term j sits at p + j
+    def positions(t: String) = element_at(col("tp"), lit(t))
+    val starts =
+      if (phrase.size == 1) positions(phrase.head)
+      else filter(positions(phrase.head), p =>
+        phrase.zipWithIndex.tail.map { case (t, j) =>
+          array_contains(positions(t), p + j)
+        }.reduce(_ && _))
     val occ = byDoc
-      .select(col("_rowid"), expr(occExpr).as("n_occ"))
+      .select(col("_rowid"), size(starts).cast("bigint").as("n_occ"))
       .filter(col("n_occ") > 0)
     IndexStore.joinLive(ds.scanner().withRowId.build(), occ)
       .orderBy(col("n_occ").desc, col(LakeDataset.RowIdCol))

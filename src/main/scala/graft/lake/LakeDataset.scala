@@ -6,8 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{And, Cast, EqualTo, EvalMode, Expression => CExpr, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Cast, EqualTo, EvalMode, Expression => CExpr, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -120,10 +120,16 @@ final class LakeDataset private (
   /** Commit log across all retained versions (Delta DESCRIBE HISTORY
     * shape): version, operation, parent, fragment/row counts, timestamp. */
   def history(): DataFrame = {
-    val rows = versions.map { v =>
-      val man = log.manifest(v)
+    val rows = log.slims.map { man =>
+      // (fragments, rows) per chunk ref, else per fragment: only a legacy
+      // ref (row total unknown) has its chunk read
+      val refs = man.chunkFiles
+      val counts =
+        if (refs.nonEmpty && refs.forall(r => r.rows > 0 || r.count == 0))
+          refs.map(r => (r.count.toInt, r.rows))
+        else log.decode(man).fragments.map(f => (1, f.rowCount))
       Row(man.version, man.operation, man.parentVersion.orNull,
-        man.fragments.size, man.fragments.map(_.rowCount).sum,
+        counts.map(_._1).sum, counts.map(_._2).sum,
         new java.sql.Timestamp(man.createdMs))
     }
     spark.createDataFrame(
@@ -534,15 +540,13 @@ final class LakeDataset private (
     * staged NOW; the swap commits later (reference CreateDetachedDelete).
     * Conflict handling at commit time is the normal rewrite matrix. */
   def createDetachedDelete(predicate: String): String = {
-    val pred = expr(predicate)
-    val candidates = pruneFragments(m, predicate)
-    val touched =
-      if (candidates.isEmpty) Nil else matchedFragments(candidates, pred)
+    val where = parsePredicate(spark, predicate)
+    val touched = matchedFragments(where)
     if (touched.isEmpty)
       return persistDetached(DetachedTxn(UUID.randomUUID().toString,
         "delete", Nil, Nil, 0L, 0L, 0L, System.currentTimeMillis()))
     val remaining = readFragments(m, touched.map(_._1), withRowId = true)
-      .filter(!coalesce(pred, lit(false)))
+      .filter(!coalesce(GraftSqlShims.column(where), lit(false)))
     val (frags, _) = stageFragments(toPhysicalPreservingRowId(remaining, m), m)
     persistDetached(DetachedTxn(UUID.randomUUID().toString, "delete",
       frags, touched.map(_._1.id), 0L, 0L, touched.map(_._2).sum,
@@ -649,20 +653,22 @@ final class LakeDataset private (
     * actually contain matches are rewritten (update.go:208-340 zonemap-
     * pruned planning). */
   def delete(predicate: String,
-      useDeletionVectors: Boolean = false): Long = {
-    if (useDeletionVectors) return deleteWithVectors(predicate)
-    val pred = expr(predicate)
-    val candidates = pruneFragments(m, predicate)
-    if (candidates.isEmpty) return 0L
-    val touched = matchedFragments(candidates, pred)
+      useDeletionVectors: Boolean = false): Long =
+    deleteWhere(parsePredicate(spark, predicate), useDeletionVectors)
+
+  /** [[delete]] of the rows where `where` holds. */
+  private[lake] def deleteWhere(where: CExpr,
+      useDeletionVectors: Boolean): Long = {
+    if (useDeletionVectors) return deleteWithVectors(where)
+    val touched = matchedFragments(where)
     if (touched.isEmpty) return 0L
     val touchedIds = touched.map(_._1.id).toSet
-    // SQL DELETE three-valued semantics: delete only where pred IS TRUE, so
-    // keep rows where it is FALSE or NULL — a bare !pred would silently drop
-    // NULL-evaluating rows (NOT(NULL) = NULL is filtered out).
+    // SQL DELETE three-valued semantics: delete only where `where` IS TRUE,
+    // so keep rows where it is FALSE or NULL — a bare NOT would silently
+    // drop NULL-evaluating rows (NOT(NULL) = NULL is filtered out).
     val frags = stageRewriteGroups(touched.map(_._1), g =>
       readFragments(m, g, withRowId = true)
-        .filter(!coalesce(pred, lit(false))))
+        .filter(!coalesce(GraftSqlShims.column(where), lit(false))))
     commitRewrite(OpKind.DeleteUpdate, touchedIds, frags, "delete")
     touched.map(_._2).sum
   }
@@ -672,16 +678,14 @@ final class LakeDataset private (
   def update(predicate: String, set: Map[String, String]): Long = {
     val bad = set.keySet -- m.fields.map(_.name).toSet
     require(bad.isEmpty, s"unknown columns in SET: $bad")
-    val pred = expr(predicate)
-    val candidates = pruneFragments(m, predicate)
-    if (candidates.isEmpty) return 0L
-    val touched = matchedFragments(candidates, pred)
+    val where = parsePredicate(spark, predicate)
+    val touched = matchedFragments(where)
     if (touched.isEmpty) return 0L
     val touchedIds = touched.map(_._1.id).toSet
     val frags = stageRewriteGroups(touched.map(_._1), g =>
       set.foldLeft(readFragments(m, g, withRowId = true)) {
-        case (df, (c, e)) =>
-          df.withColumn(c, when(pred, expr(e)).otherwise(col(c)))
+        case (df, (c, e)) => df.withColumn(c,
+          when(GraftSqlShims.column(where), expr(e)).otherwise(col(c)))
       })
     commitRewrite(OpKind.DeleteUpdate, touchedIds, frags, "update")
     touched.map(_._2).sum
@@ -1379,9 +1383,9 @@ final class LakeDataset private (
     * Commit-wise this behaves like Delete in the conflict matrix but
     * touches no fragments: stable rowids stay valid across concurrent
     * compactions (rewrites preserve them), so disjoint ops rebase. */
-  private def deleteWithVectors(predicate: String): Long = {
-    val pred = expr(predicate)
-    val candidates = pruneFragments(m, predicate)
+  private def deleteWithVectors(where: CExpr): Long = {
+    val pred = GraftSqlShims.column(where)
+    val candidates = pruneFragments(m, where)
     if (candidates.isEmpty) return 0L
     val dvName = s"_deletes/dv-${UUID.randomUUID()}.parquet"
     val dvPath = rootPath.resolve(dvName)
@@ -1411,7 +1415,7 @@ final class LakeDataset private (
     // compacted fragment would see no overlap with this delete and could
     // resurrect its rows.
     commitOp(OpKind.DeleteDv, "delete_dv",
-        pruneFragments(m, predicate).map(_.id).toSet) {
+        pruneFragments(m, where).map(_.id).toSet) {
       m.copy(deletionFiles = m.deletionFiles :+ dvName,
         deletedRowCount = m.deletedRowCount + n)
     }
@@ -1854,7 +1858,11 @@ final class LakeDataset private (
     * (x, y) columns prunes as the conjunction of two range probes; no
     * separate tree structure is needed at fragment granularity. */
   def pruneFragments(man: Manifest, predicate: String): Seq[Fragment] =
-    man.fragments.filter(statTest(man, predicate))
+    pruneFragments(man, parsePredicate(spark, predicate))
+
+  private[lake] def pruneFragments(man: Manifest,
+      where: CExpr): Seq[Fragment] =
+    man.fragments.filter(statTest(man, where))
 
   /** Chunk-granularity pruning over ChunkRef aggregate stats — the same
     * probes as [[pruneFragments]], applied to a pseudo-fragment built from
@@ -1862,32 +1870,39 @@ final class LakeDataset private (
     * always kept. Used by [[LakeDataset.openPruned]] to decide which chunk
     * files to read AT ALL. */
   private[lake] def pruneChunks(man: Manifest, refs: Seq[ChunkRef],
-      predicate: String): Seq[ChunkRef] = {
-    val mayMatch = statTest(man, predicate)
+      where: CExpr): Seq[ChunkRef] = {
+    val mayMatch = statTest(man, where)
     // rowCount = the chunk's TOTAL ROWS (ref.rows; 0 = legacy-unknown, which
     // the IS NOT NULL probe treats as keep), not its fragment count
     refs.filter(ref => ref.stats.isEmpty ||
       mayMatch(Fragment(-1L, ref.file, ref.rows, ref.stats)))
   }
 
-  /** The predicate's conjuncts, literals coerced to their columns' types,
-    * compiled by [[ZoneMaps.mayMatch]] into one fragment test. */
-  private def statTest(man: Manifest,
-      predicate: String): Fragment => Boolean = {
+  /** The predicate, literals coerced to their columns' types, compiled by
+    * [[ZoneMaps.mayMatch]] into one fragment test. */
+  private def statTest(man: Manifest, where: CExpr): Fragment => Boolean = {
     val byName = man.fields.map(f => f.name -> f).toMap
-    val conjuncts =
-      splitAnd(spark.sessionState.sqlParser.parseExpression(predicate))
-        .map(coerceLiterals(_, byName))
-    ZoneMaps.mayMatch(conjuncts, fieldOf(byName), bloomMayContain)
+    ZoneMaps.mayMatch(coerceLiterals(where, byName), fieldOf(byName),
+      bloomMayContain)
   }
 
+  /** A top-level column reference's field; a nested one (`s.x`) has none. */
   private def fieldOf(byName: Map[String, FieldDef])(attr: CExpr)
       : Option[FieldDef] = attr match {
-    case UnresolvedAttribute(parts) => byName.get(parts.mkString("."))
+    case UnresolvedAttribute(Seq(name)) => byName.get(name)
     case _ => None
   }
 
-  /** The parsed predicate is UNRESOLVED — no analyzer coercion ever runs —
+  /** `man`'s live rows where `where` holds: fragments its stats rule out
+    * are never opened, and the rest are filtered row by row. */
+  private[lake] def readWhere(man: Manifest, where: Option[CExpr],
+      withRowId: Boolean): DataFrame = {
+    val df = readFragments(man,
+      where.fold(man.fragments)(pruneFragments(man, _)), withRowId)
+    where.fold(df)(w => df.filter(GraftSqlShims.column(w)))
+  }
+
+  /** The predicate is UNRESOLVED — no analyzer coercion ever runs —
     * so `ts >= '2026-01-01'` arrives with a STRING literal while the stat
     * is epoch micros. Cast every literal compared against a known column to
     * that column's declared type up front (one pass per predicate, not per
@@ -1931,11 +1946,6 @@ final class LakeDataset private (
   def prunedFileCount(predicate: String): Int =
     pruneFragments(m, predicate).size
 
-  private def splitAnd(e: CExpr): Seq[CExpr] = e match {
-    case And(l, r) => splitAnd(l) ++ splitAnd(r)
-    case other => Seq(other)
-  }
-
   /** Equality-predicate bloom probe (the index-selector rule: equality →
     * bloom, ranges → zonemaps). The literal, already of the field's type,
     * is hashed exactly as the build job hashed column values (xxhash64 seed
@@ -1949,13 +1959,15 @@ final class LakeDataset private (
       loadBloom(rel).mightContain(h)
     }
 
-  /** (fragment, matchedRowCount) for fragments with ≥1 predicate match —
-    * one job over the candidate files. */
-  private def matchedFragments(candidates: Seq[Fragment],
-      pred: Column): Seq[(Fragment, Long)] = {
+  /** (fragment, matchedRowCount) for fragments with ≥1 row where `where`
+    * holds: the stats prune the candidates, then one job counts their
+    * matches. */
+  private def matchedFragments(where: CExpr): Seq[(Fragment, Long)] = {
+    val candidates = pruneFragments(m, where)
+    if (candidates.isEmpty) return Nil
     val counts = readFragments(m, candidates, withRowId = false,
         withFileName = true)
-      .filter(pred)
+      .filter(GraftSqlShims.column(where))
       .groupBy("_file").agg(count(lit(1)).as("n"))
       .collect().map(r => (fileName(r.getString(0)), r.getLong(1))).toMap
     candidates.flatMap(f => counts.get(fileName(f.file)).map(n => (f, n)))
@@ -2144,36 +2156,21 @@ final class LakeDataset private (
       s"PRIMARY KEY violation: duplicate key within the batch on $pk")
     if (!probe) return batch
     val keys = batch.select(pk.map(col): _*).distinct()
-    // single small key set over a simple type: render an IN predicate and
-    // prune fragments by zonemap/bloom/value-set stats FIRST — a probe of
-    // k keys opens only the fragments that may hold them (the
-    // lake_pointlookup machinery), not the table. Everything else takes
-    // the honest distributed semi-join.
-    // Only literal-safe values ride the rendered IN predicate: Spark's
-    // lexer reads 'a''b' as TWO adjacent literals concatenated and
-    // unescapes backslash sequences (escapedStringLiterals=false), so a
-    // quoted/escaped rendering of "it's" would probe the WRONG value and
-    // stats could prune away the fragment holding the real key. Anything
-    // not trivially safe falls back to the semi-join (None).
-    def renderLit(v: Any): Option[String] = v match {
-      case s: String
-        if !s.exists(c => c == '\'' || c == '\\' || c.isControl) =>
-        Some("'" + s + "'")
-      case n @ (_: Byte | _: Short | _: Int | _: Long) => Some(n.toString)
-      case d: java.math.BigDecimal => Some(d.toPlainString)
-      case _ => None
-    }
+    // a single small key set: one IN predicate prunes fragments by
+    // zonemap/bloom/value-set stats FIRST — a probe of k keys opens only
+    // the fragments that may hold them (the lake_pointlookup machinery),
+    // not the table. Everything else takes the distributed semi-join.
     val inline: Option[DataFrame] =
       if (pk.size == 1) {
         val vals = keys.limit(MaxInlinePkProbe + 1).collect().map(_.get(0))
-        val lits = vals.map(renderLit)
-        if (vals.length <= MaxInlinePkProbe && vals.nonEmpty &&
-            lits.forall(_.isDefined)) {
-          val pred = s"${pk.head} IN (${lits.map(_.get).mkString(",")})"
-          val frags = pruneFragments(m, pred)
+        if (vals.length <= MaxInlinePkProbe && vals.nonEmpty) {
+          val dt = keys.schema.head.dataType
+          val probe = In(UnresolvedAttribute(Seq(pk.head)),
+            vals.toSeq.map(Literal.create(_, dt)))
+          val frags = pruneFragments(m, probe)
           if (frags.isEmpty) Some(spark.emptyDataFrame.limit(1))
           else Some(readFragments(m, frags, withRowId = false)
-            .filter(col(pk.head).isin(vals.toIndexedSeq: _*)).limit(1))
+            .filter(GraftSqlShims.column(probe)).limit(1))
         } else None
       } else None
     val clash = inline.getOrElse(
@@ -2644,8 +2641,15 @@ object LakeDataset {
       predicate: Option[String],
       branch: Option[String] = None): LakeDataset = {
     val log = VersionLog(spark, path, branch)
-    openAt(spark, path, log, log.slim(log.latest), predicate)
+    openAt(spark, path, log, log.slim(log.latest),
+      predicate.map(parsePredicate(spark, _)))
   }
+
+  /** A caller's predicate text (a Spark SQL expression, a superset of the
+    * reference filter DSL, filter_parser.go:15-270) as the expression
+    * every lake path takes. Each string door parses once, here. */
+  private[lake] def parsePredicate(spark: SparkSession, text: String): CExpr =
+    spark.sessionState.sqlParser.parseExpression(text)
 
   /** A handle that reads `m`, a version of `log`'s namespace, and refuses
     * commits. */
@@ -2655,14 +2659,14 @@ object LakeDataset {
 
   /** [[openPruned]] at `slim`, a version of `log`'s namespace. */
   private[lake] def openAt(spark: SparkSession, path: String, log: VersionLog,
-      slim: Manifest, predicate: Option[String]): LakeDataset = {
+      slim: Manifest, where: Option[CExpr]): LakeDataset = {
     def handle(chunks: Seq[ChunkRef]) = new LakeDataset(spark, path,
       log.decode(slim.copy(chunkFiles = chunks)),
       partial = chunks.size < slim.chunkFiles.size, branch = log.branch)
-    if (slim.chunkFiles.isEmpty || predicate.isEmpty) handle(slim.chunkFiles)
+    if (slim.chunkFiles.isEmpty || where.isEmpty) handle(slim.chunkFiles)
     else {
       val probe = reader(spark, path, log, slim.copy(fragments = Nil))
-      handle(probe.pruneChunks(slim, slim.chunkFiles, predicate.get))
+      handle(probe.pruneChunks(slim, slim.chunkFiles, where.get))
     }
   }
 
@@ -2851,10 +2855,8 @@ final case class Scanner(
     val man = version
       .map(ds.log.manifest)
       .getOrElse(ds.manifest)
-    val frags = filter.map(f => ds.pruneFragments(man, f))
-      .getOrElse(man.fragments)
-    var df = ds.readFragments(man, frags, withRowId = rowId)
-    filter.foreach(f => df = df.filter(org.apache.spark.sql.functions.expr(f)))
+    var df = ds.readWhere(man,
+      filter.map(LakeDataset.parsePredicate(ds.spark, _)), withRowId = rowId)
     if (inOrder)
       df = df.orderBy(org.apache.spark.sql.functions.col(LakeDataset.RowIdCol))
     if (columns.nonEmpty) {

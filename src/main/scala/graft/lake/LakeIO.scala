@@ -123,8 +123,8 @@ object NioLakeIO extends LakeIO {
   def exists(p: Path): Boolean = Files.exists(toNio(p))
   def isDirectory(p: Path): Boolean = Files.isDirectory(toNio(p))
   def listNames(dir: Path): Seq[String] =
-    Files.list(toNio(dir)).iterator().asScala
-      .map(_.getFileName.toString).toSeq
+    scala.util.Using.resource(Files.list(toNio(dir)))(
+      _.iterator().asScala.map(_.getFileName.toString).toList)
   def mkdirs(p: Path): Unit = Files.createDirectories(toNio(p)): Unit
   def delete(p: Path): Boolean = Files.deleteIfExists(toNio(p))
   def deleteRecursive(p: Path): Boolean = {
@@ -228,9 +228,15 @@ final class HadoopLakeIO(conf: Configuration) extends LakeIO {
         // Sound because S3/GCS/Azure are read-after-write consistent and
         // two writers never publish byte-identical manifests (fragment
         // file names are UUID-bearing). Chaos-tested by
-        // ConditionalPutLakeSpec's injected lost-ack/timeout cases.
+        // ConditionalPutLakeSpec's injected lost-ack/timeout cases. Only a
+        // missing object reads back as None; any other read failure fails
+        // the publish with its own cause.
         def readBack(p: Path): Option[String] =
-          try Option(readString(p)) catch { case _: Exception => None }
+          try Option(readString(p))
+          catch {
+            case _: java.io.FileNotFoundException |
+                _: java.nio.file.NoSuchFileException => None
+          }
         var sawAmbiguity = false // only then may "exists" be our own write
         def attempt(remaining: Int): Boolean =
           try store.putIfAbsent(target, content)

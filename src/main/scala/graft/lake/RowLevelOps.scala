@@ -14,11 +14,11 @@ import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, V1Scan}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
-import org.apache.spark.sql.sources.{BaseRelation, Filter, TableScan}
+import org.apache.spark.sql.sources.{BaseRelation, TableScan}
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -116,32 +116,15 @@ final class LakeRowLevelOperation(root: String, cmd: Command)
   * deletion-vector rowids. */
 private[lake] final class LakeGroupScanBuilder(op: LakeRowLevelOpState,
     root: String)
-  extends ScanBuilder with SupportsPushDownFilters
-  with SupportsPushDownRequiredColumns {
+  extends ScanBuilder with LakePushdown {
 
-  private var pushed: Array[Filter] = Array.empty
-  private var predicates: Seq[String] = Nil
-  private var required: Option[StructType] = None
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val translated = filters.flatMap(f => LakeFilters.toSql(f).map(f -> _))
-    pushed = translated.map(_._1)
-    predicates = translated.map(_._2).toSeq
-    filters // all residual: Spark's rewrite plan owns row-level semantics
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = Some(requiredSchema)
+  // the head the scan plans against: filters translate over its schema
+  private lazy val ds = LakeDataset.open(SparkSession.active, root)
+  protected def tableSchema: StructType = ds.schema
 
   override def build(): Scan = {
-    val spark = SparkSession.active
-    val ds = LakeDataset.open(spark, root)
     val man = ds.manifest
-    val frags =
-      if (predicates.isEmpty) man.fragments
-      else ds.pruneFragments(man, predicates.mkString(" AND "))
+    val frags = where.fold(man.fragments)(ds.pruneFragments(man, _))
     // record the replaced groups for the write side
     op.touchedIds = frags.map(_.id).toSet
     op.plannedVersion = man.version

@@ -1,6 +1,8 @@
 package graft.lake
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{And, Expression, GreaterThanOrEqual, LessThanOrEqual, Literal}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, Decimal}
 
@@ -42,22 +44,29 @@ object SpatialIndex {
     * closed-interval overlap). Fragment pruning via zonemaps on the four
     * box columns. */
   def intersects(ds: LakeDataset, cols: BoxCols, q: BBox): DataFrame =
-    ds.scanner().withFilter(
-      s"${cols.xMin} <= ${q.xMax} AND ${cols.xMax} >= ${q.xMin} AND " +
-      s"${cols.yMin} <= ${q.yMax} AND ${cols.yMax} >= ${q.yMin}").build()
+    rangeScan(ds, atMost(cols.xMin, q.xMax), atLeast(cols.xMax, q.xMin),
+      atMost(cols.yMin, q.yMax), atLeast(cols.yMax, q.yMin))
 
   /** Rows whose box lies fully inside `q` (reference ContainsSearch). */
   def contains(ds: LakeDataset, cols: BoxCols, q: BBox): DataFrame =
-    ds.scanner().withFilter(
-      s"${cols.xMin} >= ${q.xMin} AND ${cols.xMax} <= ${q.xMax} AND " +
-      s"${cols.yMin} >= ${q.yMin} AND ${cols.yMax} <= ${q.yMax}").build()
+    rangeScan(ds, atLeast(cols.xMin, q.xMin), atMost(cols.xMax, q.xMax),
+      atLeast(cols.yMin, q.yMin), atMost(cols.yMax, q.yMax))
 
   /** Point rows inside `q` — the point specialization of [[intersects]]. */
   def rangePoints(ds: LakeDataset, xCol: String, yCol: String,
       q: BBox): DataFrame =
-    ds.scanner().withFilter(
-      s"$xCol >= ${q.xMin} AND $xCol <= ${q.xMax} AND " +
-      s"$yCol >= ${q.yMin} AND $yCol <= ${q.yMax}").build()
+    rangeScan(ds, atLeast(xCol, q.xMin), atMost(xCol, q.xMax),
+      atLeast(yCol, q.yMin), atMost(yCol, q.yMax))
+
+  private def atLeast(c: String, v: Double): Expression =
+    GreaterThanOrEqual(UnresolvedAttribute.quotedString(c), Literal(v))
+  private def atMost(c: String, v: Double): Expression =
+    LessThanOrEqual(UnresolvedAttribute.quotedString(c), Literal(v))
+
+  /** The current version's rows where every range holds. */
+  private def rangeScan(ds: LakeDataset, ranges: Expression*): DataFrame =
+    ds.readWhere(ds.manifest, Some(ranges.reduce(And(_, _))),
+      withRowId = false)
 
   /** Exact k nearest point rows to (px, py) by Euclidean distance, with
     * `_dist` appended; ties broken by `tieCol` so the result is

@@ -1,7 +1,7 @@
 package graft.lake
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EqualTo, EvalMode, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EqualTo, EvalMode, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, PredicateHelper}
 import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -18,7 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * byte order for strings, NaN largest) — the order the writers' min/max
   * used. A stat that does not decode is unknown: the fragment is kept, so
   * pruning can lose IO but never rows. */
-private[lake] object ZoneMaps {
+private[lake] object ZoneMaps extends PredicateHelper {
 
   private val EpochMicros = "-?\\d+".r
 
@@ -106,8 +106,8 @@ private[lake] object ZoneMaps {
           _.exists(e => dec(e).forall(ord.equiv(_, v))))
   }
 
-  /** Compile a predicate's conjuncts into one fragment test: false only
-    * when the stats prove no row of the fragment can match. Literals
+  /** Compile a predicate into one fragment test over its conjuncts: false
+    * only when the stats prove no row of the fragment can match. Literals
     * arrive cast to their column's type where the cast succeeds; one whose
     * cast fails stays as written and decides nothing. A written NULL
     * matches no row, as a SQL comparison with NULL is never true.
@@ -115,7 +115,7 @@ private[lake] object ZoneMaps {
     * a column reference; `bloomMayContain` probes the fragment's bloom
     * sidecar for an equality value. A chunk is tested as a pseudo-fragment
     * of its aggregate stats. */
-  def mayMatch(conjuncts: Seq[Expression],
+  def mayMatch(predicate: Expression,
       fieldOf: Expression => Option[FieldDef],
       bloomMayContain: (Fragment, FieldDef, Literal) => Boolean)
       : Fragment => Boolean = {
@@ -139,7 +139,7 @@ private[lake] object ZoneMaps {
         (frag: Fragment) => ls.exists(l => l.value != null &&
           z.mayEqual(frag, l.value) && bloomMayContain(frag, z.field, l))
       }
-    val tests = conjuncts.flatMap {
+    val tests = splitConjunctivePredicates(predicate).flatMap {
       case IsNull(a) => nulls(a)((_, s) => s.nullCount > 0)
       case IsNotNull(a) => nulls(a)((frag, s) =>
         frag.rowCount == 0 || s.nullCount < frag.rowCount)

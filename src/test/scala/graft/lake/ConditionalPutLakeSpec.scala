@@ -4,17 +4,24 @@ import java.net.URI
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, Path, RawLocalFileSystem}
 
 /** Test-only Hadoop FileSystem modeling an OBJECT STORE: bytes on local
   * disk, but any RENAME into the lake's commit surface (`_manifests`,
   * `_refs`, `_tags`) throws — real object stores have no atomic rename,
   * so a commit protocol that renames there is broken on S3/GCS/Azure by
   * construction. Data-staging renames stay permitted (fragment moves ride
-  * a store's multipart-copy/committer machinery, a different seam). */
+  * a store's multipart-copy/committer machinery, a different seam). A read
+  * can be made to fail on request (`failOpen`). */
 class FakePutFileSystem extends RawLocalFileSystem {
   override def getScheme: String = "fakeput"
   override def getUri: URI = FakePutFileSystem.NAME
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    if (FakePutFileSystem.failOpen(f.toUri.getPath))
+      throw new java.io.IOException(s"injected read failure: $f")
+    super.open(f, bufferSize)
+  }
 
   override def rename(src: Path, dst: Path): Boolean = {
     val s = dst.toUri.getPath
@@ -28,6 +35,9 @@ class FakePutFileSystem extends RawLocalFileSystem {
 object FakePutFileSystem {
   val NAME: URI = URI.create("fakeput://testhost/")
   val CommitDirs: Seq[String] = Seq("_manifests", "_refs", "_tags")
+
+  /** Opening a path this accepts fails with an IOException. */
+  @volatile var failOpen: String => Boolean = _ => false
 
   def register(conf: Configuration): Unit = {
     conf.set("fs.fakeput.impl", classOf[FakePutFileSystem].getName)
@@ -167,6 +177,23 @@ class ConditionalPutLakeSpec extends SchemedLakeSpecBase {
     }
     assert(!io.exists(t), "failed publish must leave no partial object")
     assert(store.calls == 3, "initial attempt + 2 retries, then give up")
+  }
+
+  test("chaos: a read-back that fails for another reason fails the publish") {
+    val io = new HadoopLakeIO(spark.sparkContext.hadoopConfiguration)
+    val dir = java.nio.file.Files.createTempDirectory("chaos-")
+    val t = new Path(s"fakeput://testhost$dir/_manifests/v1.json")
+    val store = new ChaoticStore(failures = 99, applyBeforeThrow = true)
+    FakePutFileSystem.failOpen = _ == t.toUri.getPath
+    try withStore(store) {
+      val e = intercept[java.io.IOException](
+        io.publishAtomic(t, """{"v":1}"""))
+      // the read-back's own failure, not a generic "failed after retries"
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.getMessage.contains("injected read failure")),
+        s"cause chain: $e")
+    } finally FakePutFileSystem.failOpen = _ => false
+    assert(store.calls == 3)
   }
 
   test("chaos: end-to-end append with lost ack commits EXACTLY once") {

@@ -292,4 +292,24 @@ class FtsIndexSpec extends SparkTestBase {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(repeated == Map(1L -> 3L))
   }
+
+  test("phrase terms holding a backslash or an apostrophe match as written") {
+    val dir = Files.createTempDirectory("ftsesc-").toString
+    val ds = LakeDataset.create(spark, dir, StructType(Seq(
+      StructField("doc_id", LongType),
+      StructField("text", StringType))))
+    ds.append(spark.createDataFrame(java.util.List.of(
+      org.apache.spark.sql.Row(1L, "path a\\b here"),
+      org.apache.spark.sql.Row(2L, "path ab here"),
+      org.apache.spark.sql.Row(3L, "it's here now")), ds.schema).coalesce(1))
+    FtsIndex.build(ds, "text", name = "ws", tokenizer = "whitespace")
+    def hits(phrase: String) =
+      FtsIndex.phraseSearchText(ds, phrase, 10, "ws")
+        .select("doc_id", "n_occ").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(hits("a\\b here") == Map(1L -> 1L))
+    assert(hits("a\\b") == Map(1L -> 1L))
+    assert(hits("it's here") == Map(3L -> 1L))
+    assert(hits("here it's").isEmpty)
+  }
 }

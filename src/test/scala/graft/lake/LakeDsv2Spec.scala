@@ -2,6 +2,8 @@ package graft.lake
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkTestBase
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
@@ -130,6 +132,54 @@ class LakeDsv2Spec extends SparkTestBase {
       .filter("ntz >= TIMESTAMP_NTZ '2024-06-01 00:00:00'")
     assert(df.count() == 1)
     assert(LakeDataSource.lastScan(root).contains((1, 2)))
+  }
+
+  test("a pushed filter on a column whose name needs quoting prunes") {
+    val root = tmpDir()
+    val quoted = StructType(Seq(StructField("my col", LongType)))
+    Seq(1L, 2L, 3L).foreach { v =>
+      spark.createDataFrame(java.util.List.of(Row(v)), quoted)
+        .coalesce(1).write.format("lake").mode("append").save(root)
+    }
+    val df = spark.read.format("lake").load(root).filter("`my col` = 2")
+    assert(df.collect().map(_.getLong(0)).toSeq == Seq(2L))
+    assert(LakeDataSource.lastScan(root).contains((1, 3)))
+  }
+
+  test("a pushed filter on a nested field answers as the same parquet") {
+    val root = tmpDir()
+    val pq = tmpDir() + "/pq"
+    val nested = StructType(Seq(
+      StructField("id", LongType),
+      StructField("s", StructType(Seq(
+        StructField("x", LongType), StructField("y", StringType))))))
+    (0 until 3).foreach { k =>
+      val df = spark.createDataFrame((0 until 4).map(i =>
+        Row(k * 4L + i, Row((k * 4L + i) % 3, s"y$i"))).asJava, nested)
+        .coalesce(1)
+      df.write.format("lake").mode("append").save(root)
+      df.write.mode("append").parquet(pq)
+    }
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.filter("s.x = 2").select("id").collect().map(_.getLong(0)).sorted.toSeq
+    val want = ids(spark.read.parquet(pq))
+    assert(want.nonEmpty)
+    assert(ids(spark.read.format("lake").load(root)) == want)
+  }
+
+  test("a PRIMARY KEY on a column whose name needs quoting is enforced") {
+    val root = tmpDir()
+    val quoted = StructType(Seq(StructField("my col", LongType),
+      StructField("v", StringType)))
+    def batch(k: Long) =
+      spark.createDataFrame(java.util.List.of(Row(k, s"v$k")), quoted)
+    val ds = LakeDataset.create(spark, root, quoted)
+    ds.append(batch(1))
+    ds.setPrimaryKey(Seq("my col"))
+    ds.append(batch(2))
+    val e = intercept[IllegalArgumentException](ds.append(batch(2)))
+    assert(e.getMessage.contains("key already present"), e.getMessage)
+    assert(ds.read().collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
   }
 
   test("manifest statistics drive broadcast join planning") {

@@ -12,7 +12,8 @@ import org.apache.spark.sql.types._
 
 /** Seeded pruning-soundness fuzz: for every supported predicate shape,
   * across long, double, string, timestamp, date, decimal and timestamp_ntz
-  * columns with nulls and NaNs in play, each pruned read — the scanner's
+  * columns with nulls and NaNs in play, and a column whose name needs
+  * quoting (`my col`), each pruned read — the scanner's
   * fragment pruning, the lake-format DSv2 read and the chunk-skipping open
   * — returns exactly the ids of the unpruned read filtered by the same
   * predicate. Strings mix code points below U+D800, in U+E000-U+FFFD and
@@ -26,7 +27,8 @@ class PruneSoundnessFuzzSpec extends SparkTestBase {
     StructField("t", TimestampType),
     StructField("dt", DateType),
     StructField("dec", DecimalType(10, 2)),
-    StructField("ntz", TimestampNTZType)))
+    StructField("ntz", TimestampNTZType),
+    StructField("my col", LongType)))
 
   private val ntzFormat = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
 
@@ -75,7 +77,10 @@ class PruneSoundnessFuzzSpec extends SparkTestBase {
             base * 100L + rnd.nextInt(5000), 2)
           val ntz = LocalDateTime.of(2024, 1, 1, 0, 0)
             .plusSeconds(base * 60L + rnd.nextInt(3600))
-          val row = Row(k * 1000L + i, d, s, t, dt, dec, ntz)
+          // drawn from no random state, so the other columns keep theirs
+          val myCol: java.lang.Long =
+            if (i == 3 && k % 4 == 0) null else base + i.toLong
+          val row = Row(k * 1000L + i, d, s, t, dt, dec, ntz, myCol)
           rows.add(row)
           written += row
         }
@@ -114,7 +119,10 @@ class PruneSoundnessFuzzSpec extends SparkTestBase {
           s"dec >= $dec", s"dec = ${some(5).getDecimal(5)}",
           s"ntz < TIMESTAMP_NTZ '$ntz'",
           s"ntz = TIMESTAMP_NTZ " +
-            s"'${some(6).getAs[LocalDateTime](6).format(ntzFormat)}'")
+            s"'${some(6).getAs[LocalDateTime](6).format(ntzFormat)}'",
+          s"`my col` = ${v % 1000}", s"`my col` < $v",
+          s"`my col` IN (${v % 1000}, ${v * 7 % 1000})",
+          "`my col` IS NULL")
       }.distinct
 
       val table = spark.read.format("lake").load(ds.root)

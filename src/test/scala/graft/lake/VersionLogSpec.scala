@@ -121,6 +121,50 @@ class VersionLogSpec extends SparkTestBase {
     }
   }
 
+  test("history reads no chunk file; its counts are the decoded manifests'") {
+    spark.conf.set("spark.graft.manifestChunkThreshold", "1")
+    spark.conf.set("spark.graft.manifestChunkSize", "2")
+    try {
+      val root = "graftfs://testhost" + tmp("vlog-hist-")
+      val ds = LakeDataset.create(spark, root, schema)
+      (1L to 4L).foreach(i => ds.append(rows(i, i + 10)))
+      ds.delete("id = 2")
+      assert(ds.manifest.chunkFiles.nonEmpty)
+      val want = ds.versions.map { v =>
+        val m = ds.log.manifest(v)
+        (v, m.fragments.size, m.fragments.map(_.rowCount).sum)
+      }
+      var got = Seq.empty[(Long, Int, Long)]
+      val reads = manifestReads {
+        got = ds.history().collect().toSeq
+          .map(r => (r.getLong(0), r.getInt(3), r.getLong(4)))
+      }
+      assert(got == want)
+      assert(!reads.exists(_.endsWith(".jsonl")), reads)
+    } finally {
+      spark.conf.unset("spark.graft.manifestChunkThreshold")
+      spark.conf.unset("spark.graft.manifestChunkSize")
+    }
+  }
+
+  test("listing a local namespace leaves no directory handle open") {
+    val fdDir = new java.io.File("/proc/self/fd")
+    assume(fdDir.isDirectory, "needs /proc/self/fd")
+    val ds = LakeDataset.create(spark, tmp("vlog-fd-"), schema)
+    ds.append(rows(1))
+    def openFds = fdDir.list().length
+    def list(n: Int) = (1 to n).foreach(_ => assert(ds.log.versions.nonEmpty))
+    list(50)
+    val before = openFds
+    list(300)
+    val mid = openFds
+    list(300)
+    val after = openFds
+    // a leak holds one handle per call; other threads may open a few
+    assert(mid - before < 100 && after - mid < 100,
+      s"open fds: $before, then $mid after 300 listings, $after after 600")
+  }
+
   test("a change-feed read ends at changesTo or the head; others pin versionAsOf") {
     val root = tmp("vlog-feed-")
     val ds = LakeDataset.create(spark, root, schema)
