@@ -1,0 +1,26 @@
+-- TPC-DS query 3: the text of DuckDB 1.0.0's tpcds_queries().
+-- Deviations, the same for both engines:
+--   - An outer SELECT casts sum_agg to BIGINT: DuckDB widens
+--     sum(INTEGER/BIGINT) to HUGEINT, which the hasher bans, and on Spark
+--     the cast is a no-op.
+select d_year, brand_id, brand, cast(sum_agg as bigint) as sum_agg
+from (
+SELECT dt.d_year,
+       item.i_brand_id brand_id,
+       item.i_brand brand,
+       sum(ss_ext_sales_price) sum_agg
+FROM date_dim dt,
+     store_sales,
+     item
+WHERE dt.d_date_sk = store_sales.ss_sold_date_sk
+  AND store_sales.ss_item_sk = item.i_item_sk
+  AND item.i_manufact_id = 128
+  AND dt.d_moy=11
+GROUP BY dt.d_year,
+         item.i_brand,
+         item.i_brand_id
+ORDER BY dt.d_year,
+         sum_agg DESC,
+         brand_id
+LIMIT 100
+) graft_cast;

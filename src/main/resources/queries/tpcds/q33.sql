@@ -1,0 +1,77 @@
+-- TPC-DS query 33: the text of DuckDB 1.0.0's tpcds_queries().
+-- Deviations, the same for both engines:
+--   - gmt_offset -5/-7 becomes -500: every generated offset is -500 cents.
+--   - ORDER BY gains tiebreak columns: its keys do not determine the rows
+--     the LIMIT keeps, so two engines could legally keep different ones.
+--   - An outer SELECT casts total_sales to BIGINT: DuckDB widens
+--     sum(INTEGER/BIGINT) to HUGEINT, which the hasher bans, and on Spark
+--     the cast is a no-op.
+select i_manufact_id, cast(total_sales as bigint) as total_sales
+from (
+WITH ss AS
+  ( SELECT i_manufact_id,
+           sum(ss_ext_sales_price) total_sales
+   FROM store_sales,
+        date_dim,
+        customer_address,
+        item
+   WHERE i_manufact_id IN
+       (SELECT i_manufact_id
+        FROM item
+        WHERE i_category IN ('Electronics'))
+     AND ss_item_sk = i_item_sk
+     AND ss_sold_date_sk = d_date_sk
+     AND d_year = 1998
+     AND d_moy = 5
+     AND ss_addr_sk = ca_address_sk
+     AND ca_gmt_offset = -500
+   GROUP BY i_manufact_id),
+     cs AS
+  ( SELECT i_manufact_id,
+           sum(cs_ext_sales_price) total_sales
+   FROM catalog_sales,
+        date_dim,
+        customer_address,
+        item
+   WHERE i_manufact_id IN
+       (SELECT i_manufact_id
+        FROM item
+        WHERE i_category IN ('Electronics'))
+     AND cs_item_sk = i_item_sk
+     AND cs_sold_date_sk = d_date_sk
+     AND d_year = 1998
+     AND d_moy = 5
+     AND cs_bill_addr_sk = ca_address_sk
+     AND ca_gmt_offset = -500
+   GROUP BY i_manufact_id),
+     ws AS
+  ( SELECT i_manufact_id,
+           sum(ws_ext_sales_price) total_sales
+   FROM web_sales,
+        date_dim,
+        customer_address,
+        item
+   WHERE i_manufact_id IN
+       (SELECT i_manufact_id
+        FROM item
+        WHERE i_category IN ('Electronics'))
+     AND ws_item_sk = i_item_sk
+     AND ws_sold_date_sk = d_date_sk
+     AND d_year = 1998
+     AND d_moy = 5
+     AND ws_bill_addr_sk = ca_address_sk
+     AND ca_gmt_offset = -500
+   GROUP BY i_manufact_id)
+SELECT i_manufact_id,
+       sum(total_sales) total_sales
+FROM
+  (SELECT *
+   FROM ss
+   UNION ALL SELECT *
+   FROM cs
+   UNION ALL SELECT *
+   FROM ws) tmp1
+GROUP BY i_manufact_id
+ORDER BY total_sales, i_manufact_id
+LIMIT 100
+) graft_cast;

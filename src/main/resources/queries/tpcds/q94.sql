@@ -1,0 +1,34 @@
+-- TPC-DS query 94: the text of DuckDB 1.0.0's tpcds_queries().
+-- Deviations, the same for both engines:
+--   - Double-quoted aliases become plain identifiers: Spark reads "..." as
+--     a string literal.
+--   - An outer SELECT casts ship_cost, net_profit to BIGINT: DuckDB widens
+--     sum(INTEGER/BIGINT) to HUGEINT, which the hasher bans, and on Spark
+--     the cast is a no-op.
+select order_count, cast(ship_cost as bigint) as ship_cost, cast(net_profit as bigint) as net_profit
+from (
+SELECT count(DISTINCT ws_order_number) AS order_count ,
+       sum(ws_ext_ship_cost) AS ship_cost ,
+       sum(ws_net_profit) AS net_profit
+FROM web_sales ws1 ,
+     date_dim ,
+     customer_address ,
+     web_site
+WHERE d_date BETWEEN '1999-02-01' AND cast('1999-04-02' AS date)
+  AND ws1.ws_ship_date_sk = d_date_sk
+  AND ws1.ws_ship_addr_sk = ca_address_sk
+  AND ca_state = 'IL'
+  AND ws1.ws_web_site_sk = web_site_sk
+  AND web_company_name = 'pri'
+  AND EXISTS
+    (SELECT *
+     FROM web_sales ws2
+     WHERE ws1.ws_order_number = ws2.ws_order_number
+       AND ws1.ws_warehouse_sk <> ws2.ws_warehouse_sk)
+  AND NOT exists
+    (SELECT *
+     FROM web_returns wr1
+     WHERE ws1.ws_order_number = wr1.wr_order_number)
+ORDER BY count(DISTINCT ws_order_number)
+LIMIT 100
+) graft_cast;

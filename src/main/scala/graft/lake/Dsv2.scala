@@ -347,7 +347,7 @@ private[lake] final class LakeScanBuilder(root: String,
         override def schema: StructType = outSchema
         override def buildScan(): RDD[Row] =
           ds.changes(fromV, toV)
-            .select(outSchema.fieldNames.map(col).toSeq: _*).rdd
+            .select(outSchema.fieldNames.map(LakeDataset.field).toSeq: _*).rdd
       }.asInstanceOf[T]
   }
 
@@ -413,7 +413,7 @@ private[lake] final class LakeScanBuilder(root: String,
           // Re-apply the pushed predicate inside the inner parquet scan too,
           // so row groups within surviving fragments are skipped natively.
           where.foreach(w => df = df.filter(GraftSqlShims.column(w)))
-          df.select(outSchema.fieldNames.map(col).toSeq: _*).rdd
+          df.select(outSchema.fieldNames.map(LakeDataset.field).toSeq: _*).rdd
         }
       }.asInstanceOf[T]
   }

@@ -718,10 +718,10 @@ final class LakeDataset private (
     // join, duplicating _rowid values and breaking the stable-rowid
     // invariant (the reference resolves exactly one source row per target
     // row); a null PK would break the enforced key — fail fast on either.
-    val probe = source.groupBy(keys.map(col): _*)
+    val probe = source.groupBy(keys.map(field): _*)
       .agg(count(lit(1)).as("_n"))
       .agg(max(col("_n")).as("_mx"),
-        sum(when(keys.map(col(_).isNull).reduce(_ || _), 1L).otherwise(0L))
+        sum(when(keys.map(field(_).isNull).reduce(_ || _), 1L).otherwise(0L))
           .as("_nullkeys"))
       .collect()(0)
     if (pkCols.nonEmpty)
@@ -730,8 +730,8 @@ final class LakeDataset private (
     require(probe.isNullAt(0) || probe.getLong(0) <= 1L,
       s"mergeInsert source has duplicate keys on $keys")
     val srcCols = source.columns.filter(fieldNames.contains).toSeq
-    val src = source.select(srcCols.map(c => col(c).as(s"_src_$c")): _*)
-    val keyCond = keys.map(k => col(k) === col(s"_src_$k")).reduce(_ && _)
+    val src = source.select(srcCols.map(c => field(c).as(s"_src_$c")): _*)
+    val keyCond = keys.map(k => field(k) === field(s"_src_$k")).reduce(_ && _)
 
     val target = readFragments(m, m.fragments, withRowId = false,
       withFileName = true)
@@ -758,15 +758,15 @@ final class LakeDataset private (
       newFrags ++= stageRewriteGroups(touched, g => {
         val joined = readFragments(m, g, withRowId = true)
           .join(src, keyCond, "left_outer")
-        val isMatch = col(s"_src_${keys.head}").isNotNull
+        val isMatch = field(s"_src_${keys.head}").isNotNull
         val merged0 = srcCols.filterNot(keys.contains).foldLeft(joined) {
           case (df, c) =>
             if (updateMatched)
-              df.withColumn(c, when(isMatch, col(s"_src_$c")).otherwise(col(c)))
+              df.withColumn(c, when(isMatch, field(s"_src_$c")).otherwise(field(c)))
             else df
         }
         merged0.select(
-          (m.fields.map(f => col(f.name)) :+ col(RowIdCol)): _*)
+          (m.fields.map(f => field(f.name)) :+ col(RowIdCol)): _*)
       })
     }
 
@@ -780,13 +780,13 @@ final class LakeDataset private (
       // (identical visibility: readFragments applies the same DV filter
       // read() does).
       val targetKeys = readFragments(m, touched, withRowId = false)
-        .select(keys.map(col): _*)
-      val keyCondSwapped = keys.map(k => col(s"_src_$k") === col(k)).reduce(_ && _)
+        .select(keys.map(field): _*)
+      val keyCondSwapped = keys.map(k => field(s"_src_$k") === field(k)).reduce(_ && _)
       val ins = src.join(targetKeys, keyCondSwapped, "left_anti")
       val insLogical = m.fields.foldLeft(ins) { (df, f) =>
-        if (srcCols.contains(f.name)) df.withColumn(f.name, col(s"_src_${f.name}"))
+        if (srcCols.contains(f.name)) df.withColumn(f.name, field(s"_src_${f.name}"))
         else df.withColumn(f.name, lit(null).cast(DataType.fromJson(f.dataType)))
-      }.select(m.fields.map(f => col(f.name)): _*)
+      }.select(m.fields.map(f => field(f.name)): _*)
       // Stage first, count from the written fragments — running the insert
       // plan once, not count()-then-write twice.
       val (fr, next) = stageFresh(insLogical, m)
@@ -2029,12 +2029,12 @@ final class LakeDataset private (
       .filterNot(n => df.columns.exists(resolver(_, n)))
     require(missing.isEmpty, s"append missing columns: $missing")
     withCheckConstraints(df, man).select(man.fields.map(f =>
-      col(f.name).cast(DataType.fromJson(f.dataType)).as(physName(f.id))): _*)
+      field(f.name).cast(DataType.fromJson(f.dataType)).as(physName(f.id))): _*)
   }
 
   private def toPhysicalPreservingRowId(df: DataFrame, man: Manifest): DataFrame =
     withCheckConstraints(df, man).select(man.fields.map(f =>
-      col(f.name).cast(DataType.fromJson(f.dataType)).as(physName(f.id)))
+      field(f.name).cast(DataType.fromJson(f.dataType)).as(physName(f.id)))
       :+ col(RowIdCol): _*)
 
   /** Inline CHECK-constraint enforcement (Delta's CheckInvariant shape):
@@ -2104,10 +2104,10 @@ final class LakeDataset private (
     cols.foreach(c => require(m.fields.exists(_.name == c),
       s"primary key column $c does not exist"))
     val nulls = read()
-      .filter(cols.map(col(_).isNull).reduce(_ || _)).limit(1).collect()
+      .filter(cols.map(field(_).isNull).reduce(_ || _)).limit(1).collect()
     if (nulls.nonEmpty) throw new IllegalArgumentException(
       s"existing data violates PRIMARY KEY ($cols): null key ${nulls.head}")
-    val dup = read().groupBy(cols.map(col): _*)
+    val dup = read().groupBy(cols.map(field): _*)
       .agg(count(lit(1)).as("_n")).filter(col("_n") > 1).limit(1).collect()
     if (dup.nonEmpty) throw new IllegalArgumentException(
       s"existing data violates PRIMARY KEY ($cols): duplicate ${dup.head}")
@@ -2147,15 +2147,15 @@ final class LakeDataset private (
     if (pk.isEmpty) return df
     val batch = df.localCheckpoint(true)
     val nullKey = batch
-      .filter(pk.map(col(_).isNull).reduce(_ || _)).limit(1)
+      .filter(pk.map(field(_).isNull).reduce(_ || _)).limit(1)
     if (!nullKey.isEmpty) throw new IllegalArgumentException(
       s"PRIMARY KEY violation: null key value on $pk")
-    val dupIn = batch.groupBy(pk.map(col): _*)
+    val dupIn = batch.groupBy(pk.map(field): _*)
       .agg(count(lit(1)).as("_n")).filter(col("_n") > 1).limit(1)
     if (!dupIn.isEmpty) throw new IllegalArgumentException(
       s"PRIMARY KEY violation: duplicate key within the batch on $pk")
     if (!probe) return batch
-    val keys = batch.select(pk.map(col): _*).distinct()
+    val keys = batch.select(pk.map(field): _*).distinct()
     // a single small key set: one IN predicate prunes fragments by
     // zonemap/bloom/value-set stats FIRST — a probe of k keys opens only
     // the fragments that may hold them (the lake_pointlookup machinery),
@@ -2174,7 +2174,7 @@ final class LakeDataset private (
         } else None
       } else None
     val clash = inline.getOrElse(
-      read().select(pk.map(col): _*).join(keys, pk, "left_semi").limit(1))
+      read().select(pk.map(field): _*).join(keys, pk, "left_semi").limit(1))
     if (!clash.isEmpty) throw new IllegalArgumentException(
       s"PRIMARY KEY violation: key already present on $pk")
     batch
@@ -2468,6 +2468,11 @@ object DetachedTxn {
 
 object LakeDataset {
   val RowIdCol = "_rowid"
+
+  /** The top-level column named `name`, quoted so that a dot or a backtick
+    * in it is part of the name rather than a path or a syntax error. */
+  private[lake] def field(name: String): Column =
+    col("`" + name.replace("`", "``") + "`")
 
   /** Property recording an enforced primary key (see setPrimaryKey). */
   val PropPrimaryKey = "constraint.pk"

@@ -1,48 +1,53 @@
 package graft.queries
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths}
-
-import scala.util.matching.Regex
+import java.nio.file.NoSuchFileException
 
 import org.apache.spark.sql.SparkSession
 
 import graft.Q
 
-/** The SQL corpus the file-backed registry entries run: the reference's
-  * TPC-H and TPC-DS query files and DDL, named relative to `root`
-  * (`tpch/query/q1.sql`, `tpcds/query/query14.sql`, `tpcds/tpcds.sql`).
+/** The SQL corpus the file-backed registry entries run: one file per entry,
+  * read from the classpath under `prefix` and named relative to it
+  * (`tpch/q1.sql`, `tpcds/q14a.sql`, `tpcds/ddl.sql`).
+  *
+  * A query file holds the exact statement both engines run. Its header
+  * `--` comment lists how it deviates from the DuckDB base text and why;
+  * `dev/corpus.py --diff` prints the deviations.
   *
   * This is the only code that knows where the corpus lives, how to read a
   * file, and how a statement becomes a [[Q]]. Nothing is read until an
   * entry's `run` or `oracle` is used, so a missing file fails that entry
-  * alone, with the `NoSuchFileException` naming the file. */
-final class SqlCorpus(val root: Path) {
+  * alone, with a `NoSuchFileException` naming the resource. */
+final class SqlCorpus(prefix: String) {
 
   /** The statements of `file`: whole-line `--` comments dropped, split on
     * `;`, trimmed, empty pieces skipped. */
-  def statements(file: String): Seq[String] =
-    new String(Files.readAllBytes(root.resolve(file)), UTF_8)
-      .linesIterator.filterNot(_.trim.startsWith("--")).mkString("\n")
+  def statements(file: String): Seq[String] = {
+    val path = s"$prefix/$file"
+    val in = getClass.getClassLoader.getResourceAsStream(path)
+    if (in == null) throw new NoSuchFileException(path)
+    val raw = try new String(in.readAllBytes(), UTF_8) finally in.close()
+    raw.linesIterator.filterNot(_.trim.startsWith("--")).mkString("\n")
       .split(";").map(_.trim).filter(_.nonEmpty).toSeq
+  }
 
-  /** What both engines run for entry `name`: statement `stmt` of `file`,
-    * patched, then cast-wrapped. */
-  def text(name: String, file: String, stmt: Int = 0,
-      patch: Seq[Edit] = Nil): String =
-    SqlCorpus.castWrap(name,
-      patch.foldLeft(statements(file)(stmt))((t, e) => e(name, t)))
+  /** The one statement of query file `file`: what both engines run. */
+  def text(file: String): String = statements(file) match {
+    case Seq(sql) => sql
+    case more => throw new IllegalArgumentException(
+      s"$prefix/$file holds ${more.size} statements, not one")
+  }
 
-  /** Registry entry for one corpus statement over `gen`'s tables. The text
+  /** Registry entry for query file `file` over `gen`'s tables. The text
     * is read on first use inside `run` (or `oracle`); `run` registers only
     * the tables the text uses, in an isolated `newSession()` so generated
     * names never shadow the driver-testdata views. At `scale` 1 the entry
     * carries its DuckDB oracle; a scaled bench twin (`<name>_x<scale>`,
     * facts grown by [[TableGen.rowsAt]]) has none — its scale-1 twin
     * carries correctness. */
-  def entry(name: String, file: String, stmt: Int = 0,
-      patch: Seq[Edit] = Nil, gen: TableGen, scale: Long = 1): Q = {
-    lazy val sql = text(name, file, stmt, patch)
+  def entry(name: String, file: String, gen: TableGen, scale: Long = 1): Q = {
+    lazy val sql = text(file)
     val run = (s: SparkSession, _: String) => {
       val isolated = s.newSession()
       gen.register(isolated, scale, tables = gen.usedTables(sql))
@@ -55,23 +60,8 @@ final class SqlCorpus(val root: Path) {
 
 object SqlCorpus {
 
-  /** Where the reference corpus lives. */
-  val Root: Path = Paths.get("/root/reference/cases")
-
-  val reference = new SqlCorpus(Root)
-
-  /** Kill HUGEINT outputs (see [[TpcdsCasts]]): wrap the statement in an
-    * outer SELECT that casts every column DuckDB would widen to int128 back
-    * to BIGINT, identically for both engines. Entries with no widened
-    * column pass through untouched. */
-  def castWrap(name: String, text: String): String =
-    TpcdsCasts.cols.get(name) match {
-      case Some(cols) =>
-        val items = cols.map { case (c, huge) =>
-          if (huge) s"cast($c as bigint) as $c" else c }
-        s"select ${items.mkString(", ")}\nfrom (\n$text\n) graft_cast"
-      case None => text
-    }
+  /** The committed corpus, `src/main/resources/queries`. */
+  val queries = new SqlCorpus("queries")
 
   /** DuckDB oracle: generator prelude + the same query text; a query that
     * itself starts WITH merges its CTE list into the prelude's.
@@ -92,39 +82,5 @@ object SqlCorpus {
       prelude.stripSuffix("\n") + ",\n" +
         mat.replaceFirst("(?is)^\\s*with\\b", "")
     else prelude + mat
-  }
-}
-
-/** One patch step of a corpus statement, applied identically for both
-  * engines. Each step names the anchor it rewrites and fails its entry when
-  * the anchor matches nothing: a text that differs from the one the patch
-  * was written against must not pass through unpatched. */
-final class Edit private (anchor: Regex, shown: String,
-    rewrite: String => String) {
-  def apply(entry: String, text: String): String = {
-    if (anchor.findFirstIn(text).isEmpty)
-      throw new IllegalArgumentException(
-        s"$entry: patch anchor matches nothing: $shown")
-    rewrite(text)
-  }
-}
-
-object Edit {
-  /** Every occurrence of the literal `from` (`String.replace`). */
-  def lit(from: String, to: String): Edit =
-    new Edit(Regex.quote(from).r, from, _.replace(from, to))
-
-  /** The first match of `regex` (`String.replaceFirst`). */
-  def first(regex: String, to: String): Edit =
-    new Edit(regex.r, regex, _.replaceFirst(regex, to))
-
-  /** Every match of `regex` (`String.replaceAll`). */
-  def every(regex: String, to: String): Edit =
-    new Edit(regex.r, regex, _.replaceAll(regex, to))
-
-  /** Every match of `regex`, replaced by `to(match)`. */
-  def everyWith(regex: String)(to: Regex.Match => String): Edit = {
-    val r = regex.r
-    new Edit(r, regex, r.replaceAllIn(_, to))
   }
 }

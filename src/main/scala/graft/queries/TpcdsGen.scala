@@ -4,8 +4,9 @@ import org.apache.spark.sql.types._
 
 /** Deterministic TPC-DS slice generator, one definition for BOTH engines.
   *
-  * The reference ships the full TPC-DS corpus (cases/tpcds/query/queryN.sql,
-  * cases/tpcds/tpcds.sql) but cannot execute most of it; `ref_tpcds_plan`
+  * The committed corpus holds every TPC-DS query (tpcds/q<n>.sql) and the
+  * TPC-DS DDL (tpcds/ddl.sql); the reference cannot execute most of those
+  * queries, and `ref_tpcds_plan`
   * already proves this engine PLANS all 99. This module closes the last
   * gap — executing a representative slice with DuckDB oracles — by
   * generating every needed table from ONE list of portable SQL
@@ -19,8 +20,8 @@ import org.apache.spark.sql.types._
   *
   * Because both engines evaluate the identical integer/date arithmetic,
   * the inputs match bit-for-bit and the query outputs compare exactly.
-  * Schemas come from `corpus`'s official DDL ([[RefTpcds.tables]]; the
-  * companion object reads the reference corpus, a test can pass a fixture);
+  * Schemas come from `corpus`'s DDL ([[RefTpcds.tables]]; the companion
+  * object reads the committed corpus, a test can pass a fixture);
   * every DECIMAL money column is generated as BIGINT cents — exact in
   * both engines and immune to the driver hasher's decimal asymmetry.
   * Expression dialect rules (each construct validated in both engines):
@@ -571,5 +572,5 @@ class TpcdsGen(corpus: SqlCorpus) extends TableGen {
     RefTpcds.tables(corpus).toMap
 }
 
-/** The generator over the reference corpus's DDL. */
-object TpcdsGen extends TpcdsGen(SqlCorpus.reference)
+/** The generator over the committed corpus's DDL. */
+object TpcdsGen extends TpcdsGen(SqlCorpus.queries)

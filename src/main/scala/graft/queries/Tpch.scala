@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** TPC-H-derived queries adapted to the driver testdata schema
   * (FIXTURES.md §B: no partsupp, slimmed columns, dates spanning
-  * 1995..2001). Reference corpus: /root/reference/cases/tpch/query/q1..q22.sql.
+  * 1995..2001). The full TPC-H texts are the committed corpus's
+  * tpch/q1..q22.sql ([[RefTpchFull]]).
   *
   * All shapes are declared with the DataFrame API and left to Catalyst for
   * physical planning (broadcast vs shuffle join, partial aggregation,

@@ -1,13 +1,13 @@
 package graft.queries
 
 /** Deterministic FULL-schema TPC-H generator, one definition for BOTH
-  * engines — the TPC-H sibling of [[TpcdsGen]], built so the reference's
-  * PRIMARY test corpus (cases/tpch/query/q1..q22.sql, the exact files its
-  * tester binary runs) can execute VERBATIM: the driver testdata omits
+  * engines — the TPC-H sibling of [[TpcdsGen]], built so the 22 TPC-H
+  * queries the reference's tester binary runs (the committed corpus's
+  * tpch/q1..q22.sql) can execute: the driver testdata omits
   * `partsupp` and several columns (o_shippriority, c_acctbal, l_shipmode,
-  * …), which previously limited the verbatim family to 7 of 22 files
-  * (RefSql). Every official table and column from the reference's own DDL
-  * (cases/tpch/query/ddl.sql) is generated here from ONE list of portable
+  * …), which previously limited that family to 7 of 22 queries
+  * (RefSql). Every table and column of the TPC-H schema
+  * (the corpus's tpch/ddl.sql) is generated here from ONE list of portable
   * SQL expressions over a row index `id` — Spark registers them as temp
   * views over `spark.range`, DuckDB replays the same expressions as a
   * WITH-prelude, so inputs match bit-for-bit.

@@ -3,8 +3,8 @@ package graft.queries
 import graft.{Q, Tables}
 import org.apache.spark.sql.functions._
 
-/** Remaining adaptable TPC-H query shapes (reference
-  * /root/reference/cases/tpch/query/q2..q22.sql), rewritten against the
+/** Remaining adaptable TPC-H query shapes (the committed corpus's
+  * tpch/q2..q22.sql), rewritten against the
   * slimmed driver schema (FIXTURES.md §B: no partsupp, synthetic NATION_n
   * names, doubles for decimals).
   *

@@ -5,11 +5,9 @@ import java.nio.file.Files
 import graft.SparkTestBase
 import graft.queries.SqlCorpus
 
-/** The reference's ddl.sql, byte-for-byte, through the dialect bridge —
-  * plus pg-COPY round-trips over the TPC-H `.tbl`-style pipe CSV. */
+/** The corpus's TPC-H ddl.sql, statement by statement, through the dialect
+  * bridge — plus pg-COPY round-trips over the TPC-H `.tbl`-style pipe CSV. */
 class SqlBridgeSpec extends SparkTestBase {
-
-  private val ddlPath = SqlCorpus.Root.resolve("tpch/query/ddl.sql")
 
   /** Its own temp-view namespace: registry queries run by other suites in
     * the same JVM register the driver testdata (nation, part, ...) as temp
@@ -27,11 +25,10 @@ class SqlBridgeSpec extends SparkTestBase {
     }
   }
 
-  test("the reference's ddl.sql runs byte-for-byte through the bridge") {
+  test("the corpus's TPC-H ddl.sql runs through the bridge") {
     inScratchDb("ref_ddl") {
-      val stmts = new String(Files.readAllBytes(ddlPath), "UTF-8")
-        .split(";").map(_.trim).filter(_.nonEmpty)
-      stmts.foreach(SqlBridge.execute(session, _))
+      SqlCorpus.queries.statements("tpch/ddl.sql")
+        .foreach(SqlBridge.execute(session, _))
       val tables = session.catalog.listTables("ref_ddl")
         .collect().map(_.name.toLowerCase).toSet
       assert(Set("nation", "region", "part", "supplier", "partsupp",

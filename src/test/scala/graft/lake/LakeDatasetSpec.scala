@@ -41,6 +41,25 @@ class LakeDatasetSpec extends SparkTestBase {
     assert(ds.versions == Seq(1L, 2L, 3L))
   }
 
+  test("columns named a.b and x`y append, merge and read back") {
+    val odd = StructType(Seq(
+      StructField("a.b", LongType, nullable = false),
+      StructField("x`y", StringType)))
+    def batch(r: (Long, String)*) = spark.createDataFrame(
+      java.util.Arrays.asList(r.map { case (k, v) => Row(k, v) }: _*), odd)
+    val ds = LakeDataset.create(spark, tmpDir(), odd)
+    ds.append(batch((1L, "one"), (2L, "two")))
+    ds.mergeInsert(batch((2L, "TWO"), (3L, "three")), Seq("a.b"))
+    assert(ds.read().schema.fieldNames.toSeq == Seq("a.b", "x`y"))
+    assert(ds.read().orderBy(col("`a.b`")).collect().toSeq ==
+      Seq(Row(1L, "one"), Row(2L, "TWO"), Row(3L, "three")))
+    ds.setPrimaryKey(Seq("a.b"))
+    ds.append(batch((4L, "four")))
+    val dup = intercept[IllegalArgumentException](ds.append(batch((4L, "again"))))
+    assert(dup.getMessage.contains("key already present"))
+    assert(ds.read().count() == 4)
+  }
+
   test("string zonemaps compare in UTF-8 byte order, as the writers' min/max") {
     // UTF-16 order puts U+1F600 (a surrogate pair) below U+FFFD; UTF-8 byte
     // order, which Spark's min/max used for the stats, puts it above

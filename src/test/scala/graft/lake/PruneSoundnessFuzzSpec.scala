@@ -12,8 +12,8 @@ import org.apache.spark.sql.types._
 
 /** Seeded pruning-soundness fuzz: for every supported predicate shape,
   * across long, double, string, timestamp, date, decimal and timestamp_ntz
-  * columns with nulls and NaNs in play, and a column whose name needs
-  * quoting (`my col`), each pruned read — the scanner's
+  * columns with nulls and NaNs in play, and columns whose names need
+  * quoting (`my col`, `a.b` and ``x`y``), each pruned read — the scanner's
   * fragment pruning, the lake-format DSv2 read and the chunk-skipping open
   * — returns exactly the ids of the unpruned read filtered by the same
   * predicate. Strings mix code points below U+D800, in U+E000-U+FFFD and
@@ -28,7 +28,9 @@ class PruneSoundnessFuzzSpec extends SparkTestBase {
     StructField("dt", DateType),
     StructField("dec", DecimalType(10, 2)),
     StructField("ntz", TimestampNTZType),
-    StructField("my col", LongType)))
+    StructField("my col", LongType),
+    StructField("a.b", LongType),
+    StructField("x`y", StringType)))
 
   private val ntzFormat = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
 
@@ -80,7 +82,11 @@ class PruneSoundnessFuzzSpec extends SparkTestBase {
           // drawn from no random state, so the other columns keep theirs
           val myCol: java.lang.Long =
             if (i == 3 && k % 4 == 0) null else base + i.toLong
-          val row = Row(k * 1000L + i, d, s, t, dt, dec, ntz, myCol)
+          val dotted: java.lang.Long =
+            if (i == 5 && k % 3 == 0) null else base * 2 + i.toLong
+          val ticked = if (i == 6) null else f"v${base + i}%04d"
+          val row = Row(k * 1000L + i, d, s, t, dt, dec, ntz, myCol,
+            dotted, ticked)
           rows.add(row)
           written += row
         }
@@ -122,7 +128,10 @@ class PruneSoundnessFuzzSpec extends SparkTestBase {
             s"'${some(6).getAs[LocalDateTime](6).format(ntzFormat)}'",
           s"`my col` = ${v % 1000}", s"`my col` < $v",
           s"`my col` IN (${v % 1000}, ${v * 7 % 1000})",
-          "`my col` IS NULL")
+          "`my col` IS NULL",
+          s"`a.b` >= ${v * 2}", s"`a.b` = ${some(8).getLong(8)}",
+          "`a.b` IS NULL", s"`x``y` = '${some(9).getString(9)}'",
+          f"`x``y` < 'v${v}%04d'")
       }.distinct
 
       val table = spark.read.format("lake").load(ds.root)

@@ -53,7 +53,7 @@ class OrderIndependenceSpec extends SparkTestBase {
 
   test("all 22 reftpch queries: doubles bit-identical under 1 vs 32 partitions") {
     (1 to 22).foreach { n =>
-      check(s"reftpch_q$n", RefTpchFull.text(n),
+      check(s"reftpch_q$n", RefSql.text(n),
         (s, p) => TpchGen.register(s, 1, p))
     }
   }

@@ -2,39 +2,33 @@ package graft.queries
 
 import graft.SparkTestBase
 
-/** The reference's aspirational TPC-DS corpus planned 99/99: official DDL
-  * schemas registered, every query file parsed + analyzed + optimized. */
+/** The committed TPC-DS corpus planned 99/99: the DDL's schemas registered,
+  * every statement of every query parsed + analyzed + optimized. */
 class RefTpcdsSpec extends SparkTestBase {
 
-  test("official DDL yields all 24 benchmark tables with sane schemas") {
+  test("the DDL yields all 24 benchmark tables with sane schemas") {
     val ts = RefTpcds.tables()
-    // 25 CREATEs incl. dbgen_version
-    assert(ts.size == 25, ts.map(_._1).mkString(","))
+    assert(ts.size == 24, ts.map(_._1).mkString(","))
     val byName = ts.toMap
     assert(byName("store_sales").fieldNames.contains("ss_sold_date_sk"))
     assert(byName("date_dim").fieldNames.contains("d_year"))
     assert(byName.values.forall(_.fields.nonEmpty))
   }
 
-  test("98/99 reference TPC-DS queries plan; the 1 failure is the kit bug") {
+  test("all 99 TPC-DS queries plan") {
     val isolated = spark.newSession()
     RefTpcds.registerEmpty(isolated)
-    val verdicts = (1 to 99).map(n => n -> RefTpcds.planVerdict(isolated, n))
-    val failed = verdicts.collect { case (n, Some(err)) => n -> err }
-    assert(failed.map(_._1).toSet == RefTpcds.KitMismatch,
+    val failed = (1 to 99).flatMap(n => RefTpcds.planVerdict(isolated, n).map(n -> _))
+    assert(failed.isEmpty,
       s"${failed.size} failed:\n${failed.map(f => s"q${f._1}: ${f._2}").mkString("\n")}")
-    // and the one failure is exactly the reference's DDL-vs-query kit
-    // mismatch on customer.c_last_review_date(_sk) — not a dialect gap
-    assert(failed.head._2.contains("c_last_review_date_sk"))
   }
 
   test("registry entry reports one verdict row per query") {
     val rows = RefTpcds.tpcdsPlan.run(spark, sf0001).collect()
     assert(rows.length == 99)
-    val bad = rows.filterNot(_.getBoolean(2)).map(_.getLong(0)).toSet
-    assert(bad == RefTpcds.KitMismatch.map(_.toLong))
-    // the multi-statement files really carry their second statement
+    assert(rows.forall(_.getBoolean(2)))
+    // the two-statement queries really carry their second statement
     val multi = rows.filter(_.getLong(1) > 1).map(_.getLong(0)).sorted
-    assert(multi.nonEmpty)
+    assert(multi.toSeq == Seq(14L, 23L, 24L, 39L))
   }
 }

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.SparkTestBase
 
-/** The reference's 22 TPC-H files executed VERBATIM over [[TpchGen]]:
+/** The committed corpus's 22 TPC-H queries executed over [[TpchGen]]:
   * every file runs, returns rows (a 0-row pass would mean a literal missed
   * the generated distributions — each was measured in), and keeps banned
   * dtypes out of its output schema. Value-level truth is DuckDB via
