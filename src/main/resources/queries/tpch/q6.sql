@@ -1,7 +1,7 @@
 -- TPC-H query 6: the text of DuckDB 1.0.0's tpch_queries().
 -- Deviations, the same for both engines:
 --   - The ship-date year 1994 becomes 1995: ref_q6 runs this text over the
---     driver testdata too, whose orders start 1995-01-01, and there the
+--     TPC-H-ish testdata too, whose orders start 1995-01-01, and there the
 --     kit's year sums nothing (a NULL revenue).
 SELECT
     sum(l_extendedprice * l_discount) AS revenue

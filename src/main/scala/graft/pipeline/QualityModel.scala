@@ -129,8 +129,8 @@ object QualityModel {
   def trainedPredSql(s: SparkSession, dir: String): String =
     trainHoldout(s, dir)._1.predSql
 
-  /** The sf0.01 tree, frozen (TpcdsCasts-style empirical constant — the
-    * driver's correctness gate runs at sf0.01 only). Valid precisely
+  /** The sf0.01 tree, frozen (an empirical constant — the
+    * correctness gate runs at sf0.01 only). Valid precisely
     * because training is a pure function of the dataset; regenerate with
     * [[trainedPredSql]] if features/grids/gate change (QualityModelSpec
     * fails loudly until this matches). */

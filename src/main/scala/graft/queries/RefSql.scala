@@ -2,35 +2,35 @@ package graft.queries
 
 import graft.Q
 
-/** The TPC-H queries of the committed corpus over the DRIVER testdata.
+/** The TPC-H queries of the committed corpus over the TPC-H-ish testdata.
   *
   * `tpch/q1..q22.sql` are the reference's primary test workload (its
   * tester binary runs the 22 TPC-H queries; README's results table is
   * their output), committed as DuckDB's texts. Seven of them are fully
-  * expressible over the driver testdata's schema; this object runs those
+  * expressible over the TPC-H-ish testdata's schema; this object runs those
   * texts through BOTH engines (`Q.sql`: Spark executes it over the
   * registered views, DuckDB replays the same text as the oracle) — the
   * strongest form of "a user of the reference could run every query they
   * run today": same text on both engines, not a port.
   *
-  * The other 15 reference schema the driver testdata doesn't ship (the
+  * The other 15 reference schema the TPC-H-ish testdata doesn't ship (the
   * `partsupp` table — q2/q9/q11/q16/q20 — or columns like
   * `o_shippriority`, `c_acctbal`, `l_shipmode` the TPC-H-ish generator
   * omits). RefSqlSpec proves those fail ONLY on schema resolution
   * (TABLE_OR_VIEW_NOT_FOUND / UNRESOLVED_COLUMN), never on parsing.
   * [[RefTpchFull]] closes the remaining gap: ALL 22 execute over the
   * full-schema [[TpchGen]] with DuckDB oracles (`reftpch_q1..q22`); this
-  * object keeps the driver-testdata variants (same text over the DRIVER's
+  * object keeps the testdata variants (same text over the testdata's
   * parquet, a different input source). */
 object RefSql {
 
   /** Corpus file of TPC-H query n. */
   def file(n: Int): String = s"tpch/q$n.sql"
 
-  /** Query numbers whose schema the driver testdata covers. */
+  /** Query numbers whose schema the TPC-H-ish testdata covers. */
   val Runnable = Seq(1, 5, 6, 7, 8, 14, 18)
 
-  /** Runnable queries that also produce rows on the driver's synthetic
+  /** Runnable queries that also produce rows on the testdata's synthetic
     * data — these are the registry entries. q5/q7/q8 execute but return
     * empty: the generator's orders start 1995-01-01 (q5 filters 1994) and
     * its supplier/nation-pair coverage misses q7/q8's literals, so an

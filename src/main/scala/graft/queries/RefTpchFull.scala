@@ -6,7 +6,7 @@ import graft.Q
   * through [[SqlCorpus]]) executed over the full-schema generator
   * ([[TpchGen]]) with per-row DuckDB oracles. This completes what
   * [[RefSql]] started: RefSql runs the 7 queries expressible over the
-  * driver testdata; the other 15 were blocked only by missing schema
+  * TPC-H-ish testdata; the other 15 were blocked only by missing schema
   * (partsupp, o_shippriority, c_acctbal, l_shipmode, …). With TpchGen
   * supplying every official table and column, ALL 22 run — same text on
   * both engines, not a port — and every result row hash-checks against

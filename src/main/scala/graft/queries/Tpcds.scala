@@ -92,7 +92,6 @@ import graft.Q
   *     vs 1.3x the item's window average
   *   - q58: promo-week items with near-equal store/catalog/web revenue
   *   - q83: items returned in all three channels across three weeks
-
   *
   * All 99 queries execute. q58/q83 needed generator structure: organic
   * data has ~0.6 expected items sold in all three channels in any ONE

@@ -3,7 +3,7 @@ package graft.queries
 /** Deterministic FULL-schema TPC-H generator, one definition for BOTH
   * engines — the TPC-H sibling of [[TpcdsGen]], built so the 22 TPC-H
   * queries the reference's tester binary runs (the committed corpus's
-  * tpch/q1..q22.sql) can execute: the driver testdata omits
+  * tpch/q1..q22.sql) can execute: the TPC-H-ish testdata omits
   * `partsupp` and several columns (o_shippriority, c_acctbal, l_shipmode,
   * …), which previously limited that family to 7 of 22 queries
   * (RefSql). Every table and column of the TPC-H schema

@@ -5,7 +5,7 @@ import org.apache.spark.sql.AnalysisException
 import graft.{SparkTestBase, Tables}
 
 /** Dialect-parity proof over the committed TPC-H corpus: every one of its
-  * 22 query files either executes on Spark over the driver testdata, or
+  * 22 query files either executes on Spark over the TPC-H-ish testdata, or
   * fails ONLY on schema resolution (a table/column the TPC-H-ish generator
   * doesn't ship) — never on parsing. A parse failure here would mean the
   * corpus's SQL (`CAST('…' AS date)` literals, `INTERVAL` arithmetic,
@@ -22,7 +22,7 @@ class RefSqlSpec extends SparkTestBase {
       val rows = df.count()
       assert(rows >= 0, s"q$n failed")
       if (RefSql.RowProducing.contains(n))
-        assert(rows > 0, s"q$n expected rows on the driver data")
+        assert(rows > 0, s"q$n expected rows on the testdata")
     }
   }
 
